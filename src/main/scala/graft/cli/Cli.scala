@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.reverse.{BulkUpload, UploadTransports}
 import graft.sink.{DerbyDialect, PgDialect, SqlDialect}
-import graft.sources.salesforce.{BatchInfo, HttpSfTransport, JobInfo, SfLogin, SfTransports}
+import graft.sources.salesforce.{HttpSfTransport, SfLogin, SfTransports}
 import graft.sync.{BulkLoad, IncrementalSync, SyncConfig, SyncStateStore}
 import graft.types.{SfField, SfSchema}
 
@@ -263,31 +263,22 @@ object Cli {
 
   /** `query_bulk.py` + `download.py` + `csv_to_postgres.py`: full
     * extract → truncate-and-load → C4 bootstrap, as one verb. The
-    * connector does the chunked extract; the load stamps `__sync` with
-    * the extract's max CDC timestamp (the landed-data analogue of the
-    * job's systemModstamp, A2 semantics).
+    * connector does the chunked extract, read once; the load stamps
+    * `__sync` with the max CDC timestamp landed (the landed-data
+    * analogue of the job's systemModstamp, A2 semantics).
     */
   private def bulkload(opts: Map[String, String], out: String => Unit): Unit = {
     val url = required(opts, "jdbc")
     val dest = required(opts, "dest")
-    val tsCol = required(opts, "ts-col")
+    val cfg = SyncConfig(dest, required(opts, "pk"), required(opts, "ts-col"))
     val df = readObject(opts)
-    val modstamp = Option(df.agg(max(col(tsCol))).head().getTimestamp(0))
-      .getOrElse(throw new IllegalArgumentException(
-        s"source is empty — refusing truncate-and-load of $dest"))
-    val job = JobInfo(s"cli-${System.nanoTime()}",
-      batches = Seq(BatchInfo("b0", "Completed", df.count())),
-      numberRecordsProcessed = df.count(),
-      systemModstamp = Some(modstamp))
     val conn = DriverManager.getConnection(url)
     try {
       conn.setAutoCommit(false)
       val state = new SyncStateStore(conn)
       try state.install()
       catch { case e: java.sql.SQLException if e.getSQLState == "X0Y32" => () }
-      val n = BulkLoad.bulkLoad(job,
-        SyncConfig(dest, required(opts, "pk"), tsCol), conn,
-        dialectFor(url, opts), state, _ => df)
+      val (n, modstamp) = BulkLoad.refresh(cfg, conn, dialectFor(url, opts), state, df)
       out(s"loaded $n rows into $dest; __sync registered at $modstamp")
     } finally conn.close()
   }

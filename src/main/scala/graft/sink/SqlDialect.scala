@@ -5,6 +5,10 @@ package graft.sink
   * 107-152`, `pg.py:101-133`); the Derby dialect exists so the staged
   * merge executor can be integration-tested against the embedded Derby
   * that ships with Spark (no PostgreSQL in the build environment).
+  *
+  * Scale split: every statement runs on the one driver-held connection
+  * of the round — staging is loaded through it ([[CopyStager.load]]),
+  * so the staging table only has to be visible to that session.
   */
 trait SqlDialect {
   def quoteIdent(name: String): String
@@ -19,27 +23,14 @@ trait SqlDialect {
     */
   def createStagingSql(staging: String, dest: String): String
 
-  /** Staging DDL for parallel (multi-connection) loading: the table
-    * MUST be visible from connections other than the creator's, or
-    * executor-side inserts fail with "relation does not exist".
-    * Dialects whose only staging form is session-local must override
-    * [[supportsParallelStaging]] to false instead.
-    */
-  def createSharedStagingSql(staging: String, dest: String): String =
-    createStagingSql(staging, dest)
-
-  /** Whether [[createSharedStagingSql]] really yields a cross-session
-    * visible table; `IncrementalSync.syncTable` fails fast on
-    * `parallelStaging` configs when this is false.
-    */
-  def supportsParallelStaging: Boolean = true
-
   /** Upsert-merge J1: last-write-wins merge of staging into dest on the
     * PK, optionally skipping soft-deleted rows on the insert path
-    * (`query_poll_table.py:119-137`).
+    * (`query_poll_table.py:119-137`). A matched row is rewritten only
+    * when its staged CDC timestamp `tsCol` is newer, so rows re-delivered
+    * from the watermark's second write nothing.
     */
   def upsertSql(dest: String, staging: String, cols: Seq[String], pk: String,
-      isDeleted: Option[String]): String
+      tsCol: String, isDeleted: Option[String]): String
 
   /** Anti-join delete J2: remove dest rows whose staging image is
     * soft-deleted (`query_poll_table.py:139-152`).
@@ -75,20 +66,15 @@ final class PgDialect(quoteNames: Boolean = true) extends SqlDialect {
   override def createStagingSql(staging: String, dest: String): String =
     s"CREATE TEMPORARY TABLE $staging (LIKE $dest INCLUDING DEFAULTS)"
 
-  /** TEMPORARY tables are session-local in PostgreSQL; parallel
-    * staging needs a real (but WAL-skipping, crash-disposable)
-    * table that executor connections can see.
-    */
-  override def createSharedStagingSql(staging: String, dest: String): String =
-    s"CREATE UNLOGGED TABLE $staging (LIKE $dest INCLUDING DEFAULTS)"
-
   override def upsertSql(dest: String, staging: String, cols: Seq[String],
-      pk: String, isDeleted: Option[String]): String = {
+      pk: String, tsCol: String, isDeleted: Option[String]): String = {
     val colList = cols.map(quoteIdent).mkString(", ")
     val excluded = cols.map(c => s"EXCLUDED.${quoteIdent(c)}").mkString(", ")
     val notDeleted = isDeleted.map(c => s" WHERE NOT ${quoteIdent(c)}").getOrElse("")
-    s"INSERT INTO $dest ($colList) SELECT $colList FROM $staging$notDeleted" +
-      s" ON CONFLICT (${quoteIdent(pk)}) DO UPDATE SET ($colList) = ($excluded)"
+    val ts = quoteIdent(tsCol)
+    s"INSERT INTO $dest AS d ($colList) SELECT $colList FROM $staging$notDeleted" +
+      s" ON CONFLICT (${quoteIdent(pk)}) DO UPDATE SET ($colList) = ($excluded)" +
+      s" WHERE d.$ts IS NULL OR d.$ts < EXCLUDED.$ts"
   }
 
   override def deleteSql(dest: String, staging: String, pk: String,
@@ -122,7 +108,7 @@ final class DerbyDialect extends SqlDialect {
     s"CREATE TABLE $staging AS SELECT * FROM $dest WITH NO DATA"
 
   override def upsertSql(dest: String, staging: String, cols: Seq[String],
-      pk: String, isDeleted: Option[String]): String = {
+      pk: String, tsCol: String, isDeleted: Option[String]): String = {
     val setList = cols.filterNot(_ == pk)
       .map(c => s"${quoteIdent(c)} = s.${quoteIdent(c)}").mkString(", ")
     val colList = cols.map(quoteIdent).mkString(", ")
@@ -131,9 +117,10 @@ final class DerbyDialect extends SqlDialect {
     // becomes a NOT MATCHED refinement (matched-and-deleted rows still
     // update, then J2 removes them — same net state as the reference)
     val refinement = isDeleted.map(c => s" AND NOT s.${quoteIdent(c)}").getOrElse("")
+    val ts = quoteIdent(tsCol)
     s"MERGE INTO $dest d USING $staging s" +
       s" ON d.${quoteIdent(pk)} = s.${quoteIdent(pk)}" +
-      s" WHEN MATCHED THEN UPDATE SET $setList" +
+      s" WHEN MATCHED AND (d.$ts IS NULL OR d.$ts < s.$ts) THEN UPDATE SET $setList" +
       s" WHEN NOT MATCHED$refinement THEN INSERT ($colList) VALUES ($valList)"
   }
 

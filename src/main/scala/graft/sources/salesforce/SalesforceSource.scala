@@ -168,25 +168,38 @@ final class SfScan(objectName: String, transportName: String,
       limit.map(n => s" limit=$n").getOrElse("") +
       (if (countStar) " agg=count(*)" else "")
 
-  /** S2: one partition per PK chunk; single partition on fallback, or
-    * when a LIMIT is pushed (a global limit cannot be split).
+  /** The SOQL select list: the pruned columns, or `Id` when a plan
+    * needs no column at all (`df.limit(5).count()`) — Salesforce rejects
+    * an empty select list.
     */
-  override def planInputPartitions(): Array[InputPartition] = {
-    if (countStar || limit.isDefined) return Array(SfInputPartition(None))
-    val chunks = SfTransports.get(transportName).pkChunks(objectName,
-      schema.fieldNames.toSeq, where, includeDeleted, chunkSize)
-    if (chunks.isEmpty) Array(SfInputPartition(None))
-    else chunks.map(c => SfInputPartition(Some(c))).toArray
-  }
+  private val fields: Seq[String] =
+    if (schema.isEmpty) Seq("Id") else schema.fieldNames.toSeq
+
+  /** S2: one partition per PK chunk; single partition on fallback, or
+    * when a LIMIT is pushed (a global limit cannot be split). Planned
+    * once per scan: Spark asks every physical node built over this scan
+    * (more than one per action), and over HTTP each plan is a Bulk job.
+    */
+  private lazy val partitions: Array[InputPartition] =
+    if (countStar || limit.isDefined) Array(SfInputPartition(None))
+    else {
+      val chunks = SfTransports.get(transportName).pkChunks(objectName,
+        fields, where, includeDeleted, chunkSize)
+      if (chunks.isEmpty) Array(SfInputPartition(None))
+      else chunks.map(c => SfInputPartition(Some(c))).toArray
+    }
+
+  override def planInputPartitions(): Array[InputPartition] = partitions
 
   override def createReaderFactory(): PartitionReaderFactory =
     new SfReaderFactory(objectName, transportName, includeDeleted, schema,
-      where, limit, countStar)
+      fields, where, limit, countStar)
 }
 
 final class SfReaderFactory(objectName: String, transportName: String,
-    includeDeleted: Boolean, schema: StructType, where: Option[String],
-    limit: Option[Int], countStar: Boolean) extends PartitionReaderFactory {
+    includeDeleted: Boolean, schema: StructType, fields: Seq[String],
+    where: Option[String], limit: Option[Int], countStar: Boolean)
+    extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val transport = SfTransports.get(transportName)
@@ -195,7 +208,7 @@ final class SfReaderFactory(objectName: String, transportName: String,
       val n = transport.count(objectName, where, includeDeleted)
       new SingleRowReader(InternalRow(n))
     } else {
-      val it = transport.query(objectName, schema.fieldNames.toSeq, where,
+      val it = transport.query(objectName, fields, where,
         limit, includeDeleted, range)
       new SfRowReader(it, schema)
     }
@@ -220,10 +233,10 @@ final class SfRowReader(it: Iterator[Map[String, Any]], schema: StructType)
   override def get(): InternalRow = {
     val values = schema.fields.map { f =>
       current.get(f.name).orNull match {
-        case null => null
         // bulk CSV renders NULL as the empty field (`query_poll_table
-        // .py:45-50` round-trip contract)
-        case "" if f.dataType != StringType => null
+        // .py:45-50` round-trip contract); Salesforce stores no '' text,
+        // so an empty value is NULL for every type, as FORCE_NULL lands it
+        case null | "" => null
         case v => convert(v, f.dataType)
       }
     }

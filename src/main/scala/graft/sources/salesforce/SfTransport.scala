@@ -170,6 +170,9 @@ final class MockSfTransport(
   @volatile var lastWhere: Option[String] = None
   @volatile var lastLimit: Option[Int] = None
   @volatile var countCalls: Int = 0
+  @volatile var pkChunksCalls: Int = 0
+  /** (fields, limit) of every [[query]] call, oldest first. */
+  val queries = new java.util.concurrent.ConcurrentLinkedQueue[(Seq[String], Option[Int])]
 
   override def describe(objectName: String): Seq[SfFieldMeta] =
     schema.getOrElse(objectName,
@@ -190,6 +193,7 @@ final class MockSfTransport(
   override def pkChunks(objectName: String, fields: Seq[String],
       where: Option[String], includeDeleted: Boolean,
       chunkSize: Int): Seq[(String, String)] = {
+    pkChunksCalls += 1
     if (!supportsPkChunking) return Nil
     val ids = rows(objectName).map(_("Id").toString).sorted
     if (ids.isEmpty) Nil
@@ -257,6 +261,7 @@ final class MockSfTransport(
     lastFields = fields
     lastWhere = where
     lastLimit = limit
+    queries.add(fields -> limit)
     var rs = filtered(objectName, where)
     if (!includeDeleted)
       rs = rs.filterNot(_.get("IsDeleted").contains(true))

@@ -1,8 +1,9 @@
 package graft.sync
 
-import java.sql.Connection
-import org.apache.spark.sql.{DataFrame, Row}
-import graft.sink.SqlDialect
+import java.sql.{Connection, Timestamp}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.DataFrame
+import graft.sink.{CopyStager, SqlDialect}
 import graft.sources.salesforce.{BatchInfo, BulkManifest, JobInfo}
 
 /** K2 + C4 assembled: the one-call truncate-and-load of a completed
@@ -24,13 +25,16 @@ import graft.sources.salesforce.{BatchInfo, BulkManifest, JobInfo}
   * A crash anywhere rolls the whole transaction back: the destination
   * keeps its previous contents and `__sync` its previous watermark.
   *
-  * Scale split: batch DataFrames stream through the driver connection
-  * in JDBC batches — faithful to the reference's COPY-through-client
-  * design and bounded by the job's extract size; a cluster-parallel
-  * variant would write per-partition via the dialect's shared-staging
-  * path (`IncrementalSync.stageFromExecutors`).
+  * [[refresh]] is the same load for a plain source DataFrame (the CLI's
+  * `bulkload`): one read, the watermark from the landed data (A2).
+  *
+  * Scale split: each source is read once and streams through the
+  * driver connection ([[CopyStager.load]]: COPY or batched INSERTs) —
+  * faithful to the reference's COPY-through-client design and bounded
+  * by the extract size.
   */
 object BulkLoad {
+  import IncrementalSync.{exec, maxLandedTs}
 
   /** @param batchData resolves one Completed batch to its rows (the
     *                   connector partition, a staged CSV, or a fixture)
@@ -46,59 +50,46 @@ object BulkLoad {
     val modstamp = job.systemModstamp.getOrElse(throw new IllegalArgumentException(
       s"bulk job ${job.id} carries no systemModstamp — cannot register sync state"))
     val dest = dialect.qualified(cfg.schema, cfg.tablename)
-    try {
+    inTransaction(conn) {
       exec(conn, dialect.truncateSql(dest))
-      var total = 0L
-      BulkManifest.loadableBatches(job).foreach { b =>
-        total += insertRows(conn, dialect, dest, batchData(b))
-      }
+      val total = BulkManifest.loadableBatches(job)
+        .map(b => load(conn, dialect, dest, batchData(b))).sum
       state.register(cfg.tablename, modstamp)
-      conn.commit() // truncate + load + C4 registration: atomic
-      total
-    } catch {
+      total // truncate + load + C4 registration: atomic
+    }
+  }
+
+  /** Truncate-and-load of `source`, read once, registering `__sync` at
+    * the max CDC timestamp landed (A2 — the landed-data analogue of the
+    * job's systemModstamp). An empty source is refused after the load,
+    * inside the transaction: the rollback keeps the destination and
+    * `__sync` as they were.
+    * @return rows loaded and the registered watermark
+    */
+  def refresh(cfg: SyncConfig, conn: Connection, dialect: SqlDialect,
+      state: SyncStateStore, source: DataFrame): (Long, Timestamp) = {
+    val dest = dialect.qualified(cfg.schema, cfg.tablename)
+    inTransaction(conn) {
+      exec(conn, dialect.truncateSql(dest))
+      val n = load(conn, dialect, dest, source)
+      val wm = maxLandedTs(conn, dialect, dest, cfg.tsCol).getOrElse(throw
+        new IllegalArgumentException(
+          s"source is empty — refusing truncate-and-load of ${cfg.tablename}"))
+      state.register(cfg.tablename, wm)
+      (n, wm)
+    }
+  }
+
+  private def load(conn: Connection, dialect: SqlDialect, dest: String,
+      df: DataFrame): Long =
+    CopyStager.load(conn, dialect, dest, df.schema, df.toLocalIterator().asScala)
+
+  /** Commits `body`; any failure rolls the whole transaction back. */
+  private def inTransaction[A](conn: Connection)(body: => A): A =
+    try { val a = body; conn.commit(); a }
+    catch {
       case e: Throwable =>
         conn.rollback()
         throw e
     }
-  }
-
-  private def exec(conn: Connection, sql: String): Unit = {
-    val st = conn.createStatement()
-    try st.execute(sql) finally st.close()
-  }
-
-  /** Loads one batch through the driver connection: the dialect's COPY
-    * fast path when the wire protocol offers one
-    * (`csv_to_postgres.py:86-89`), else 1000-row batched INSERTs.
-    */
-  private def insertRows(conn: Connection, dialect: SqlDialect,
-      dest: String, df: DataFrame): Long = {
-    val cols = df.columns.toSeq
-    // FORCE_NULL only for NON-STRING nullable columns: encodeRow emits
-    // NULL as an unquoted empty field and '' as a quoted one, but
-    // FORCE_NULL erases that distinction (quoted empty → NULL too), so
-    // string columns under COPY would diverge from the batched-INSERT
-    // fallback (which stores ''). Non-string types have no empty-string
-    // value, so FORCE_NULL is exactly the null-restoration they need.
-    dialect.copyInSql(dest, cols,
-        df.schema.fields.filter(f => f.nullable &&
-          f.dataType != org.apache.spark.sql.types.StringType).map(_.name).toSeq)
-      .flatMap(sql => graft.sink.CopyStager.copyInto(conn, sql, df))
-      .getOrElse {
-        val sql = s"INSERT INTO $dest (${cols.map(dialect.quoteIdent).mkString(", ")})" +
-          s" VALUES (${cols.map(_ => "?").mkString(", ")})"
-        val ps = conn.prepareStatement(sql)
-        try {
-          var count = 0L
-          df.toLocalIterator().forEachRemaining { row: Row =>
-            cols.indices.foreach(i => ps.setObject(i + 1, row.get(i)))
-            ps.addBatch()
-            count += 1
-            if (count % 1000 == 0) ps.executeBatch()
-          }
-          ps.executeBatch()
-          count
-        } finally ps.close()
-      }
-  }
 }

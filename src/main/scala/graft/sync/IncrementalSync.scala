@@ -1,20 +1,23 @@
 package graft.sync
 
 import java.sql.{Connection, Timestamp}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.operators.MergeOps
-import graft.sink.SqlDialect
+import graft.sink.{CopyStager, SqlDialect}
 
 /** The steady-state CDC transaction (C1, `query_poll_table.py:155-204`;
   * SURVEY.md §3.2): CAS lock → watermark-filtered delta → within-batch
   * dedup (J4) → stage → merge J1 + delete J2 → watermark advance A2 →
   * single commit; exception path resets the lock and re-raises.
   *
-  * Scale split, same as the reference: the delta LOAD into staging may
-  * be parallel (per-partition JDBC inserts from executors), but the
-  * MERGE is one serial transaction on a driver-held connection — merge
-  * + watermark + state update are atomic, which is the no-lost-updates
+  * Scale split, same as the reference: the deduped delta is read ONCE,
+  * and that one read both decides the C2 fast path (its first row) and
+  * streams through the driver-held connection into a session-local
+  * staging table ([[CopyStager.load]]: COPY or batched INSERTs). The
+  * MERGE is one serial transaction on the same connection — merge +
+  * watermark + state update are atomic, which is the no-lost-updates
   * invariant (`query_poll_table.py:198`, SURVEY §7.4). A crash between
   * load and watermark update re-fetches from the old watermark and the
   * idempotent merge absorbs the overlap.
@@ -24,8 +27,7 @@ final case class SyncConfig(
     pk: String,
     tsCol: String,
     isDeletedCol: Option[String] = None,
-    schema: Option[String] = None,
-    parallelStaging: Boolean = false)
+    schema: Option[String] = None)
 
 sealed trait SyncResult
 object SyncResult {
@@ -42,7 +44,8 @@ object SyncResult {
 }
 
 final class IncrementalSync(conn: Connection, dialect: SqlDialect,
-    state: SyncStateStore, jdbcUrl: Option[String] = None) {
+    state: SyncStateStore) {
+  import IncrementalSync.{exec, maxLandedTs}
 
   /** One sync round for one table. `fetchDelta(watermark)` returns the
     * strictly-greater-than delta including soft-deleted rows (F2
@@ -61,12 +64,9 @@ final class IncrementalSync(conn: Connection, dialect: SqlDialect,
       fetchDelta: Option[Timestamp] => DataFrame,
       countDelta: Option[Option[Timestamp] => Long] = None,
       maxDeltaRows: Long = Long.MaxValue): SyncResult = {
-    if (cfg.parallelStaging && !dialect.supportsParallelStaging)
-      throw new IllegalArgumentException(
-        s"dialect ${dialect.getClass.getSimpleName} cannot create a " +
-          "cross-session visible staging table; parallelStaging would " +
-          "fail on every executor insert — use serial staging")
-    if (!state.tryLock(cfg.tablename)) return SyncResult.LockBusy
+    // a refused CAS still ran its UPDATE: end that transaction, or the
+    // connection cannot close and the row lock outlives the call
+    if (!state.tryLock(cfg.tablename)) { conn.rollback(); return SyncResult.LockBusy }
     try {
       val watermark = state.get(cfg.tablename).flatMap(_.syncuntil)
       val tooBig = countDelta.map(_(watermark)).filter(_ > maxDeltaRows)
@@ -76,15 +76,15 @@ final class IncrementalSync(conn: Connection, dialect: SqlDialect,
         conn.commit()
         SyncResult.NeedsFullReload(tooBig.get)
       } else {
-        val delta = fetchDelta(watermark)
-        if (delta.isEmpty) {                     // C2 fast path
+        val delta = MergeOps.dedupLastWins(fetchDelta(watermark), cfg.pk, cfg.tsCol)
+        val rows = delta.toLocalIterator().asScala
+        if (!rows.hasNext) {                     // C2 fast path
           state.touch(cfg.tablename)
           conn.commit()
           SyncResult.NoChange
         } else {
-          val deduped = MergeOps.dedupLastWins(delta, cfg.pk, cfg.tsCol)
-          val n = stageAndMerge(cfg, deduped)
-          val wm = maxLandedTs(cfg)              // A2: from landed data
+          val n = stageAndMerge(cfg, delta.schema, rows)
+          val wm = maxLandedTs(conn, dialect, destName(cfg), cfg.tsCol) // A2
           state.finish(cfg.tablename, wm)
           conn.commit()                          // one txn: merge + state
           SyncResult.Merged(n, wm.orNull)
@@ -105,110 +105,43 @@ final class IncrementalSync(conn: Connection, dialect: SqlDialect,
   /** Stage the (small) deduped delta through the driver connection and
     * run J1+J2 in order. Delta batches are bounded by the refresh
     * cadence — they are the small side by construction; a full reload
-    * takes the bulk path instead (`README.rst:68` watchdog note).
+    * takes the bulk path instead (`README.rst:68` watchdog note). The
+    * staging table lives and dies inside the round's transaction, so a
+    * failed round's rollback removes it too.
     */
-  private def stageAndMerge(cfg: SyncConfig, delta: DataFrame): Long = {
+  private def stageAndMerge(cfg: SyncConfig, schema: StructType,
+      rows: Iterator[Row]): Long = {
     val staging = dialect.quoteIdent(s"__stg_${cfg.tablename}")
     val dest = destName(cfg)
-    val cols = delta.columns.toSeq
-    val stagingDdl =
-      if (cfg.parallelStaging) dialect.createSharedStagingSql(staging, dest)
-      else dialect.createStagingSql(staging, dest)
-    try exec(stagingDdl)
-    catch {
-      // leftover staging from a crashed parallel round: reuse, emptied
-      // (X0Y32 = Derby duplicate object, 42P07 = PG duplicate_table)
-      case e: java.sql.SQLException
-          if e.getSQLState == "X0Y32" || e.getSQLState == "42P07" =>
-        exec(dialect.truncateSql(staging))
-    }
-    // parallel staging inserts from other connections: they must SEE
-    // the staging table, so its creation commits eagerly (the merge +
-    // watermark transaction below is unaffected)
-    if (cfg.parallelStaging) conn.commit()
-    try {
-      val insert = s"INSERT INTO $staging (${cols.map(dialect.quoteIdent).mkString(", ")})" +
-        s" VALUES (${cols.map(_ => "?").mkString(", ")})"
-      val n =
-        if (cfg.parallelStaging) stageFromExecutors(delta, insert, cols.size)
-        // FORCE_NULL only for non-string nullable columns — see the
-        // matching comment in BulkLoad.insertRows (string '' under COPY
-        // must not silently become NULL and diverge from the INSERT path)
-        else dialect.copyInSql(staging, cols,
-            delta.schema.fields.filter(f => f.nullable &&
-              f.dataType != org.apache.spark.sql.types.StringType).map(_.name).toSeq)
-          .flatMap(sql => graft.sink.CopyStager.copyInto(conn, sql, delta))
-          .getOrElse {
-          val ps = conn.prepareStatement(insert)
-          try {
-            var count = 0L
-            // the deduped delta is small (bounded by poll cadence); rows
-            // stream through the driver exactly like the reference's COPY
-            delta.toLocalIterator().forEachRemaining { row: Row =>
-              cols.indices.foreach(i => ps.setObject(i + 1, row.get(i)))
-              ps.addBatch()
-              count += 1
-              if (count % 1000 == 0) ps.executeBatch()
-            }
-            ps.executeBatch()
-            count
-          } finally ps.close()
-        }
-      // IsDeleted is an ordinary synced column in the dest table, as
-      // in the reference; the insert path filters it, the delete path
-      // consumes it (`query_poll_table.py:112,134`)
-      exec(dialect.upsertSql(dest, staging, cols, cfg.pk, cfg.isDeletedCol))
-      cfg.isDeletedCol.foreach(fl =>
-        exec(dialect.deleteSql(dest, staging, cfg.pk, fl)))
-      n
-    } finally exec(dialect.dropSql(staging))
+    exec(conn, dialect.createStagingSql(staging, dest))
+    val n = CopyStager.load(conn, dialect, staging, schema, rows)
+    // IsDeleted is an ordinary synced column in the dest table, as
+    // in the reference; the insert path filters it, the delete path
+    // consumes it (`query_poll_table.py:112,134`)
+    exec(conn, dialect.upsertSql(dest, staging, schema.fieldNames.toSeq,
+      cfg.pk, cfg.tsCol, cfg.isDeletedCol))
+    cfg.isDeletedCol.foreach(fl =>
+      exec(conn, dialect.deleteSql(dest, staging, cfg.pk, fl)))
+    exec(conn, dialect.dropSql(staging))
+    n
   }
+}
 
-  /** Parallel staging for large deltas (SURVEY §7.4: the LOAD may be
-    * parallel, the MERGE stays one driver transaction): every partition
-    * opens its own connection and batch-inserts its rows. Requires a
-    * shared-visibility staging table (non-temp) and a thread-safe URL —
-    * both true for server databases and for embedded Derby in-JVM.
+object IncrementalSync {
+
+  /** Watermark A2: the max CDC timestamp actually landed in `dest`
+    * (`synctable.py:45-54`); None when no landed row carries one.
     */
-  private def stageFromExecutors(delta: DataFrame, insertSql: String,
-      width: Int): Long = {
-    val url = jdbcUrl.getOrElse(throw new IllegalStateException(
-      "parallelStaging requires SyncConfig.jdbcUrl"))
-    val counter = delta.sparkSession.sparkContext.longAccumulator("staged")
-    delta.foreachPartition { rows: Iterator[Row] =>
-      if (rows.hasNext) {
-        val c = java.sql.DriverManager.getConnection(url)
-        try {
-          c.setAutoCommit(false)
-          val ps = c.prepareStatement(insertSql)
-          try {
-            var k = 0L
-            rows.foreach { row =>
-              (0 until width).foreach(i => ps.setObject(i + 1, row.get(i)))
-              ps.addBatch()
-              k += 1
-              if (k % 1000 == 0) ps.executeBatch()
-            }
-            ps.executeBatch()
-            c.commit()
-            counter.add(k)
-          } finally ps.close()
-        } finally c.close()
-      }
-    }
-    counter.value
-  }
-
-  private def maxLandedTs(cfg: SyncConfig): Option[Timestamp] = {
+  private[sync] def maxLandedTs(conn: Connection, dialect: SqlDialect,
+      dest: String, tsCol: String): Option[Timestamp] = {
     val stmt = conn.createStatement()
     try {
-      val rs = stmt.executeQuery(
-        dialect.maxTsSql(destName(cfg), cfg.tsCol))
+      val rs = stmt.executeQuery(dialect.maxTsSql(dest, tsCol))
       if (rs.next()) Option(rs.getTimestamp(1)) else None
     } finally stmt.close()
   }
 
-  private def exec(sql: String): Unit = {
+  private[sync] def exec(conn: Connection, sql: String): Unit = {
     val stmt = conn.createStatement()
     try stmt.execute(sql) finally stmt.close()
   }

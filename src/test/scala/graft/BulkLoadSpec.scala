@@ -104,8 +104,8 @@ class BulkLoadSpec extends SparkSpec with BeforeAndAfterAll {
       override def quoteIdent(n: String) = inner.quoteIdent(n)
       override def createStagingSql(s: String, d: String) = inner.createStagingSql(s, d)
       override def upsertSql(dest: String, staging: String, cols: Seq[String],
-          pk: String, isDeleted: Option[String]) =
-        inner.upsertSql(dest, staging, cols, pk, isDeleted)
+          pk: String, tsCol: String, isDeleted: Option[String]) =
+        inner.upsertSql(dest, staging, cols, pk, tsCol, isDeleted)
       override def deleteSql(dest: String, staging: String, pk: String,
           isDeleted: String) = inner.deleteSql(dest, staging, pk, isDeleted)
       override def truncateSql(t: String) = inner.truncateSql(t)

@@ -26,9 +26,8 @@ import graft.cli.Cli
   *    `Authorization: Bearer` header via the config-bootstrapped
   *    transport (`salesforce.py:17-26`);
   *  - bulkload's wire shapes: the PK-chunking attempt (rejected →
-  *    REST fallback), the pruned max-watermark projection, the pushed
-  *    COUNT(), and the paginated full extract landing in Derby with
-  *    the `__sync` registration;
+  *    REST fallback) and the paginated full extract, read once (no
+  *    COUNT()), landing in Derby with the `__sync` registration;
   *  - the sync round's F2 watermark WHERE in T6 UTC-second form,
   *    preflighted by the `--max-delta` wire COUNT, merged into the
   *    same Derby table, watermark advanced to the delta's max stamp;
@@ -269,8 +268,8 @@ class CliLifecycleWireSpec extends SparkSpec with BeforeAndAfterAll {
     // paginated REST extract (NEXTPAGE served page 2)
     assert(seen("pkChunkHeader").startsWith("chunkSize="))
     assert(seen("fullSoql").contains("FROM Contact"))
-    // pushed COUNT answered from totalSize (A1 over the wire)
-    assert(seen("countSoql").startsWith("SELECT COUNT() FROM Contact"))
+    // the extract is the only read: no COUNT() round trip
+    assert(!seen.contains("countSoql"))
     val conn = DriverManager.getConnection(jdbc)
     try {
       val rs = conn.createStatement()

@@ -2,6 +2,7 @@ package graft
 
 import java.sql.{DriverManager, Timestamp}
 import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
 
 import graft.cli.Cli
 import graft.reverse.{MockUploadTransport, UploadTransports}
@@ -80,23 +81,44 @@ class CliSpec extends SparkSpec {
     assert(t.countCalls > before) // A1: pushed, not fetched-and-counted
   }
 
+  private def syncState(conn: java.sql.Connection): (Timestamp, String) = {
+    val ss = conn.createStatement().executeQuery(
+      """SELECT syncuntil, status FROM "__sync" WHERE tablename = 'clidest'""")
+    ss.next()
+    (ss.getTimestamp(1), ss.getString(2))
+  }
+
   test("bulkload truncate-loads the object into Derby and registers __sync") {
-    register("cli-b", v1)
+    val t = register("cli-b", v1)
     val (code, out) = runCli("bulkload", "--transport", "cli-b",
       "--object", "Account", "--jdbc", jdbc, "--dest", "clidest",
       "--pk", "Id", "--ts-col", "SystemModstamp")
     assert(code == 0, out.mkString("\n"))
     assert(out.exists(_.startsWith("loaded 20 rows")))
+    // one read of the source: one chunk plan, no COUNT() round trips
+    assert(t.pkChunksCalls == 1 && t.countCalls == 0)
     val conn = DriverManager.getConnection(jdbc)
     try {
       val rs = conn.createStatement().executeQuery(
         """SELECT COUNT(*) FROM "clidest"""")
       rs.next(); assert(rs.getInt(1) == 20)
-      val ss = conn.createStatement().executeQuery(
-        """SELECT syncuntil, status FROM "__sync" WHERE tablename = 'clidest'""")
-      ss.next()
-      assert(ss.getTimestamp(1) == ts("2024-01-05 10:00:00")) // max landed ts
-      assert(ss.getString(2) == "ready")
+      // max landed ts
+      assert(syncState(conn) == (ts("2024-01-05 10:00:00"), "ready"))
+    } finally conn.close()
+  }
+
+  test("bulkload refuses an empty source; destination and __sync unchanged") {
+    register("cli-empty", Nil)
+    val (code, out) = runCli("bulkload", "--transport", "cli-empty",
+      "--object", "Account", "--jdbc", jdbc, "--dest", "clidest",
+      "--pk", "Id", "--ts-col", "SystemModstamp")
+    assert(code == 2 && out == Seq(
+      "error: source is empty — refusing truncate-and-load of clidest"), out.mkString("\n"))
+    val conn = DriverManager.getConnection(jdbc)
+    try {
+      val rs = conn.createStatement().executeQuery("""SELECT COUNT(*) FROM "clidest"""")
+      rs.next(); assert(rs.getInt(1) == 20)
+      assert(syncState(conn) == (ts("2024-01-05 10:00:00"), "ready"))
     } finally conn.close()
   }
 
@@ -112,12 +134,17 @@ class CliSpec extends SparkSpec {
         case _ => r
       }
     } :+ row(21, "acct-21", 21, deleted = false, "2024-01-06 09:30:00")
-    register("cli-s", v2)
+    val t = register("cli-s", v2)
     val (code, out) = runCli("sync", "--transport", "cli-s",
       "--object", "Account", "--jdbc", jdbc, "--dest", "clidest",
       "--pk", "Id", "--ts-col", "SystemModstamp", "--deleted-col", "IsDeleted")
     assert(code == 0, out.mkString("\n"))
     assert(out.exists(_.contains("Merged")), out.mkString("\n"))
+    // one read of the delta decides the fast path and stages the rows:
+    // one chunk plan, and no LIMIT-1 probe or empty select list
+    assert(t.pkChunksCalls == 1)
+    assert(t.queries.asScala.forall { case (fields, limit) =>
+      fields.nonEmpty && limit.isEmpty }, t.queries.asScala.mkString("; "))
     val conn = DriverManager.getConnection(jdbc)
     try {
       val st = conn.createStatement()

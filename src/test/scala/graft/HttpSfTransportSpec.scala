@@ -100,6 +100,9 @@ class HttpSfTransportSpec extends SparkSpec with BeforeAndAfterAll {
   private val CsvB = // embeds a real NUL byte inside the Name value
     "\"Id\",\"Name\",\"NumEmployees\"\n\"003C\",\"nu" + 0.toChar +
       "l stripped\",\"9\"\n"
+  // Salesforce renders a null field as an empty one, quoted or not
+  private val CsvNulls =
+    "\"Id\",\"Name\",\"NumEmployees\"\n\"003N\",,\"\"\n\"003M\",\"\",\n"
   private val UploadResultCsv =
     "\"Id\",\"Success\",\"Created\",\"Error\"\n" +
       "\"003X\",\"true\",\"true\",\"\"\n" +
@@ -230,6 +233,12 @@ class HttpSfTransportSpec extends SparkSpec with BeforeAndAfterAll {
             respond(ex, batchXml("751A", "Completed"), contentType = "application/xml")
           case ("GET", "/services/async/52.0/job/750JOB/batch/751B") =>
             respond(ex, batchXml("751B", "Completed"), contentType = "application/xml")
+          case ("GET", "/services/async/52.0/job/750JOB/batch/751N") =>
+            respond(ex, batchXml("751N", "Completed"), contentType = "application/xml")
+          case ("GET", "/services/async/52.0/job/750JOB/batch/751N/result") =>
+            respond(ex, ResultListXml, contentType = "application/xml")
+          case ("GET", "/services/async/52.0/job/750JOB/batch/751N/result/752R1") =>
+            respond(ex, CsvNulls, contentType = "text/csv")
           case ("GET", "/services/async/52.0/job/750UP/batch/753B") =>
             // first poll InProgress, then Completed — exercises the wait loop
             val st = if (uploadBatchPolls.getAndIncrement() == 0) "InProgress"
@@ -410,6 +419,18 @@ class HttpSfTransportSpec extends SparkSpec with BeforeAndAfterAll {
     val rowsB = transport().query("Contact", Nil, None, None,
       includeDeleted = false, Some("750JOB" -> "751B")).toSeq
     assert(rowsB.head("Name") == "nul stripped") // NUL gone at the wire
+  }
+
+  test("an empty Bulk CSV field lands as NULL for text and numbers alike") {
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("Id", StringType),
+      StructField("Name", StringType), StructField("NumEmployees", IntegerType)))
+    val reader = new graft.sources.salesforce.SfRowReader(transport().query("Contact",
+      schema.fieldNames.toSeq, None, None, includeDeleted = false,
+      Some("750JOB" -> "751N")), schema)
+    val rows = Iterator.continually(reader).takeWhile(_.next()).map(_.get().copy()).toSeq
+    assert(rows.map(_.getUTF8String(0).toString) == Seq("003N", "003M"))
+    assert(rows.forall(r => r.isNullAt(1) && r.isNullAt(2)))
   }
 
   test("PKChunking rejection falls back to the un-chunked REST scan") {

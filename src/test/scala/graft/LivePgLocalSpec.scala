@@ -17,7 +17,7 @@ import graft.types.{SfField, SfSchema}
   * the SAME statements the engine generates — [[SfSchema]] DDL,
   * [[PgDialect]] `ON CONFLICT` merge, anti-delete,
   * `COPY … FORCE_NULL` (fed over stdin exactly as CopyManager would),
-  * UNLOGGED shared staging, TRUNCATE, MAX(ts) — through `psql`, and
+  * TEMPORARY staging, TRUNCATE, MAX(ts) — through `psql`, and
   * asserts their row-level effects, not just their text. Every test
   * skips cleanly (`assume`) when the binaries or the `postgres` user
   * are unavailable.
@@ -124,17 +124,34 @@ class LivePgLocalSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("golden ON CONFLICT merge + anti-delete mutate real rows") {
     live()
-    psql("""CREATE TABLE dest ("Id" TEXT PRIMARY KEY, "Name" TEXT, "IsDeleted" BOOLEAN)""")
+    psql("""CREATE TABLE dest ("Id" TEXT PRIMARY KEY, "Name" TEXT, "IsDeleted" BOOLEAN,
+      "ts" INT)""")
     psql("""CREATE TABLE tmp (LIKE dest)""")
-    psql("""INSERT INTO dest VALUES ('1', 'old-1', false), ('2', 'old-2', false)""")
+    psql("""INSERT INTO dest VALUES ('1', 'old-1', false, 1), ('2', 'old-2', false, 1)""")
     // delta: update 1, insert 3, soft-delete 2
-    psql("""INSERT INTO tmp VALUES ('1', 'new-1', false), ('3', 'new-3', false),
-      ('2', 'gone-2', true)""")
-    psql(d.upsertSql("dest", "tmp", Seq("Id", "Name", "IsDeleted"), "Id",
-      Some("IsDeleted")))
+    psql("""INSERT INTO tmp VALUES ('1', 'new-1', false, 2), ('3', 'new-3', false, 2),
+      ('2', 'gone-2', true, 2)""")
+    val cols = Seq("Id", "Name", "IsDeleted", "ts")
+    psql(d.upsertSql("dest", "tmp", cols, "Id", "ts", Some("IsDeleted")))
     psql(d.deleteSql("dest", "tmp", "Id", "IsDeleted"))
     assert(psql("""SELECT "Id" || ':' || "Name" FROM dest ORDER BY "Id"""")
       == "1:new-1\n3:new-3")
+  }
+
+  test("guarded ON CONFLICT leaves rows alone unless the staged ts is newer") {
+    live()
+    psql("""CREATE TABLE gdest ("Id" TEXT PRIMARY KEY, "Name" TEXT, "ts" INT)""")
+    psql("""CREATE TABLE gtmp (LIKE gdest)""")
+    psql("""INSERT INTO gdest VALUES ('1', 'landed-1', 5), ('2', 'landed-2', 5),
+      ('3', 'no-ts', NULL)""")
+    // re-delivered (same ts), older, and newer images, plus a null-ts row
+    psql("""INSERT INTO gtmp VALUES ('1', 'again-1', 5), ('2', 'older-2', 4),
+      ('3', 'stamped-3', 6), ('4', 'new-4', 6)""")
+    val cols = Seq("Id", "Name", "ts")
+    // psql -c prints the command tag: 2 rows written, 3 and 4
+    assert(psql(d.upsertSql("gdest", "gtmp", cols, "Id", "ts", None)) == "INSERT 0 2")
+    assert(psql("""SELECT "Id" || ':' || "Name" FROM gdest ORDER BY "Id"""")
+      == "1:landed-1\n2:landed-2\n3:stamped-3\n4:new-4")
   }
 
   test("COPY FORCE_NULL over stdin turns empty strings into real NULLs") {
@@ -153,11 +170,13 @@ class LivePgLocalSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(psql("""SELECT count(*) FROM contacts WHERE "Amount" IS NULL""") == "1")
   }
 
-  test("UNLOGGED shared staging, TRUNCATE and MAX(ts) goldens execute") {
+  test("TEMPORARY staging, TRUNCATE and MAX(ts) goldens execute") {
     live()
     psql("""CREATE TABLE base ("Id" TEXT, "SystemModstamp" TIMESTAMPTZ)""")
-    psql(d.createSharedStagingSql("stage1", "base"))
-    assert(psql("SELECT relpersistence FROM pg_class WHERE relname = 'stage1'") == "u")
+    // one psql session: the staging table only exists inside it
+    assert(psql(d.createStagingSql("stage1", "base") +
+      "; SELECT relpersistence FROM pg_class WHERE relname = 'stage1'")
+      .linesIterator.toSeq.last == "t")
     psql("""INSERT INTO base VALUES ('1', '2024-03-01T08:00:00Z')""")
     assert(psql(d.maxTsSql("base", "SystemModstamp")).nonEmpty)
     psql(d.truncateSql("base"))

@@ -66,12 +66,13 @@ class LivePgSpec extends SparkSpec {
       val d = new PgDialect()
       val dest = d.qualified(Some(Schema), "Contact")
       val stg = d.qualified(Some(Schema), "tmp")
-      exec(conn, s"""CREATE TABLE $dest ("Id" VARCHAR(18) PRIMARY KEY, "Name" TEXT, "IsDeleted" BOOLEAN)""")
-      exec(conn, s"""CREATE TABLE $stg ("Id" VARCHAR(18), "Name" TEXT, "IsDeleted" BOOLEAN)""")
-      exec(conn, s"""INSERT INTO $dest VALUES ('001', 'old-name', false), ('002', 'doomed', false)""")
-      exec(conn, s"""INSERT INTO $stg VALUES ('001', 'new-name', false), ('002', 'x', true), ('003', 'fresh', false)""")
+      exec(conn, s"""CREATE TABLE $dest ("Id" VARCHAR(18) PRIMARY KEY, "Name" TEXT, "IsDeleted" BOOLEAN, "ts" INT)""")
+      exec(conn, s"""CREATE TABLE $stg ("Id" VARCHAR(18), "Name" TEXT, "IsDeleted" BOOLEAN, "ts" INT)""")
+      exec(conn, s"""INSERT INTO $dest VALUES ('001', 'old-name', false, 1), ('002', 'doomed', false, 1)""")
+      exec(conn, s"""INSERT INTO $stg VALUES ('001', 'new-name', false, 2), ('002', 'x', true, 2), ('003', 'fresh', false, 2)""")
       // the exact statement shapes TypesSpec pins as goldens
-      exec(conn, d.upsertSql(dest, stg, Seq("Id", "Name", "IsDeleted"), "Id", Some("IsDeleted")))
+      exec(conn, d.upsertSql(dest, stg, Seq("Id", "Name", "IsDeleted", "ts"), "Id", "ts",
+        Some("IsDeleted")))
       exec(conn, d.deleteSql(dest, stg, "Id", "IsDeleted"))
       val got = queryPairs(conn, s"""SELECT "Id", "Name" FROM $dest ORDER BY "Id"""")
       assert(got == Seq("001" -> "new-name", "003" -> "fresh"))
@@ -87,7 +88,7 @@ class LivePgSpec extends SparkSpec {
         .toDF("Id", "Name", "Amount")
       val sql = d.copyInSql(dest, Seq("Id", "Name", "Amount"), Seq("Amount"))
         .getOrElse(fail("PgDialect must produce COPY sql"))
-      val copied = CopyStager.copyInto(conn, sql, df)
+      val copied = CopyStager.copyInto(conn, sql, df.schema, df.collect().iterator)
       assume(copied.isDefined,
         "postgresql JDBC driver not on classpath — COPY path skipped")
       assert(copied.contains(2L))

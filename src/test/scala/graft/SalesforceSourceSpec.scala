@@ -109,6 +109,21 @@ class SalesforceSourceSpec extends SparkSpec {
     val t = freshTransport("t_limit")
     assert(read("t_limit").limit(5).count() == 5)
     assert(t.lastLimit.contains(5))
+    // the plan prunes every column; the wire still gets a select list
+    assert(t.lastFields == Seq("Id"))
+  }
+
+  test("each action plans its PK chunks once (one Bulk job over HTTP)") {
+    val t = freshTransport("t_plan_once")
+    val actions = Seq[DataFrame => Any](
+      _.collect(),
+      _.toLocalIterator().forEachRemaining(_ => ()),
+      _.agg(max($"SystemModstamp")).collect())
+    actions.foreach { action =>
+      val before = t.pkChunksCalls
+      action(read("t_plan_once"))
+      assert(t.pkChunksCalls - before == 1)
+    }
   }
 
   test("COUNT(*) is answered without fetching rows (A1)") {

@@ -10,7 +10,8 @@ import graft.sync.{IncrementalSync, SyncConfig, SyncResult, SyncStateStore}
   * ships with Spark): state machine C3-C6, incremental transaction C1,
   * zero-delta C2, idempotent re-application, watermark-from-landed-data
   * A2, soft-delete propagation J2. PostgreSQL SQL generation is covered
-  * separately by golden-string tests in SinkSqlSpec.
+  * separately by golden-string tests in TypesSpec. Row triggers on the
+  * destination count every row the sync writes there.
   */
 class SyncSpec extends SparkSpec with BeforeAndAfterAll {
   import spark.implicits._
@@ -19,12 +20,13 @@ class SyncSpec extends SparkSpec with BeforeAndAfterAll {
   private var state: SyncStateStore = _
   private var sync: IncrementalSync = _
   private val dialect = new DerbyDialect
+  private val url = "jdbc:derby:memory:syncspec"
 
   private def ts(s: String) = Timestamp.valueOf(s)
 
   override def beforeAll(): Unit = {
     super.beforeAll()
-    conn = DriverManager.getConnection("jdbc:derby:memory:syncspec;create=true")
+    conn = DriverManager.getConnection(s"$url;create=true")
     conn.setAutoCommit(false)
     val st = conn.createStatement()
     st.execute(
@@ -35,6 +37,10 @@ class SyncSpec extends SparkSpec with BeforeAndAfterAll {
         |  "modstamp" TIMESTAMP,
         |  "is_deleted" BOOLEAN
         |)""".stripMargin)
+    st.execute("""CREATE TABLE "dest_writes" ("n" INT)""")
+    Seq("INSERT", "UPDATE", "DELETE").foreach(op => st.execute(
+      s"""CREATE TRIGGER "contacts_$op" AFTER $op ON "contacts"
+         |FOR EACH ROW INSERT INTO "dest_writes" VALUES (1)""".stripMargin))
     st.close()
     state = new SyncStateStore(conn)
     state.install()
@@ -64,6 +70,14 @@ class SyncSpec extends SparkSpec with BeforeAndAfterAll {
     } finally st.close()
   }
 
+  private def destWrites(): Int = {
+    val st = conn.createStatement()
+    try {
+      val rs = st.executeQuery("""SELECT COUNT(*) FROM "dest_writes"""")
+      rs.next(); rs.getInt(1)
+    } finally st.close()
+  }
+
   test("initial delta lands, watermark advances to max(landed ts)") {
     val r = sync.syncTable(cfg, wm => {
       assert(wm.contains(ts("2024-01-01 00:00:00")))
@@ -88,10 +102,13 @@ class SyncSpec extends SparkSpec with BeforeAndAfterAll {
 
   test("re-applying an already-landed delta is idempotent") {
     val before = destRows()
+    val writes = destWrites()
     sync.syncTable(cfg, _ => delta(
       (2L, "bob2", 25.0, "2024-01-03 10:00:00", false),
       (3L, "cid", 30.0, "2024-01-03 09:00:00", false)))
     assert(destRows() == before)
+    // re-delivered rows are no newer than the landed ones: 0 rows written
+    assert(destWrites() == writes)
   }
 
   test("zero delta takes the fast path: no writes, state touched") {
@@ -102,7 +119,7 @@ class SyncSpec extends SparkSpec with BeforeAndAfterAll {
   test("COPY stager: pgsf CSV payload streams correctly; no-PG falls back") {
     val df = Seq((1L, Option("a\"b"), Option(true)), (2L, None, None))
       .toDF("pk", "name", "flag")
-    val reader = graft.sink.CopyStager.csvReader(df)
+    val reader = graft.sink.CopyStager.csvReader(df.schema, df.collect().iterator)
     val text = {
       val sb = new StringBuilder; val buf = new Array[Char](7)
       var n = reader.read(buf, 0, buf.length)
@@ -115,7 +132,7 @@ class SyncSpec extends SparkSpec with BeforeAndAfterAll {
     // this build has no PostgreSQL driver: the reflective seam reports
     // None on a Derby connection and loads take the INSERT path
     assert(graft.sink.CopyStager.copyInto(conn,
-      "COPY x FROM STDIN", df).isEmpty)
+      "COPY x FROM STDIN", df.schema, df.collect().iterator).isEmpty)
   }
 
   test("oversized delta preflight switches to full reload without fetching") {
@@ -138,10 +155,18 @@ class SyncSpec extends SparkSpec with BeforeAndAfterAll {
   test("lock is exclusive: running table refuses a second sync") {
     assert(state.tryLock("contacts"))
     conn.commit()
-    val r = sync.syncTable(cfg, _ => fail("should not fetch"))
-    assert(r == SyncResult.LockBusy)
-    state.recoverAll() // C6
-    conn.commit()
+    val other = DriverManager.getConnection(url)
+    other.setAutoCommit(false)
+    try {
+      val r = new IncrementalSync(other, dialect, new SyncStateStore(other))
+        .syncTable(cfg, _ => fail("should not fetch"))
+      assert(r == SyncResult.LockBusy)
+      // the refused CAS left no transaction open: a second connection
+      // updates the row without waiting, and this one closes cleanly
+      state.recoverAll() // C6
+      conn.commit()
+      other.close()
+    } finally if (!other.isClosed) { other.rollback(); other.close() }
     assert(state.get("contacts").exists(_.status == "ready"))
   }
 
@@ -168,47 +193,6 @@ class SyncSpec extends SparkSpec with BeforeAndAfterAll {
     val due = state.dueTables(now)
     assert(due.contains("t_due"))
     assert(!due.contains("t_fresh"))
-  }
-
-  test("parallel staging: executors insert partitions, merge stays one txn") {
-    // fresh IncrementalSync with the URL so executor tasks can connect
-    val psync = new graft.sync.IncrementalSync(conn, dialect, state,
-      Some("jdbc:derby:memory:syncspec"))
-    val pcfg = cfg.copy(parallelStaging = true)
-    val r = psync.syncTable(pcfg, _ => delta(
-      (20L, "p1", 1.0, "2024-01-05 00:00:00", false),
-      (21L, "p2", 2.0, "2024-01-05 00:00:01", false),
-      (2L, "bob3", 26.0, "2024-01-05 00:00:02", false)).repartition(3))
-    assert(r.isInstanceOf[SyncResult.Merged])
-    val rows = destRows()
-    assert(rows.exists(_ == (20L, "p1", 1.0)))
-    assert(rows.exists(_ == (21L, "p2", 2.0)))
-    assert(rows.exists(_ == (2L, "bob3", 26.0)))
-    assert(state.get("contacts").flatMap(_.syncuntil)
-      .contains(ts("2024-01-05 00:00:02")))
-  }
-
-  test("parallelStaging fails fast when the dialect only stages session-locally") {
-    val tempOnly = new graft.sink.SqlDialect {
-      override def quoteIdent(n: String): String = dialect.quoteIdent(n)
-      override def createStagingSql(s: String, d: String): String =
-        dialect.createStagingSql(s, d)
-      override def upsertSql(dest: String, staging: String, cols: Seq[String],
-          pk: String, isDeleted: Option[String]): String =
-        dialect.upsertSql(dest, staging, cols, pk, isDeleted)
-      override def deleteSql(dest: String, staging: String, pk: String,
-          isDeleted: String): String = dialect.deleteSql(dest, staging, pk, isDeleted)
-      override def supportsParallelStaging: Boolean = false
-    }
-    val s = new graft.sync.IncrementalSync(conn, tempOnly, state,
-      Some("jdbc:derby:memory:syncspec"))
-    val e = intercept[IllegalArgumentException] {
-      s.syncTable(cfg.copy(parallelStaging = true), _ => delta())
-    }
-    assert(e.getMessage.contains("cross-session"))
-    // fail-fast precedes the CAS lock: the table is still lockable
-    assert(state.tryLock("contacts"))
-    conn.rollback() // undo the probe lock
   }
 
   test("delta insert-then-delete of a new PK never survives") {

@@ -142,12 +142,13 @@ class TypesSpec extends AnyFunSuite {
   test("PG merge SQL golden strings (query_poll_table.py:119-152)") {
     val d = new PgDialect()
     val up = d.upsertSql("\"salesforce\".\"Contact\"", "\"tmp\"",
-      Seq("Id", "Name", "IsDeleted"), "Id", Some("IsDeleted"))
+      Seq("Id", "Name", "IsDeleted"), "Id", "SystemModstamp", Some("IsDeleted"))
     assert(up ==
-      "INSERT INTO \"salesforce\".\"Contact\" (\"Id\", \"Name\", \"IsDeleted\")" +
+      "INSERT INTO \"salesforce\".\"Contact\" AS d (\"Id\", \"Name\", \"IsDeleted\")" +
         " SELECT \"Id\", \"Name\", \"IsDeleted\" FROM \"tmp\" WHERE NOT \"IsDeleted\"" +
         " ON CONFLICT (\"Id\") DO UPDATE SET (\"Id\", \"Name\", \"IsDeleted\")" +
-        " = (EXCLUDED.\"Id\", EXCLUDED.\"Name\", EXCLUDED.\"IsDeleted\")")
+        " = (EXCLUDED.\"Id\", EXCLUDED.\"Name\", EXCLUDED.\"IsDeleted\")" +
+        " WHERE d.\"SystemModstamp\" IS NULL OR d.\"SystemModstamp\" < EXCLUDED.\"SystemModstamp\"")
     val del = d.deleteSql("\"salesforce\".\"Contact\"", "\"tmp\"", "Id", "IsDeleted")
     assert(del ==
       "DELETE FROM \"salesforce\".\"Contact\" WHERE \"Id\" IN " +
@@ -167,15 +168,9 @@ class TypesSpec extends AnyFunSuite {
     assert(new graft.sink.DerbyDialect().copyInSql("t", Seq("Id"), Nil).isEmpty)
   }
 
-  test("PG parallel staging uses a cross-session visible UNLOGGED table") {
+  test("PG staging is the reference's session-local TEMPORARY table") {
     val d = new PgDialect()
-    // serial path keeps the reference's session-local temp table...
     assert(d.createStagingSql("\"tmp\"", "\"dest\"").startsWith("CREATE TEMPORARY TABLE"))
-    // ...but executor connections cannot see a TEMPORARY table, so the
-    // shared variant must be a real (UNLOGGED) table
-    assert(d.createSharedStagingSql("\"tmp\"", "\"dest\"") ==
-      "CREATE UNLOGGED TABLE \"tmp\" (LIKE \"dest\" INCLUDING DEFAULTS)")
-    assert(d.supportsParallelStaging)
   }
 
   test("PG truncate/drop/max-ts golden strings (csv_to_postgres.py:63, synctable.py:45-54)") {
