@@ -1,20 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val only = SparkEntry.onlySubset()
-    val queries = only match {
-      case Some(names) => SparkEntry.queries.filter { case (k, _) => names(k) }
-      case None => SparkEntry.queries
-    }
+    val spark = Sessions.local()
+    val queries = SparkEntry.selectedQueries()
     // One fatal driver/JVM event (stopped SparkContext, OOM) poisons
     // every later attempt; continuing would time zombie failures for
     // minutes and bury the real cause. Abort at once with the FIRST
@@ -46,14 +35,7 @@ object Bench {
         Runtime.getRuntime.halt(3)
       }
     }
-    // Warm-up pass at the smallest scale factor sharing the layout:
-    // triggers codegen compilation + JIT for every query plan so the
-    // timed pass measures execution, not JVM warm-up.
-    val warmDir = {
-      val parent = new java.io.File(sfDir).getParentFile
-      val w = new java.io.File(parent, "sf0.001")
-      if (w.exists()) w.getPath else sfDir
-    }
+    val warmDir = Sessions.warmUpDir(sfDir)
     queries.foreach { case (n, fn) =>
       try { fn(spark, warmDir).count() } catch {
         case e: Throwable => abortIfDead(n, "warm-up", e)

@@ -1887,21 +1887,21 @@ object SparkEntry {
     deleteTree(tmp) // _SUCCESS/.crc leftovers must not accumulate in /tmp
   }
 
-  /** `SPARK_GRAFT_ONLY` (comma-separated query subset for targeted
-    * iteration), parsed ONCE for Verify and Bench so the contract
-    * cannot drift: unknown names fail fast — a typo must not run an
-    * empty set that looks like a clean pass.
+  /** [[queries]] narrowed by `SPARK_GRAFT_ONLY` (comma-separated query
+    * subset for targeted iteration), parsed ONCE for Verify, Bench and
+    * PlanProfile so the contract cannot drift: unknown names fail fast —
+    * a typo must not run an empty set that looks like a clean pass.
     */
-  def onlySubset(): Option[Set[String]] = {
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { names =>
-      val unknown = names.diff(queries.keySet)
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_ONLY names not in SparkEntry.queries: ${unknown.toSeq.sorted.mkString(", ")}")
+  def selectedQueries(): Map[String, (SparkSession, String) => DataFrame] =
+    sys.env.get("SPARK_GRAFT_ONLY")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet) match {
+      case None => queries
+      case Some(names) =>
+        val unknown = names.diff(queries.keySet)
+        require(unknown.isEmpty,
+          s"SPARK_GRAFT_ONLY names not in SparkEntry.queries: ${unknown.toSeq.sorted.mkString(", ")}")
+        queries.filter { case (k, _) => names(k) }
     }
-    only
-  }
 
   /** Key a /tmp staging location to its SOURCE file's mtime: when the
     * driver regenerates testdata, the key changes and staging rebuilds
@@ -2009,22 +2009,20 @@ object SparkEntry {
     * a bounded replay is pure fixed overhead (measured ~9 s across the
     * four streaming queries). Fresh checkpoints every invocation make
     * the narrowing safe; a production deployment sizes this to key
-    * cardinality instead — hence the env override.
+    * cardinality instead.
     *
-    * Default 2 (r14 sweep at sf0.1/32 cpus with the StreamProfile
-    * durationMs breakdown, same session back-to-back): the per-batch
-    * cost of the heavy stateful queries is store-commit fixed overhead
-    * × partitions, not parallel work — family sample totals 13.3 s at
-    * p=2 vs 15.6 at p=4, 24.2 at p=8, 33.8 at p=16; p=1 loses the
-    * actual work's parallelism (16.1 s). KB-scale state at bench SF is
-    * exactly the regime the scaladoc above describes; the driver's
-    * bench compares like-for-like because the default is a committed
-    * code constant, not a per-host value.
+    * 2 partitions (r14 sweep at sf0.1/32 cpus with the per-batch
+    * durationMs breakdown that `PlanProfile` prints for stream queries,
+    * same session back-to-back): the per-batch cost of the heavy
+    * stateful queries is store-commit fixed overhead × partitions, not
+    * parallel work — family sample totals 13.3 s at p=2 vs 15.6 at p=4,
+    * 24.2 at p=8, 33.8 at p=16; p=1 loses the actual work's parallelism
+    * (16.1 s). KB-scale state at bench SF is exactly the regime the
+    * scaladoc above describes.
     */
   private def withStreamShuffle[A](s: SparkSession)(body: => A): A = {
     val prev = s.conf.get("spark.sql.shuffle.partitions")
-    val n = sys.env.getOrElse("SPARK_GRAFT_STREAM_SHUFFLE", "2")
-    s.conf.set("spark.sql.shuffle.partitions", n)
+    s.conf.set("spark.sql.shuffle.partitions", "2")
     try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
   }
 

@@ -191,8 +191,12 @@ case class TopKMergeAgg(sketch: Expression, k: Int,
       var j = 0
       val n = a.numElements()
       while (j < n) {
-        val row = a.getStruct(j, 2)
-        buf.insert(row.getDouble(0), row.getLong(1))
+        // the input type admits null elements and null fields: skip them
+        if (!a.isNullAt(j)) {
+          val row = a.getStruct(j, 2)
+          if (!row.isNullAt(0) && !row.isNullAt(1))
+            buf.insert(row.getDouble(0), row.getLong(1))
+        }
         j += 1
       }
     }

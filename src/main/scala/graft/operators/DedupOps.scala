@@ -554,7 +554,7 @@ object DedupOps {
     // width-spread (the ngramJaccard discipline): the per-doc rarest-
     // first sort + prefix explode amplify CPU far beyond their input
     // bytes, and AQE's byte-based coalescing packed the stage onto 3
-    // tasks (r14 profile, stage table in plans/r14) — the explicit-
+    // tasks (r14 PlanProfile stage table) — the explicit-
     // width repartition on the aggregate's own key replaces its
     // exchange, exempt from coalescing, cluster-derived width
     val prefixes = sh.join(df, "sh")

@@ -1182,6 +1182,59 @@ object GraphOps {
       .orderBy("doc_a", "doc_b")
   }
 
+  /** The disjoint BFS frontiers `f_1 … f_hops` of every seed, as
+    * (s, v) frames: f_1 = N(seeds), f_h = N(f_{h-1}) \ ball_{h-1}. A
+    * seed never appears in its own frontiers (self-loop pairs
+    * included). `seedsOf` picks the seeds (column `s`) and may read the
+    * edge list it is given (`u`, `v`, both directions).
+    *
+    * FRONTIER expansion, not whole-ball re-expansion (guide §1.2 step
+    * 1 / §2.3): the old shape joined the ENTIRE ball against e each
+    * hop and re-deduped the union — hop 3 re-derived every hop-1 and
+    * hop-2 path again (r14 profile: the b2 distinct alone shuffled
+    * 53 MB at sf0.1). Radius-h reachability only needs the NEIGHBORS
+    * OF THE NEW nodes, and since the frontiers are disjoint by
+    * construction the ball sizes are cumulative sums of frontier
+    * counts — no ball-scale union, dedup, or re-join ever happens.
+    */
+  private def bfsFrontiers(pairs: DataFrame, hops: Int)(
+      seedsOf: DataFrame => DataFrame): Seq[DataFrame] = {
+    val p = pairs.select(col("doc_a").cast("long").as("x"),
+      col("doc_b").cast("long").as("y"))
+    // the symmetric edge list is the probe side of EVERY hop join, all
+    // keyed on u — materialize it ONCE, already hash-partitioned on u,
+    // so the hop joins neither re-derive it from the pair frame nor
+    // re-shuffle it per hop (guide §2.4 exchange sharing; measured
+    // 3× 37 MB re-derivations + 3× 21 MB exchanges at sf0.1 without
+    // this). localCheckpoint preserves the repartition's partitioning.
+    val e = p.select(col("x").as("u"), col("y").as("v"))
+      .unionAll(p.select(col("y").as("u"), col("x").as("v")))
+      .repartition(col("u")).localCheckpoint(true)
+    val width = pairs.sparkSession.sparkContext.defaultParallelism
+    // One v-keyed exchange settles each hop: hashpartitioning(v)
+    // satisfies both the distinct's ClusteredDistribution(s, v) ({v} ⊂
+    // keys — equal (s, v) pairs share v, dedup stays global) and the
+    // anti-joins' (s, v) clustering, and localCheckpoint preserves it,
+    // so the next hop's f.v-keyed probe of e pays no frontier-side
+    // exchange. Each frontier is (seeds × nodes)-bounded and eagerly
+    // truncated, so the next hop and the size aggregates read a
+    // materialized frontier instead of re-running the join chain.
+    def settle(ball: DataFrame, minus: Seq[DataFrame]): DataFrame =
+      minus.foldLeft(
+        ball.repartition(width, col("v")).distinct())(
+        (b, m) => b.join(m, Seq("s", "v"), "left_anti"))
+        .localCheckpoint(true)
+    def hop(frontier: DataFrame): DataFrame = frontier.as("f")
+      .join(e.as("g"), col("f.v") === col("g.u"))
+      .select(col("f.s").as("s"), col("g.v").as("v"))
+      .filter(col("v") =!= col("s"))
+    val f1 = settle(seedsOf(e).join(e, col("s") === col("u"))
+      .select(col("s"), col("v")).filter(col("v") =!= col("s")), Nil)
+    (2 to hops).foldLeft(Vector(f1)) { (fs, _) =>
+      fs :+ settle(hop(fs.last), fs)
+    }
+  }
+
   /** Multi-source BFS ball census: cumulative reachable-node counts
     * at radius 1/2/3 from a deterministic seed subset (`node %
     * seedMod == 0`) — the "how connected is this graph around a
@@ -1201,62 +1254,12 @@ object GraphOps {
     * shape, not the data, sets the cost.
     */
   def bfsBall(pairs: DataFrame, seedMod: Long = 997L): DataFrame = {
-    val p = pairs.select(col("doc_a").cast("long").as("x"),
-      col("doc_b").cast("long").as("y"))
-    // the symmetric edge list is the probe side of EVERY hop join, all
-    // keyed on u — materialize it ONCE, already hash-partitioned on u,
-    // so the three hop joins neither re-derive it from the pair frame
-    // nor re-shuffle it per hop (guide §2.4 exchange sharing; measured
-    // 3× 37 MB re-derivations + 3× 21 MB exchanges at sf0.1 without
-    // this). localCheckpoint preserves the repartition's partitioning.
-    val e = p.select(col("x").as("u"), col("y").as("v"))
-      .unionAll(p.select(col("y").as("u"), col("x").as("v")))
-      .repartition(col("u")).localCheckpoint(true)
-    val width = pairs.sparkSession.sparkContext.defaultParallelism
-    val seeds = e.select(col("u").as("s")).distinct()
-      .filter(col("s") % seedMod === 0)
-    // each ball is (seeds × nodes)-bounded — eagerly truncate so the
-    // next hop and the three size aggregates read a materialized
-    // frontier instead of re-running the whole join chain (without
-    // this, sizes(b3) re-executes b1's and b2's adjacency joins).
     // No broadcast hint on seeds: the seed set is modulus-sampled off
     // the node set and grows linearly with the corpus, so a forced
     // broadcast would hit the 8 GB hard limit at scale — let AQE pick
     // the strategy from the observed size (the dupRateByLength rule).
-    //
-    // FRONTIER expansion, not whole-ball re-expansion (guide §1.2 step
-    // 1 / §2.3): the old shape joined the ENTIRE ball against e each
-    // hop and re-deduped the union — hop 3 re-derived every hop-1 and
-    // hop-2 path again (r14 profile: the b2 distinct alone shuffled
-    // 53 MB at sf0.1). Radius-h reachability only needs the NEIGHBORS
-    // OF THE NEW nodes: f1 = N(seeds), f_h = N(f_{h-1}) \ ball_{h-1},
-    // and since the frontiers are disjoint by construction the ball
-    // sizes are cumulative sums of frontier counts — no ball-scale
-    // union, dedup, or re-join ever happens.
-    //
-    // One v-keyed exchange settles each hop: hashpartitioning(v)
-    // satisfies both the distinct's ClusteredDistribution(s, v) ({v} ⊂
-    // keys — equal (s, v) pairs share v, dedup stays global) and the
-    // anti-joins' (s, v) clustering, and localCheckpoint preserves it,
-    // so the next hop's f.v-keyed probe of e pays no frontier-side
-    // exchange.
-    // one materialization per hop: raw hop join → v-exchange → distinct
-    // → anti-join away already-reached nodes (co-partitioned on v, no
-    // exchange) → checkpoint (preserves the v-partitioning for the
-    // next hop's probe)
-    def settle(ball: DataFrame, minus: Seq[DataFrame]): DataFrame =
-      minus.foldLeft(
-        ball.repartition(width, col("v")).distinct())(
-        (b, m) => b.join(m, Seq("s", "v"), "left_anti"))
-        .localCheckpoint(true)
-    def hop(frontier: DataFrame): DataFrame = frontier.as("f")
-      .join(e.as("g"), col("f.v") === col("g.u"))
-      .select(col("f.s").as("s"), col("g.v").as("v"))
-      .filter(col("v") =!= col("s"))
-    val f1 = settle(seeds.join(e, col("s") === col("u"))
-      .select(col("s"), col("v")), Nil)
-    val f2 = settle(hop(f1), Seq(f1))
-    val f3 = settle(hop(f2), Seq(f1, f2))
+    val Seq(f1, f2, f3) = bfsFrontiers(pairs, 3)(e =>
+      e.select(col("u").as("s")).distinct().filter(col("s") % seedMod === 0))
     def sizes(frontier: DataFrame, name: String) =
       frontier.groupBy(col("s")).agg(count(lit(1)).as(name))
     // cumulative: |ball_h| = Σ |frontier_i|, i ≤ h (frontiers disjoint);
@@ -1291,35 +1294,8 @@ object GraphOps {
   def componentEccentricity(pairs: DataFrame, maxHops: Int = 4): DataFrame = {
     val comp = connectedComponents(pairs)
     val sizesC = comp.groupBy(col("component")).agg(count(lit(1)).as("sz"))
-    val p = pairs.select(col("doc_a").cast("long").as("x"),
-      col("doc_b").cast("long").as("y"))
-    // hash-partitioned on u before the checkpoint — every hop join
-    // probes e on u, so the partitioning is established once and the
-    // four hop joins skip their e-side exchange (the [[bfsBall]] shape)
-    val e = p.select(col("x").as("u"), col("y").as("v"))
-      .unionAll(p.select(col("y").as("u"), col("x").as("v")))
-      .repartition(col("u")).localCheckpoint(true)
     val roots = comp.select(col("component").as("s")).distinct()
-    // FRONTIER expansion with one v-keyed exchange + one checkpoint per
-    // hop — the [[bfsBall]] shape (see its settle note): each hop joins
-    // only the NEW nodes, anti-joins away the already-reached ones
-    // (co-partitioned on v, no exchange), and ball sizes come back as
-    // cumulative sums of the disjoint frontier counts.
-    val widthE = pairs.sparkSession.sparkContext.defaultParallelism
-    def settleE(ball: DataFrame, minus: Seq[DataFrame]): DataFrame =
-      minus.foldLeft(
-        ball.repartition(widthE, col("v")).distinct())(
-        (b, m) => b.join(m, Seq("s", "v"), "left_anti"))
-        .localCheckpoint(true)
-    def hopE(frontier: DataFrame): DataFrame = frontier.as("f")
-      .join(e.as("g"), col("f.v") === col("g.u"))
-      .select(col("f.s").as("s"), col("g.v").as("v"))
-      .filter(col("v") =!= col("s"))
-    val f1 = settleE(roots.join(e, col("s") === col("u"))
-      .select(col("s"), col("v")), Nil)
-    val frontiers = (2 to maxHops).foldLeft(Vector(f1)) { (fs, _) =>
-      fs :+ settleE(hopE(fs.last), fs)
-    }
+    val frontiers = bfsFrontiers(pairs, maxHops)(_ => roots)
     val counts = frontiers.zipWithIndex.map { case (f, i) =>
       f.groupBy(col("s")).agg(count(lit(1)).as(s"d${i + 1}"))
     }

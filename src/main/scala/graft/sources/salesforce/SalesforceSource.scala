@@ -50,10 +50,10 @@ class SalesforceSource extends TableProvider with DataSourceRegister {
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     val obj = required(options, "object")
-    // describeWithIndexes, not raw describe: the struct flatten keys
-    // off compoundFieldName and the drop rules off calculated — over
-    // the HTTP transport those only exist on the merged record
-    val metas = transport(options).describeWithIndexes(obj)
+    // describe alone: the struct flatten keys off compoundFieldName and
+    // the drop rules off calculated, both on describe's own record;
+    // IsIndexed (FieldDefinition) only feeds index DDL, never the schema
+    val metas = transport(options).describe(obj)
     SfSchema.structType(metas.map(_.toSfField))
   }
 

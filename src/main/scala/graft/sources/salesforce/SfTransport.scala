@@ -25,9 +25,9 @@ trait SfTransport extends Serializable {
     * `get_sf_fields` (`tabledesc.py:53-77`): describe is the base
     * record, FieldDefinition contributes IsIndexed by QualifiedApiName
     * (FieldDefinition rows naming fields describe doesn't carry are
-    * dropped, the reference's warning branch). This is the entry point
-    * schema/mapping/DDL consumers should use — raw [[describe]] is the
-    * wire primitive.
+    * dropped, the reference's warning branch). Only the index DDL reads
+    * IsIndexed, so `tabledesc`/`createtable` call this; schema inference
+    * calls [[describe]] and saves the FieldDefinition round trip.
     */
   def describeWithIndexes(objectName: String): Seq[SfFieldMeta] = {
     val idx = fieldIndexes(objectName)

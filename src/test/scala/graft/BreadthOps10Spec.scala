@@ -210,6 +210,10 @@ class BreadthOps10Spec extends SparkSpec {
     val out = GraphOps.bfsBall(pairs)
       .as[(Long, Long, Long, Long, Double)].collect().toSeq
     assert(out == Seq((0L, 1L, 2L, 3L, 3.0)), out)
+    // a self-loop pair never puts the seed inside its own ball
+    val looped = GraphOps.bfsBall(pairs.union(Seq((0L, 0L)).toDF("doc_a", "doc_b")))
+      .as[(Long, Long, Long, Long, Double)].collect().toSeq
+    assert(looped == out, looped)
   }
 
   test("pqCodeUtil: a collapsed subspace reports ~1 effective code") {

@@ -95,6 +95,7 @@ class CliLifecycleWireSpec extends SparkSpec with BeforeAndAfterAll {
   private val seen = TrieMap.empty[String, String]
   private val auths = TrieMap.empty[String, Int] // every Bearer/session seen
   private val loginCount = new java.util.concurrent.atomic.AtomicInteger
+  private val fieldDefCount = new java.util.concurrent.atomic.AtomicInteger
 
   private def respond(ex: HttpExchange, body: String, status: Int = 200,
       contentType: String = "application/json"): Unit = {
@@ -113,6 +114,7 @@ class CliLifecycleWireSpec extends SparkSpec with BeforeAndAfterAll {
 
   private def dispatchSoql(ex: HttpExchange, q: String): Unit =
     if (q.contains("FROM FieldDefinition")) {
+      fieldDefCount.incrementAndGet()
       seen.put("fieldDefSoql", q); respond(ex, FieldDefJson)
     } else if (q.startsWith("SELECT COUNT()")) {
       val n = if (q.contains("WHERE")) { seen.put("deltaCountSoql", q); delta.size }
@@ -249,6 +251,7 @@ class CliLifecycleWireSpec extends SparkSpec with BeforeAndAfterAll {
     val (c2, out2) = runCli("tabledesc", "--config", cfgPath,
       "--object", "Contact")
     assert(c2 == 0, out2.mkString("\n"))
+    assert(fieldDefCount.get == 1) // the index DDL needs IsIndexed
     assert(out2.exists(_.startsWith("Id\tid")), out2.mkString("\n"))
     assert(out2.exists(_.contains("CREATE TABLE")), out2.mkString("\n"))
     // FieldDefinition merge happened over the wire with the pinned
@@ -268,8 +271,9 @@ class CliLifecycleWireSpec extends SparkSpec with BeforeAndAfterAll {
     // paginated REST extract (NEXTPAGE served page 2)
     assert(seen("pkChunkHeader").startsWith("chunkSize="))
     assert(seen("fullSoql").contains("FROM Contact"))
-    // the extract is the only read: no COUNT() round trip
-    assert(!seen.contains("countSoql"))
+    // the extract is the only read: no COUNT() round trip, and schema
+    // inference reads describe alone (still tabledesc's one FieldDefinition)
+    assert(!seen.contains("countSoql") && fieldDefCount.get == 1)
     val conn = DriverManager.getConnection(jdbc)
     try {
       val rs = conn.createStatement()
@@ -295,6 +299,7 @@ class CliLifecycleWireSpec extends SparkSpec with BeforeAndAfterAll {
     assert(seen("deltaSoql").contains(
       "SystemModstamp > 2024-01-05T10:00:00Z"), seen("deltaSoql"))
     assert(seen("deltaCountSoql").startsWith("SELECT COUNT() FROM Contact"))
+    assert(fieldDefCount.get == 1) // no FieldDefinition query either
     val conn = DriverManager.getConnection(jdbc)
     try {
       val rs = conn.createStatement().executeQuery(

@@ -346,8 +346,8 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming stagings read directory-shaped parquet tables " +
     "(the 10x-staged-corpus shape the r13 stream probe tripped on)") {
-    // the sf dirs ship each table as ONE parquet file, but every
-    // ScaleProbe-staged corpus is a DIRECTORY of part files — and the
+    // the sf dirs ship each table as ONE parquet file, but a table
+    // Spark writes itself is a DIRECTORY of part files — and the
     // streaming file source lists its srcDir non-recursively, so a
     // whole-directory symlink was silently skipped and the scaled
     // replay read only the flat side shard (state census 10x too

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.GraftFunctions.top_k_agg
+import graft.functions.GraftFunctions.{top_k_agg, top_k_merge_agg}
 import graft.operators.Relational
 
 /** Bounded top-k-per-group aggregate: result identity with the
@@ -112,6 +112,15 @@ class TopKAggSpec extends SparkSpec {
       .selectExpr("transform(tk, x -> x.id) AS ids")
       .as[Seq[Long]].head()
     assert(got == Seq(10L, 11L, 12L, 13L), s"got $got")
+  }
+
+  test("top_k_merge_agg skips null sketch elements and null fields") {
+    val got = spark.sql("""SELECT array(named_struct('score', 2.0D, 'id', 1L),
+      CAST(NULL AS STRUCT<score: DOUBLE, id: BIGINT>), named_struct('score',
+      CAST(NULL AS DOUBLE), 'id', 3L), named_struct('score', 1.0D, 'id', 2L)) AS sk""")
+      .agg(top_k_merge_agg(col("sk"), 4).as("tk"))
+      .selectExpr("transform(tk, x -> x.id)").as[Seq[Long]].head()
+    assert(got == Seq(1L, 2L), s"got $got")
   }
 
   test("plan: partial aggregation, no window, no sort of the input") {
