@@ -61,11 +61,11 @@ object Cli {
       // no --transport flag + a [salesforce] section -> SOAP-login and
       // register the HTTP transport under a reserved name, so `query`/
       // `sync`/`upload` run from ~/.pgsf alone, like the reference
-      // only for verbs that resolve a transport: gc/explain (and the
-      // usage path) are local-only and must keep working offline with
-      // a credentialed config file present
+      // only for verbs that resolve a transport: abort/gc/explain (and
+      // the usage path) are local-only and must keep working offline
+      // with a credentialed config file present
       val needsTransport = Set("tabledesc", "query", "bulkload", "sync",
-        "upload", "search", "abort")
+        "upload", "search")
       val opts =
         if (merged.contains("transport") || !needsTransport(verb)) merged
         else cfg.flatMap(_.salesforce) match {
@@ -287,23 +287,20 @@ object Cli {
     * table — CAS lock, watermark delta via the connector's pushed F2
     * filter, staged merge, watermark advance, single commit.
     * `--max-delta N` adds the bulk-vs-poll preflight (`README.rst:68`):
-    * a wire-side `SELECT COUNT() ... WHERE ts > watermark` decides
-    * whether to stop and report NeedsFullReload instead of fetching.
+    * the delta DataFrame's `count()`, which the connector pushes as
+    * `SELECT COUNT() ... WHERE ts > watermark`, decides whether to stop
+    * and report NeedsFullReload instead of fetching.
     */
   private def sync(opts: Map[String, String], out: String => Unit): Unit = {
     val url = required(opts, "jdbc")
     val dest = required(opts, "dest")
     val tsCol = required(opts, "ts-col")
-    val obj = required(opts, "object")
-    val transport = SfTransports.get(required(opts, "transport"))
-    val isoZ = java.time.format.DateTimeFormatter
-      .ofPattern("yyyy-MM-dd'T'HH:mm:ss'Z'").withZone(java.time.ZoneOffset.UTC)
-    val maxDelta = opts.get("max-delta").map(_.toLong)
-    val countFn = maxDelta.map { _ => (wm: Option[Timestamp]) =>
-      transport.count(obj,
-        wm.map(w => s"$tsCol > ${isoZ.format(w.toInstant)}"),
-        includeDeleted = true)
+    def delta(wm: Option[Timestamp]): DataFrame = {
+      val df = readObject(opts + ("include-deleted" -> "true"))
+      wm.fold(df)(w => df.filter(col(tsCol) > lit(w)))
     }
+    val maxDelta = opts.get("max-delta").map(_.toLong)
+    val countFn = maxDelta.map(_ => (wm: Option[Timestamp]) => delta(wm).count())
     val conn = DriverManager.getConnection(url)
     try {
       conn.setAutoCommit(false)
@@ -311,29 +308,24 @@ object Cli {
       val syncer = new IncrementalSync(conn, dialectFor(url, opts), state)
       val cfg = SyncConfig(dest, required(opts, "pk"), tsCol,
         opts.get("deleted-col"))
-      val result = syncer.syncTable(cfg, { wm: Option[Timestamp] =>
-        var df = readObject(opts + ("include-deleted" -> "true"))
-        wm.foreach(w => df = df.filter(col(tsCol) > lit(w)))
-        df
-      }, countFn, maxDelta.getOrElse(Long.MaxValue))
+      val result = syncer.syncTable(cfg, delta, countFn,
+        maxDelta.getOrElse(Long.MaxValue))
       out(s"sync $dest: $result")
     } finally conn.close()
   }
 
-  /** `abort_refresh.py`: cancel a table's running sync jobs and mark
-    * its state row 'error' so auto-sync halts until an operator
-    * re-registers (C7).
+  /** `abort_refresh.py`: mark a table's state row 'error' so auto-sync
+    * halts until an operator re-registers (C7). A state change only: no
+    * Spark session, no Salesforce login.
     */
   private def abort(opts: Map[String, String], out: String => Unit): Unit = {
     val dest = required(opts, "dest")
     val conn = DriverManager.getConnection(required(opts, "jdbc"))
     try {
       conn.setAutoCommit(false)
-      val state = new SyncStateStore(conn)
-      new graft.sync.Scheduler(spark, _ => sys.error("abort spawns no workers"))
-        .abort(dest, state)
+      new SyncStateStore(conn).markError(dest)
       conn.commit()
-      out(s"aborted $dest: jobs cancelled, status=error")
+      out(s"aborted $dest: status=error")
     } finally conn.close()
   }
 

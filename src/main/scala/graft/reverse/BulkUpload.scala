@@ -131,34 +131,13 @@ object BulkUpload {
     def closeJob(jobId: String): Unit
   }
 
-  /** K5 — chunk + post every partition's rows as batches of one update
-    * job. Job create/close are driver-side; batch posting is
-    * distributed (each task posts its own partition's chunks).
-    */
-  def upload(df: DataFrame, objectName: String, transportName: String,
-      operation: String = "update",
-      maxBytes: Int = DefaultMaxBytes,
-      maxRecords: Int = DefaultMaxRecords,
-      externalIdField: Option[String] = None): String = {
-    validateOperation(operation, externalIdField)
-    val transport = UploadTransports.get(transportName)
-    val jobId = transport.createJob(objectName, operation, externalIdField)
-    val hdr = header(df.schema)
-    df.foreachPartition { rows: Iterator[Row] =>
-      val t = UploadTransports.get(transportName)
-      chunk(hdr, rows.map(encodeRow), maxBytes, maxRecords).foreach { c =>
-        val batchId = t.postBatch(jobId, c)
-        t.waitBatch(jobId, batchId)
-      }
-    }
-    transport.closeJob(jobId)
-    jobId
-  }
-
-  /** [[upload]] + per-record results: every batch's `UploadResult` rows
-    * land in a driver-held DataFrame, so failed records are queryable
-    * instead of silently dropped: `upload_table.py:89-103` prints them;
-    * a pipeline joins them back to the source rows for retry/report.
+  /** K5 — chunk + post every partition's rows as batches of one job,
+    * with per-record results. Job create/close are driver-side; batch
+    * posting is distributed (each task posts its own partition's
+    * chunks). Every batch's `UploadResult` rows land in a driver-held
+    * DataFrame, so failed records are queryable instead of silently
+    * dropped: `upload_table.py:89-103` prints them; a pipeline joins
+    * them back to the source rows for retry/report.
     *
     * The upload runs as an ACTION (foreachPartition + collection
     * accumulator), never as a cached transformation: a lazy/cached
@@ -213,7 +192,7 @@ object BulkUpload {
     * `maxRecords` rows) and the mock transport's per-batch failure
     * positions are pure row-arithmetic an oracle restates with
     * `row_number()` — a production upload keeps the parallel
-    * per-partition posting of [[upload]] instead (batch composition
+    * per-partition posting of [[uploadWithResults]] instead (batch composition
     * is then layout-dependent, which a real server tolerates and an
     * oracle cannot). The batch ordinal parses off the transport's
     * `batch-<n>` id scheme ([[MockUploadTransport]]'s counter); a

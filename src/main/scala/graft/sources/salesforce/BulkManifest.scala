@@ -3,10 +3,11 @@ package graft.sources.salesforce
 /** Bulk V1 job/batch manifest model (S3/F4, `bulk_states.py:1-10`,
   * `download.py:46-114`, `csv_to_postgres.py:48-97`): which batches of
   * an async extract job are loadable, when the job is complete, and the
-  * empty-job guard.
+  * empty-job guard. The only place a batch state string is interpreted:
+  * the HTTP transport's plan-time wait and upload wait ask it too.
   */
 final case class BatchInfo(id: String, state: String,
-    numberRecordsProcessed: Long = 0)
+    numberRecordsProcessed: Long = 0, stateMessage: Option[String] = None)
 
 final case class JobInfo(id: String, batches: Seq[BatchInfo],
     numberRecordsProcessed: Long, systemModstamp: Option[java.sql.Timestamp])
@@ -18,12 +19,18 @@ object BulkManifest {
   val Completed = "Completed"
   val Failed = "Failed"
   val NotProcessed = "NotProcessed"
+  val Aborted = "Aborted"
+
+  /** The server is still working on this batch. */
+  def isPending(b: BatchInfo): Boolean = b.state == Queued || b.state == InProgress
+
+  /** The batch ended without its data: its rows can never be loaded. */
+  def isFailed(b: BatchInfo): Boolean = b.state == Failed || b.state == Aborted
 
   /** Download-side poll predicate: job is ready when no batch is queued
     * or in progress (`download.py:50-79`).
     */
-  def isDone(job: JobInfo): Boolean =
-    !job.batches.exists(b => b.state == Queued || b.state == InProgress)
+  def isDone(job: JobInfo): Boolean = !job.batches.exists(isPending)
 
   /** F4 — only `Completed` batches are loadable; `NotProcessed` is the
     * PK-chunking artifact skipped at download (`download.py:96-99`,
@@ -46,9 +53,8 @@ object BulkManifest {
     job
   }
 
-  /** Failed batches abort the load (the reference raises on any batch
-    * in `Failed` when collecting results).
+  /** Failed (or aborted) batches abort the load (the reference raises on
+    * any batch in `Failed` when collecting results).
     */
-  def failedBatches(job: JobInfo): Seq[BatchInfo] =
-    job.batches.filter(_.state == Failed)
+  def failedBatches(job: JobInfo): Seq[BatchInfo] = job.batches.filter(isFailed)
 }

@@ -1,5 +1,6 @@
 package graft.sources.salesforce
 
+import java.io.InputStream
 import java.net.URLEncoder
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.StandardCharsets.UTF_8
@@ -32,9 +33,16 @@ final case class ApiUsage(used: Long, total: Long) {
   *    `Sforce-Enable-PKChunking: chunkSize=N;` header, batch post,
   *    close/abort docs, `X-SFDC-Session` auth
   *    (`salesforce_bulk/salesforce_bulk.py:147-208,235-296`).
-  *  - Batch polling with retry-on-connection-error and the 600 s/10 s
-  *    wait semantics (`download.py:50-80`, `upload_table.py:89-96`,
-  *    `salesforce_bulk.py:505-511`).
+  *  - Batch state settled once, at plan time: [[pkChunks]] polls the
+  *    job's batch list until no batch is queued or in progress
+  *    (`download.py:50-80`, the 600 s/10 s wait), fails the scan on a
+  *    failed batch and returns only `Completed` ones, so a partition
+  *    reader fetches results without asking for the batch state again.
+  *    The upload side's [[waitBatch]] shares the same deadline loop
+  *    (`upload_table.py:89-96`, `salesforce_bulk.py:505-511`); which
+  *    state means what is [[BulkManifest]]'s call alone.
+  *  - One request loop ([[send]]): idempotent requests retry connection
+  *    errors, POSTs never do.
   *  - Streamed batch results with NUL bytes stripped
   *    (`salesforce_bulk.py:461-496`), decoded by RESPONSE
   *    Content-Type (CSV via [[CsvWire]], JSON via [[JsonWire]] —
@@ -67,28 +75,65 @@ final class HttpSfTransport(
 
   // ---- low-level HTTP -------------------------------------------------
 
-  /** Send with retry on connection errors for IDEMPOTENT requests only
-    * — the reference retries polling READS (`download.py:76-80`,
+  /** The one request loop. `read` consumes the response body stream
+    * inside the loop, so a connection that drops while a small body is
+    * read retries like one that drops before the headers; a streaming
+    * caller returns the open stream, and a drop MID-stream surfaces to
+    * its reader (the task rereads the partition on retry — at-least-
+    * once reads). Retries are for IDEMPOTENT requests only — the
+    * reference retries polling READS (`download.py:76-80`,
     * `upload_table.py:89-96`), never job/batch POSTs: a connection that
     * drops AFTER the server accepted a POST would re-post on retry and
     * create duplicate bulk jobs/batches (duplicate records written on
     * the reverse-ETL path). Non-idempotent requests fail fast and leave
     * the job inspectable/abortable, exactly like the reference.
     */
-  private def send(b: HttpRequest.Builder,
-      idempotent: Boolean = true): HttpResponse[Array[Byte]] = {
+  private def send[A](b: HttpRequest.Builder, idempotent: Boolean = true)(
+      read: HttpResponse[InputStream] => A): A = {
     var attempt = 0
     while (true) {
       try {
-        val resp = client.send(b.build(), HttpResponse.BodyHandlers.ofByteArray())
-        if (resp.statusCode() >= 400)
-          throw new SfApiError(resp.statusCode(),
-            new String(resp.body(), UTF_8).take(500))
-        return resp
+        val resp = client.send(b.build(), HttpResponse.BodyHandlers.ofInputStream())
+        if (resp.statusCode() >= 400) {
+          val msg = try new String(resp.body().readNBytes(500), UTF_8)
+            finally resp.body().close()
+          throw new SfApiError(resp.statusCode(), msg)
+        }
+        return read(resp)
       } catch {
         case _: java.io.IOException if idempotent && attempt < maxRetries =>
           attempt += 1
           Thread.sleep(math.min(pollIntervalMs, 1000L) * attempt)
+      }
+    }
+    throw new IllegalStateException("unreachable")
+  }
+
+  private def bodyBytes(resp: HttpResponse[InputStream]): Array[Byte] = {
+    val in = resp.body()
+    try in.readAllBytes() finally in.close()
+  }
+
+  /** The body as text with NUL bytes stripped (`salesforce_bulk.py:495`). */
+  private def bodyText(resp: HttpResponse[InputStream]): String =
+    new String(bodyBytes(resp), UTF_8).replace("\u0000", "")
+
+  private def contentType(resp: HttpResponse[_]): String =
+    resp.headers().firstValue("Content-Type").orElse("").toLowerCase
+
+  /** Poll `probe` every `pollIntervalMs` until it yields a value; after
+    * `pollTimeoutMs` fail with `what` — the reference's 600 s/10 s wait
+    * (`download.py:50-80`, `salesforce_bulk.py:505-511`).
+    */
+  private def poll[A](what: String)(probe: => Option[A]): A = {
+    val deadline = System.nanoTime() + pollTimeoutMs * 1000000L
+    while (true) {
+      probe match {
+        case Some(a) => return a
+        case None =>
+          if (System.nanoTime() > deadline)
+            throw new SfApiError(408, s"$what after ${pollTimeoutMs / 1000} s")
+          Thread.sleep(pollIntervalMs)
       }
     }
     throw new IllegalStateException("unreachable")
@@ -102,41 +147,53 @@ final class HttpSfTransport(
 
   private val UsagePattern = """[^-]?api-usage=(\d+)/(\d+).*""".r
 
-  private def restGetJson(url: String): JsonNode = {
-    val resp = send(HttpRequest.newBuilder(java.net.URI.create(url))
+  private def restRequest(method: String, url: String,
+      body: Option[String] = None): HttpRequest.Builder =
+    HttpRequest.newBuilder(java.net.URI.create(url))
       .header("Authorization", "Bearer " + sessionId)
       .header("Content-Type", "application/json")
-      .GET())
-    resp.headers().firstValue("Sforce-Limit-Info").ifPresent {
-      case UsagePattern(used, total) =>
-        apiUsage = Some(ApiUsage(used.toLong, total.toLong))
-      case _ => ()
+      .method(method, body.map(HttpRequest.BodyPublishers.ofString(_, UTF_8))
+        .getOrElse(HttpRequest.BodyPublishers.noBody()))
+
+  private def restGetJson(url: String): JsonNode =
+    send(restRequest("GET", url)) { resp =>
+      resp.headers().firstValue("Sforce-Limit-Info").ifPresent {
+        case UsagePattern(used, total) =>
+          apiUsage = Some(ApiUsage(used.toLong, total.toLong))
+        case _ => ()
+      }
+      mapper.readTree(bodyBytes(resp))
     }
-    mapper.readTree(new String(resp.body(), UTF_8))
-  }
+
+  /** An idempotent REST write whose answer is its status code. */
+  private def restStatus(method: String, url: String, body: Option[String]): Int =
+    send(restRequest(method, url, body)) { resp => resp.body().close(); resp.statusCode() }
 
   private def bulkRequest(path: String): HttpRequest.Builder =
     HttpRequest.newBuilder(java.net.URI.create(bulkBase + path))
       .header("X-SFDC-Session", sessionId)
 
-  private def bulkGet(path: String): HttpResponse[Array[Byte]] =
-    send(bulkRequest(path).GET())
+  private def bulkGet[A](path: String)(read: HttpResponse[InputStream] => A): A =
+    send(bulkRequest(path).GET())(read)
 
+  /** POST, answered with an XML `jobInfo`/`batchInfo` document. */
   private def bulkPost(path: String, body: String, contentType: String,
-      extraHeaders: Map[String, String] = Map.empty): HttpResponse[Array[Byte]] = {
+      extraHeaders: Map[String, String] = Map.empty): org.w3c.dom.Element = {
     val b = bulkRequest(path)
       .header("Content-Type", s"$contentType; charset=UTF-8")
       .POST(HttpRequest.BodyPublishers.ofString(body, UTF_8))
     extraHeaders.foreach { case (k, v) => b.header(k, v) }
-    send(b, idempotent = false) // POSTs never auto-retry (no duplicate jobs/batches)
+    // POSTs never auto-retry (no duplicate jobs/batches)
+    send(b, idempotent = false)(parseXml).getDocumentElement
   }
 
   // ---- XML helpers (jobInfo / batchInfoList / result-list) ------------
 
-  private def parseXml(bytes: Array[Byte]): org.w3c.dom.Document = {
+  private def parseXml(resp: HttpResponse[InputStream]): org.w3c.dom.Document = {
     val f = javax.xml.parsers.DocumentBuilderFactory.newInstance()
     f.setNamespaceAware(true)
-    f.newDocumentBuilder().parse(new java.io.ByteArrayInputStream(bytes))
+    val in = resp.body()
+    try f.newDocumentBuilder().parse(in) finally in.close()
   }
 
   private def childMap(el: org.w3c.dom.Element): Map[String, String] = {
@@ -244,12 +301,13 @@ final class HttpSfTransport(
   }
 
   /** Bulk scan plan: create a PK-chunked query job, post the SOQL
-    * batch, wait for the server's chunk split to finish (the
-    * `numberBatchesQueued/InProgress` poll of `download.py:50-80`),
-    * and return one `(jobId, batchId)` token per spawned batch. The
-    * original batch ends `NotProcessed` under chunking and is excluded
-    * (`bulk_states.py` ERROR_STATES). Empty result = server rejected
-    * chunking for this object (`query_bulk.py:26-36` fallback).
+    * batch, poll the job's batch list until the server's chunk split
+    * is done (no batch queued or in progress, `download.py:50-80`),
+    * fail the scan on a failed batch, and return one `(jobId, batchId)`
+    * token per `Completed` batch — the original batch ends
+    * `NotProcessed` under chunking and is excluded (`bulk_states.py`
+    * ERROR_STATES). Empty result = server rejected chunking for this
+    * object (`query_bulk.py:26-36` fallback).
     */
   override def pkChunks(objectName: String, fields: Seq[String],
       where: Option[String], includeDeleted: Boolean,
@@ -257,9 +315,8 @@ final class HttpSfTransport(
     val operation = if (includeDeleted) "queryAll" else "query"
     val jobId =
       try {
-        val resp = bulkPost("/job", jobDoc(objectName, operation), "application/xml",
-          Map("Sforce-Enable-PKChunking" -> s"chunkSize=$chunkSize;"))
-        childMap(parseXml(resp.body()).getDocumentElement)("id")
+        childMap(bulkPost("/job", jobDoc(objectName, operation), "application/xml",
+          Map("Sforce-Enable-PKChunking" -> s"chunkSize=$chunkSize;")))("id")
       } catch {
         case e: SfApiError if e.getMessage.contains("PKChunking") =>
           return Nil // S2 fallback: single-partition REST scan
@@ -267,32 +324,30 @@ final class HttpSfTransport(
     val soql = s"SELECT ${fields.mkString(",")} FROM $objectName" +
       where.map(w => s" WHERE $w").getOrElse("")
     bulkPost(s"/job/$jobId/batch", soql, "text/csv")
-    waitJobBatches(jobId)
-    batchList(jobId)
-      .filter(b => b.getOrElse("state", "") != "NotProcessed")
-      .map(b => jobId -> b("id"))
-  }
-
-  private def batchList(jobId: String): Seq[Map[String, String]] =
-    elements(parseXml(bulkGet(s"/job/$jobId/batch").body()), "batchInfo")
-      .map(childMap)
-
-  /** Poll job status until no batches are queued or in progress
-    * (`download.py:50-80`); connection errors retry inside [[send]].
-    */
-  private def waitJobBatches(jobId: String): Unit = {
-    val deadline = System.nanoTime() + pollTimeoutMs * 1000000L
-    while (true) {
-      val st = childMap(parseXml(bulkGet(s"/job/$jobId").body()).getDocumentElement)
-      val pending = st.getOrElse("numberBatchesQueued", "0").toInt +
-        st.getOrElse("numberBatchesInProgress", "0").toInt
-      if (pending == 0) return
-      if (System.nanoTime() > deadline)
-        throw new SfApiError(408, s"job $jobId still has $pending pending batches " +
-          s"after ${pollTimeoutMs / 1000} s")
-      Thread.sleep(pollIntervalMs)
+    val job = poll(s"job $jobId still has pending batches") {
+      Some(jobInfo(jobId)).filter(BulkManifest.isDone)
     }
+    BulkManifest.failedBatches(job).headOption
+      .foreach(b => throw batchFailed(jobId, b))
+    BulkManifest.loadableBatches(job).map(b => jobId -> b.id)
   }
+
+  private def batchInfo(el: org.w3c.dom.Element): BatchInfo = {
+    val m = childMap(el)
+    BatchInfo(m("id"), m.getOrElse("state", ""),
+      m.get("numberRecordsProcessed").fold(0L)(_.toLong), m.get("stateMessage"))
+  }
+
+  /** The job as its batch list reports it (`GET job/{id}/batch`). */
+  private def jobInfo(jobId: String): JobInfo = {
+    val batches =
+      elements(bulkGet(s"/job/$jobId/batch")(parseXml), "batchInfo").map(batchInfo)
+    JobInfo(jobId, batches, batches.map(_.numberRecordsProcessed).sum, None)
+  }
+
+  private def batchFailed(jobId: String, b: BatchInfo): SfApiError =
+    new SfApiError(400, s"batch ${b.id} of job $jobId failed: " +
+      b.stateMessage.getOrElse("(no stateMessage)"))
 
   override def query(objectName: String, fields: Seq[String],
       where: Option[String], limit: Option[Int], includeDeleted: Boolean,
@@ -335,13 +390,7 @@ final class HttpSfTransport(
   }
 
   private def pageRecords(page: JsonNode): Iterator[Map[String, Any]] =
-    page.get("records").elements().asScala.map { rec =>
-      rec.properties().asScala
-        .filter(_.getKey != "attributes")
-        .map(e => e.getKey -> jsonValue(e.getValue)).toMap
-    }
-
-  private def jsonValue(n: JsonNode): Any = JsonWire.scalar(n)
+    page.get("records").elements().asScala.map(JsonWire.record)
 
   /** SOSL: GET search/?q=<SOSL> → {"searchRecords":[…]}; each
     * record's `attributes.type` lands as `_sobject_type` (the search
@@ -351,9 +400,7 @@ final class HttpSfTransport(
   override def search(sosl: String): Seq[Map[String, Any]] =
     restGetJson(restBase + "search/?q=" + URLEncoder.encode(sosl, "UTF-8"))
       .path("searchRecords").elements().asScala.map { rec =>
-        rec.properties().asScala
-          .filter(_.getKey != "attributes")
-          .map(e => e.getKey -> jsonValue(e.getValue)).toMap +
+        JsonWire.record(rec) +
           ("_sobject_type" -> rec.path("attributes").path("type").asText())
       }.toSeq
 
@@ -377,51 +424,33 @@ final class HttpSfTransport(
     mapper.writeValueAsString(node)
   }
 
-  private def restSend(method: String, url: String, body: Option[String],
-      idempotent: Boolean): HttpResponse[Array[Byte]] = {
-    val b = HttpRequest.newBuilder(java.net.URI.create(url))
-      .header("Authorization", "Bearer " + sessionId)
-      .header("Content-Type", "application/json")
-      .method(method, body.map(s => HttpRequest.BodyPublishers.ofString(s, UTF_8))
-        .getOrElse(HttpRequest.BodyPublishers.noBody()))
-    send(b, idempotent)
-  }
-
-  private def nodeToMap(n: JsonNode): Map[String, Any] =
-    n.properties().asScala.filter(_.getKey != "attributes")
-      .map(e => e.getKey -> jsonValue(e.getValue)).toMap
-
   override def recordGet(objectName: String, recordId: String): Map[String, Any] =
-    nodeToMap(restGetJson(sobjectUrl(objectName, recordId)))
+    JsonWire.record(restGetJson(sobjectUrl(objectName, recordId)))
 
   override def recordGetByExternalId(objectName: String, externalIdField: String,
       value: String): Map[String, Any] =
-    nodeToMap(restGetJson(sobjectUrl(objectName, s"$externalIdField/$value")))
+    JsonWire.record(restGetJson(sobjectUrl(objectName, s"$externalIdField/$value")))
 
   /** POST returns `{"id": "...", "success": true}` (`api.py:629-645`);
     * non-idempotent — never auto-retried (a duplicate create is data
     * corruption, same rule as bulk job POSTs).
     */
-  override def recordCreate(objectName: String, data: Map[String, Any]): String = {
-    val resp = restSend("POST", sobjectUrl(objectName),
-      Some(jsonBody(data)), idempotent = false)
-    mapper.readTree(new String(resp.body(), UTF_8)).path("id").asText()
-  }
+  override def recordCreate(objectName: String, data: Map[String, Any]): String =
+    send(restRequest("POST", sobjectUrl(objectName), Some(jsonBody(data))),
+      idempotent = false)(r => mapper.readTree(bodyBytes(r))).path("id").asText()
 
   /** PATCH is idempotent by semantics (same final state on replay). */
   override def recordUpdate(objectName: String, recordId: String,
       data: Map[String, Any]): Int =
-    restSend("PATCH", sobjectUrl(objectName, recordId),
-      Some(jsonBody(data)), idempotent = true).statusCode()
+    restStatus("PATCH", sobjectUrl(objectName, recordId), Some(jsonBody(data)))
 
   override def recordUpsertByExternalId(objectName: String, externalIdField: String,
       value: String, data: Map[String, Any]): Int =
-    restSend("PATCH", sobjectUrl(objectName, s"$externalIdField/$value"),
-      Some(jsonBody(data)), idempotent = true).statusCode()
+    restStatus("PATCH", sobjectUrl(objectName, s"$externalIdField/$value"),
+      Some(jsonBody(data)))
 
   override def recordDelete(objectName: String, recordId: String): Int =
-    restSend("DELETE", sobjectUrl(objectName, recordId), None,
-      idempotent = true).statusCode()
+    restStatus("DELETE", sobjectUrl(objectName, recordId), None)
 
   // ---- S7: Get Updated / Get Deleted ----------------------------------
 
@@ -456,12 +485,13 @@ final class HttpSfTransport(
 
   // ---- Bulk path: batch download --------------------------------------
 
-  /** One server-side batch → rows: poll the batch to Completed, list
-    * its result ids, stream each result body with NUL bytes stripped
-    * (`salesforce_bulk.py:440-496`). Result bodies are consumed as a
-    * STREAM (ofInputStream → incremental NUL-strip → wire decoder over
-    * a Reader), never materialized whole: a result file can approach
-    * 1 GB, and one byte[] + String copy of it would OOM the executor.
+  /** One server-side batch → rows: list its result ids, stream each
+    * result body with NUL bytes stripped (`salesforce_bulk.py:440-496`).
+    * The batch is already `Completed`: [[pkChunks]] hands out no other
+    * token. Result bodies are consumed as a STREAM (incremental
+    * NUL-strip → wire decoder over a Reader), never materialized whole:
+    * a result file can approach 1 GB, and one byte[] + String copy of
+    * it would OOM the executor.
     *
     * The result-id listing and each result body dispatch on the
     * RESPONSE Content-Type the way `get_query_batch_result_ids`
@@ -470,15 +500,14 @@ final class HttpSfTransport(
     * list and CSV bodies.
     */
   private def bulkBatchRows(jobId: String, batchId: String): Iterator[Map[String, Any]] = {
-    waitBatch(jobId, batchId)
-    val listResp = bulkGet(s"/job/$jobId/batch/$batchId/result")
-    val resultIds: Seq[String] =
-      if (responseContentType(listResp).contains("json"))
-        mapper.readTree(new String(listResp.body(), UTF_8))
-          .elements().asScala.map(_.asText()).toSeq
-      else elements(parseXml(listResp.body()), "result").map(_.getTextContent)
+    val results = s"/job/$jobId/batch/$batchId/result"
+    val resultIds: Seq[String] = bulkGet(results) { r =>
+      if (contentType(r).contains("json"))
+        mapper.readTree(bodyBytes(r)).elements().asScala.map(_.asText()).toSeq
+      else elements(parseXml(r), "result").map(_.getTextContent)
+    }
     resultIds.iterator.flatMap { rid =>
-      val (in, ctype) = bulkGetStream(s"/job/$jobId/batch/$batchId/result/$rid")
+      val (in, ctype) = bulkGet(s"$results/$rid")(r => (r.body(), contentType(r)))
       // the wire decoder closes the stream at EOF, but a partially-
       // consumed iterator (LIMIT pushdown, task abort) is simply
       // abandoned — the PartitionReader's close() cannot reach it.
@@ -492,42 +521,11 @@ final class HttpSfTransport(
     }
   }
 
-  private def responseContentType(resp: HttpResponse[_]): String =
-    resp.headers().firstValue("Content-Type").orElse("").toLowerCase
-
-  /** Streaming GET for (idempotent) result downloads: retries
-    * establishing the connection like [[send]]; a drop MID-stream
-    * surfaces to the reader — the task rereads the partition on retry,
-    * which the scan path tolerates (at-least-once reads). Returns the
-    * stream plus the response Content-Type (lowercased) so the caller
-    * can pick the wire decoder.
-    */
-  private def bulkGetStream(path: String): (java.io.InputStream, String) = {
-    var attempt = 0
-    while (true) {
-      try {
-        val resp = client.send(bulkRequest(path).GET().build(),
-          HttpResponse.BodyHandlers.ofInputStream())
-        if (resp.statusCode() >= 400) {
-          val msg = try new String(resp.body().readNBytes(500), UTF_8)
-            finally resp.body().close()
-          throw new SfApiError(resp.statusCode(), msg)
-        }
-        return (resp.body(), responseContentType(resp))
-      } catch {
-        case _: java.io.IOException if attempt < maxRetries =>
-          attempt += 1
-          Thread.sleep(math.min(pollIntervalMs, 1000L) * attempt)
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
-
   /** Incremental NUL strip (`salesforce_bulk.py:495`) over a streamed
-    * body — the Reader twin of the old whole-string `.replace`; an
-    * all-NUL refill loops instead of returning 0 chars.
+    * body — the Reader twin of [[bodyText]]; an all-NUL refill loops
+    * instead of returning 0 chars.
     */
-  private def nulStripReader(in: java.io.InputStream): java.io.Reader =
+  private def nulStripReader(in: InputStream): java.io.Reader =
     new java.io.FilterReader(
         new java.io.InputStreamReader(new java.io.BufferedInputStream(in), UTF_8)) {
       override def read(): Int = {
@@ -551,45 +549,30 @@ final class HttpSfTransport(
         kept
       }
     }
-  /** `wait_for_batch` (`salesforce_bulk.py:505-511`): poll batch state
-    * every `pollIntervalMs` up to `pollTimeoutMs`; error states raise
-    * (`is_batch_done`, `:498-503`). NotProcessed is terminal-OK here:
-    * under PK chunking it marks the original batch, which has no data.
+
+  /** `wait_for_batch` (`salesforce_bulk.py:505-511`): poll the batch
+    * until it is no longer queued or in progress; a failed one raises
+    * (`is_batch_done`, `:498-503`).
     */
   override def waitBatch(jobId: String, batchId: String): Unit = {
-    val deadline = System.nanoTime() + pollTimeoutMs * 1000000L
-    while (true) {
-      val st = childMap(parseXml(
-        bulkGet(s"/job/$jobId/batch/$batchId").body()).getDocumentElement)
-      st.getOrElse("state", "") match {
-        case "Completed" | "NotProcessed" => return
-        case "Failed" | "Aborted" =>
-          throw new SfApiError(400, s"batch $batchId of job $jobId failed: " +
-            st.getOrElse("stateMessage", "(no stateMessage)"))
-        case _ =>
-          if (System.nanoTime() > deadline)
-            throw new SfApiError(408,
-              s"batch $batchId not done after ${pollTimeoutMs / 1000} s")
-          Thread.sleep(pollIntervalMs)
-      }
+    val b = poll(s"batch $batchId not done") {
+      Some(batchInfo(bulkGet(s"/job/$jobId/batch/$batchId")(parseXml).getDocumentElement))
+        .filterNot(BulkManifest.isPending)
     }
+    if (BulkManifest.isFailed(b)) throw batchFailed(jobId, b)
   }
 
   // ---- UploadTransport (reverse ETL, K5) ------------------------------
 
   override def createJob(objectName: String, operation: String,
       externalIdField: Option[String] = None,
-      contentType: String = "CSV"): String = {
-    val resp = bulkPost("/job",
+      contentType: String = "CSV"): String =
+    childMap(bulkPost("/job",
       jobDoc(objectName, operation, externalIdField, contentType),
-      "application/xml")
-    childMap(parseXml(resp.body()).getDocumentElement)("id")
-  }
+      "application/xml"))("id")
 
-  override def postBatch(jobId: String, chunkCsv: String): String = {
-    val resp = bulkPost(s"/job/$jobId/batch", chunkCsv, "text/csv")
-    childMap(parseXml(resp.body()).getDocumentElement)("id")
-  }
+  override def postBatch(jobId: String, chunkCsv: String): String =
+    childMap(bulkPost(s"/job/$jobId/batch", chunkCsv, "text/csv"))("id")
 
   override def closeJob(jobId: String): Unit =
     bulkPost(s"/job/$jobId", stateDoc("Closed"), "application/xml")
@@ -604,49 +587,48 @@ final class HttpSfTransport(
     * flatten to "statusCode:message" entries joined with "; " (the
     * job-abort decision downstream only tests emptiness).
     */
-  override def batchResults(jobId: String, batchId: String): Seq[UploadResult] = {
-    val resp = bulkGet(s"/job/$jobId/batch/$batchId/result")
-    val ctype = responseContentType(resp)
-    if (ctype.contains("json")) {
-      def flag(n: JsonNode): Boolean =
-        if (n.isBoolean) n.booleanValue() else n.asText("").equalsIgnoreCase("true")
-      mapper.readTree(new String(resp.body(), UTF_8).replace("\u0000", ""))
-        .elements().asScala.map { r =>
+  override def batchResults(jobId: String, batchId: String): Seq[UploadResult] =
+    bulkGet(s"/job/$jobId/batch/$batchId/result") { resp =>
+      val ctype = contentType(resp)
+      if (ctype.contains("json")) {
+        def flag(n: JsonNode): Boolean =
+          if (n.isBoolean) n.booleanValue() else n.asText("").equalsIgnoreCase("true")
+        mapper.readTree(bodyText(resp))
+          .elements().asScala.map { r =>
+            UploadResult(
+              id = r.path("id").asText(""),
+              success = flag(r.path("success")),
+              created = flag(r.path("created")),
+              error = r.path("errors").elements().asScala.map(e =>
+                (e.path("statusCode").asText("") + ":" +
+                  e.path("message").asText("")).stripPrefix(":"))
+                .mkString("; "))
+          }.toSeq
+      } else if (ctype.contains("xml")) {
+        elements(parseXml(resp), "result").map { el =>
+          val m = childMap(el)
+          val errs = el.getElementsByTagNameNS("*", "errors")
+          val error = (0 until errs.getLength).map { i =>
+            val em = childMap(errs.item(i).asInstanceOf[org.w3c.dom.Element])
+            (em.getOrElse("statusCode", "") + ":" + em.getOrElse("message", ""))
+              .stripPrefix(":")
+          }.mkString("; ")
           UploadResult(
-            id = r.path("id").asText(""),
-            success = flag(r.path("success")),
-            created = flag(r.path("created")),
-            error = r.path("errors").elements().asScala.map(e =>
-              (e.path("statusCode").asText("") + ":" +
-                e.path("message").asText("")).stripPrefix(":"))
-              .mkString("; "))
+            id = m.getOrElse("id", ""),
+            success = m.getOrElse("success", "false").equalsIgnoreCase("true"),
+            created = m.getOrElse("created", "false").equalsIgnoreCase("true"),
+            error = error)
+        }
+      } else {
+        CsvWire.parse(bodyText(resp)).map { row =>
+          UploadResult(
+            id = row.getOrElse("Id", "").toString,
+            success = row.getOrElse("Success", "false").toString.equalsIgnoreCase("true"),
+            created = row.getOrElse("Created", "false").toString.equalsIgnoreCase("true"),
+            error = row.getOrElse("Error", "").toString)
         }.toSeq
-    } else if (ctype.contains("xml")) {
-      elements(parseXml(resp.body()), "result").map { el =>
-        val m = childMap(el)
-        val errs = el.getElementsByTagNameNS("*", "errors")
-        val error = (0 until errs.getLength).map { i =>
-          val em = childMap(errs.item(i).asInstanceOf[org.w3c.dom.Element])
-          (em.getOrElse("statusCode", "") + ":" + em.getOrElse("message", ""))
-            .stripPrefix(":")
-        }.mkString("; ")
-        UploadResult(
-          id = m.getOrElse("id", ""),
-          success = m.getOrElse("success", "false").equalsIgnoreCase("true"),
-          created = m.getOrElse("created", "false").equalsIgnoreCase("true"),
-          error = error)
       }
-    } else {
-      val csv = new String(resp.body(), UTF_8).replace("\u0000", "")
-      CsvWire.parse(csv).map { row =>
-        UploadResult(
-          id = row.getOrElse("Id", "").toString,
-          success = row.getOrElse("Success", "false").toString.equalsIgnoreCase("true"),
-          created = row.getOrElse("Created", "false").toString.equalsIgnoreCase("true"),
-          error = row.getOrElse("Error", "").toString)
-      }.toSeq
     }
-  }
 }
 
 /** Minimal RFC-4180 CSV decoder for bulk result bodies: quoted fields,
@@ -732,6 +714,14 @@ private[graft] object JsonWire {
     else if (n.isNumber) n.doubleValue()
     else n.asText()
 
+  /** A record object minus its `attributes` envelope, every value
+    * through [[scalar]] — the one decoder for REST pages, SOSL hits,
+    * per-record GETs and Bulk JSON results.
+    */
+  def record(n: JsonNode): Map[String, Any] =
+    n.properties().asScala.filter(_.getKey != "attributes")
+      .map(e => e.getKey -> scalar(e.getValue)).toMap
+
   def parse(mapper: ObjectMapper, reader: java.io.Reader): Iterator[Map[String, Any]] = {
     import com.fasterxml.jackson.core.JsonToken
     val p = mapper.getFactory.createParser(reader)
@@ -760,9 +750,7 @@ private[graft] object JsonWire {
         if (!hasNext) throw new NoSuchElementException
         val node = p.readValueAsTree[JsonNode]()
         tok = p.nextToken()
-        node.properties().asScala
-          .filter(_.getKey != "attributes")
-          .map(e => e.getKey -> scalar(e.getValue)).toMap
+        record(node)
       }
     }
   }

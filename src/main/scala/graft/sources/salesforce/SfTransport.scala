@@ -46,16 +46,20 @@ trait SfTransport extends Serializable {
     * token shape is implementation-private — the mock returns (loId,
     * hiId) ranges; the HTTP transport creates the bulk job here (the
     * server does the chunk split, so the job needs the final SOQL —
-    * hence fields/where) and returns (jobId, batchId) pairs. Empty when
-    * the object does not support chunking — caller falls back to a
-    * single partition (S2 fallback semantics).
+    * hence fields/where), waits until no batch is queued or in
+    * progress, throws if a batch failed, and returns a (jobId, batchId)
+    * pair per `Completed` batch: every token is ready to read. Empty
+    * when the object does not support chunking — caller falls back to
+    * a single partition (S2 fallback semantics).
     */
   def pkChunks(objectName: String, fields: Seq[String], where: Option[String],
       includeDeleted: Boolean, chunkSize: Int): Seq[(String, String)]
 
   /** Execute a SOQL scan for one partition: records as field-name →
     * value maps, in stable order. `pkRange` bounds the scan to one
-    * chunk; None = whole object (un-chunked fallback / REST path).
+    * chunk — a token from [[pkChunks]], read without asking the server
+    * for its state again; None = whole object (un-chunked fallback /
+    * REST path).
     */
   def query(objectName: String, fields: Seq[String], where: Option[String],
       limit: Option[Int], includeDeleted: Boolean,

@@ -394,20 +394,6 @@ object StreamingSync {
         col("session_window.end").as("session_end"),
         col("n_events"))
 
-  /** Production sessionization on an unbounded stream: per-user gap
-    * sessions via flatMapGroupsWithState with EventTimeTimeout. Each
-    * session is emitted EXACTLY ONCE — when the event-time watermark
-    * passes `session_end + gap` (no event can extend it any more) — and
-    * its state is evicted at the same moment, so the state store holds
-    * only OPEN sessions no matter how long the stream runs. A user who
-    * goes silent is closed out by the timeout (set to the earliest
-    * possible close of their open sessions), not retained forever.
-    *
-    * Late events within the watermark horizon merge correctly: state
-    * keeps every still-open session as an interval, incoming events are
-    * interval-merged (adjacent sessions within the gap coalesce), and
-    * only sessions provably beyond late-event reach are closed.
-    */
   /** Streaming twin of [[graft.operators.Relational.funnelSteps]] with
     * WINDOWED-funnel semantics — the production shape: a funnel must
     * complete within `horizonMs` of the user's FIRST step-1 event or
@@ -477,6 +463,20 @@ object StreamingSync {
       .toDF("user_id", "steps_reached")
   }
 
+  /** Production sessionization on an unbounded stream: per-user gap
+    * sessions via flatMapGroupsWithState with EventTimeTimeout. Each
+    * session is emitted EXACTLY ONCE — when the event-time watermark
+    * passes `session_end + gap` (no event can extend it any more) — and
+    * its state is evicted at the same moment, so the state store holds
+    * only OPEN sessions no matter how long the stream runs. A user who
+    * goes silent is closed out by the timeout (set to the earliest
+    * possible close of their open sessions), not retained forever.
+    *
+    * Late events within the watermark horizon merge correctly: state
+    * keeps every still-open session as an interval, incoming events are
+    * interval-merged (adjacent sessions within the gap coalesce), and
+    * only sessions provably beyond late-event reach are closed.
+    */
   def sessionizeEvicting(spark: SparkSession, events: DataFrame,
       gapSeconds: Long, watermarkDelay: String): DataFrame = {
     import spark.implicits._

@@ -61,8 +61,8 @@ class BulkLoadSpec extends SparkSpec with BeforeAndAfterAll {
         BatchInfo("b2", "Completed", 1)),
       numberRecordsProcessed = 3, systemModstamp = Some(Modstamp))
     val n = BulkLoad.bulkLoad(job, cfg, conn, dialect, state, {
-      case BatchInfo("b1", _, _) => batchDf(1L, 2L)
-      case BatchInfo("b2", _, _) => batchDf(3L)
+      case BatchInfo("b1", _, _, _) => batchDf(1L, 2L)
+      case BatchInfo("b2", _, _, _) => batchDf(3L)
       case b => fail(s"batch ${b.id} (${b.state}) must not be fetched")
     })
     assert(n == 3)
@@ -138,7 +138,7 @@ class BulkLoadSpec extends SparkSpec with BeforeAndAfterAll {
       systemModstamp = Some(ts("2024-04-01 00:00:00")))
     intercept[RuntimeException] {
       BulkLoad.bulkLoad(job, cfg, conn, dialect, state, {
-        case BatchInfo("b1", _, _) => batchDf(10L)
+        case BatchInfo("b1", _, _, _) => batchDf(10L)
         case _ => throw new RuntimeException("simulated download failure")
       })
     }

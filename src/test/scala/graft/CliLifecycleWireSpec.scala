@@ -353,6 +353,6 @@ class CliLifecycleWireSpec extends SparkSpec with BeforeAndAfterAll {
     // reference's config-alone login (`salesforce.py:17-26` order)
     assert(auths.keySet.filter(_.startsWith("Bearer")) ==
       Set(s"Bearer $SessionId"))
-    assert(loginCount.get() >= 4) // tabledesc, bulkload, sync, upload, abort
+    assert(loginCount.get() >= 4) // tabledesc, bulkload, sync, upload
   }
 }

@@ -11,7 +11,7 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.scalatest.BeforeAndAfterAll
 
 import graft.reverse.{BulkUpload, UploadTransports}
-import graft.sources.salesforce.{CsvWire, HttpSfTransport, MockSfTransport, SfFieldMeta, SfTransports}
+import graft.sources.salesforce.{CsvWire, HttpSfTransport, MockSfTransport, SfApiError, SfFieldMeta, SfTransports}
 
 /** The real HTTP transport against recorded protocol fixtures served by
   * a local JDK HttpServer — the same request/response shapes the
@@ -19,8 +19,9 @@ import graft.sources.salesforce.{CsvWire, HttpSfTransport, MockSfTransport, SfFi
   * `salesforce_bulk.py` job XML / batch CSV). Covers: describe-driven
   * schema, REST pagination via nextRecordsUrl, queryAll split,
   * COUNT()-with-WHERE, PK-chunked bulk scan (header, job XML, batch
-  * split, NUL-stripped quoted CSV), connection-error retry, and the
-  * upload path incl. per-record UploadResult parsing.
+  * split, the plan-time batch-list wait and failed-batch refusal,
+  * NUL-stripped quoted CSV), connection-error retry, and the upload
+  * path incl. per-record UploadResult parsing.
   */
 class HttpSfTransportSpec extends SparkSpec with BeforeAndAfterAll {
 
@@ -89,6 +90,18 @@ class HttpSfTransportSpec extends SparkSpec with BeforeAndAfterAll {
        |<batchInfo><id>751A</id><state>Completed</state></batchInfo>
        |<batchInfo><id>751B</id><state>Completed</state></batchInfo>
        |</batchInfoList>""".stripMargin
+  private def batchListXml(batches: (String, String)*): String =
+    s"""<?xml version="1.0" encoding="UTF-8"?><batchInfoList xmlns="$JobNs">""" +
+      batches.map { case (id, st) => s"<batchInfo><id>$id</id><state>$st</state></batchInfo>" }
+        .mkString + "</batchInfoList>"
+  // a chunk the server failed: its stateMessage must reach the error
+  private val FailedBatchListXml =
+    s"""<?xml version="1.0" encoding="UTF-8"?><batchInfoList xmlns="$JobNs">
+       |<batchInfo><id>751ORIG</id><state>NotProcessed</state></batchInfo>
+       |<batchInfo><id>751OK</id><state>Completed</state></batchInfo>
+       |<batchInfo><id>751BAD</id><state>Failed</state>
+       |<stateMessage>InvalidBatch : Failed to process query</stateMessage></batchInfo>
+       |</batchInfoList>""".stripMargin
   private val ResultListXml =
     s"""<?xml version="1.0" encoding="UTF-8"?><result-list xmlns="$JobNs">
        |<result>752R1</result></result-list>""".stripMargin
@@ -114,6 +127,9 @@ class HttpSfTransportSpec extends SparkSpec with BeforeAndAfterAll {
   private var base: String = _
   val seen = TrieMap.empty[String, Any] // request capture for assertions
   private val uploadBatchPolls = new java.util.concurrent.atomic.AtomicInteger
+  private val pendingListPolls = new java.util.concurrent.atomic.AtomicInteger
+  /** "METHOD path" of every request, oldest first. */
+  private val requests = new java.util.concurrent.ConcurrentLinkedQueue[String]
 
   private def respond(ex: HttpExchange, body: String, status: Int = 200,
       contentType: String = "application/json"): Unit = {
@@ -134,6 +150,7 @@ class HttpSfTransportSpec extends SparkSpec with BeforeAndAfterAll {
       val path = ex.getRequestURI.getPath
       val q = Option(ex.getRequestURI.getRawQuery)
         .map(s => URLDecoder.decode(s.stripPrefix("q="), "UTF-8")).getOrElse("")
+      requests.add(s"${ex.getRequestMethod} $path")
       try {
         (ex.getRequestMethod, path) match {
           // ---- REST
@@ -209,6 +226,10 @@ class HttpSfTransportSpec extends SparkSpec with BeforeAndAfterAll {
               ex.getRequestHeaders.getFirst("Sforce-Enable-PKChunking") != null)
               respond(ex, "Contact is not supported to use PKChunking", 400,
                 "text/plain")
+            else if (body.contains("<object>Pending</object>"))
+              respond(ex, jobXml("750WAIT"), contentType = "application/xml")
+            else if (body.contains("<object>Broken</object>"))
+              respond(ex, jobXml("750FAIL"), contentType = "application/xml")
             else respond(ex, jobXml("750JOB"), contentType = "application/xml")
           case ("POST", "/services/async/52.0/job/750JOB") =>
             seen.put("jobStateDoc", readBody(ex))
@@ -220,21 +241,29 @@ class HttpSfTransportSpec extends SparkSpec with BeforeAndAfterAll {
           case ("POST", "/services/async/52.0/job/750JOB/batch") =>
             seen.put("batchSoql", readBody(ex))
             respond(ex, batchXml("751ORIG", "Queued"), contentType = "application/xml")
+          case ("POST", "/services/async/52.0/job/750WAIT/batch" |
+              "/services/async/52.0/job/750FAIL/batch") =>
+            respond(ex, batchXml("751ORIG", "Queued"), contentType = "application/xml")
+          case ("GET", "/services/async/52.0/job/750WAIT/batch") =>
+            // the chunk split in progress: Queued, then InProgress, then done
+            val list = pendingListPolls.getAndIncrement() match {
+              case 0 => batchListXml("751ORIG" -> "Queued")
+              case 1 => batchListXml("751ORIG" -> "NotProcessed", "751W" -> "InProgress")
+              case _ => batchListXml("751ORIG" -> "NotProcessed", "751W" -> "Completed")
+            }
+            respond(ex, list, contentType = "application/xml")
+          case ("GET", "/services/async/52.0/job/750FAIL/batch") =>
+            respond(ex, FailedBatchListXml, contentType = "application/xml")
           case ("POST", "/services/async/52.0/job/750UP/batch") =>
             seen.put("uploadBatchCsv", readBody(ex))
             seen.put("uploadBatchContentType",
               ex.getRequestHeaders.getFirst("Content-Type"))
             respond(ex, batchXml("753B", "Queued"), contentType = "application/xml")
-          case ("GET", "/services/async/52.0/job/750JOB") =>
-            respond(ex, jobXml("750JOB"), contentType = "application/xml")
+          case ("GET", p) if p.matches("/services/async/52\\.0/job/[^/]+") =>
+            // job status, as a server answers it for any job
+            respond(ex, jobXml(p.split('/').last), contentType = "application/xml")
           case ("GET", "/services/async/52.0/job/750JOB/batch") =>
             respond(ex, BatchListXml, contentType = "application/xml")
-          case ("GET", "/services/async/52.0/job/750JOB/batch/751A") =>
-            respond(ex, batchXml("751A", "Completed"), contentType = "application/xml")
-          case ("GET", "/services/async/52.0/job/750JOB/batch/751B") =>
-            respond(ex, batchXml("751B", "Completed"), contentType = "application/xml")
-          case ("GET", "/services/async/52.0/job/750JOB/batch/751N") =>
-            respond(ex, batchXml("751N", "Completed"), contentType = "application/xml")
           case ("GET", "/services/async/52.0/job/750JOB/batch/751N/result") =>
             respond(ex, ResultListXml, contentType = "application/xml")
           case ("GET", "/services/async/52.0/job/750JOB/batch/751N/result/752R1") =>
@@ -255,8 +284,6 @@ class HttpSfTransportSpec extends SparkSpec with BeforeAndAfterAll {
           case ("GET", "/services/async/52.0/job/750UP/batch/753B/result") =>
             respond(ex, UploadResultCsv, contentType = "text/csv")
           // ---- JSON-content-type job fixtures (content-type dispatch)
-          case ("GET", "/services/async/52.0/job/750JOB/batch/751J") =>
-            respond(ex, batchXml("751J", "Completed"), contentType = "application/xml")
           case ("GET", "/services/async/52.0/job/750JOB/batch/751J/result") =>
             respond(ex, """["752J1"]""", contentType = "application/json")
           case ("GET", "/services/async/52.0/job/750JOB/batch/751J/result/752J1") =>
@@ -410,6 +437,27 @@ class HttpSfTransportSpec extends SparkSpec with BeforeAndAfterAll {
       "SELECT Id,Name,NumEmployees FROM Contact WHERE NumEmployees > 0")
   }
 
+  test("pkChunks fails the scan on a Failed batch, naming it and its stateMessage") {
+    val e = intercept[SfApiError] {
+      transport().pkChunks("Broken", Seq("Id"), None, includeDeleted = false,
+        chunkSize = 1000)
+    }
+    assert(e.getMessage.contains(
+      "batch 751BAD of job 750FAIL failed: InvalidBatch : Failed to process query"),
+      e.getMessage)
+  }
+
+  test("the plan polls the batch list while chunks are Queued or InProgress, no job status") {
+    pendingListPolls.set(0)
+    requests.clear()
+    val chunks = transport().pkChunks("Pending", Seq("Id"), None,
+      includeDeleted = false, chunkSize = 1000)
+    assert(chunks == Seq("750WAIT" -> "751W"))
+    assert(pendingListPolls.get == 3) // Queued, InProgress, then done
+    assert(!requests.contains("GET /services/async/52.0/job/750WAIT"),
+      requests.toString)
+  }
+
   test("bulk batch download parses quoted CSV and strips NUL bytes") {
     val rows = transport().query("Contact", Seq("Id", "Name", "NumEmployees"),
       None, None, includeDeleted = false, Some("750JOB" -> "751A")).toSeq
@@ -449,8 +497,18 @@ class HttpSfTransportSpec extends SparkSpec with BeforeAndAfterAll {
       .option("transport", "http-fixture")
       .load()
     assert(df.schema.fieldNames.toSeq == Seq("Id", "Name", "NumEmployees"))
+    requests.clear()
     val got = df.collect().map(r => r.getString(0)).sorted.toSeq
     assert(got == Seq("003A", "003B", "003C")) // both chunk batches landed
+    // the plan read the batch list once; the readers went straight to
+    // the results: no job-status GET, no per-batch state GET
+    import scala.jdk.CollectionConverters._
+    val sent = requests.asScala.toSeq
+    assert(sent.count(_ == "GET /services/async/52.0/job/750JOB/batch") == 1,
+      sent.mkString("\n"))
+    assert(!sent.exists(r => r == "GET /services/async/52.0/job/750JOB" ||
+      r.matches("GET /services/async/52\\.0/job/[^/]+/batch/[^/]+")),
+      sent.mkString("\n"))
     assert(df.rdd.getNumPartitions == 2) // one per server-side batch
   }
 
@@ -481,6 +539,43 @@ class HttpSfTransportSpec extends SparkSpec with BeforeAndAfterAll {
         "S", "52.0", pollIntervalMs = 5, pollTimeoutMs = 2000, maxRetries = 3)
       assert(tr.count("Contact", None, includeDeleted = false) == 7L)
       assert(calls >= 2) // first connection dropped, retry succeeded
+    } finally flaky.close()
+  }
+
+  test("a connection dropped on a result-body GET is retried") {
+    val flaky = new java.net.ServerSocket(0)
+    val bodyCalls = new java.util.concurrent.atomic.AtomicInteger
+    val t = new Thread(() => {
+      while (!flaky.isClosed) {
+        try {
+          val s = flaky.accept()
+          val in = new java.io.BufferedReader(
+            new java.io.InputStreamReader(s.getInputStream, UTF_8))
+          val path = in.readLine().split(" ")(1)
+          while (Option(in.readLine()).exists(_.nonEmpty)) () // headers
+          def reply(status: String, ctype: String, body: String): Unit = {
+            val b = body.getBytes(UTF_8)
+            s.getOutputStream.write((s"HTTP/1.1 $status\r\nContent-Type: $ctype\r\n" +
+              s"Content-Length: ${b.length}\r\nConnection: close\r\n\r\n").getBytes(UTF_8) ++ b)
+          }
+          if (path.endsWith("/job/750JOB/batch/751A/result"))
+            reply("200 OK", "application/xml", ResultListXml)
+          else if (path.endsWith("/job/750JOB/batch/751A/result/752R1")) {
+            // the first body request drops without a response
+            if (bodyCalls.incrementAndGet() > 1) reply("200 OK", "text/csv", CsvA)
+          } else reply("404 Not Found", "text/plain", s"no fixture for $path")
+          s.close()
+        } catch { case _: Throwable => () }
+      }
+    })
+    t.setDaemon(true); t.start()
+    try {
+      val tr = new HttpSfTransport(s"http://localhost:${flaky.getLocalPort}",
+        "S", "52.0", pollIntervalMs = 5, pollTimeoutMs = 2000, maxRetries = 3)
+      val rows = tr.query("Contact", Seq("Id", "Name", "NumEmployees"), None, None,
+        includeDeleted = false, Some("750JOB" -> "751A")).toSeq
+      assert(rows.map(_("Id")) == Seq("003A", "003B"))
+      assert(bodyCalls.get >= 2) // first connection dropped, retry succeeded
     } finally flaky.close()
   }
 

@@ -50,7 +50,7 @@ class ReverseUploadSpec extends SparkSpec {
     MockUploadTransport.register("up1", t)
     val df = (1 to 250).map(i => (s"003$i", s"name-$i", i % 2 == 0))
       .toDF("Id", "Name", "Active").repartition(3)
-    val jobId = BulkUpload.upload(df, "Contact", "up1", maxRecords = 40)
+    val (jobId, _) = BulkUpload.uploadWithResults(df, "Contact", "up1", maxRecords = 40)
     assert(t.closedJobs.contains(jobId))
     val chunks = t.batches.values.toList
     // 250 rows over 3 partitions, <=40 records per chunk -> >= 7 chunks
@@ -70,20 +70,20 @@ class ReverseUploadSpec extends SparkSpec {
     // upsert without an external-id field is the reference client's
     // error (create_upsert_job requires external_id_name)
     intercept[IllegalArgumentException] {
-      BulkUpload.upload(df, "Contact", "up2", operation = "upsert")
+      BulkUpload.uploadWithResults(df, "Contact", "up2", operation = "upsert")
     }
     intercept[IllegalArgumentException] {
-      BulkUpload.upload(df, "Contact", "up2", operation = "update",
+      BulkUpload.uploadWithResults(df, "Contact", "up2", operation = "update",
         externalIdField = Some("Ext_Id__c"))
     }
     intercept[IllegalArgumentException] {
-      BulkUpload.upload(df, "Contact", "up2", operation = "merge")
+      BulkUpload.uploadWithResults(df, "Contact", "up2", operation = "merge")
     }
     // the happy paths thread the field (or its absence) to the job doc
-    val job = BulkUpload.upload(df, "Contact", "up2", operation = "upsert",
+    val (job, _) = BulkUpload.uploadWithResults(df, "Contact", "up2", operation = "upsert",
       externalIdField = Some("Ext_Id__c"))
     assert(job.contains("-upsert-") && t.lastExternalIdField == Some("Ext_Id__c"))
-    val del = BulkUpload.upload(df.select("Ext_Id__c"), "Contact", "up2",
+    val (del, _) = BulkUpload.uploadWithResults(df.select("Ext_Id__c"), "Contact", "up2",
       operation = "delete")
     assert(del.contains("-delete-") && t.lastExternalIdField.isEmpty)
   }
