@@ -55,16 +55,16 @@ object Bench {
     val names = queries.keys.toSeq.sorted
     val samples = scala.collection.mutable.Map.empty[String, List[Double]]
     // Path = first CLI arg, else $SPARK_GRAFT_BENCH_OUT, else
-    // BENCH_last.json in the working directory.
+    // BENCH_last_c<cpus>.json in the working directory: one record per
+    // core count, so an 8-core run cannot overwrite the 32-core one.
     val outPath = args.headOption
       .orElse(sys.env.get("SPARK_GRAFT_BENCH_OUT"))
-      .getOrElse("BENCH_last.json")
+      .getOrElse(s"BENCH_last_c${Sessions.cpus}.json")
     def esc(s: String): String = s.replace("\\", "\\\\").replace("\"", "\\\"")
     // Serialize the suite state as the one-line JSON record. partial=true
     // marks an in-flight snapshot (suite not yet complete) so a fatal
-    // mid-suite still leaves every finished measurement on disk — the
-    // r13 driver bench died with NOTHING because results were only
-    // written at exit.
+    // mid-suite still leaves every finished measurement on disk.
+    def total: Double = names.filter(samples.contains).map(samples(_).min).sum
     def jsonLine(partial: Boolean): String = {
       val done = names.filter(samples.contains)
       val qs = done.map(n => "\"" + n + "\":" + samples(n).min)
@@ -78,7 +78,6 @@ object Bench {
       }.mkString("{", ",", "}")
       val fj = failures.toSeq.sorted.map { case (k, v) => s""""${esc(k)}":"${esc(v)}"""" }
         .mkString("{", ",", "}")
-      val total = if (done.nonEmpty) done.map(samples(_).min).sum else 0.0
       val part = if (partial) "\"partial\":true," else ""
       s"""{"metric":"total","value":$total,"unit":"sec",$part"queries":$qs,"passes":$ps,"failures":$fj,"sf":"$sfDir"}"""
     }
@@ -115,13 +114,15 @@ object Bench {
     // time, and a burst spanning all of one query's passes makes its
     // min a mirage. A wide min→max spread in "passes" flags exactly
     // that — the artifact is self-diagnosing (see README).
+    // The full record goes to the file; stdout ends with a compact
+    // summary naming it, which no tail-capture truncates. The full line
+    // reaches stdout only when the file could not be written.
     val line = jsonLine(partial = false)
-    println(line)
-    // ALSO write the line to a file: the driver's stdout tail-capture
-    // truncates long lines (round 5 shipped an unparseable artifact),
-    // so the full record must live somewhere truncation can't reach.
-    if (writeLine(line))
-      System.err.println(s"[bench] full JSON written to $outPath")
+    val written = writeLine(line)
+    if (!written) println(line)
+    val record = if (written) "\"" + esc(outPath) + "\"" else "null"
+    println(s"""{"metric":"total","value":$total,"unit":"sec","n":${names.size},""" +
+      s""""failures":${failures.size},"record":$record}""")
     spark.stop()
     if (failures.nonEmpty) sys.exit(1)
   }

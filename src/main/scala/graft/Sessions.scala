@@ -7,11 +7,13 @@ import org.apache.spark.sql.SparkSession
   */
 object Sessions {
 
-  /** `local[$SPARK_GRAFT_CPUS]` (default 4) with as many shuffle
-    * partitions, no UI, UTC session time and WARN logging.
+  /** The local core count: `$SPARK_GRAFT_CPUS`, default 4. */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+
+  /** `local[cpus]` with as many shuffle partitions, no UI, UTC session
+    * time and WARN logging.
     */
   def local(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -1,8 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators._
+import graft.operators.Multimodal.Media
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -26,6 +27,40 @@ object SparkEntry {
   private val Watermark = "1998-06-01 00:00:00"
   private val SchedulerNow = "2024-01-31 00:10:00"
 
+  /** One shared materialization per (session, sf dir, source
+    * generation), built on first use. A superseded generation's key can
+    * never recur, so its value is evicted and released here rather than
+    * accumulating storage; [[clear]] releases them all.
+    */
+  private final class GenMemo[V](sourceFile: String, release: V => Unit) {
+    private val memo = scala.collection.concurrent.TrieMap
+      .empty[(SparkSession, String, Long), V]
+    def apply(s: SparkSession, d: String)(build: => V): V = {
+      val gen = sourceGen(d, sourceFile)
+      memo.keys.filter(k => k._1 == s && k._2 == d && k._3 != gen)
+        .foreach(memo.remove(_).foreach(release))
+      memo.getOrElseUpdate((s, d, gen), build)
+    }
+    def clear(): Unit = {
+      memo.values.foreach(release)
+      memo.clear()
+    }
+  }
+
+  private def persisted(df: DataFrame): DataFrame =
+    df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+
+  /** [[persisted]] and counted: a lazy persist caches nothing. */
+  private def materialized(df: DataFrame): DataFrame = {
+    val p = persisted(df)
+    p.count()
+    p
+  }
+
+  private val unpersistBoth: ((DataFrame, DataFrame)) => Unit = {
+    case (a, b) => a.unpersist(false); b.unpersist(false)
+  }
+
   /** The co-order basket graph, built ONCE per (session, sf-dir) and
     * persisted — `graph_ktruss`, `graph_link_predict` and
     * `j11_assoc_rules` all derive from the same lineitem self-join, and
@@ -39,31 +74,20 @@ object SparkEntry {
     * paying an eager materialize + serialized round trip per query.
     */
   private[graft] object BasketGraph {
-    private val cache = scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String, Long), (DataFrame, DataFrame)]
-    def itemsAndPairs(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-      // keyed by source mtime (the stagingTag discipline): regenerated
-      // testdata in a live session must not serve a stale pair graph.
-      // A superseded generation's key can never recur, so its entry is
-      // evicted and unpersisted here rather than accumulating storage.
-      val gen = sourceGen(d, "lineitem.parquet")
-      cache.keys.filter(k => k._1 == s && k._2 == d && k._3 != gen)
-        .foreach(cache.remove(_).foreach { case (i, p) =>
-          i.unpersist(false); p.unpersist(false)
-        })
-      cache.getOrElseUpdate((s, d, gen), {
-        val items = Tables(s, d, "lineitem")
+    // keyed by source mtime: regenerated testdata in a live session
+    // must not serve a stale pair graph
+    private val graph = new GenMemo[(DataFrame, DataFrame)]("lineitem.parquet", unpersistBoth)
+    def itemsAndPairs(s: SparkSession, d: String): (DataFrame, DataFrame) =
+      graph(s, d) {
+        val items = persisted(Tables(s, d, "lineitem")
           .select(col("l_orderkey").as("ord"), col("l_partkey").as("item"))
-          .distinct()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val pairCounts = items.as("a").join(items.as("b"),
+          .distinct())
+        val pairCounts = persisted(items.as("a").join(items.as("b"),
             col("a.ord") === col("b.ord") && col("a.item") < col("b.item"))
           .groupBy(col("a.item").as("part_a"), col("b.item").as("part_b"))
-          .agg(count(lit(1)).as("n_ab"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .agg(count(lit(1)).as("n_ab")))
         (items, pairCounts)
-      })
-    }
+      }
     /** Distinct (doc_a, doc_b) co-order part pairs — the graph view. */
     def pairs(s: SparkSession, d: String): DataFrame =
       itemsAndPairs(s, d)._2
@@ -73,50 +97,28 @@ object SparkEntry {
     // joins against. Both are keyed aggregates over the persisted
     // incidence list; memoized per generation so the scorer costs
     // only its candidate-scale joins per invocation.
-    private val statsMemo = scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String, Long), (DataFrame, DataFrame)]
-    def itemStats(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-      val gen = sourceGen(d, "lineitem.parquet")
-      statsMemo.keys.filter(k => k._1 == s && k._2 == d && k._3 != gen)
-        .foreach(statsMemo.remove(_).foreach { case (ic, tot) =>
-          ic.unpersist(false); tot.unpersist(false)
-        })
-      statsMemo.getOrElseUpdate((s, d, gen), {
+    private val stats = new GenMemo[(DataFrame, DataFrame)]("lineitem.parquet", unpersistBoth)
+    def itemStats(s: SparkSession, d: String): (DataFrame, DataFrame) =
+      stats(s, d) {
         val (items, _) = itemsAndPairs(s, d)
-        val ic = items.groupBy(col("item")).agg(count(lit(1)).as("ni"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val tot = items.select(col("ord")).distinct()
-          .agg(count(lit(1)).as("n_orders"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        ic.count(); tot.count() // eager: lazy persists cache nothing
-        (ic, tot)
-      })
-    }
+        (materialized(items.groupBy(col("item")).agg(count(lit(1)).as("ni"))),
+          materialized(items.select(col("ord")).distinct()
+            .agg(count(lit(1)).as("n_orders"))))
+      }
     // the adjSlices degree probe is a full pair-scan aggregate; memoize
     // it per cache generation so registered consumers (ktruss) don't
     // re-run it per invocation. Spec-visible run counter.
-    private val probeMemo = scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String, Long), Int]
+    private val probe = new GenMemo[Int]("lineitem.parquet", _ => ())
     private[graft] val probeRuns = new java.util.concurrent.atomic.AtomicInteger(0)
-    def adjSlices(s: SparkSession, d: String): Int = {
-      val gen = sourceGen(d, "lineitem.parquet")
-      probeMemo.keys.filter(k => k._1 == s && k._2 == d && k._3 != gen)
-        .foreach(probeMemo.remove)
-      probeMemo.getOrElseUpdate((s, d, gen), {
+    def adjSlices(s: SparkSession, d: String): Int =
+      probe(s, d) {
         probeRuns.incrementAndGet()
         operators.GraphOps.adjSlicesFor(pairs(s, d))
-      })
-    }
+      }
     private[graft] def reset(): Unit = {
-      cache.values.foreach { case (i, p) =>
-        i.unpersist(false); p.unpersist(false)
-      }
-      statsMemo.values.foreach { case (ic, tot) =>
-        ic.unpersist(false); tot.unpersist(false)
-      }
-      cache.clear()
-      statsMemo.clear()
-      probeMemo.clear()
+      graph.clear()
+      stats.clear()
+      probe.clear()
     }
   }
 
@@ -133,67 +135,32 @@ object SparkEntry {
     * corpus-scale state.
     */
   private[graft] object DedupGraph {
-    private val mh = scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String, Long), DataFrame]
-    private val sh = scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String, Long), DataFrame]
-    // stale-generation eviction, as in [[BasketGraph.itemsAndPairs]]
-    private def evict(m: scala.collection.concurrent.TrieMap[
-          (SparkSession, String, Long), DataFrame],
-        s: SparkSession, d: String, gen: Long,
-        release: DataFrame => Unit): Unit =
-      m.keys.filter(k => k._1 == s && k._2 == d && k._3 != gen)
-        .foreach(m.remove(_).foreach(release))
-    def minhashPairs(s: SparkSession, d: String): DataFrame = {
-      val gen = sourceGen(d, "documents.parquet")
-      evict(mh, s, d, gen,
-        org.apache.spark.sql.graft.CheckpointCleanupShim.unpersistBlocks)
-      mh.getOrElseUpdate((s, d, gen),
-        operators.DedupOps.minhashLsh(Tables(s, d, "documents")))
-    }
+    // mh frames are the operator's own eagerly-localCheckpoint'd
+    // outputs, for which unpersist is a no-op — the shim walks their
+    // LogicalRDDs and drops the checkpoint blocks deterministically
+    // instead of waiting on the ContextCleaner
+    private val mh = new GenMemo[DataFrame]("documents.parquet",
+      org.apache.spark.sql.graft.CheckpointCleanupShim.unpersistBlocks)
+    private val sh = new GenMemo[DataFrame]("documents.parquet", _.unpersist(false))
     // blocked Jaro-Winkler match pairs: three registered ER consumers
     // (pair report, entity closure, golden-record fusion) — the
     // production ER pipeline scores matches once and every downstream
     // step reads them
-    private val jw = scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String, Long), DataFrame]
-    def jwPairs(s: SparkSession, d: String): DataFrame = {
-      val gen = sourceGen(d, "documents.parquet")
-      evict(jw, s, d, gen, _.unpersist(false))
-      jw.getOrElseUpdate((s, d, gen), {
-        val p = operators.DedupOps
-          .jaroWinklerPairsLazy(Tables(s, d, "documents"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        p.count() // eager: a lazy persist caches nothing
-        p
-      })
-    }
-    def simhashPairs(s: SparkSession, d: String): DataFrame = {
-      val gen = sourceGen(d, "documents.parquet")
-      evict(sh, s, d, gen, _.unpersist(false))
-      sh.getOrElseUpdate((s, d, gen), {
-        // simhashPairs returns a LAZY plan (its one join pipeline has
-        // no internal materialization) — persist + eager count here,
-        // or every consumer would re-run the band join and the cache
-        // would hold nothing but a plan
-        val p = operators.DedupOps.simhashPairs(Tables(s, d, "documents"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        p.count()
-        p
-      })
-    }
+    private val jw = new GenMemo[DataFrame]("documents.parquet", _.unpersist(false))
+    def minhashPairs(s: SparkSession, d: String): DataFrame =
+      mh(s, d)(operators.DedupOps.minhashLsh(Tables(s, d, "documents")))
+    def jwPairs(s: SparkSession, d: String): DataFrame =
+      jw(s, d)(materialized(
+        operators.DedupOps.jaroWinklerPairsLazy(Tables(s, d, "documents"))))
+    // simhashPairs returns a LAZY plan (its one join pipeline has no
+    // internal materialization): without the eager persist every
+    // consumer would re-run the band join
+    def simhashPairs(s: SparkSession, d: String): DataFrame =
+      sh(s, d)(materialized(operators.DedupOps.simhashPairs(Tables(s, d, "documents"))))
     private[graft] def reset(): Unit = {
-      // symmetric release: sh frames are persisted here (unpersist
-      // drops their cache-manager entry); mh frames are the operator's
-      // own eagerly-localCheckpoint'd outputs, for which unpersist is
-      // a no-op — the shim walks their LogicalRDDs and drops the
-      // checkpoint blocks deterministically instead of waiting on the
-      // ContextCleaner
-      sh.values.foreach(_.unpersist(false))
-      jw.values.foreach(_.unpersist(false))
-      mh.values.foreach(
-        org.apache.spark.sql.graft.CheckpointCleanupShim.unpersistBlocks)
-      mh.clear(); sh.clear(); jw.clear()
+      sh.clear()
+      jw.clear()
+      mh.clear()
     }
   }
 
@@ -289,17 +256,16 @@ object SparkEntry {
     // hive-partitioned write + partition-pruned read-back (plan pinned
     // in PlansSpec)
     "s8_partitioned_roundtrip" -> ((s, d) => FileOps.partitionedRoundTrip(s,
-      t(s, d)("events"), "/tmp/graft_layout_" + d.replaceAll("[^a-zA-Z0-9]", "_"),
+      t(s, d)("events"), scratchDir(d, "layout"),
       "2024-01-08", "2024-01-14")),
     // two writer generations with different schemas, one merged read:
     // gen-1 rows surface the added column as NULL (oracle predicts the
     // merged result straight from the source table)
     "s10_schema_evolution" -> ((s, d) => FileOps.schemaEvolutionRoundTrip(s,
-      t(s, d)("orders"),
-      "/tmp/graft_evolve_" + d.replaceAll("[^a-zA-Z0-9]", "_"))),
+      t(s, d)("orders"), scratchDir(d, "evolve"))),
     // schema drift report over the evolution staging (gen=1 vs gen=2)
     "s13_schema_diff" -> ((s, d) => {
-      val dir = "/tmp/graft_evolve_" + d.replaceAll("[^a-zA-Z0-9]", "_")
+      val dir = scratchDir(d, "evolve")
       // (re)stage the two generations (the writes inside run eagerly;
       // the returned merged read stays lazy and unused), then diff
       // footers only
@@ -922,7 +888,7 @@ object SparkEntry {
     // a growing corpus actually runs (you never re-LSH 100 TB to admit
     // a day's crawl — you join the day against the stored index).
     "dedup_incremental" -> ((s, d) => {
-      val idxDir = "/tmp/graft_minhash_index_" + d.replaceAll("[^a-zA-Z0-9]", "_")
+      val idxDir = scratchDir(d, "minhash_index")
       DedupOps.minhashSignatures(t(s, d)("documents"), 16)
         .write.mode("overwrite").parquet(idxDir)
       val sigs = s.read.parquet(idxDir)
@@ -1089,189 +1055,83 @@ object SparkEntry {
       SimilarityOps.int8TopK(e, e.filter(col("vec_id") % 25 === 0), 5,
         indexDir = Some(stagingTag(d, "int8idx", "embeddings.parquet")))
     }),
-    // REAL image decode (javax.imageio) for the image modality: stage
-    // deterministic PNGs (dims derived from doc_id), ingest via the
-    // binaryFile source, decode actual width/height from the bytes —
-    // the oracle predicts the dims from the generation rule, so a fake
-    // or broken decoder cannot pass. Audio/video stay byte-derived
-    // fakes (no JDK codecs for them).
+    // REAL decode of all three modalities from staged files (PNG via
+    // javax.imageio, WAV via javax.sound.sampled, MP4 via the box
+    // walker) — the oracle predicts every field from the staging rule,
+    // so a fake or broken decoder cannot pass
     "mm_decode_meta" -> ((s, d) => mmDecodeMetaQuery(s, d)),
     // real decode → nearest-neighbor thumbnail → pixel digest; the
     // oracle predicts the digest from the staged gradient formula
-    "mm_image_resize" -> ((s, d) => {
-      val pngDir = stagingTag(d, "png", "documents.parquet")
-      Multimodal.stagePngs(t(s, d)("documents"), pngDir)
-      Multimodal.resizeImages(s,
-        s.read.format("binaryFile").load(pngDir)
-          .select(regexp_extract(col("path"), "doc_(\\d+)\\.png$", 1)
-            .cast("long").as("doc_id"), col("content")))
-        .orderBy("doc_id")
-    }),
+    "mm_image_resize" -> ((s, d) =>
+      Multimodal.resizeImages(s, media(s, d, Media.Png)).orderBy("doc_id")),
     // lossy-codec path: real baseline-JPEG decode, full-raster
     // tolerance gate against the flat-block gradient + exact dims
-    "mm_jpeg_decode" -> ((s, d) => {
-      val jpgDir = stagingTag(d, "jpg", "documents.parquet")
-      Multimodal.stageJpegs(t(s, d)("documents"), jpgDir)
-      Multimodal.decodeJpegCheck(s,
-        s.read.format("binaryFile").load(jpgDir)
-          .select(regexp_extract(col("path"), "doc_(\\d+)\\.jpg$", 1)
-            .cast("long").as("doc_id"), col("content")))
-        .orderBy("doc_id")
-    }),
+    "mm_jpeg_decode" -> ((s, d) =>
+      Multimodal.decodeJpegCheck(s, media(s, d, Media.Jpg)).orderBy("doc_id")),
     // full-raster pixel stats over the real decode — the oracle
     // predicts the exact per-image sum from the gradient formula, so
     // header-only or sampled decoders cannot pass
-    "mm_pixel_stats" -> ((s, d) => {
-      val pngDir = stagingTag(d, "png", "documents.parquet")
-      Multimodal.stagePngs(t(s, d)("documents"), pngDir)
-      Multimodal.pixelStats(s,
-        s.read.format("binaryFile").load(pngDir)
-          .select(regexp_extract(col("path"), "doc_(\\d+)\\.png$", 1)
-            .cast("long").as("doc_id"), col("content")))
-        .orderBy("doc_id")
-    }),
+    "mm_pixel_stats" -> ((s, d) =>
+      Multimodal.pixelStats(s, media(s, d, Media.Png)).orderBy("doc_id")),
     // per-image tonal entropy over the real decode (flat-frame screen)
-    "mm_image_entropy" -> ((s, d) => {
-      val pngDir = stagingTag(d, "png", "documents.parquet")
-      Multimodal.stagePngs(t(s, d)("documents"), pngDir)
-      Multimodal.imageEntropy(s,
-        s.read.format("binaryFile").load(pngDir)
-          .select(regexp_extract(col("path"), "doc_(\\d+)\\.png$", 1)
-            .cast("long").as("doc_id"), col("content")))
-    }),
+    "mm_image_entropy" -> ((s, d) => Multimodal.imageEntropy(s, media(s, d, Media.Png))),
     // letterbox/frame screen: border-ring vs interior brightness over
     // the real decode
-    "mm_border_contrast" -> ((s, d) => {
-      val pngDir = stagingTag(d, "png", "documents.parquet")
-      Multimodal.stagePngs(t(s, d)("documents"), pngDir)
-      Multimodal.borderContrast(s,
-        s.read.format("binaryFile").load(pngDir)
-          .select(regexp_extract(col("path"), "doc_(\\d+)\\.png$", 1)
-            .cast("long").as("doc_id"), col("content")))
-    }),
+    "mm_border_contrast" -> ((s, d) =>
+      Multimodal.borderContrast(s, media(s, d, Media.Png))),
     // 16-band grayscale tone census over the real PNG decode
-    "mm_gray_histogram" -> ((s, d) => {
-      val pngDir = stagingTag(d, "png", "documents.parquet")
-      Multimodal.stagePngs(t(s, d)("documents"), pngDir)
-      Multimodal.grayHistogram(s,
-        s.read.format("binaryFile").load(pngDir)
-          .select(regexp_extract(col("path"), "doc_(\\d+)\\.png$", 1)
-            .cast("long").as("doc_id"), col("content")))
-    }),
+    "mm_gray_histogram" -> ((s, d) =>
+      Multimodal.grayHistogram(s, media(s, d, Media.Png))),
     // 2×2 tile brightness over the real decode: the letterbox/blank-
     // region localization probe (raster twin of the audio band energy)
-    "mm_tile_brightness" -> ((s, d) => {
-      val pngDir = stagingTag(d, "png", "documents.parquet")
-      Multimodal.stagePngs(t(s, d)("documents"), pngDir)
-      Multimodal.tileBrightness(s,
-        s.read.format("binaryFile").load(pngDir)
-          .select(regexp_extract(col("path"), "doc_(\\d+)\\.png$", 1)
-            .cast("long").as("doc_id"), col("content")))
-    }),
+    "mm_tile_brightness" -> ((s, d) =>
+      Multimodal.tileBrightness(s, media(s, d, Media.Png))),
     // perceptual dHash fingerprints over the real PNG decode
-    "mm_dhash" -> ((s, d) => {
-      val pngDir = stagingTag(d, "png", "documents.parquet")
-      Multimodal.stagePngs(t(s, d)("documents"), pngDir)
-      Multimodal.imageDHash(s,
-        s.read.format("binaryFile").load(pngDir)
-          .select(regexp_extract(col("path"), "doc_(\\d+)\\.png$", 1)
-            .cast("long").as("doc_id"), col("content")))
-        .orderBy("doc_id")
-    }),
+    "mm_dhash" -> ((s, d) =>
+      Multimodal.imageDHash(s, media(s, d, Media.Png)).orderBy("doc_id")),
     // perceptual near-dup image pairs (banded Hamming over dHash)
-    "mm_dhash_neardup" -> ((s, d) => {
-      val pngDir = stagingTag(d, "png", "documents.parquet")
-      Multimodal.stagePngs(t(s, d)("documents"), pngDir)
-      Multimodal.imageNearDup(s,
-        s.read.format("binaryFile").load(pngDir)
-          .select(regexp_extract(col("path"), "doc_(\\d+)\\.png$", 1)
-            .cast("long").as("doc_id"), col("content")))
-    }),
+    "mm_dhash_neardup" -> ((s, d) => Multimodal.imageNearDup(s, media(s, d, Media.Png))),
     // cross-modal join: image near-dup pairs scored by caption
     // agreement (fingerprint equality + distinct-token Jaccard) — the
     // duplicated-image / conflicting-caption labeling census
-    "mm_caption_integrity" -> ((s, d) => {
-      val pngDir = stagingTag(d, "png", "documents.parquet")
-      Multimodal.stagePngs(t(s, d)("documents"), pngDir)
-      Multimodal.captionIntegrity(s,
-        s.read.format("binaryFile").load(pngDir)
-          .select(regexp_extract(col("path"), "doc_(\\d+)\\.png$", 1)
-            .cast("long").as("doc_id"), col("content")),
-        t(s, d)("documents"))
-    }),
+    "mm_caption_integrity" -> ((s, d) =>
+      Multimodal.captionIntegrity(s, media(s, d, Media.Png), t(s, d)("documents"))),
     // perceptual audio fingerprints over the real PCM decode
-    "mm_audio_hash" -> ((s, d) => {
-      val docs = t(s, d)("documents")
-      val dir = stagingTag(d, "wav", "documents.parquet")
-      Multimodal.stageWavs(docs, dir)
-      Multimodal.audioDHash(s,
-        s.read.format("binaryFile").load(dir)
-          .select(regexp_extract(col("path"), "doc_(\\d+)\\.wav$", 1)
-            .cast("long").as("doc_id"), col("content")))
-        .orderBy("doc_id")
-    }),
-    "mm_audio_meta" -> ((s, d) => mmAudioMetaQuery(s, d)),
+    "mm_audio_hash" -> ((s, d) =>
+      Multimodal.audioDHash(s, media(s, d, Media.Wav)).orderBy("doc_id")),
+    // RIFF header fields over the real audio decode
+    "mm_audio_meta" -> ((s, d) =>
+      Multimodal.decodeAudioMeta(s, media(s, d, Media.Wav)).orderBy("doc_id")),
     // full-stream PCM sample stats over the real audio decode
-    "mm_audio_stats" -> ((s, d) => mmAudioStatsQuery(s, d)),
+    "mm_audio_stats" -> ((s, d) =>
+      Multimodal.audioStats(s, media(s, d, Media.Wav)).orderBy("doc_id")),
     // quarter-band Σv² energy over the real PCM decode (trim signal)
-    "mm_audio_energy" -> ((s, d) => {
-      val dir = stagingTag(d, "wav", "documents.parquet")
-      Multimodal.stageWavs(t(s, d)("documents"), dir)
-      Multimodal.audioBandEnergy(s,
-        s.read.format("binaryFile").load(dir)
-          .select(regexp_extract(col("path"), "doc_(\\d+)\\.wav$", 1)
-            .cast("long").as("doc_id"), col("content")))
-    }),
+    "mm_audio_energy" -> ((s, d) =>
+      Multimodal.audioBandEnergy(s, media(s, d, Media.Wav))),
     // near-full-scale sample census over the real PCM decode
-    "mm_audio_clipping" -> ((s, d) => {
-      val dir = stagingTag(d, "wav", "documents.parquet")
-      Multimodal.stageWavs(t(s, d)("documents"), dir)
-      Multimodal.audioClipping(s,
-        s.read.format("binaryFile").load(dir)
-          .select(regexp_extract(col("path"), "doc_(\\d+)\\.wav$", 1)
-            .cast("long").as("doc_id"), col("content")))
-    }),
+    "mm_audio_clipping" -> ((s, d) =>
+      Multimodal.audioClipping(s, media(s, d, Media.Wav))),
     // integer-exact zero-crossing census over the real PCM decode
-    "mm_audio_zcr" -> ((s, d) => {
-      val dir = stagingTag(d, "wav", "documents.parquet")
-      Multimodal.stageWavs(t(s, d)("documents"), dir)
-      Multimodal.audioZcr(s,
-        s.read.format("binaryFile").load(dir)
-          .select(regexp_extract(col("path"), "doc_(\\d+)\\.wav$", 1)
-            .cast("long").as("doc_id"), col("content")))
-    }),
+    "mm_audio_zcr" -> ((s, d) => Multimodal.audioZcr(s, media(s, d, Media.Wav))),
     // NN resample of channel-0 PCM to a fixed 64-point grid + digest
-    "mm_audio_resample" -> ((s, d) => {
-      val dir = stagingTag(d, "wav", "documents.parquet")
-      Multimodal.stageWavs(t(s, d)("documents"), dir)
-      Multimodal.resampleAudio(s,
-        s.read.format("binaryFile").load(dir)
-          .select(regexp_extract(col("path"), "doc_(\\d+)\\.wav$", 1)
-            .cast("long").as("doc_id"), col("content")))
-        .orderBy("doc_id")
-    }),
+    "mm_audio_resample" -> ((s, d) =>
+      Multimodal.resampleAudio(s, media(s, d, Media.Wav)).orderBy("doc_id")),
     // real ISO-BMFF metadata parse over staged MP4 containers
-    "mm_video_meta" -> ((s, d) => stagedVideoMeta(s, d).orderBy("doc_id")),
-    "mm_frame_sample" -> ((s, d) => Multimodal.frameSample(stagedVideoMeta(s, d))),
+    "mm_video_meta" -> ((s, d) =>
+      Multimodal.decodeVideoMeta(s, media(s, d, Media.Mp4)).orderBy("doc_id")),
+    "mm_frame_sample" -> ((s, d) =>
+      Multimodal.frameSample(Multimodal.decodeVideoMeta(s, media(s, d, Media.Mp4)))),
     // S4+K4+T2: staged CSV round trip in the reference dialect
-    "s4_csv_roundtrip" -> ((s, d) => {
-      val staging = "/tmp/graft_s4_" + d.replaceAll("[^a-zA-Z0-9]", "_")
-      FileOps.csvRoundTrip(s, t(s, d)("part"), staging).orderBy("p_partkey")
-    }),
-    "s11_jsonl_roundtrip" -> ((s, d) => {
-      val staging = "/tmp/graft_s11_" + d.replaceAll("[^a-zA-Z0-9]", "_")
-      FileOps.jsonlRoundTrip(s, t(s, d)("documents"), staging).orderBy("doc_id")
-    }),
+    "s4_csv_roundtrip" -> ((s, d) => FileOps.csvRoundTrip(s,
+      t(s, d)("part"), scratchDir(d, "s4")).orderBy("p_partkey")),
+    "s11_jsonl_roundtrip" -> ((s, d) => FileOps.jsonlRoundTrip(s,
+      t(s, d)("documents"), scratchDir(d, "s11")).orderBy("doc_id")),
     // planted-corruption permissive read: bad lines must land in
     // _corrupt_record, never vanish or half-parse
-    "s15_jsonl_permissive" -> ((s, d) => {
-      val staging = "/tmp/graft_s15_" + d.replaceAll("[^a-zA-Z0-9]", "_")
-      FileOps.jsonlPermissiveCensus(s, t(s, d)("documents"), staging)
-    }),
-    "s12_orc_roundtrip" -> ((s, d) => {
-      val staging = "/tmp/graft_s12_" + d.replaceAll("[^a-zA-Z0-9]", "_")
-      FileOps.orcRoundTrip(s, t(s, d)("supplier"), staging).orderBy("s_suppkey")
-    }),
+    "s15_jsonl_permissive" -> ((s, d) => FileOps.jsonlPermissiveCensus(s,
+      t(s, d)("documents"), scratchDir(d, "s15"))),
+    "s12_orc_roundtrip" -> ((s, d) => FileOps.orcRoundTrip(s,
+      t(s, d)("supplier"), scratchDir(d, "s12")).orderBy("s_suppkey")),
     // S5: JDBC catalog scan (embedded Derby stands in for PG's
     // information_schema; rows-only check — DuckDB cannot reach it)
     "s5_jdbc_catalog" -> ((s, _) => {
@@ -1295,16 +1155,16 @@ object SparkEntry {
           .filter(col("c_custkey") % 3 === 0),
         "c_custkey", "Customer", "k5_census", maxRecords = 50)
     }),
-    // Structured Streaming end-to-end: file-source readStream over the
-    // events table → watermarked sliding-window aggregation →
-    // Trigger.AvailableNow → memory sink; oracle is the batch-SQL
-    // restatement of the same sliding windows
     // fixed-size set-sketch state: streaming KMV distinct (complete
     // mode, no watermark needed — the sketch never grows)
     "stream_kmv" -> ((s, d) => streamKmvQuery(s, d)),
     // streaming GK quantile sketch (complete mode, fixed-size state);
     // verified by the batch rank gate
     "stream_quantile" -> ((s, d) => streamQuantileQuery(s, d)),
+    // Structured Streaming end-to-end: file-source readStream over the
+    // events table → watermarked sliding-window aggregation →
+    // Trigger.AvailableNow → memory sink; oracle is the batch-SQL
+    // restatement of the same sliding windows
     "stream_windowed_agg" -> ((s, d) => streamWindowedAggQuery(s, d)),
     // streaming drift monitor: tumbling-day type counts in the stream
     // (bounded windowed state), entropy finalized group-scale over the
@@ -1513,14 +1373,7 @@ object SparkEntry {
     "w35_late_arrival" -> ((s, d) =>
       Relational.w35LateArrival(t(s, d)("events"))),
     // leading/trailing silence trim census over the real PCM decode
-    "mm_audio_silence" -> ((s, d) => {
-      val dir = stagingTag(d, "wav", "documents.parquet")
-      Multimodal.stageWavs(t(s, d)("documents"), dir)
-      Multimodal.audioSilence(s,
-        s.read.format("binaryFile").load(dir)
-          .select(regexp_extract(col("path"), "doc_(\\d+)\\.wav$", 1)
-            .cast("long").as("doc_id"), col("content")))
-    }),
+    "mm_audio_silence" -> ((s, d) => Multimodal.audioSilence(s, media(s, d, Media.Wav))),
     // radius-1/2/3 reachability balls from modulus-sampled seeds
     "graph_bfs_ball" -> ((s, d) =>
       GraphOps.bfsBall(BasketGraph.pairs(s, d))),
@@ -1550,14 +1403,8 @@ object SparkEntry {
     "text_templates" -> ((s, d) =>
       TextOps.templateDetect(t(s, d)("documents"))),
     // x-gradient sharpness census over the real PNG decode
-    "mm_gradient_energy" -> ((s, d) => {
-      val pngDir = stagingTag(d, "png", "documents.parquet")
-      Multimodal.stagePngs(t(s, d)("documents"), pngDir)
-      Multimodal.gradientEnergy(s,
-        s.read.format("binaryFile").load(pngDir)
-          .select(regexp_extract(col("path"), "doc_(\\d+)\\.png$", 1)
-            .cast("long").as("doc_id"), col("content")))
-    }),
+    "mm_gradient_energy" -> ((s, d) =>
+      Multimodal.gradientEnergy(s, media(s, d, Media.Png))),
     // period-7 Goertzel amplitude of demeaned daily revenue
     "a54_spectral_peak" -> ((s, d) =>
       Relational.a54SpectralPeak(t(s, d)("orders"))),
@@ -1633,20 +1480,11 @@ object SparkEntry {
       DedupGraph.minhashPairs(s, d).select("doc_a", "doc_b"))),
     // staging-integrity manifest: REAL staged file counts per
     // modality vs the doc_id % 3 routing rule the oracle predicts
-    "mm_manifest" -> ((s, d) => {
-      val docs = t(s, d)("documents")
-      val png = stagingTag(d, "png", "documents.parquet")
-      val wav = stagingTag(d, "wav", "documents.parquet")
-      val mp4 = stagingTag(d, "mp4", "documents.parquet")
-      Multimodal.stagePngs(docs, png)
-      Multimodal.stageWavs(docs, wav)
-      Multimodal.stageMp4s(docs, mp4)
-      def cnt(dir: String, name: String) = s.read.format("binaryFile")
-        .load(dir).agg(count(lit(1)).as("n_files"))
-        .select(lit(name).as("modality"), col("n_files"))
-      cnt(mp4, "mp4").unionAll(cnt(png, "png")).unionAll(cnt(wav, "wav"))
-        .orderBy("modality")
-    }),
+    "mm_manifest" -> ((s, d) =>
+      Seq(Media.Mp4, Media.Png, Media.Wav).map { m =>
+        media(s, d, m).agg(count(lit(1)).as("n_files"))
+          .select(lit(m.ext).as("modality"), col("n_files"))
+      }.reduce(_ unionAll _).orderBy("modality")),
   )
 
   /** K2 end-to-end: two Completed batches (odd/even split of `part`)
@@ -1704,7 +1542,7 @@ object SparkEntry {
     */
   private def streamKmvQuery(s: SparkSession, d: String): DataFrame =
     withStreamShuffle(s) {
-      val stream = stagedEventsStream(s, d, "src")
+      val stream = replayStream(s, d, "events", "events")
       val sk = graft.streaming.StreamingSync.kmvDistinct(stream, 8)
       val res = runToMemorySink(s, sk, "stream_kmv", "complete")
       val k = 8
@@ -1733,7 +1571,7 @@ object SparkEntry {
     */
   private def streamWindowedAggQuery(s: SparkSession, d: String): DataFrame =
     withStreamShuffle(s) {
-      val stream = stagedEventsStream(s, d, "src")
+      val stream = replayStream(s, d, "events", "events")
       val agg = graft.streaming.StreamingSync
         .windowedCounts(stream, "1 hour", "30 minutes", "1 hour")
       runToMemorySink(s, agg, "stream_win_agg", "complete")
@@ -1751,7 +1589,7 @@ object SparkEntry {
   private def streamQuantileQuery(s: SparkSession, d: String): DataFrame =
     withStreamShuffle(s) {
       val accuracy = 1000
-      val stream = stagedEventsStream(s, d, "src")
+      val stream = replayStream(s, d, "events", "events")
       val agg = graft.streaming.StreamingSync.approxQuantiles(stream, accuracy)
       val sink = runToMemorySink(s, agg, "stream_quantile", "complete")
       val eps = 1.0 / accuracy
@@ -1777,7 +1615,7 @@ object SparkEntry {
     */
   private def streamEntropyQuery(s: SparkSession, d: String): DataFrame =
     withStreamShuffle(s) {
-      val stream = stagedEventsStream(s, d, "src")
+      val stream = replayStream(s, d, "events", "events")
       val agg = graft.streaming.StreamingSync
         .windowedCounts(stream, "24 hours", "24 hours", "1 hour")
       val sink = runToMemorySink(s, agg, "stream_entropy", "complete")
@@ -1798,7 +1636,7 @@ object SparkEntry {
   private def streamDriftQuery(s: SparkSession, d: String): DataFrame =
     withStreamShuffle(s) {
       import org.apache.spark.sql.types.DecimalType
-      val stream = stagedEventsStream(s, d, "src")
+      val stream = replayStream(s, d, "events", "events")
       val agg = graft.streaming.StreamingSync
         .windowedValueBins(stream, "24 hours", "1 hour")
       val sink = runToMemorySink(s, agg, "stream_drift", "complete")
@@ -1838,28 +1676,16 @@ object SparkEntry {
     * delay keeps all dedup state live for the bounded replay, so the
     * output is exactly the original table — which is the oracle.
     */
-  private def streamDedupQuery(s: SparkSession, d: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val path = s"$d/events.parquet"
-    val raw = Tables.rawEvents(s, path)
-    // mtime-keyed: the dup shard is MATERIALIZED from events — a
-    // regenerated testdata must re-stage, not serve the stale shard
-    val srcDir = Paths.get(stagingTag(d, "stream_dedup_src", "events.parquet"))
-    Files.createDirectories(srcDir)
-    linkParquetFiles(srcDir, "events", Paths.get(path))
-    val dup = srcDir.resolve("dups.parquet")
-    if (!Files.exists(dup))
-      writeSingleFile(raw.filter(col("event_id") % 7 === 0), dup)
+  private def streamDedupQuery(s: SparkSession, d: String): DataFrame =
     withStreamShuffle(s) {
-      val stream = Tables.normalizeEventsTs(
-        s.readStream.schema(raw.schema).parquet(srcDir.toString))
+      val stream = replayStream(s, d, "dedup", "events", frames = Seq(
+        Tables.rawEvents(s, s"$d/events.parquet").filter(col("event_id") % 7 === 0)))
       val deduped = graft.streaming.StreamingSync
         .dedupWithinWatermark(stream, "ts", "3650 days", Seq("event_id"))
       runToMemorySink(s, deduped, "stream_dedup_sink", "append")
         .select("event_id", "user_id", "event_type", "value")
         .orderBy("event_id")
     }
-  }
 
   /** Stage `df` as one single parquet FILE at `dest` (the streaming
     * file source replays whole files as micro-batches): write to a
@@ -1917,17 +1743,13 @@ object SparkEntry {
   }
 
   /** Stage a parquet `target` — a single FILE (the testdata shape) or
-    * a DIRECTORY of part files (10×-staged probe corpora) — into a
-    * streaming source dir as flat `<prefix>*.parquet` symlinks. The
-    * streaming file source lists its directory non-recursively, so a
-    * directory target must be linked file-by-file: a directory
-    * symlink is silently skipped, which made the r13 stream probe's
-    * scaled replay read only the side shard until this was split out.
-    * Part links keep the target's mtime (symlink stat follows the
-    * link), so mtime-ordered staging (events before sentinel) holds.
-    * Returns the number of files staged — the single source for
-    * trigger sizing (re-deriving it from the naming scheme would put
-    * the convention in two places).
+    * a DIRECTORY of part files — into a streaming source dir as flat
+    * `<prefix>*.parquet` symlinks. A directory target must be linked
+    * file-by-file: the streaming file source silently skips a
+    * directory symlink. Part links keep the target's mtime (symlink
+    * stat follows the link), so mtime-ordered staging (events before
+    * sentinel) holds. Returns the number of files staged — the single
+    * source for trigger sizing.
     */
   private def linkParquetFiles(srcDir: java.nio.file.Path, prefix: String,
       target: java.nio.file.Path): Int = {
@@ -1962,20 +1784,25 @@ object SparkEntry {
     }
   }
 
-  /** Key a /tmp staging location to its SOURCE file's mtime: when the
-    * driver regenerates testdata, the key changes and staging rebuilds
-    * from the new data instead of silently serving stale artifacts
-    * (worse than stale content, a cached file with an OLD mtime would
-    * invert the file source's mtime-ordered micro-batching).
+  /** The local scratch dir of query staging `tag` over sf dir `d`. */
+  private def scratchDir(d: String, tag: String): String =
+    s"/tmp/graft_${tag}_" + d.replaceAll("[^a-zA-Z0-9]", "_")
+
+  /** [[scratchDir]] keyed to its SOURCE file's mtime: when the testdata
+    * is regenerated, the key changes and staging rebuilds from the new
+    * data instead of silently serving stale artifacts (worse than stale
+    * content, a cached file with an OLD mtime would invert the file
+    * source's mtime-ordered micro-batching).
     */
   private def stagingTag(d: String, tag: String, sourceFile: String): String = {
     val m = java.nio.file.Files.getLastModifiedTime(
       java.nio.file.Paths.get(s"$d/$sourceFile")).toMillis
-    val prefix = s"graft_${tag}_" + d.replaceAll("[^a-zA-Z0-9]", "_") + "_m"
+    val base = new java.io.File(scratchDir(d, tag) + "_m")
+    val prefix = base.getName
     // GC stale generations while here: a sibling keyed to an older
     // source mtime can never be read again (its key cannot recur), so
     // /tmp must not accumulate one staging per testdata regeneration
-    val stale = new java.io.File("/tmp").listFiles()
+    val stale = base.getParentFile.listFiles()
     if (stale != null) stale.foreach { f =>
       val n = f.getName
       // match "<prefix><digits>" and "<prefix><digits>.tmp" (in-flight
@@ -1986,7 +1813,7 @@ object SparkEntry {
           suffix.nonEmpty && suffix.forall(_.isDigit))
         deleteTree(f.toPath)
     }
-    s"/tmp/$prefix$m"
+    s"$base$m"
   }
 
   /** Recursive delete; no-op when absent. */
@@ -2034,62 +1861,87 @@ object SparkEntry {
     s.table(sink)
   }
 
-  /** A far-future (2100-01-01) `ts` literal in whatever physical type
-    * the staged events schema carries (BIGINT nanos or timestamp).
+  /** Replay `table` of sf dir `d` as a file stream: the one staging
+    * behind every `stream_*` query. The stream dir, keyed like
+    * [[stagingTag]], holds the table's parquet files as links when
+    * `linkTable`, plus `frames`, each materialized once as a single
+    * file at a pinned mtime; the mtimes ascend after the links, and the
+    * file source orders micro-batches by mtime. With `frameBatches`
+    * the links are micro-batch 0 and each frame follows in a batch of
+    * its own; without it the whole dir is one batch. An events replay
+    * gets [[Tables.normalizeEventsTs]], as [[Tables.apply]] does.
     */
-  private def farFutureTs(dt: org.apache.spark.sql.types.DataType): Column =
-    dt match {
-      case org.apache.spark.sql.types.LongType => lit(4102444800000000000L)
-      case _ => lit("2100-01-01 00:00:00").cast(dt)
-    }
-
-  /** Stage `events.parquet` as a streamed DIRECTORY (the file source
-    * watches a directory for new files) and return the micro-batch
-    * stream with ts truncated nanos→micros, shared by the streaming
-    * driver queries.
-    */
-  private def stagedEventsStream(s: SparkSession, d: String,
-      tag: String): DataFrame = {
+  private def replayStream(s: SparkSession, d: String, tag: String,
+      table: String, linkTable: Boolean = true, frameBatches: Boolean = false,
+      frames: => Seq[DataFrame] = Nil): DataFrame = {
     import java.nio.file.{Files, Paths}
-    val path = s"$d/events.parquet"
-    val rawSchema = Tables.rawEvents(s, path).schema
-    val srcDir = Paths.get(
-      s"/tmp/graft_stream_${tag}_" + d.replaceAll("[^a-zA-Z0-9]", "_"))
-    Files.createDirectories(srcDir)
-    linkParquetFiles(srcDir, "events", Paths.get(path))
-    Tables.normalizeEventsTs(s.readStream.schema(rawSchema).parquet(srcDir.toString))
+    val source = s"$d/$table.parquet"
+    val dir = Paths.get(stagingTag(d, s"replay_$tag", s"$table.parquet"))
+    // completion-marked (the file source skips '_'-files): a crash
+    // mid-staging must not leave a half-staged dir a later run trusts
+    val staged = dir.resolve("_STAGED")
+    if (!Files.exists(staged)) {
+      deleteTree(dir)
+      Files.createDirectories(dir)
+      val fs = frames
+      val now = System.currentTimeMillis()
+      fs.zipWithIndex.foreach { case (df, i) =>
+        val dest = dir.resolve(s"frame$i.parquet")
+        writeSingleFile(df, dest)
+        Files.setLastModifiedTime(dest, java.nio.file.attribute.FileTime
+          .fromMillis(now - (fs.size - 1 - i) * 60000L))
+      }
+      Files.createFile(staged)
+    }
+    val links = if (linkTable) linkParquetFiles(dir, table, Paths.get(source)) else 0
+    val schemaOf = if (linkTable) source else dir.resolve("frame0.parquet").toString
+    val reader = s.readStream.schema((if (table == "events") Tables.rawEvents(s, schemaOf)
+      else s.read.parquet(schemaOf)).schema)
+    // "links, THEN each frame": every linked file must land in batch 0 —
+    // a directory-shaped table's parts are not time-ordered, so one
+    // file per batch would advance a watermark off the first part and
+    // LATE-DROP older events still waiting in later parts
+    val stream = (if (frameBatches) reader.option("maxFilesPerTrigger",
+      math.max(links, 1).toString) else reader).parquet(dir.toString)
+    if (table == "events") Tables.normalizeEventsTs(stream) else stream
+  }
+
+  /** One far-future (2100-01-01) event of user −1 — per entry of
+    * `types` when given: multi-watermark queries filter by event_type
+    * before their watermark operators, and each branch needs its own
+    * far-future row. Replayed after the events, it pushes the event-
+    * time watermark past every real session and window close, and the
+    * trailing no-data batch flushes all engine state.
+    */
+  private def sentinelEvents(s: SparkSession, d: String,
+      types: Seq[String] = Nil): DataFrame = {
+    val raw = Tables.rawEvents(s, s"$d/events.parquet")
+    val one = raw.limit(1)
+      .withColumn("user_id", lit(-1L).cast(raw.schema("user_id").dataType))
+      .withColumn("ts", raw.schema("ts").dataType match {
+        case org.apache.spark.sql.types.LongType => lit(4102444800000000000L)
+        case dt => lit("2100-01-01 00:00:00").cast(dt)
+      })
+    if (types.isEmpty) one
+    else types.map(t => one.withColumn("event_type", lit(t))).reduce(_ unionAll _)
   }
 
   /** Real-decode multimodal metadata for ALL THREE modalities, one
     * row per doc in the unified [[Multimodal.mediaMetaSchema]]:
-    * image-typed docs render as real PNGs and decode with
-    * `javax.imageio`; audio-typed docs render as real WAVs and decode
-    * with `javax.sound.sampled`; video-typed docs render as real
-    * ISO-BMFF MP4 containers and parse with the box walker. Every
-    * staging is idempotent per sf dir; every decode comes back
-    * through the `binaryFile` source. `n_bytes` is the
+    * image-typed docs decode as PNGs with `javax.imageio`, audio-typed
+    * docs as WAVs with `javax.sound.sampled`, video-typed docs as MP4
+    * containers with the box walker. `n_bytes` is the
     * decode-verifiable size per modality (image w·h·3, audio PCM
     * frames·ch·2, video w·h·3·frames); width/height report 0 for
     * audio (not applicable, kept non-null for the unified schema).
     */
   private def mmDecodeMetaQuery(s: SparkSession, d: String): DataFrame = {
-    val docs = t(s, d)("documents")
-    // mtime-keyed: the rendered files materialize doc_ids — regenerated
-    // documents must re-render, not reuse a stale staging
-    val pngDir = stagingTag(d, "png", "documents.parquet")
-    Multimodal.stagePngs(docs, pngDir)
-    def staged(dir: String, ext: String): DataFrame =
-      s.read.format("binaryFile").load(dir)
-        .select(regexp_extract(col("path"), s"doc_(\\d+)\\.$ext$$", 1)
-          .cast("long").as("doc_id"), col("content"))
-    val images = Multimodal.decodeImageMeta(s, staged(pngDir, "png"))
-    val wavDir = stagingTag(d, "wav", "documents.parquet")
-    Multimodal.stageWavs(docs, wavDir)
-    val audio = Multimodal.decodeAudioMeta(s, staged(wavDir, "wav"))
+    val images = Multimodal.decodeImageMeta(s, media(s, d, Media.Png))
+    val audio = Multimodal.decodeAudioMeta(s, media(s, d, Media.Wav))
       .select(col("doc_id"), col("pcm_bytes").as("n_bytes"),
         lit("audio").as("media_type"), lit(0).as("width"),
         lit(0).as("height"), col("n_frames").cast("int").as("n_frames"))
-    val video = stagedVideoMeta(s, d)
+    val video = Multimodal.decodeVideoMeta(s, media(s, d, Media.Mp4))
       .select(col("doc_id"),
         (col("width").cast("long") * col("height") * 3L * col("n_frames"))
           .as("n_bytes"),
@@ -2098,52 +1950,13 @@ object SparkEntry {
     images.unionByName(audio).unionByName(video).orderBy("doc_id")
   }
 
-  /** Shared video staging + decode: video-typed docs render as real
-    * MP4 containers once per sf dir, come back through `binaryFile`,
-    * and parse with [[Multimodal.decodeVideoMeta]]'s ISO-BMFF box
-    * walker. The oracle predicts every field from the staging rule's
-    * doc_id arithmetic, so only a parser actually walking
-    * moov/trak/tkhd + mdhd + stts matches.
+  /** The sf dir's staged `m` files as (doc_id, content) rows, rendered
+    * once per documents generation: the files materialize doc_ids, so
+    * regenerated documents must re-render, not reuse a stale staging.
     */
-  private def stagedVideoMeta(s: SparkSession, d: String): DataFrame = {
-    val docs = t(s, d)("documents")
-    val dir = stagingTag(d, "mp4", "documents.parquet")
-    Multimodal.stageMp4s(docs, dir)
-    val staged = s.read.format("binaryFile").load(dir)
-      .select(regexp_extract(col("path"), "doc_(\\d+)\\.mp4$", 1)
-        .cast("long").as("doc_id"), col("content"))
-    Multimodal.decodeVideoMeta(s, staged)
-  }
-
-  /** Real-decode audio metadata: audio-typed docs render as real WAVs
-    * once per sf dir (idempotent staging), come back through the
-    * `binaryFile` source, and decode with `javax.sound.sampled` — the
-    * audio twin of [[mmDecodeMetaQuery]]'s image path. The oracle
-    * predicts the header fields from the staging's doc_id arithmetic,
-    * so only a decoder actually reading the RIFF header matches.
-    */
-  private def mmAudioMetaQuery(s: SparkSession, d: String): DataFrame = {
-    val docs = t(s, d)("documents")
-    val dir = stagingTag(d, "wav", "documents.parquet")
-    Multimodal.stageWavs(docs, dir)
-    val staged = s.read.format("binaryFile").load(dir)
-      .select(regexp_extract(col("path"), "doc_(\\d+)\\.wav$", 1)
-        .cast("long").as("doc_id"), col("content"))
-    Multimodal.decodeAudioMeta(s, staged).orderBy("doc_id")
-  }
-
-  /** Full-stream PCM sample stats over the staged WAVs (the audio twin
-    * of `mm_pixel_stats` — proves the decoder streamed real samples).
-    */
-  private def mmAudioStatsQuery(s: SparkSession, d: String): DataFrame = {
-    val docs = t(s, d)("documents")
-    val dir = stagingTag(d, "wav", "documents.parquet")
-    Multimodal.stageWavs(docs, dir)
-    val staged = s.read.format("binaryFile").load(dir)
-      .select(regexp_extract(col("path"), "doc_(\\d+)\\.wav$", 1)
-        .cast("long").as("doc_id"), col("content"))
-    Multimodal.audioStats(s, staged).orderBy("doc_id")
-  }
+  private def media(s: SparkSession, d: String, m: Media): DataFrame =
+    Multimodal.staged(s, t(s, d)("documents"),
+      stagingTag(d, m.ext, "documents.parquet"), m)
 
   /** Stateless stream-static join driven to completion: the documents
     * table replayed as a stream, each arriving doc fingerprinted and
@@ -2152,20 +1965,12 @@ object SparkEntry {
     * oracle is the batch fingerprint self-join.
     */
   private def streamIndexLookupQuery(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    import java.nio.file.{Files, Paths}
-    val path = s"$d/documents.parquet"
-    val srcDir = Paths.get(
-      "/tmp/graft_stream_idxlookup_" + d.replaceAll("[^a-zA-Z0-9]", "_"))
-    Files.createDirectories(srcDir)
-    linkParquetFiles(srcDir, "documents", Paths.get(path))
     val index = t(s, d)("documents").select(
       md5(expr("array_join(regexp_extract_all(lower(text), '[a-z0-9]+', 0), ' ')"))
         .as("fp"),
       col("doc_id").as("index_id"))
-    val rawSchema = s.read.parquet(path).schema
     withStreamShuffle(s) {
-      val stream = s.readStream.schema(rawSchema).parquet(srcDir.toString)
+      val stream = replayStream(s, d, "documents", "documents")
       val hits = graft.streaming.StreamingSync.streamIndexLookup(stream, index)
       runToMemorySink(s, hits, "stream_idx_sink", "append")
         .orderBy("doc_id", "index_id")
@@ -2178,22 +1983,14 @@ object SparkEntry {
     * `index_id < doc_id` guard makes the full replay emit exactly the
     * batch jaroWinklerPairs set, so the batch oracle gates it.
     */
-  private def streamErPairsQuery(s: SparkSession, d: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val path = s"$d/documents.parquet"
-    val srcDir = Paths.get(
-      "/tmp/graft_stream_erpairs_" + d.replaceAll("[^a-zA-Z0-9]", "_"))
-    Files.createDirectories(srcDir)
-    linkParquetFiles(srcDir, "documents", Paths.get(path))
-    val rawSchema = s.read.parquet(path).schema
+  private def streamErPairsQuery(s: SparkSession, d: String): DataFrame =
     withStreamShuffle(s) {
-      val stream = s.readStream.schema(rawSchema).parquet(srcDir.toString)
+      val stream = replayStream(s, d, "documents", "documents")
       val pairs = graft.streaming.StreamingSync
         .streamErPairs(stream, t(s, d)("documents"))
       runToMemorySink(s, pairs, "stream_er_sink", "append")
         .orderBy("doc_a", "doc_b")
     }
-  }
 
   /** Stream-stream interval self-join driven to completion: clicks ⋈
     * purchases per user within 30 minutes, both sides watermarked so
@@ -2202,7 +1999,7 @@ object SparkEntry {
     */
   private def streamJoinQuery(s: SparkSession, d: String): DataFrame =
     withStreamShuffle(s) {
-      val stream = stagedEventsStream(s, d, "join")
+      val stream = replayStream(s, d, "events", "events")
       val joined = graft.streaming.StreamingSync
         .clickPurchaseJoin(stream, maxLagSeconds = 1800L)
       runToMemorySink(s, joined, "stream_join_sink", "append")
@@ -2216,70 +2013,12 @@ object SparkEntry {
     */
   private def streamSessionQuery(s: SparkSession, d: String): DataFrame =
     withStreamShuffle(s) {
-      val stream = stagedEventsStream(s, d, "sess")
+      val stream = replayStream(s, d, "events", "events")
       val sessions = graft.streaming.StreamingSync
         .sessionize(s, stream, gapSeconds = 1800L)
       runToMemorySink(s, sessions, "stream_session_sink", "update")
         .orderBy("user_id", "session_start")
     }
-
-  /** Stage the events table as micro-batch 1 plus a far-future
-    * SENTINEL event (user −1, year 2100) as micro-batch 2 — the
-    * trigger is sized to the EVENT-FILE COUNT so every event file
-    * (one for an sf dir, many for a directory-shaped staged corpus)
-    * lands in batch 1, and the mtime-pinned sentinel alone pushes the
-    * event-time watermark past every real session/window close; the
-    * trailing no-data batch flushes all engine state. One file per
-    * trigger would late-drop events here: parts are not time-ordered,
-    * so batch 1's max ts advances the watermark over older events
-    * still waiting in later parts (r13 regression spec). Shared by
-    * both sessionizer-under-oracle queries. Returns the micro-batch
-    * stream.
-    */
-  private def stagedSentinelEventsStream(s: SparkSession, d: String,
-      tag: String, sentinelTypes: Seq[String] = Nil): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val path = s"$d/events.parquet"
-    val raw = Tables.rawEvents(s, path)
-    // mtime-keyed: the sentinel file is MATERIALIZED and must sort
-    // strictly AFTER the events file in the source's mtime order — a
-    // regenerated testdata (newer than a cached sentinel) would invert
-    // the micro-batch order, so the key forces a fresh staging
-    val srcDir = Paths.get(stagingTag(d, s"stream_$tag", "events.parquet"))
-    Files.createDirectories(srcDir)
-    val eventFiles = linkParquetFiles(srcDir, "a_events", Paths.get(path))
-    val sentinel = srcDir.resolve("z_sentinel.parquet")
-    if (!Files.exists(sentinel)) {
-      val one = raw.limit(1)
-        .withColumn("user_id", lit(-1L).cast(raw.schema("user_id").dataType))
-        // 2100-01-01 (nanos or native ts): decades past any real event
-        .withColumn("ts", farFutureTs(raw.schema("ts").dataType))
-      // multi-watermark queries (stream-stream joins) filter by
-      // event_type BEFORE their watermark operators: each filtered
-      // branch needs its own far-future row or its watermark never
-      // advances — hence one sentinel row per requested type
-      val sent =
-        if (sentinelTypes.isEmpty) one
-        else sentinelTypes.map(t => one.withColumn("event_type", lit(t)))
-          .reduce(_ unionAll _)
-      writeSingleFile(sent, sentinel)
-      // the file source orders micro-batches by modification time: pin
-      // the sentinel strictly after the (old) staged events file
-      Files.setLastModifiedTime(sentinel,
-        java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis()))
-    }
-    // "events batch, THEN sentinel batch": every event file must land
-    // in the FIRST micro-batch — events are not time-ordered across a
-    // directory-shaped table's part files, so processing them one file
-    // per batch would advance the watermark off batch 1's max ts and
-    // LATE-DROP older events arriving in later parts (caught by the
-    // r13 directory-shaped regression spec: 670/1000 rows survived).
-    // Sizing the trigger to the event-file count keeps the sentinel —
-    // strictly newest by pinned mtime — alone in batch 2.
-    Tables.normalizeEventsTs(s.readStream.schema(raw.schema)
-      .option("maxFilesPerTrigger", eventFiles.toString)
-      .parquet(srcDir.toString))
-  }
 
   /** Stream-stream LEFT OUTER join under the oracle gate: matched
     * click→purchase pairs emit immediately; a click with no in-window
@@ -2291,8 +2030,9 @@ object SparkEntry {
     */
   private def streamJoinOuterQuery(s: SparkSession, d: String): DataFrame =
     withStreamShuffle(s) {
-      val stream = stagedSentinelEventsStream(s, d, "joinouter",
-        Seq("click", "purchase"))
+      val types = Seq("click", "purchase")
+      val stream = replayStream(s, d, "sentinel_click_purchase", "events",
+        frameBatches = true, frames = Seq(sentinelEvents(s, d, types)))
       val joined = graft.streaming.StreamingSync
         .clickPurchaseJoin(stream, maxLagSeconds = 1800L,
           watermarkDelay = "2 hours", joinType = "left_outer")
@@ -2311,46 +2051,20 @@ object SparkEntry {
     * reset per invocation for a clean two-batch replay.
     */
   private def streamCdcMergeQuery(s: SparkSession, d: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    // mtime-keyed to orders.parquet (base/delta derive from it), and
-    // completion-marked: a crash between the two stageOne calls must
-    // not leave a half-staged dir a later run would trust
-    val tagDir = Paths.get(stagingTag(d, "stream_cdc", "orders.parquet"))
-    val srcDir = tagDir.resolve("src")
-    val staged = srcDir.resolve("_STAGED") // file source skips '_'-files
-    if (!Files.exists(staged)) {
-      deleteTree(srcDir)
-      Files.createDirectories(srcDir)
-      def stageOne(df: DataFrame, name: String, mtime: Long): Unit = {
-        val dest = srcDir.resolve(name)
-        writeSingleFile(df, dest)
-        Files.setLastModifiedTime(dest,
-          java.nio.file.attribute.FileTime.fromMillis(mtime))
-      }
-      val cols = OrderCols.map(col) :+ col("is_deleted")
-      val base = baseSnapshot(s, d).withColumn("is_deleted", lit(false))
-        .select(cols: _*)
-      val delta = deltaBatch(s, d, 2, 1.1, 1).select(cols: _*)
-      val now = System.currentTimeMillis()
-      stageOne(base, "a_base.parquet", now - 60000)
-      stageOne(delta, "b_delta.parquet", now)
-      Files.createFile(staged)
-    }
-    // fresh state/checkpoint each run: the replay is the test
-    val stateDir = tagDir.resolve("state")
-    val ckpt = tagDir.resolve("ckpt")
-    deleteTree(stateDir); deleteTree(ckpt)
-    val schema = s.read.parquet(srcDir.resolve("a_base.parquet").toString).schema
+    val cols = OrderCols.map(col) :+ col("is_deleted")
+    // base batch, THEN delta batch
+    val delta = replayStream(s, d, "cdc", "orders", linkTable = false,
+      frameBatches = true, frames = Seq(
+        baseSnapshot(s, d).withColumn("is_deleted", lit(false)).select(cols: _*),
+        deltaBatch(s, d, 2, 1.1, 1).select(cols: _*)))
+    val stateDir = freshStateDir(d, "stream_cdc")
     withStreamShuffle(s) {
-      val delta = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1") // base batch, THEN delta batch
-        .parquet(srcDir.toString)
       val q = graft.streaming.StreamingSync.mergeStream(delta,
-        stateDir.toString, "o_orderkey", "o_orderdate",
-        Some("is_deleted"), Some(ckpt.toString))
+        s"$stateDir/state", "o_orderkey", "o_orderdate",
+        Some("is_deleted"), Some(s"$stateDir/ckpt"))
       try q.processAllAvailable() finally q.stop()
     }
-    graft.streaming.StreamingSync.currentState(s, stateDir.toString).get
+    graft.streaming.StreamingSync.currentState(s, s"$stateDir/state").get
       .orderBy("o_orderkey")
   }
 
@@ -2363,45 +2077,32 @@ object SparkEntry {
     * converges).
     */
   private def streamMvMaintainQuery(s: SparkSession, d: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val tagDir = Paths.get(stagingTag(d, "stream_mv", "events.parquet"))
-    val srcDir = tagDir.resolve("src")
-    val staged = srcDir.resolve("_STAGED") // file source skips '_'-files
-    if (!Files.exists(staged)) {
-      deleteTree(srcDir)
-      Files.createDirectories(srcDir)
-      val ev = t(s, d)("events")
-      val now = System.currentTimeMillis()
-      // mid-day cuts: day 2024-01-11 (and -21) straddles two batches
-      val slices = Seq(
-        ev.filter(col("ts") < "2024-01-11 12:00:00"),
-        ev.filter(col("ts") >= "2024-01-11 12:00:00" &&
-          col("ts") < "2024-01-21 12:00:00"),
-        ev.filter(col("ts") >= "2024-01-21 12:00:00"))
-      slices.zipWithIndex.foreach { case (df, i) =>
-        val dest = srcDir.resolve(s"${('a' + i).toChar}_slice.parquet")
-        writeSingleFile(df, dest)
-        // ascending mtimes pin the micro-batch replay order
-        Files.setLastModifiedTime(dest, java.nio.file.attribute.FileTime
-          .fromMillis(now - (slices.size - i) * 60000L))
-      }
-      Files.createFile(staged)
-    }
-    // fresh state/checkpoint each run: the replay is the test
-    val stateDir = tagDir.resolve("state")
-    val ckpt = tagDir.resolve("ckpt")
-    deleteTree(stateDir); deleteTree(ckpt)
-    val schema = s.read.parquet(srcDir.resolve("a_slice.parquet").toString).schema
+    // mid-day cuts: day 2024-01-11 (and -21) straddles two batches
+    val stream = replayStream(s, d, "mv", "events", linkTable = false,
+      frameBatches = true, frames = {
+        val ev = t(s, d)("events")
+        Seq(ev.filter(col("ts") < "2024-01-11 12:00:00"),
+          ev.filter(col("ts") >= "2024-01-11 12:00:00" &&
+            col("ts") < "2024-01-21 12:00:00"),
+          ev.filter(col("ts") >= "2024-01-21 12:00:00"))
+      })
+    val stateDir = freshStateDir(d, "stream_mv")
     withStreamShuffle(s) {
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(srcDir.toString)
       val q = graft.streaming.StreamingSync.mvMaintainStream(
-        stream, stateDir.toString, Some(ckpt.toString))
+        stream, s"$stateDir/state", Some(s"$stateDir/ckpt"))
       try q.processAllAvailable() finally q.stop()
     }
     MergeOps.mvFinalize(
-      graft.streaming.StreamingSync.currentState(s, stateDir.toString).get)
+      graft.streaming.StreamingSync.currentState(s, s"$stateDir/state").get)
+  }
+
+  /** An emptied [[scratchDir]] for a replay's snapshot state and
+    * checkpoint: every run starts from no state, the replay is the test.
+    */
+  private def freshStateDir(d: String, tag: String): String = {
+    val dir = scratchDir(d, tag)
+    deleteTree(java.nio.file.Paths.get(dir))
+    dir
   }
 
   /** The production sessionizer ([[graft.streaming.StreamingSync
@@ -2420,7 +2121,8 @@ object SparkEntry {
     */
   private def streamSessionEvictQuery(s: SparkSession, d: String): DataFrame =
     withStreamShuffle(s) {
-      val stream = stagedSentinelEventsStream(s, d, "sessevict")
+      val stream = replayStream(s, d, "sentinel", "events",
+        frameBatches = true, frames = Seq(sentinelEvents(s, d)))
       val sessions = graft.streaming.StreamingSync
         .sessionizeEvicting(s, stream, gapSeconds = 1800L,
           watermarkDelay = "2 hours")
@@ -2440,7 +2142,8 @@ object SparkEntry {
     */
   private def streamTopKQuery(s: SparkSession, d: String): DataFrame =
     withStreamShuffle(s) {
-      val stream = stagedSentinelEventsStream(s, d, "topk")
+      val stream = replayStream(s, d, "sentinel", "events",
+        frameBatches = true, frames = Seq(sentinelEvents(s, d)))
       val out = graft.streaming.StreamingSync
         .windowedTopK(stream, "1 hour", "1 hour", 3)
       runToMemorySink(s, out, "stream_topk_sink", "append")
@@ -2457,7 +2160,8 @@ object SparkEntry {
     */
   private def streamFunnelQuery(s: SparkSession, d: String): DataFrame =
     withStreamShuffle(s) {
-      val stream = stagedSentinelEventsStream(s, d, "funnel")
+      val stream = replayStream(s, d, "sentinel", "events",
+        frameBatches = true, frames = Seq(sentinelEvents(s, d)))
       val out = graft.streaming.StreamingSync.funnelEvicting(s, stream,
         Seq("view", "click", "purchase"), horizonMs = 3L * 24 * 3600 * 1000,
         watermarkDelay = "2 hours", allowedLatenessMs = 2L * 3600 * 1000)
@@ -2475,7 +2179,8 @@ object SparkEntry {
     */
   private def streamAnomalyQuery(s: SparkSession, d: String): DataFrame =
     withStreamShuffle(s) {
-      val stream = stagedSentinelEventsStream(s, d, "anomaly")
+      val stream = replayStream(s, d, "sentinel", "events",
+        frameBatches = true, frames = Seq(sentinelEvents(s, d)))
       val out = graft.streaming.StreamingSync
         .anomalyFlags(s, stream, watermarkDelay = "2 hours")
       runToMemorySink(s, out, "stream_anomaly_sink", "append")
@@ -2489,7 +2194,8 @@ object SparkEntry {
     */
   private def streamSessionNativeQuery(s: SparkSession, d: String): DataFrame =
     withStreamShuffle(s) {
-      val stream = stagedSentinelEventsStream(s, d, "sessnative")
+      val stream = replayStream(s, d, "sentinel", "events",
+        frameBatches = true, frames = Seq(sentinelEvents(s, d)))
       val sessions = graft.streaming.StreamingSync
         .sessionizeNative(stream, "30 minutes", Some("2 hours"))
       runToMemorySink(s, sessions, "stream_sessnative_sink", "append")
@@ -6620,7 +6326,7 @@ object SparkEntry {
         |  CAST(MIN((doc_id + i*31 + j*7) % 256) AS INT) AS px_min,
         |  CAST(MAX((doc_id + i*31 + j*7) % 256) AS INT) AS px_max
         |FROM px GROUP BY 1, 2, 3 ORDER BY doc_id""".stripMargin,
-    // tile census restated from the stagePngs formula: tile =
+    // tile census restated from the Media.Png formula: tile =
     // (2j // h)·2 + 2i // w, integer-exact sums, round-6 means
     "mm_tile_brightness" ->
       """WITH m AS (SELECT doc_id,
@@ -6637,7 +6343,7 @@ object SparkEntry {
         |  round(CAST(SUM((doc_id + i*31 + j*7) % 256) AS DOUBLE)
         |    / CAST(COUNT(*) AS DOUBLE), 6) AS mean_px
         |FROM px GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    // tone census restated from the stagePngs formula: band =
+    // tone census restated from the Media.Png formula: band =
     // ((id + 31i + 7j) % 256) >> 4 over every in-raster (i, j)
     // same staged-pixel formula, per-doc band census -> Shannon entropy
     "mm_image_entropy" ->
@@ -6674,7 +6380,7 @@ object SparkEntry {
         |SELECT CAST(((doc_id + i*31 + j*7) % 256) // 16 AS INT) AS band,
         |  CAST(COUNT(*) AS BIGINT) AS n_pixels
         |FROM px GROUP BY 1 ORDER BY 1""".stripMargin,
-    // gray formula from stagePngs: (id + 31·sx + 7·sy) % 256 at the
+    // gray formula from Media.Png: (id + 31·sx + 7·sy) % 256 at the
     // 9×8 NN sample grid sx = x·w//9, sy = y·h//8; per-row bytes
     // compose MSB-first into the 16-hex dhash (bit63 stays unsigned)
     "mm_dhash" ->
@@ -6785,7 +6491,7 @@ object SparkEntry {
         |SELECT doc_id, ns AS n_samples,
         |  string_agg(printf('%02x', rb), '' ORDER BY y DESC) AS ahash
         |FROM rows_ JOIN m USING (doc_id) GROUP BY 1, 2 ORDER BY doc_id""".stripMargin,
-    // PCM byte formula from stageWavs: byte i = (id + 31i) % 256 - 128;
+    // PCM byte formula from Media.Wav: byte i = (id + 31i) % 256 - 128;
     // 16-bit LE sample j = hi(2j+1)*256 + unsigned lo(2j)
     "mm_audio_resample" ->
       """WITH a AS (SELECT doc_id,
@@ -7238,7 +6944,7 @@ object SparkEntry {
         |  CAST((doc_id % 24 + 1) * 512 AS BIGINT) AS duration
         |FROM documents WHERE octet_length(encode(text)) % 3 = 2
         |ORDER BY doc_id""".stripMargin,
-    // audio twin: header fields follow stageWavs' doc_id arithmetic
+    // audio twin: header fields follow Media.Wav's doc_id arithmetic
     // (rate = 8000 + id%3·4000, channels = id%2+1, frames = id%50+10,
     // pcm_bytes = frames·channels·2)
     "mm_audio_meta" ->
@@ -7835,7 +7541,7 @@ object SparkEntry {
         |    / CAST(ps.n_docs AS DOUBLE), 9) AS templated_share
         |FROM ps LEFT JOIN hit ON hit.source = ps.source
         |ORDER BY ps.source""".stripMargin,
-    // |p(x+1,y) - p(x,y)| summed over the stagePngs ramp formula;
+    // |p(x+1,y) - p(x,y)| summed over the Media.Png ramp formula;
     // width-1 images keep their zero row via the LEFT JOIN
     "mm_gradient_energy" ->
       """WITH m AS (SELECT doc_id,

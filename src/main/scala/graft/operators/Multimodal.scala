@@ -62,51 +62,116 @@ object Multimodal {
     }(enc)
   }
 
-  /** Deterministic PNG staging for the image-decode harness: one REAL
-    * png per image-typed doc (UTF-8 byte length % 3 == 0, the
-    * modality rule), dimensions derived from doc_id
-    * (w = id%64+1, h = id%48+1) so an oracle can predict what a correct
-    * decoder must read back. Pixels are a deterministic gradient.
-    * DRIVER-LOCAL render (principled collect of doc ids, bounded by
-    * the verification slice's image count): the fixture dir must live
-    * on the driver's filesystem — the path is handed straight to a
-    * `binaryFile` read — and an executor-side foreachPartition on a
-    * non-local master would scatter files into executor-local /tmp
-    * and silently publish an empty dir. Idempotent per dir: files
-    * land in `<dir>.tmp` and publish via a single rename.
+  /** A media modality staged for the decoders: the docs whose UTF-8
+    * text length % 3 == `residue` (the modality rule) render as real
+    * `doc_<id>.<ext>` files whose every decoded field derives from
+    * doc_id, so an oracle can predict what a correct decoder reads back.
     */
-  def stagePngs(documents: DataFrame, dir: String): Unit = {
+  sealed abstract class Media(val ext: String, val residue: Int) {
+    private[Multimodal] def render(id: Long, file: java.io.File): Unit
+  }
+
+  object Media {
+    /** PNG, w = id%64+1, h = id%48+1, gray (id + 31x + 7y) mod 256. */
+    case object Png extends Media("png", 0) {
+      private[Multimodal] def render(id: Long, file: java.io.File): Unit =
+        writeGray(file, "png", (id % 64 + 1).toInt, (id % 48 + 1).toInt)(
+          (x, y) => ((id + x * 31 + y * 7) % 256).toInt)
+    }
+
+    /** Baseline JPEG, w = id%56+8, h = id%40+8, gray CONSTANT PER 8×8
+      * DCT BLOCK ((id·17 + ⌊x/8⌋·31 + ⌊y/8⌋·7) mod 256): a flat block
+      * carries only its DC coefficient, so lossy quantization moves
+      * each pixel by a few counts and [[decodeJpegCheck]] can hold a
+      * full-raster decode to the formula.
+      */
+    case object Jpg extends Media("jpg", 0) {
+      private[Multimodal] def render(id: Long, file: java.io.File): Unit =
+        writeGray(file, "jpg", (id % 56 + 8).toInt, (id % 40 + 8).toInt)(
+          (x, y) => ((id * 17 + (x / 8) * 31 + (y / 8) * 7) % 256).toInt)
+    }
+
+    /** 16-bit PCM WAV, rate = 8000 + id%3·4000, channels = id%2+1,
+      * frames = id%50+10.
+      */
+    case object Wav extends Media("wav", 1) {
+      private[Multimodal] def render(id: Long, file: java.io.File): Unit = {
+        val rate = (8000 + (id % 3) * 4000).toInt
+        val channels = (id % 2 + 1).toInt
+        val frames = (id % 50 + 10).toInt
+        val pcm = Array.tabulate[Byte](frames * channels * 2)(
+          i => ((id + i * 31) % 256 - 128).toByte)
+        val fmt = new javax.sound.sampled.AudioFormat(rate.toFloat, 16, channels,
+          true, false) // signed 16-bit little-endian PCM
+        javax.sound.sampled.AudioSystem.write(
+          new javax.sound.sampled.AudioInputStream(
+            new java.io.ByteArrayInputStream(pcm), fmt, frames.toLong),
+          javax.sound.sampled.AudioFileFormat.Type.WAVE, file)
+        ()
+      }
+    }
+
+    /** ISO-BMFF container, [[buildMp4]]'s staging rule. */
+    case object Mp4 extends Media("mp4", 2) {
+      private[Multimodal] def render(id: Long, file: java.io.File): Unit = {
+        java.nio.file.Files.write(file.toPath, buildMp4(id))
+        ()
+      }
+    }
+  }
+
+  /** A w×h gray image, pixel (x, y) = `gray(x, y)`, written as `format`. */
+  private def writeGray(file: java.io.File, format: String, w: Int, h: Int)(
+      gray: (Int, Int) => Int): Unit = {
+    javax.imageio.ImageIO.setUseCache(false)
+    val img = new java.awt.image.BufferedImage(w, h,
+      java.awt.image.BufferedImage.TYPE_INT_RGB)
+    var y = 0
+    while (y < h) {
+      var x = 0
+      while (x < w) {
+        img.setRGB(x, y, gray(x, y) * 0x010101)
+        x += 1
+      }
+      y += 1
+    }
+    javax.imageio.ImageIO.write(img, format, file)
+    ()
+  }
+
+  /** Render `documents`' `media`-typed docs into `dir`, once: a
+    * published dir is reused as it is. The render runs in this JVM
+    * over a collect of the doc ids: the dir is handed straight to a
+    * `binaryFile` read, and an executor-side render on a non-local
+    * master would scatter the files into executor-local /tmp and
+    * publish an empty dir. Files land in `<dir>.tmp` and publish with
+    * one rename.
+    */
+  private def publish(documents: DataFrame, dir: String, media: Media): Unit = {
     val published = new java.io.File(dir)
     if (published.exists()) return
     val tmp = new java.io.File(dir + ".tmp")
-    tmp.mkdirs() // ensure the publish step has a dir even if no doc qualifies
-    val ids = documents
-      .select(col("doc_id"))
-      .filter(length(col("text").cast("binary")) % 3 === 0)
+    tmp.mkdirs() // the publish step needs a dir even if no doc qualifies
+    documents.select(col("doc_id"))
+      .filter(length(col("text").cast("binary")) % 3 === media.residue)
       .collect().map(_.getLong(0))
-    javax.imageio.ImageIO.setUseCache(false)
-    ids.foreach { id =>
-      val w = (id % 64 + 1).toInt
-      val h = (id % 48 + 1).toInt
-      val img = new java.awt.image.BufferedImage(w, h,
-        java.awt.image.BufferedImage.TYPE_INT_RGB)
-      var y = 0
-      while (y < h) {
-        var x = 0
-        while (x < w) {
-          img.setRGB(x, y, (((id + x * 31 + y * 7) % 256) * 0x010101).toInt)
-          x += 1
-        }
-        y += 1
-      }
-      javax.imageio.ImageIO.write(img, "png",
-        new java.io.File(tmp, s"doc_$id.png"))
-    }
+      .foreach(id => media.render(id, new java.io.File(tmp, s"doc_$id.${media.ext}")))
     // a false renameTo is fine only if a concurrent run already
     // published; otherwise the staging silently vanished — fail loudly
     if (!tmp.renameTo(published) && !published.exists())
-      sys.error(s"stagePngs: could not publish $tmp -> $published")
-    ()
+      sys.error(s"${media.ext} staging: could not publish $tmp -> $published")
+  }
+
+  /** `documents`' `media` files staged in `dir` (rendered by the first
+    * call, reused after) and read back through the `binaryFile` source
+    * as the (doc_id, content) rows every decoder here takes.
+    */
+  def staged(spark: SparkSession, documents: DataFrame, dir: String,
+      media: Media): DataFrame = {
+    publish(documents, dir, media)
+    spark.read.format("binaryFile").load(dir)
+      .select(regexp_extract(col("path"), s"doc_(\\d+)\\.${media.ext}$$", 1)
+        .cast("long").as("doc_id"), col("content"))
   }
 
   /** Schema of a resized-image record: source dims, target dims, and
@@ -160,49 +225,6 @@ object Multimodal {
     }(enc)
   }
 
-  /** Deterministic JPEG staging: one REAL baseline JPEG per image-typed
-    * doc (same modality rule as [[stagePngs]]), dims w = id%56+8,
-    * h = id%40+8. The luminance pattern is CONSTANT PER 8×8 DCT BLOCK
-    * (gray value ((id·17 + ⌊x/8⌋·31 + ⌊y/8⌋·7) mod 256)) — a flat
-    * block carries only its DC coefficient, so lossy quantization
-    * perturbs each pixel by at most a few counts and a full-raster
-    * decode can be verified against the formula within a tight
-    * tolerance, which no header-only reader can fake. Driver-local
-    * render + tmp/rename publish, same rationale as [[stagePngs]].
-    */
-  def stageJpegs(documents: DataFrame, dir: String): Unit = {
-    val published = new java.io.File(dir)
-    if (published.exists()) return
-    val tmp = new java.io.File(dir + ".tmp")
-    tmp.mkdirs()
-    val ids = documents
-      .select(col("doc_id"))
-      .filter(length(col("text").cast("binary")) % 3 === 0)
-      .collect().map(_.getLong(0))
-    javax.imageio.ImageIO.setUseCache(false)
-    ids.foreach { id =>
-      val w = (id % 56 + 8).toInt
-      val h = (id % 40 + 8).toInt
-      val img = new java.awt.image.BufferedImage(w, h,
-        java.awt.image.BufferedImage.TYPE_INT_RGB)
-      var y = 0
-      while (y < h) {
-        var x = 0
-        while (x < w) {
-          val v = ((id * 17 + (x / 8) * 31 + (y / 8) * 7) % 256).toInt
-          img.setRGB(x, y, v * 0x010101)
-          x += 1
-        }
-        y += 1
-      }
-      javax.imageio.ImageIO.write(img, "jpg",
-        new java.io.File(tmp, s"doc_$id.jpg"))
-    }
-    if (!tmp.renameTo(published) && !published.exists())
-      sys.error(s"stageJpegs: could not publish $tmp -> $published")
-    ()
-  }
-
   /** Schema of a JPEG decode-verification record: exact container
     * dims plus a full-raster tolerance gate against the staged
     * block-gradient.
@@ -215,7 +237,7 @@ object Multimodal {
 
   /** REAL lossy-codec decode verification: decode the staged JPEG,
     * then sweep EVERY pixel comparing the luminance against the
-    * [[stageJpegs]] block-gradient formula — `decode_ok` iff the max
+    * [[Media.Jpg]] block-gradient formula — `decode_ok` iff the max
     * absolute deviation stays within `tol`. Dims are exact (oracle
     * predicts them from doc_id); pixels can't hash-match across
     * codecs for a lossy format, but a flat-block source bounds DCT
@@ -1016,46 +1038,6 @@ object Multimodal {
     }(enc)
   }
 
-  /** Deterministic WAV staging for the audio-decode harness: one real
-    * 16-bit PCM wav per audio-typed doc (UTF-8 byte length % 3 == 1,
-    * the modality rule), header fields derived
-    * from doc_id (rate = 8000 + id%3·4000, channels = id%2+1, frames =
-    * id%50+10) so an oracle can predict what a correct decoder must
-    * read back. DRIVER-LOCAL render for the same reason as
-    * [[stagePngs]]; idempotent per dir, `<dir>.tmp` + rename publish.
-    */
-  def stageWavs(documents: DataFrame, dir: String): Unit = {
-    val published = new java.io.File(dir)
-    if (published.exists()) return
-    val tmp = new java.io.File(dir + ".tmp")
-    tmp.mkdirs()
-    val ids = documents
-      .select(col("doc_id"))
-      .filter(length(col("text").cast("binary")) % 3 === 1)
-      .collect().map(_.getLong(0))
-    ids.foreach { id =>
-      val rate = (8000 + (id % 3) * 4000).toInt
-      val channels = (id % 2 + 1).toInt
-      val frames = (id % 50 + 10).toInt
-      val pcm = new Array[Byte](frames * channels * 2)
-      var i = 0
-      while (i < pcm.length) {
-        pcm(i) = ((id + i * 31) % 256 - 128).toByte
-        i += 1
-      }
-      val fmt = new javax.sound.sampled.AudioFormat(rate.toFloat, 16, channels,
-        true, false) // signed 16-bit little-endian PCM
-      val ais = new javax.sound.sampled.AudioInputStream(
-        new java.io.ByteArrayInputStream(pcm), fmt, frames.toLong)
-      javax.sound.sampled.AudioSystem.write(ais,
-        javax.sound.sampled.AudioFileFormat.Type.WAVE,
-        new java.io.File(tmp, s"doc_$id.wav"))
-    }
-    if (!tmp.renameTo(published) && !published.exists())
-      sys.error(s"stageWavs: could not publish $tmp -> $published")
-    ()
-  }
-
   /** Schema of a decoded video record: ISO-BMFF header-readable
     * quantities only — tkhd pixel dimensions, stts-summed frame
     * count, mdhd timescale/duration. (`duration` is in media
@@ -1253,32 +1235,6 @@ object Multimodal {
     val mdat = box("mdat", mdatPayload)
     require(moov.length == moovSize, s"moov size drift: ${moov.length} vs $moovSize")
     ftyp ++ moov ++ mdat
-  }
-
-  /** Deterministic MP4 staging for the video-metadata harness: one
-    * real ISO-BMFF container per video-typed doc (UTF-8 byte length
-    * % 3 == 2, the modality rule), header fields derived from doc_id
-    * ([[buildMp4]]'s staging rule) so an oracle can predict what a
-    * correct box parser must read back. DRIVER-LOCAL render for the
-    * same reason as [[stagePngs]]; idempotent per dir, `<dir>.tmp` +
-    * rename publish.
-    */
-  def stageMp4s(documents: DataFrame, dir: String): Unit = {
-    val published = new java.io.File(dir)
-    if (published.exists()) return
-    val tmp = new java.io.File(dir + ".tmp")
-    tmp.mkdirs()
-    val ids = documents
-      .select(col("doc_id"))
-      .filter(length(col("text").cast("binary")) % 3 === 2)
-      .collect().map(_.getLong(0))
-    ids.foreach { id =>
-      java.nio.file.Files.write(
-        new java.io.File(tmp, s"doc_$id.mp4").toPath, buildMp4(id))
-    }
-    if (!tmp.renameTo(published) && !published.exists())
-      sys.error(s"stageMp4s: could not publish $tmp -> $published")
-    ()
   }
 
   /** Frame-sample plumbing: one row per sampled "frame" (generator

@@ -26,12 +26,9 @@ import graft.operators.MergeOps
   * that restates only the final RESULT. The oracle proves the
   * semantics; its wall time measures one in-process query, not a
   * streaming runtime, so the per-query ratio is structurally >1 and
-  * NOT a plan defect. Measured bounds (r8 quiet-host): most of the 18
-  * stream queries land at 1-4x their restatements with the widest
-  * gaps `stream_session_evict` ~7.3x and `stream_index_lookup` ~5.4x
-  * — both dominated by fixed micro-batch machinery (3+ batch rounds ×
-  * commit/checkpoint overhead) over sub-second oracles. Action
-  * inventory: state is watermark-evicted, lookups broadcast the
+  * NOT a plan defect: the gap is fixed micro-batch machinery (batch
+  * rounds × commit/checkpoint overhead) over sub-second oracles.
+  * Action inventory: state is watermark-evicted, lookups broadcast the
   * static side, sinks are append/update-idempotent — the per-ROW cost
   * is flat, so the overhead amortizes over real unbounded streams
   * where the batch restatement does not exist at all.
@@ -57,27 +54,13 @@ object StreamingSync {
     */
   def mergeStream(delta: DataFrame, stateDir: String, pk: String, ts: String,
       isDeleted: Option[String] = None,
-      checkpointDir: Option[String] = None): StreamingQuery = {
-    val writer = delta.writeStream
-      .outputMode("update")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val merged = currentState(spark, stateDir) match {
-          case None => MergeOps.merge(
-            // bootstrap: first delta merged into an empty base of the
-            // same shape (minus the transient soft-delete flag)
-            batch.filter(lit(false)).drop(isDeleted.toSeq: _*),
-            batch, pk, ts, isDeleted)
-          case Some(base) => MergeOps.merge(base, batch, pk, ts, isDeleted)
-        }
-        merged.write.mode("overwrite").parquet(versionDir(stateDir, batchId))
-        val p = pointerFile(stateDir)
-        java.nio.file.Files.write(p.toPath,
-          batchId.toString.getBytes("UTF-8"))
-        ()
-      }
-    checkpointDir.fold(writer)(d => writer.option("checkpointLocation", d)).start()
-  }
+      checkpointDir: Option[String] = None): StreamingQuery =
+    snapshotSink(delta, stateDir, checkpointDir) { (state, batch) =>
+      // bootstrap: the first delta merges into an empty base of the
+      // same shape (minus the transient soft-delete flag)
+      val base = state.getOrElse(batch.filter(lit(false)).drop(isDeleted.toSeq: _*))
+      MergeOps.merge(base, batch, pk, ts, isDeleted)
+    }
 
   /** Streaming materialized-view maintenance — the unbounded twin of
     * [[MergeOps.mvMergeDelta]]: each micro-batch aggregates to its
@@ -87,22 +70,29 @@ object StreamingSync {
     * The snapshot stays in EXACT-decimal partials shape across
     * versions (finalize on read via [[MergeOps.mvFinalize]]); decimal
     * addition is associative, so any batch slicing converges to the
-    * batch recompute bit-for-bit. Exactly-once by the same idempotent
-    * version-dir + pointer-swap protocol as [[mergeStream]]: a
-    * replayed batch overwrites its own version and re-points.
+    * batch recompute bit-for-bit.
     */
   def mvMaintainStream(delta: DataFrame, stateDir: String,
-      checkpointDir: Option[String] = None): StreamingQuery = {
+      checkpointDir: Option[String] = None): StreamingQuery =
+    snapshotSink(delta, stateDir, checkpointDir) { (state, batch) =>
+      val partials = MergeOps.mvPartials(batch)
+      MergeOps.mvCombine(state.getOrElse(partials.filter(lit(false))), partials)
+    }
+
+  /** The versioned-snapshot sink: each micro-batch folds into the
+    * latest snapshot (None before the first batch), writes the result
+    * as version `v=<batchId>`, then repoints `LATEST`. Exactly-once by
+    * idempotence: a replayed batch overwrites its own version and
+    * repoints.
+    */
+  private def snapshotSink(delta: DataFrame, stateDir: String,
+      checkpointDir: Option[String])(
+      fold: (Option[DataFrame], DataFrame) => DataFrame): StreamingQuery = {
     val writer = delta.writeStream
       .outputMode("update")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val partials = MergeOps.mvPartials(batch)
-        val merged = currentState(spark, stateDir) match {
-          case None => MergeOps.mvCombine(partials.filter(lit(false)), partials)
-          case Some(snap) => MergeOps.mvCombine(snap, partials)
-        }
-        merged.write.mode("overwrite").parquet(versionDir(stateDir, batchId))
+        fold(currentState(batch.sparkSession, stateDir), batch)
+          .write.mode("overwrite").parquet(versionDir(stateDir, batchId))
         java.nio.file.Files.write(pointerFile(stateDir).toPath,
           batchId.toString.getBytes("UTF-8"))
         ()

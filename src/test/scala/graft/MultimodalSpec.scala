@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.Multimodal
+import graft.operators.Multimodal.Media
 
 /** Multimodal plumbing: binary column schema, real per-modality
   * container decode (PNG / WAV / ISO-BMFF), frame-sample fan-out
@@ -130,18 +131,16 @@ class MultimodalSpec extends SparkSpec {
   test("stageMp4s + binaryFile round trip parses the staged boxes") {
     val dir = java.nio.file.Files.createTempDirectory("graft_mp4_spec")
       .resolve("staged").toString
-    Multimodal.stageMp4s(docs, dir) // only doc 2 is video-typed (8 % 3 == 2)
-    val staged = spark.read.format("binaryFile").load(dir)
-      .selectExpr("CAST(regexp_extract(path, 'doc_(\\\\d+)\\\\.mp4$', 1) AS LONG) AS doc_id",
-        "content")
+    // only doc 2 is video-typed (8 % 3 == 2)
+    val staged = Multimodal.staged(spark, docs, dir, Media.Mp4)
     val out = Multimodal.decodeVideoMeta(spark, staged)
     assert(out.schema == Multimodal.videoMetaSchema)
     // staging rule for id 2: w = 18, h = 18, frames = 3, ts 12800
     assert(out.as[(Long, Int, Int, Int, Int, Long)].collect().toSeq ==
       Seq((2L, 18, 18, 3, 12800, 3L * 512)))
-    // idempotent: second call is a no-op, not a re-render
-    Multimodal.stageMp4s(docs, dir)
-    assert(spark.read.format("binaryFile").load(dir).count() == 1)
+    // idempotent: a second call reads the published files back, it
+    // renders nothing (no documents, same file)
+    assert(Multimodal.staged(spark, docs.limit(0), dir, Media.Mp4).count() == 1)
   }
 
   test("decodeImageMeta reads REAL dimensions from png bytes (javax.imageio)") {
@@ -190,7 +189,7 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("decodeJpegCheck: staged block-gradient passes the gate; garbage raster fails") {
-    // real staged jpeg for one id: encode exactly as stageJpegs does
+    // real staged jpeg for one id: encode exactly as Media.Jpg does
     def jpegFor(id: Long): Array[Byte] = {
       val w = (id % 56 + 8).toInt
       val h = (id % 40 + 8).toInt
@@ -291,18 +290,30 @@ class MultimodalSpec extends SparkSpec {
   test("stagePngs + binaryFile round trip decodes the staged dims") {
     val dir = java.nio.file.Files.createTempDirectory("graft_png_spec")
       .resolve("staged").toString
-    Multimodal.stagePngs(docs, dir) // only doc 0 is image-typed
-    val staged = spark.read.format("binaryFile").load(dir)
-      .selectExpr("CAST(regexp_extract(path, 'doc_(\\\\d+)\\\\.png$', 1) AS LONG) AS doc_id",
-        "content")
+    // only doc 0 is image-typed
+    val staged = Multimodal.staged(spark, docs, dir, Media.Png)
     val out = Multimodal.decodeImageMeta(spark, staged)
       .select("doc_id", "width", "height").as[(Long, Int, Int)]
       .collect().toSeq
     // staging rule: w = 0%64+1 = 1, h = 0%48+1 = 1
     assert(out == Seq((0L, 1, 1)))
-    // idempotent: second call is a no-op, not a re-render
-    Multimodal.stagePngs(docs, dir)
-    assert(spark.read.format("binaryFile").load(dir).count() == 1)
+    // idempotent: a second call reads the published files back, it
+    // renders nothing (no documents, same file)
+    assert(Multimodal.staged(spark, docs.limit(0), dir, Media.Png).count() == 1)
+  }
+
+  test("jpg staging + binaryFile round trip passes the full-raster decode gate") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_jpg_spec")
+      .resolve("staged").toString
+    // only doc 0 is image-typed
+    val staged = Multimodal.staged(spark, docs, dir, Media.Jpg)
+    val out = Multimodal.decodeJpegCheck(spark, staged)
+      .as[(Long, Int, Int, Boolean)].collect().toSeq
+    // staging rule: w = 0%56+8 = 8, h = 0%40+8 = 8
+    assert(out == Seq((0L, 8, 8, true)))
+    // idempotent: a second call reads the published files back, it
+    // renders nothing (no documents, same file)
+    assert(Multimodal.staged(spark, docs.limit(0), dir, Media.Jpg).count() == 1)
   }
 
   test("captionIntegrity scores caption agreement over image-dup pairs") {
@@ -316,11 +327,8 @@ class MultimodalSpec extends SparkSpec {
     ).toDF("doc_id", "text", "lang", "source", "n_chars")
     val dir = java.nio.file.Files.createTempDirectory("graft_capint_spec")
       .resolve("staged").toString
-    Multimodal.stagePngs(cdocs, dir)
-    val staged = spark.read.format("binaryFile").load(dir)
-      .selectExpr("CAST(regexp_extract(path, 'doc_(\\\\d+)\\\\.png$', 1) AS LONG) AS doc_id",
-        "content")
-    val out = Multimodal.captionIntegrity(spark, staged, cdocs)
+    val out = Multimodal.captionIntegrity(spark,
+      Multimodal.staged(spark, cdocs, dir, Media.Png), cdocs)
       .as[(Long, Long, Long, Boolean, Double)].collect().toSeq
     assert(out == Seq(
       (0L, 192L, 0L, true, 1.0),   // same image, same caption
@@ -331,19 +339,17 @@ class MultimodalSpec extends SparkSpec {
   test("stageWavs + binaryFile round trip decodes the staged RIFF header") {
     val dir = java.nio.file.Files.createTempDirectory("graft_wav_spec")
       .resolve("staged").toString
-    Multimodal.stageWavs(docs, dir) // only doc 1 is audio-typed (4 % 3 == 1)
-    val staged = spark.read.format("binaryFile").load(dir)
-      .selectExpr("CAST(regexp_extract(path, 'doc_(\\\\d+)\\\\.wav$', 1) AS LONG) AS doc_id",
-        "content")
+    // only doc 1 is audio-typed (4 % 3 == 1)
+    val staged = Multimodal.staged(spark, docs, dir, Media.Wav)
     val out = Multimodal.decodeAudioMeta(spark, staged)
     assert(out.schema == Multimodal.audioMetaSchema)
     // staging rule for id 1: rate = 8000 + 1·4000, channels = 1%2+1 = 2,
     // frames = 1%50+10 = 11, pcm = 11·2·2
     assert(out.as[(Long, Int, Int, Long, Long)].collect().toSeq ==
       Seq((1L, 12000, 2, 11L, 44L)))
-    // idempotent: second call is a no-op, not a re-render
-    Multimodal.stageWavs(docs, dir)
-    assert(spark.read.format("binaryFile").load(dir).count() == 1)
+    // idempotent: a second call reads the published files back, it
+    // renders nothing (no documents, same file)
+    assert(Multimodal.staged(spark, docs.limit(0), dir, Media.Wav).count() == 1)
   }
 
   test("audioBandEnergy splits samples into quarter bands of exact sum-squares") {
