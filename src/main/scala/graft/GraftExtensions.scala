@@ -21,9 +21,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => AsofJoinStrategy)
-    // conf-gated (spark.graft.rewriteTopK): row_number()<=k window →
-    // bounded TopKAgg aggregate, see the rule's scope guards
-    ext.injectOptimizerRule(_ => graft.plans.TopKWindowRewrite)
     GraftExtensions.descriptors.foreach(ext.injectFunction)
   }
 }
@@ -102,17 +99,5 @@ object GraftExtensions {
     descriptors.foreach { case (ident, info, builder) =>
       cs.sessionState.functionRegistry.registerFunction(ident, info, builder)
     }
-  }
-
-  /** Runtime twin of the `injectOptimizerRule` hook for sessions built
-    * without extensions (mirrors [[registerSql]]): adds the conf-gated
-    * [[graft.plans.TopKWindowRewrite]] to the session's experimental
-    * optimizations. Idempotent.
-    */
-  def registerOptimizer(spark: SparkSession): Unit = {
-    val exp = spark.experimental
-    if (!exp.extraOptimizations.contains(graft.plans.TopKWindowRewrite))
-      exp.extraOptimizations =
-        exp.extraOptimizations :+ graft.plans.TopKWindowRewrite
   }
 }

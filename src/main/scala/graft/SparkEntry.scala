@@ -1308,8 +1308,7 @@ object SparkEntry {
     // epoch-style upsampling: src0 documents repeat 3x per pass
     "pipe_repeat_upsample" -> ((s, d) => PipelineOps.repeatUpsample(
       t(s, d)("documents"), Map("src0" -> 3, "src2" -> 2))),
-    // per-domain cap: the 50 longest docs per source (integer-ordered
-    // ranks; the preFilter scale path is spec-pinned identical)
+    // per-domain cap: the 50 longest docs per source (integer-ordered ranks)
     "pipe_cap_per_source" -> ((s, d) =>
       PipelineOps.capPerSource(t(s, d)("documents"), 50)),
     // relative quality gate: keep docs at/above their own source's
@@ -1784,9 +1783,12 @@ object SparkEntry {
     }
   }
 
-  /** The local scratch dir of query staging `tag` over sf dir `d`. */
+  /** The local scratch dir of query staging `tag` over sf dir `d`,
+    * under the JVM's temp dir (`java.io.tmpdir`).
+    */
   private def scratchDir(d: String, tag: String): String =
-    s"/tmp/graft_${tag}_" + d.replaceAll("[^a-zA-Z0-9]", "_")
+    new java.io.File(System.getProperty("java.io.tmpdir"),
+      s"graft_${tag}_" + d.replaceAll("[^a-zA-Z0-9]", "_")).getPath
 
   /** [[scratchDir]] keyed to its SOURCE file's mtime: when the testdata
     * is regenerated, the key changes and staging rebuilds from the new

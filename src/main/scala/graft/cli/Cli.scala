@@ -201,8 +201,7 @@ object Cli {
 
   private def spark: SparkSession = SparkSession.builder()
     .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[4]"))
-    .config("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    .config("spark.sql.shuffle.partitions", graft.Sessions.cpus)
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 

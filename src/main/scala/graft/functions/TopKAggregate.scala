@@ -51,6 +51,46 @@ final class TopKState(val k: Int) {
     scores(pos) = s; ids(pos) = i
     if (n < k) n += 1
   }
+
+  def mergeFrom(other: TopKState): Unit = {
+    var j = 0
+    while (j < other.n) { insert(other.scores(j), other.ids(j)); j += 1 }
+  }
+
+  /** The pairs as [[TopKState.dataType]], in rank order. */
+  def toArrayData: GenericArrayData = {
+    val rows = new Array[Any](n)
+    var j = 0
+    while (j < n) { rows(j) = InternalRow(scores(j), ids(j)); j += 1 }
+    new GenericArrayData(rows)
+  }
+
+  def serialize(): Array[Byte] = {
+    val bb = ByteBuffer.allocate(4 + n * 16)
+    bb.putInt(n)
+    var j = 0
+    while (j < n) { bb.putDouble(scores(j)); bb.putLong(ids(j)); j += 1 }
+    bb.array()
+  }
+}
+
+object TopKState {
+  val dataType: DataType = ArrayType(
+    StructType(Seq(
+      StructField("score", DoubleType, nullable = false),
+      StructField("id", LongType, nullable = false))),
+    containsNull = false)
+
+  def deserialize(k: Int, bytes: Array[Byte]): TopKState = {
+    val bb = ByteBuffer.wrap(bytes)
+    val n = bb.getInt
+    val st = new TopKState(k)
+    var j = 0
+    // stored in rank order, so re-inserting preserves it in O(n·1)
+    // appends (each new pair ranks after the previous)
+    while (j < n) { st.insert(bb.getDouble, bb.getLong); j += 1 }
+    st
+  }
 }
 
 /** Exact top-k per group as a native `TypedImperativeAggregate` — the
@@ -79,11 +119,7 @@ case class TopKAgg(score: Expression, id: Expression, k: Int,
 
   override def children: Seq[Expression] = score :: id :: Nil
   override def nullable: Boolean = false
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(
-      StructField("score", DoubleType, nullable = false),
-      StructField("id", LongType, nullable = false))),
-    containsNull = false)
+  override def dataType: DataType = TopKState.dataType
 
   override def checkInputDataTypes(): TypeCheckResult =
     (score.dataType, id.dataType) match {
@@ -103,39 +139,12 @@ case class TopKAgg(score: Expression, id: Expression, k: Int,
   }
 
   override def merge(a: TopKState, b: TopKState): TopKState = {
-    var j = 0
-    while (j < b.n) { a.insert(b.scores(j), b.ids(j)); j += 1 }
-    a
+    a.mergeFrom(b); a
   }
-
-  override def eval(buf: TopKState): Any = {
-    val rows = new Array[Any](buf.n)
-    var j = 0
-    while (j < buf.n) {
-      rows(j) = InternalRow(buf.scores(j), buf.ids(j))
-      j += 1
-    }
-    new GenericArrayData(rows)
-  }
-
-  override def serialize(buf: TopKState): Array[Byte] = {
-    val bb = ByteBuffer.allocate(4 + buf.n * 16)
-    bb.putInt(buf.n)
-    var j = 0
-    while (j < buf.n) { bb.putDouble(buf.scores(j)); bb.putLong(buf.ids(j)); j += 1 }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): TopKState = {
-    val bb = ByteBuffer.wrap(bytes)
-    val n = bb.getInt
-    val st = new TopKState(k)
-    var j = 0
-    // stored in rank order, so re-inserting preserves it in O(n·1)
-    // appends (each new pair ranks after the previous)
-    while (j < n) { st.insert(bb.getDouble, bb.getLong); j += 1 }
-    st
-  }
+  override def eval(buf: TopKState): Any = buf.toArrayData
+  override def serialize(buf: TopKState): Array[Byte] = buf.serialize()
+  override def deserialize(bytes: Array[Byte]): TopKState =
+    TopKState.deserialize(k, bytes)
 
   override def withNewMutableAggBufferOffset(o: Int): TopKAgg =
     copy(mutableAggBufferOffset = o)
@@ -168,11 +177,7 @@ case class TopKMergeAgg(sketch: Expression, k: Int,
 
   override def children: Seq[Expression] = sketch :: Nil
   override def nullable: Boolean = false
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(
-      StructField("score", DoubleType, nullable = false),
-      StructField("id", LongType, nullable = false))),
-    containsNull = false)
+  override def dataType: DataType = TopKState.dataType
 
   override def checkInputDataTypes(): TypeCheckResult = sketch.dataType match {
     case ArrayType(StructType(Array(
@@ -204,37 +209,12 @@ case class TopKMergeAgg(sketch: Expression, k: Int,
   }
 
   override def merge(a: TopKState, b: TopKState): TopKState = {
-    var j = 0
-    while (j < b.n) { a.insert(b.scores(j), b.ids(j)); j += 1 }
-    a
+    a.mergeFrom(b); a
   }
-
-  override def eval(buf: TopKState): Any = {
-    val rows = new Array[Any](buf.n)
-    var j = 0
-    while (j < buf.n) {
-      rows(j) = InternalRow(buf.scores(j), buf.ids(j))
-      j += 1
-    }
-    new GenericArrayData(rows)
-  }
-
-  override def serialize(buf: TopKState): Array[Byte] = {
-    val bb = ByteBuffer.allocate(4 + buf.n * 16)
-    bb.putInt(buf.n)
-    var j = 0
-    while (j < buf.n) { bb.putDouble(buf.scores(j)); bb.putLong(buf.ids(j)); j += 1 }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): TopKState = {
-    val bb = ByteBuffer.wrap(bytes)
-    val n = bb.getInt
-    val st = new TopKState(k)
-    var j = 0
-    while (j < n) { st.insert(bb.getDouble, bb.getLong); j += 1 }
-    st
-  }
+  override def eval(buf: TopKState): Any = buf.toArrayData
+  override def serialize(buf: TopKState): Array[Byte] = buf.serialize()
+  override def deserialize(bytes: Array[Byte]): TopKState =
+    TopKState.deserialize(k, bytes)
 
   override def withNewMutableAggBufferOffset(o: Int): TopKMergeAgg =
     copy(mutableAggBufferOffset = o)
@@ -246,143 +226,11 @@ case class TopKMergeAgg(sketch: Expression, k: Int,
   override def prettyName: String = "top_k_merge_agg"
 }
 
-/** [[TopKState]] with STRING ids — rank order (score desc, id asc by
-  * UTF8String binary compare, Spark's own string sort order and
-  * DuckDB's default collation, so the tie-break is engine-identical).
-  */
-final class TopKStrState(val k: Int) {
-  import org.apache.spark.unsafe.types.UTF8String
-  val scores = new Array[Double](k)
-  val ids = new Array[UTF8String](k)
-  var n: Int = 0
-
-  @inline private def better(s: Double, i: UTF8String, j: Int): Boolean = {
-    val c = java.lang.Double.compare(s, scores(j))
-    c > 0 || (c == 0 && i.compareTo(ids(j)) < 0)
-  }
-
-  def insert(s: Double, i: UTF8String): Unit = {
-    if (n == k && !better(s, i, n - 1)) return
-    var pos = if (n == k) n - 1 else n
-    while (pos > 0 && better(s, i, pos - 1)) pos -= 1
-    // SET semantics, as in [[TopKState]]: the identical (score, id)
-    // pair is the same logical row seen again — merge stays idempotent
-    if (pos > 0 &&
-      java.lang.Double.compare(scores(pos - 1), s) == 0 &&
-      ids(pos - 1).compareTo(i) == 0)
-      return
-    var j = math.min(n, k - 1)
-    while (j > pos) {
-      scores(j) = scores(j - 1); ids(j) = ids(j - 1); j -= 1
-    }
-    scores(pos) = s; ids(pos) = i
-    if (n < k) n += 1
-  }
-}
-
-/** [[TopKAgg]] over string-keyed rows — the per-document term ranker
-  * (top-k terms by tf-idf, keywords, labels): the same bounded
-  * map-side-combining shape, but the id is the term itself, so a
-  * doc-partitioned `row_number` window (which shuffles and sorts every
-  * (doc, term) row) collapses to a k-rows-per-group exchange. Emits
-  * `array<struct<score double, id string>>` in rank order.
-  */
-case class TopKStrAgg(score: Expression, id: Expression, k: Int,
-    mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[TopKStrState] {
-  import org.apache.spark.unsafe.types.UTF8String
-
-  require(k >= 1, "top_k_str_agg needs k >= 1")
-
-  override def children: Seq[Expression] = score :: id :: Nil
-  override def nullable: Boolean = false
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(
-      StructField("score", DoubleType, nullable = false),
-      StructField("id", StringType, nullable = false))),
-    containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (score.dataType, id.dataType) match {
-      case (DoubleType, StringType) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"top_k_str_agg expects (double score, string id), got $other")
-    }
-
-  override def createAggregationBuffer(): TopKStrState = new TopKStrState(k)
-
-  override def update(buf: TopKStrState, input: InternalRow): TopKStrState = {
-    val s = score.eval(input)
-    val i = id.eval(input)
-    if (s != null && i != null)
-      // clone: the input row's bytes are buffer-backed and reused
-      buf.insert(s.asInstanceOf[Double], i.asInstanceOf[UTF8String].clone())
-    buf
-  }
-
-  override def merge(a: TopKStrState, b: TopKStrState): TopKStrState = {
-    var j = 0
-    while (j < b.n) { a.insert(b.scores(j), b.ids(j)); j += 1 }
-    a
-  }
-
-  override def eval(buf: TopKStrState): Any = {
-    val rows = new Array[Any](buf.n)
-    var j = 0
-    while (j < buf.n) {
-      rows(j) = InternalRow(buf.scores(j), buf.ids(j))
-      j += 1
-    }
-    new GenericArrayData(rows)
-  }
-
-  override def serialize(buf: TopKStrState): Array[Byte] = {
-    var size = 4
-    var j = 0
-    while (j < buf.n) { size += 8 + 4 + buf.ids(j).numBytes(); j += 1 }
-    val bb = ByteBuffer.allocate(size)
-    bb.putInt(buf.n)
-    j = 0
-    while (j < buf.n) {
-      bb.putDouble(buf.scores(j))
-      val bytes = buf.ids(j).getBytes
-      bb.putInt(bytes.length)
-      bb.put(bytes)
-      j += 1
-    }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): TopKStrState = {
-    val bb = ByteBuffer.wrap(bytes)
-    val n = bb.getInt
-    val st = new TopKStrState(k)
-    var j = 0
-    while (j < n) {
-      val s = bb.getDouble
-      val len = bb.getInt
-      val arr = new Array[Byte](len)
-      bb.get(arr)
-      st.insert(s, UTF8String.fromBytes(arr))
-      j += 1
-    }
-    st
-  }
-
-  override def withNewMutableAggBufferOffset(o: Int): TopKStrAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): TopKStrAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression =
-    copy(score = newChildren(0), id = newChildren(1))
-  override def prettyName: String = "top_k_str_agg"
-}
-
-/** [[TopKStrState]] plus one LONG payload per entry: the payload
-  * rides along with whatever (score desc, id asc) keeps — it never
-  * participates in the ordering, so ranking semantics are EXACTLY
-  * [[TopKStrState]]'s.
+/** [[TopKState]] with STRING ids plus one LONG payload per entry.
+  * Rank order is (score desc, id asc by UTF8String binary compare,
+  * Spark's own string sort order and DuckDB's default collation, so
+  * the tie-break is engine-identical); the payload rides along with
+  * whatever that order keeps and never participates in it.
   */
 final class TopKStrPayState(val k: Int) {
   import org.apache.spark.unsafe.types.UTF8String
@@ -417,15 +265,17 @@ final class TopKStrPayState(val k: Int) {
   }
 }
 
-/** [[TopKStrAgg]] carrying an opaque LONG payload per row — built for
-  * rankers that must surface per-row attributes (tf/df counts,
-  * bit-packed) WITHOUT either encoding them into the id string (a
-  * per-input-row allocation on the corpus-scale update path) or
-  * re-attaching them by a docs-scale join/broadcast after ranking.
-  * Ordering is identical to [[TopKStrAgg]] (score desc, id asc by
-  * UTF8String binary compare — Spark's string sort and DuckDB's
-  * default collation), so tie behavior is engine-exact with the bare
-  * id. Emits `array<struct<score double, id string, pay bigint>>`.
+/** [[TopKAgg]] over string-keyed rows carrying an opaque LONG payload
+  * per row — the per-document term ranker (top-k terms by tf-idf):
+  * the same bounded map-side-combining shape, so a doc-partitioned
+  * `row_number` window (which shuffles and sorts every (doc, term)
+  * row) collapses to a k-rows-per-group exchange. The payload lets a
+  * ranker surface per-row attributes (tf/df counts, bit-packed)
+  * WITHOUT either encoding them into the id string (a per-input-row
+  * allocation on the corpus-scale update path) or re-attaching them
+  * by a docs-scale join/broadcast after ranking. Ordering is
+  * [[TopKStrPayState]]'s. Emits
+  * `array<struct<score double, id string, pay bigint>>`.
   */
 case class TopKStrPayAgg(score: Expression, id: Expression,
     pay: Expression, k: Int,

@@ -323,16 +323,9 @@ object GraftFunctions {
     ColumnShim.column(TopKMergeAgg(ColumnShim.expression(sketch), k)
       .toAggregateExpression())
 
-  /** [[top_k_agg]] with string ids (score desc, id asc binary) — the
-    * per-document term ranker; see [[TopKStrAgg]].
-    */
-  def top_k_str_agg(score: Column, id: Column, k: Int): Column =
-    ColumnShim.column(TopKStrAgg(
-      ColumnShim.expression(score), ColumnShim.expression(id), k)
-      .toAggregateExpression())
-
-  /** [[top_k_str_agg]] carrying one opaque LONG payload per entry
-    * (never part of the ordering); see [[TopKStrPayAgg]].
+  /** [[top_k_agg]] with string ids (score desc, id asc binary) carrying
+    * one opaque LONG payload per entry (never part of the ordering) —
+    * the per-document term ranker; see [[TopKStrPayAgg]].
     */
   def top_k_str_pay_agg(score: Column, id: Column, pay: Column,
       k: Int): Column =

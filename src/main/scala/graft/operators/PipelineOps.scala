@@ -585,37 +585,16 @@ object PipelineOps {
     * re-balances the mixture). Keeps the `n` longest documents per
     * source, token count DESC with doc_id ASC tie-break: an
     * all-integer ordering, so ranks are deterministic across engines
-    * and reruns.
-    *
-    * Default shape is ONE window shuffle partitioned by source — but a
-    * skewed corpus sorts the giant source's whole partition to keep n
-    * rows. `preFilter = true` is the 100 TB path: a FIRST window over
-    * (source, physical-partition-id) — cardinality spread like a
-    * salted join — keeps each input partition's local top-n, and only
-    * that bounded survivor set (≤ n × partitions rows per source)
-    * reaches the exact per-source window. The global top-n per source
-    * is a subset of the union of local top-n's, so the result is
-    * IDENTICAL, not approximate (spec-pinned against the plain twin).
+    * and reruns. ONE window shuffle partitioned by source.
     */
-  def capPerSource(documents: DataFrame, n: Int,
-      preFilter: Boolean = false): DataFrame = {
-    val scored = tokenScored(documents)
-    val base =
-      if (!preFilter) scored
-      else scored
-        .withColumn("__p", spark_partition_id())
-        .withColumn("__lr", row_number().over(
-          Window.partitionBy(col("source"), col("__p"))
-            .orderBy(col("n_tokens").desc, col("doc_id"))))
-        .filter(col("__lr") <= n).drop("__p", "__lr")
-    base
+  def capPerSource(documents: DataFrame, n: Int): DataFrame =
+    tokenScored(documents)
       .withColumn("rnk", row_number().over(
         Window.partitionBy(col("source"))
           .orderBy(col("n_tokens").desc, col("doc_id"))).cast("long"))
       .filter(col("rnk") <= n)
       .select("doc_id", "source", "n_tokens", "rnk")
       .orderBy("source", "doc_id")
-  }
 
   /** Per-source quality-quantile gate: keep documents at or above
     * their OWN source's `q`-quantile of token count — the relative
@@ -628,32 +607,15 @@ object PipelineOps {
     * 0.75) — the linear interpolation `lo + (hi−lo)·frac` over integer
     * token counts is then IEEE-exact in any engine, so boundary
     * documents cannot flip on a last-ulp difference.
-    *
-    * `approx = true` is the bounded-memory variant: per-source
-    * `approx_percentile` (fixed-size sketch, map-side mergeable) in a
-    * tiny aggregate broadcast back to the corpus — at petabyte scale
-    * the window's full sort disappears and the gate becomes one scan +
-    * one broadcast join. The sketch returns an OBSERVED value (rank
-    * error bounded by `accuracy`), not the interpolated quantile —
-    * spec-pinned equal to exact where the quantile is itself observed.
     */
-  def qualityQuantileFilter(documents: DataFrame, q: Double,
-      approx: Boolean = false, accuracy: Int = 10000): DataFrame = {
-    val scored = tokenScored(documents)
-    val gated =
-      if (approx) {
-        val thr = scored.groupBy("source")
-          .agg(expr(s"approx_percentile(n_tokens, $q, $accuracy)")
-            .cast("double").as("__thr"))
-        scored.join(broadcast(thr), "source")
-      } else
-        scored.withColumn("__thr",
-          expr(s"percentile(n_tokens, $q)")
-            .over(Window.partitionBy(col("source"))))
-    gated.filter(col("n_tokens") >= col("__thr"))
+  def qualityQuantileFilter(documents: DataFrame, q: Double): DataFrame =
+    tokenScored(documents)
+      .withColumn("__thr",
+        expr(s"percentile(n_tokens, $q)")
+          .over(Window.partitionBy(col("source"))))
+      .filter(col("n_tokens") >= col("__thr"))
       .select("doc_id", "source", "n_tokens")
       .orderBy("doc_id")
-  }
 
   /** Data-mixture weights: per-language sampling fractions to hit a
     * target distribution under a global token budget — the step that

@@ -684,22 +684,14 @@ object Relational {
     * broadcast back onto the facts; the clip itself is a codegen'd
     * per-row `greatest(least(...))` — the fact table is never
     * shuffled. Exact `percentile` holds a per-group multiset (same
-    * cost class as [[a4Percentiles]]); at 100 TB swap the threshold
-    * aggregate for `approx_percentile` (profiler precedent) — the
-    * broadcast-clip shape is unchanged. Thresholds interpolate on an
+    * cost class as [[a4Percentiles]]). Thresholds interpolate on an
     * integer-valued column, so Spark's `percentile` and DuckDB's
     * `quantile_cont` agree bit-exactly (lo + frac with identical IEEE
     * products; see a4).
     */
   def a11Winsorize(lineitem: DataFrame,
-      lo: Double = 0.05, hi: Double = 0.95,
-      approx: Boolean = false): DataFrame = {
-    // approx = the 100 TB path: approx_percentile's fixed-size
-    // mergeable sketch replaces the exact per-group multiset; the
-    // broadcast-clip shape is identical (oracle queries keep exact)
-    def pct(p: Double) =
-      if (approx) expr(s"approx_percentile(l_quantity, ${p}D, 10000)")
-      else expr(s"percentile(l_quantity, ${p}D)")
+      lo: Double = 0.05, hi: Double = 0.95): DataFrame = {
+    def pct(p: Double) = expr(s"percentile(l_quantity, ${p}D)")
     val th = lineitem.groupBy("l_returnflag").agg(
       pct(lo).cast("double").as("lo_v"), pct(hi).cast("double").as("hi_v"))
     lineitem.join(broadcast(th), "l_returnflag")
@@ -879,9 +871,7 @@ object Relational {
     * Scale shape: two percentile aggregates per group (tiny outputs)
     * broadcast back onto the facts — the event table itself never
     * hash-shuffles. Exact percentile buffers a group's values by
-    * nature; at 100 TB swap `percentile` for `approx_percentile`
-    * exactly as [[a11Winsorize]]'s approx mode does — same plan, KLL
-    * memory.
+    * nature.
     */
   def w15RobustZ(events: DataFrame): DataFrame = {
     val base = events.select(col("event_id"), col("event_type"),

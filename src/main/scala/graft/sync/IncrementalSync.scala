@@ -31,7 +31,6 @@ final case class SyncConfig(
 
 sealed trait SyncResult
 object SyncResult {
-  case object NotDue extends SyncResult
   case object LockBusy extends SyncResult
   case object NoChange extends SyncResult
   final case class Merged(rows: Long, newWatermark: Timestamp) extends SyncResult

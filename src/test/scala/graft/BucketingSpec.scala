@@ -42,7 +42,7 @@ class BucketingSpec extends SparkSpec {
   }
 
   test("compactSmallFiles rewrites a fragmented dir into N files, content-preserving") {
-    val base = java.nio.file.Files.createTempDirectory("graft_compact_spec")
+    val base = tempDir("graft_compact_spec")
     val frag = base.resolve("frag").toString
     val out = base.resolve("out").toString
     val src = Tables(spark, sf0001, "events")
@@ -61,8 +61,7 @@ class BucketingSpec extends SparkSpec {
   }
 
   test("schemaEvolutionRoundTrip: gen-1 rows surface the added column as NULL") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_evolve_spec").toString
+    val dir = tempDir("graft_evolve_spec").toString
     val orders = Tables(spark, sf0001, "orders")
     val got = graft.operators.FileOps.schemaEvolutionRoundTrip(spark, orders, dir)
     assert(got.count() == orders.count())
@@ -78,7 +77,7 @@ class BucketingSpec extends SparkSpec {
 
   test("schemaDiff reports removed and type_changed, not just added") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_sdiff").toString
+    val dir = tempDir("graft_sdiff").toString
     Seq((1L, "a", 1.5)).toDF("id", "dropped", "widened")
       .write.mode("overwrite").parquet(s"$dir/old")
     Seq((1L, "x", "now-a-string")).toDF("id", "added_col", "widened")

@@ -343,7 +343,7 @@ class CliLifecycleWireSpec extends SparkSpec with BeforeAndAfterAll {
         """SELECT status FROM "__sync" WHERE tablename = 'wiredest'""")
       ss.next(); assert(ss.getString(1) == "error")
     } finally conn.close()
-    val dir = java.nio.file.Files.createTempDirectory("wiregc").toFile
+    val dir = tempDir("wiregc").toFile
     val old = new java.io.File(dir, "job-old"); old.mkdir()
     old.setLastModified(System.currentTimeMillis() - 10L * 24 * 3600 * 1000)
     val (c2, out2) = runCli("gc", "--dir", dir.getPath, "--days", "7")

@@ -200,7 +200,7 @@ class CliSpec extends SparkSpec {
   }
 
   test("gc sweeps staging entries older than the retention window") {
-    val dir = java.nio.file.Files.createTempDirectory("cligc").toFile
+    val dir = tempDir("cligc").toFile
     val old = new java.io.File(dir, "job-old"); old.mkdir()
     new java.io.PrintWriter(new java.io.File(old, "b.csv")) { write("x"); close() }
     old.setLastModified(System.currentTimeMillis() - 10L * 24 * 3600 * 1000)

@@ -18,49 +18,6 @@ class ExtensionsSpec extends SparkSpec {
     assert(strategies.contains(AsofJoinStrategy))
   }
 
-  test("TopKWindowRewrite: flag on swaps window for bounded agg, results identical") {
-    import graft.operators.Relational
-    GraftExtensions.registerOptimizer(spark)
-    val orders = Tables(spark, sf0001, "orders")
-    val offRows = Relational.w3TopNPerGroup(orders, 3).collect().toSeq
-    val offPlan = Relational.w3TopNPerGroup(orders, 3)
-      .queryExecution.executedPlan.toString
-    assert(offPlan.contains("Window"), "flag off must keep the window plan")
-    spark.conf.set("spark.graft.rewriteTopK", "true")
-    try {
-      val df = Relational.w3TopNPerGroup(orders, 3)
-      val p = df.queryExecution.executedPlan.toString
-      assert(p.contains("top_k_agg"),
-        s"rewrite did not fire:\n${p.take(3000)}")
-      assert(!p.contains("Window"),
-        s"window survived the rewrite:\n${p.take(3000)}")
-      assert(df.collect().toSeq == offRows,
-        "rewritten plan must be row-identical to the window plan")
-    } finally spark.conf.unset("spark.graft.rewriteTopK")
-  }
-
-  test("TopKWindowRewrite: guards keep ineligible windows untouched") {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions._
-    GraftExtensions.registerOptimizer(spark)
-    spark.conf.set("spark.graft.rewriteTopK", "true")
-    try {
-      val orders = Tables(spark, sf0001, "orders")
-      // rank() is not row_number: must stay a window
-      val w = Window.partitionBy(col("o_custkey"))
-        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-      val rk = orders.withColumn("rnk", rank().over(w))
-        .filter(col("rnk") <= 3)
-        .select("o_custkey", "o_orderkey", "rnk")
-      assert(rk.queryExecution.executedPlan.toString.contains("Window"))
-      // projecting a column the aggregate can't carry: must stay a window
-      val wide = orders.withColumn("rnk", row_number().over(w))
-        .filter(col("rnk") <= 3)
-        .select("o_custkey", "o_orderkey", "o_orderdate", "rnk")
-      assert(wide.queryExecution.executedPlan.toString.contains("Window"))
-    } finally spark.conf.unset("spark.graft.rewriteTopK")
-  }
-
   test("vec_dot is callable from SQL after runtime registration") {
     GraftExtensions.registerSql(spark)
     val r = spark.sql(

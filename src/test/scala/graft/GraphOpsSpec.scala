@@ -75,7 +75,7 @@ class GraphOpsSpec extends SparkSpec {
   }
 
   test("connectedComponents: reliable checkpoint flag gives identical labels") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cc_ckpt").toString
+    val dir = tempDir("graft_cc_ckpt").toString
     val edges = Seq(
       (2L, 1L), (2L, 3L), (3L, 4L),
       (10L, 11L),

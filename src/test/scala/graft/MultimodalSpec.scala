@@ -129,7 +129,7 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("stageMp4s + binaryFile round trip parses the staged boxes") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_mp4_spec")
+    val dir = tempDir("graft_mp4_spec")
       .resolve("staged").toString
     // only doc 2 is video-typed (8 % 3 == 2)
     val staged = Multimodal.staged(spark, docs, dir, Media.Mp4)
@@ -288,7 +288,7 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("stagePngs + binaryFile round trip decodes the staged dims") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_png_spec")
+    val dir = tempDir("graft_png_spec")
       .resolve("staged").toString
     // only doc 0 is image-typed
     val staged = Multimodal.staged(spark, docs, dir, Media.Png)
@@ -303,7 +303,7 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("jpg staging + binaryFile round trip passes the full-raster decode gate") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_jpg_spec")
+    val dir = tempDir("graft_jpg_spec")
       .resolve("staged").toString
     // only doc 0 is image-typed
     val staged = Multimodal.staged(spark, docs, dir, Media.Jpg)
@@ -325,7 +325,7 @@ class MultimodalSpec extends SparkSpec {
       (192L, "the cat sat.", "en", "s", 12L),
       (384L, "the dog sat.", "en", "s", 12L)
     ).toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("graft_capint_spec")
+    val dir = tempDir("graft_capint_spec")
       .resolve("staged").toString
     val out = Multimodal.captionIntegrity(spark,
       Multimodal.staged(spark, cdocs, dir, Media.Png), cdocs)
@@ -337,7 +337,7 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("stageWavs + binaryFile round trip decodes the staged RIFF header") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_wav_spec")
+    val dir = tempDir("graft_wav_spec")
       .resolve("staged").toString
     // only doc 1 is audio-typed (4 % 3 == 1)
     val staged = Multimodal.staged(spark, docs, dir, Media.Wav)

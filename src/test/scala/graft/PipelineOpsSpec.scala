@@ -199,11 +199,6 @@ class PipelineOpsSpec extends SparkSpec {
     // doc5 (1) rnk 2; doc4 (0 toks) is cut by the cap
     assert(r == Seq((3L, "books", 10L, 1L), (5L, "books", 1L, 2L),
       (1L, "web", 7L, 1L), (2L, "web", 3L, 2L)))
-    // the salted two-phase path is exact, not approximate — identical
-    // rows on a many-partition layout where local top-n actually prunes
-    val pre = PipelineOps.capPerSource(docs.repartition(7), 2, preFilter = true)
-      .as[(Long, String, Long, Long)].collect().toSeq
-    assert(pre == r)
     // cap of 1: only the per-source maxima survive
     val one = PipelineOps.capPerSource(docs, 1)
       .as[(Long, String, Long, Long)].collect().toSeq
@@ -215,18 +210,14 @@ class PipelineOpsSpec extends SparkSpec {
     val r = PipelineOps.qualityQuantileFilter(docs, 0.5)
       .as[(Long, String, Long)].collect().toSeq
     assert(r == Seq((1L, "web", 7L), (3L, "books", 10L), (5L, "books", 1L)))
-    // the bounded-memory variant returns an OBSERVED value (no
-    // interpolation), so compare on odd-sized groups where the exact
-    // median is itself observed: web {7,3,5} -> 5, books {10,0,1} -> 1
+    // odd-sized groups: the median is an observed value,
+    // web {7,3,5} -> 5, books {10,0,1} -> 1
     val odd = docs.union(Seq((6L, "a b c d e", "web"))
       .toDF("doc_id", "text", "source"))
     val exactOdd = PipelineOps.qualityQuantileFilter(odd, 0.5)
       .as[(Long, String, Long)].collect().toSeq
-    val ap = PipelineOps.qualityQuantileFilter(odd.repartition(5), 0.5,
-      approx = true).as[(Long, String, Long)].collect().toSeq
     assert(exactOdd == Seq((1L, "web", 7L), (3L, "books", 10L),
       (5L, "books", 1L), (6L, "web", 5L)))
-    assert(ap == exactOdd)
     // q = 0 keeps everything (threshold = per-source minimum)
     assert(PipelineOps.qualityQuantileFilter(docs, 0.0).count() == 5)
   }

@@ -7,7 +7,7 @@ import scala.collection.mutable.ArrayBuffer
 class PlanProfileSpec extends SparkSpec {
 
   test("profile writes plan files and prints stage and stream batch lines") {
-    val outDir = Files.createTempDirectory("graft-plan-profile")
+    val outDir = tempDir("graft-plan-profile")
     val names = Set("q1_agg", "stream_session_native")
     val lines = ArrayBuffer.empty[String]
     PlanProfile.profile(spark, SparkEntry.queries.filter { case (k, _) => names(k) },

@@ -199,14 +199,6 @@ class PlansSpec extends SparkSpec {
     // presentation orderBy adds only a range exchange
     val exchanges = "Exchange hashpartitioning".r.findAllIn(p).size
     assert(exchanges == 1, s"expected 1 hash exchange, got $exchanges:\n${p.take(3000)}")
-    val pre = graft.operators.PipelineOps.capPerSource(docs, 50, preFilter = true)
-    pre.collect()
-    val pp = plan(pre).split("== Initial Plan ==").head
-    // the salted local top-n adds exactly one more hash exchange (on
-    // (source, partition-id)); anything beyond means the skew spread
-    // stopped composing
-    val preEx = "Exchange hashpartitioning".r.findAllIn(pp).size
-    assert(preEx == 2, s"expected 2 hash exchanges, got $preEx:\n${pp.take(3000)}")
   }
 
   test("qualityQuantileFilter: threshold rides the window exchange; approx broadcasts") {
@@ -219,15 +211,6 @@ class PlansSpec extends SparkSpec {
     val exchanges = "Exchange hashpartitioning".r.findAllIn(p).size
     assert(exchanges == 1, s"expected 1 hash exchange, got $exchanges:\n${p.take(3000)}")
     assert(!p.contains("Join"), s"exact path must not join:\n${p.take(3000)}")
-    val ap = graft.operators.PipelineOps.qualityQuantileFilter(docs, 0.25,
-      approx = true)
-    ap.collect()
-    val pa = plan(ap).split("== Initial Plan ==").head
-    // approx: the tiny per-source sketch result broadcasts back — the
-    // corpus side must stay shuffle-free (bounded-memory 100 TB shape)
-    assert(pa.contains("BroadcastHashJoin"), s"no broadcast join:\n${pa.take(3000)}")
-    assert(!pa.contains("SortMergeJoin"),
-      s"threshold join must not sort-merge:\n${pa.take(3000)}")
   }
 
   test("triangleCount never materializes a wedge: adjacency joins only") {
@@ -371,20 +354,6 @@ class PlansSpec extends SparkSpec {
     assert(p.contains("levenshtein"), s"no levenshtein in plan:\n${p.take(3000)}")
   }
 
-  test("a11Winsorize approx mode clips within the data range, same rows") {
-    val li = Tables(spark, sf0001, "lineitem")
-    val exact = Relational.a11Winsorize(li)
-    val approx = Relational.a11Winsorize(li, approx = true)
-    assert(approx.count() == exact.count())
-    // clipped values stay inside [min, max] of the raw column and the
-    // approx thresholds stay within the exact clip's value envelope
-    import org.apache.spark.sql.functions.{max, min}
-    val mm = li.agg(min("l_quantity"), max("l_quantity")).head()
-    val (lo, hi) = (mm.getDouble(0), mm.getDouble(1))
-    val out = approx.agg(min("qty_w"), max("qty_w")).head()
-    assert(out.getDouble(0) >= lo && out.getDouble(1) <= hi)
-  }
-
   test("a11Winsorize: thresholds broadcast onto facts; facts never hash-shuffle") {
     val li = Tables(spark, sf0001, "lineitem")
     val df = Relational.a11Winsorize(li)
@@ -474,7 +443,7 @@ class PlansSpec extends SparkSpec {
   }
 
   test("j10 bucketed join: the JOIN consumes buckets — at most the rollup exchange") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bucketplan").toString
+    val dir = tempDir("graft_bucketplan").toString
     try {
       val df = graft.operators.FileOps.bucketedJoin(spark,
         Tables(spark, sf0001, "lineitem"), Tables(spark, sf0001, "orders"), dir)

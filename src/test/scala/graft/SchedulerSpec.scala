@@ -69,7 +69,7 @@ class SchedulerSpec extends SparkSpec {
   }
 
   test("staging GC removes only dirs older than retention (C8)") {
-    val root = Files.createTempDirectory("graft_gc").toFile
+    val root = tempDir("graft_gc").toFile
     val oldDir = new java.io.File(root, "job-old")
     val newDir = new java.io.File(root, "job-new")
     oldDir.mkdirs(); newDir.mkdirs()

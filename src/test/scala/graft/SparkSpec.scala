@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Path}
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,6 +13,30 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   lazy val sf0001 = "/root/testdata/sf0.001"
   lazy val sf001 = "/root/testdata/sf0.01"
+
+  private val tempDirs = scala.collection.mutable.ArrayBuffer.empty[Path]
+
+  /** A fresh temp dir for a fixture, deleted with its contents after
+    * the spec's last test.
+    */
+  def tempDir(prefix: String): Path = tempDirs.synchronized {
+    val d = Files.createTempDirectory(prefix)
+    tempDirs += d
+    d
+  }
+
+  /** Runs `body` with `java.io.tmpdir` at `dir`: the query stagings
+    * it makes land there.
+    */
+  def withTmpDir[T](dir: Path)(body: => T): T = {
+    val prev = System.getProperty("java.io.tmpdir")
+    System.setProperty("java.io.tmpdir", dir.toString)
+    try body finally System.setProperty("java.io.tmpdir", prev)
+  }
+
+  override def afterAll(): Unit =
+    try tempDirs.synchronized(tempDirs.foreach(SparkSpec.deleteTree))
+    finally super.afterAll()
 }
 
 object SparkSpec {
@@ -26,4 +52,12 @@ object SparkSpec {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  private def deleteTree(p: Path): Unit =
+    if (Files.exists(p)) {
+      val walk = Files.walk(p)
+      try walk.sorted(java.util.Comparator.reverseOrder())
+        .forEach(f => Files.delete(f))
+      finally walk.close()
+    }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -17,8 +16,8 @@ class StreamingSpec extends SparkSpec {
 
   test("foreachBatch merge stream: two micro-batches equal one batch merge (C1)") {
     implicit val sqlCtx = spark.sqlContext
-    val stateDir = Files.createTempDirectory("graft_stream_state").toString
-    val ckpt = Files.createTempDirectory("graft_stream_ckpt").toString
+    val stateDir = tempDir("graft_stream_state").toString
+    val ckpt = tempDir("graft_stream_ckpt").toString
     val input = MemoryStream[(Long, String, Double, Timestamp, Boolean)]
     val delta = input.toDF()
       .toDF("pk", "name", "amount", "modstamp", "is_deleted")
@@ -45,8 +44,8 @@ class StreamingSpec extends SparkSpec {
 
   test("mvMaintainStream: per-batch partials converge to the batch recompute") {
     implicit val sqlCtx = spark.sqlContext
-    val stateDir = Files.createTempDirectory("graft_mv_state").toString
-    val ckpt = Files.createTempDirectory("graft_mv_ckpt").toString
+    val stateDir = tempDir("graft_mv_state").toString
+    val ckpt = tempDir("graft_mv_ckpt").toString
     val input = MemoryStream[(Long, Timestamp, String, Double)]
     val events = input.toDF().toDF("event_id", "ts", "event_type", "value")
     val q = StreamingSync.mvMaintainStream(events, stateDir, Some(ckpt))
@@ -353,20 +352,21 @@ class StreamingSpec extends SparkSpec {
     // replay read only the flat side shard (state census 10x too
     // small). This drives the full registry queries over a
     // directory-shaped sf dir and pins that every row still arrives.
-    val d = Files.createTempDirectory("graft_dirshaped")
+    val d = tempDir("graft_dirshaped")
     val events = spark.read.parquet(s"$sf0001/events.parquet")
     events.repartition(3).write.parquet(s"$d/events.parquet")
     val n = spark.read.parquet(s"$d/events.parquet").count()
     assert(n == events.count(), "staging fixture must preserve rows")
     // stream_dedup output = distinct event ids of events + dup shard
     // (the shard is a subset, so the expected count is exactly n)
-    val deduped = SparkEntry.queries("stream_dedup")(spark, d.toString)
+    val deduped =
+      withTmpDir(d)(SparkEntry.queries("stream_dedup")(spark, d.toString))
     assert(deduped.count() == n,
       "a directory-shaped events table must replay in full")
     // the sentinel staging (mtime-ordered: events parts BEFORE the
     // sentinel file) must also see every part — the hourly top-k over
     // a partial replay would drop whole windows
-    val topk = SparkEntry.queries("stream_topk")(spark, d.toString)
+    val topk = withTmpDir(d)(SparkEntry.queries("stream_topk")(spark, d.toString))
     val fileShaped = SparkEntry.queries("stream_topk")(spark,
       sf0001) // same rows, single-file staging
     assert(topk.count() == fileShaped.count(),

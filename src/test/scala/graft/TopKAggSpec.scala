@@ -133,10 +133,10 @@ class TopKAggSpec extends SparkSpec {
       s"map-side combine must be present:\n$plan")
     assert(!plan.contains("Window"), s"no window exchange allowed:\n$plan")
   }
-  test("payload variant: ordering identical to top_k_str_agg, payload rides") {
-    import graft.functions.GraftFunctions.{top_k_str_agg, top_k_str_pay_agg}
+  test("payload variant: matches the row_number window, payload rides") {
+    import graft.functions.GraftFunctions.top_k_str_pay_agg
     // heavy score ties -> the (score desc, term asc) tie order must be
-    // byte-identical between the two aggregates; the payload must stay
+    // byte-identical to Spark's own window sort; the payload must stay
     // attached to ITS entry across partitionings (merge path)
     val df = (0 until 4000).map { i =>
       (i.toLong % 13, f"t${i % 97}%03d", (i % 7).toDouble,
@@ -144,21 +144,23 @@ class TopKAggSpec extends SparkSpec {
     }.toDF("g", "term", "score", "pay")
       // one row per (g, term): ids are keys in every caller
       .groupBy("g", "term").agg(max("score").as("score"), max("pay").as("pay"))
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("g")).orderBy(col("score").desc, col("term"))
     Seq(1, 9).foreach { parts =>
       val base = df.repartition(parts)
-      val plain = base.groupBy("g")
-        .agg(top_k_str_agg(col("score"), col("term"), 5).as("tk"))
-        .select(col("g"), posexplode(col("tk")))
-        .select(col("g"), col("pos"), col("col.score"), col("col.id"))
+      val viaWindow = base.withColumn("rnk", row_number().over(w).cast("long"))
+        .filter(col("rnk") <= 5)
+        .select("g", "rnk", "score", "term")
         .collect().map(_.toSeq).sortBy(_.toString)
       val pay = base.groupBy("g")
         .agg(top_k_str_pay_agg(col("score"), col("term"), col("pay"), 5)
           .as("tk"))
         .select(col("g"), posexplode(col("tk")))
       val payRank = pay
-        .select(col("g"), col("pos"), col("col.score"), col("col.id"))
+        .select(col("g"), (col("pos") + 1).cast("long"), col("col.score"),
+          col("col.id"))
         .collect().map(_.toSeq).sortBy(_.toString)
-      assert(plain.toSeq == payRank.toSeq, s"parts=$parts: rank order differs")
+      assert(viaWindow.toSeq == payRank.toSeq, s"parts=$parts: rank order differs")
       // every surviving payload decodes back to its own term/group
       pay.select(col("g"), col("col.id"), col("col.pay")).collect()
         .foreach { r =>

@@ -27,7 +27,9 @@ structural, not a snapshot:
     r12 sweep vs 0.14-0.17 s across five fresh-connection runs vs
     0.31 s in the r11 sweep — engine absolute stable at 0.85-0.89 s).
 
-Usage: python3 tools/floor_audit.py   (prints the markdown table)
+Usage: python3 tools/floor_audit.py [BENCH_RECORD]   (prints the
+markdown table; BENCH_RECORD defaults to BENCH_last.json — pass a
+per-core record such as BENCH_last_c32.json)
 """
 import json
 import sys
@@ -139,7 +141,8 @@ NOTES = {
 
 
 def main() -> int:
-    bench = json.load(open("BENCH_last.json"))["queries"]
+    record = sys.argv[1] if len(sys.argv) > 1 else "BENCH_last.json"
+    bench = json.load(open(record))["queries"]
     oracle = json.load(open("ORACLE_TIMES_last.json"))["queries"]
     rows, missing, no_oracle = [], [], []
     subfloor = 0
