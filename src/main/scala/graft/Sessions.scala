@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** What the local mains (Bench, Verify, PlanProfile) share: one session
-  * shape and one warm-up directory rule.
+/** What the local mains (Bench, Verify, PlanProfile) and the CLI share:
+  * one session shape and one warm-up directory rule.
   */
 object Sessions {
 
@@ -11,16 +11,19 @@ object Sessions {
   def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
 
   /** `local[cpus]` with as many shuffle partitions, no UI, UTC session
-    * time and WARN logging.
+    * time and WARN logging. An already active session (an embedding
+    * harness's) is attached to instead; it takes the session settings
+    * but keeps its log level.
     */
   def local(): SparkSession = {
+    val attached = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    if (attached.isEmpty) spark.sparkContext.setLogLevel("WARN")
     spark
   }
 

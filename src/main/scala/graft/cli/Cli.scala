@@ -199,11 +199,7 @@ object Cli {
   private def required(opts: Map[String, String], key: String): String =
     opts.getOrElse(key, throw new IllegalArgumentException(s"--$key is required"))
 
-  private def spark: SparkSession = SparkSession.builder()
-    .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[4]"))
-    .config("spark.sql.shuffle.partitions", graft.Sessions.cpus)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private def spark: SparkSession = graft.Sessions.local()
 
   private def describeFields(opts: Map[String, String]): Seq[SfField] =
     SfTransports.get(required(opts, "transport"))

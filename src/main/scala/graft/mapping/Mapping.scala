@@ -1,5 +1,6 @@
 package graft.mapping
 
+import graft.sources.salesforce.CsvWire
 import graft.types.{SfField, SfSchema}
 
 /** The analyst-editable column-selection config: `mapping/<Table>.csv`
@@ -16,17 +17,18 @@ final case class MappingEntry(
 object Mapping {
 
   /** Parse a mapping CSV (header + rows of `"Field","1","","note"`).
-    * Quote-doubling dialect, same as the reference's csv module output.
+    * Quote-doubling dialect, same as the reference's csv module output,
+    * decoded by [[CsvWire]], the Bulk result decoder.
     */
   def parse(lines: Seq[String]): Seq[MappingEntry] =
-    lines.drop(1).filter(_.nonEmpty).map { line =>
-      val cells = splitCsvLine(line)
-      MappingEntry(
-        fieldName = cells.headOption.getOrElse(""),
-        importFlag = cells.lift(1).exists(_.trim == "1"),
-        indexed = cells.lift(2).exists(_.trim == "1"),
-        note = cells.lift(3).getOrElse(""))
-    }
+    CsvWire.parseRows(new java.io.StringReader(lines.mkString("\n"))).drop(1)
+      .map { cells =>
+        MappingEntry(
+          fieldName = cells.headOption.getOrElse(""),
+          importFlag = cells.lift(1).exists(_.trim == "1"),
+          indexed = cells.lift(2).exists(_.trim == "1"),
+          note = cells.lift(3).getOrElse(""))
+      }.toSeq
 
   /** Render the mapping CSV for a described table
     * (`tabledesc.py:147-204`): all importable fields flagged unless
@@ -63,30 +65,4 @@ object Mapping {
     mapping.filter(e => e.importFlag && e.indexed).map(_.fieldName).toSet
 
   private def quote(s: String): String = "\"" + s.replace("\"", "\"\"") + "\""
-
-  /** Minimal CSV line splitter for the reference dialect: comma
-    * separated, `"` quoted, `""` escape.
-    */
-  private[graft] def splitCsvLine(line: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    val cur = new StringBuilder
-    var inQuotes = false
-    var i = 0
-    while (i < line.length) {
-      val c = line.charAt(i)
-      if (inQuotes) {
-        if (c == '"') {
-          if (i + 1 < line.length && line.charAt(i + 1) == '"') { cur += '"'; i += 1 }
-          else inQuotes = false
-        } else cur += c
-      } else c match {
-        case '"' => inQuotes = true
-        case ',' => out += cur.result(); cur.clear()
-        case _ => cur += c
-      }
-      i += 1
-    }
-    out += cur.result()
-    out.result()
-  }
 }

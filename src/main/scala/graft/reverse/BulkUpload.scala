@@ -112,8 +112,8 @@ object BulkUpload {
   trait UploadTransport extends Serializable {
     /** `contentType` mirrors `create_job_doc(contentType='CSV')`
       * (`salesforce_bulk.py:252-274`): the job's declared batch
-      * payload/result format — CSV (engine default, what pgsf itself
-      * speaks), JSON or XML.
+      * payload/result format. CSV is the one format pgsf and graft
+      * speak; the HTTP transport refuses any other value.
       */
     def createJob(objectName: String, operation: String,
         externalIdField: Option[String] = None,
@@ -270,13 +270,11 @@ final class MockUploadTransport(failEvery: Int = 0)
   @volatile var closedJobs: List[String] = Nil
 
   @volatile var lastExternalIdField: Option[String] = None
-  @volatile var lastContentType: String = "CSV"
 
   override def createJob(objectName: String, operation: String,
       externalIdField: Option[String] = None,
       contentType: String = "CSV"): String = {
     lastExternalIdField = externalIdField
-    lastContentType = contentType
     s"job-$objectName-$operation-${jobCounter.incrementAndGet()}"
   }
   override def postBatch(jobId: String, chunkCsv: String): String = {

@@ -5,6 +5,7 @@ import java.net.URLEncoder
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.StandardCharsets.UTF_8
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 
@@ -31,26 +32,26 @@ final case class ApiUsage(used: Long, total: Long) {
   *    `totalSize` (`query.py:53-65`).
   *  - Bulk V1 job lifecycle: XML `jobInfo` create with the
   *    `Sforce-Enable-PKChunking: chunkSize=N;` header, batch post,
-  *    close/abort docs, `X-SFDC-Session` auth
-  *    (`salesforce_bulk/salesforce_bulk.py:147-208,235-296`).
+  *    close doc, `X-SFDC-Session` auth
+  *    (`salesforce_bulk/salesforce_bulk.py:147-208,235-296`). Every job
+  *    is a CSV job, the one format pgsf speaks (`query_bulk.py`,
+  *    `upload_table.py`).
   *  - Batch state settled once, at plan time: [[pkChunks]] polls the
   *    job's batch list until no batch is queued or in progress
-  *    (`download.py:50-80`, the 600 s/10 s wait), fails the scan on a
-  *    failed batch and returns only `Completed` ones, so a partition
-  *    reader fetches results without asking for the batch state again.
+  *    (`download.py:50-80`, the 600 s/10 s wait), closes the job
+  *    (`download.py:107-114`), fails the scan on a failed batch and
+  *    returns only `Completed` ones, so a partition reader fetches
+  *    results without asking for the batch state again.
   *    The upload side's [[waitBatch]] shares the same deadline loop
   *    (`upload_table.py:89-96`, `salesforce_bulk.py:505-511`); which
   *    state means what is [[BulkManifest]]'s call alone.
   *  - One request loop ([[send]]): idempotent requests retry connection
   *    errors, POSTs never do.
-  *  - Streamed batch results with NUL bytes stripped
-  *    (`salesforce_bulk.py:461-496`), decoded by RESPONSE
-  *    Content-Type (CSV via [[CsvWire]], JSON via [[JsonWire]] —
-  *    `get_query_batch_result_ids`' dispatch, `:440-459`), and
-  *    per-record `UploadResult(id, success, created, error)` parsing
-  *    for upload batches in all three result formats
-  *    (`salesforce_bulk.py:498-546` CSV/JSON/XML branches); job docs
-  *    carry the `contentType` keyword (`:252-274`).
+  *  - Query rows and per-record upload outcomes (`UploadResult(id,
+  *    success, created, error)`, `salesforce_bulk.py:498-546`) stream
+  *    through one decoder: NUL bytes stripped (`:461-496`), then
+  *    [[CsvWire]]. A JSON or XML body where CSV is expected fails the
+  *    read.
   *
   * Partition tokens returned by [[pkChunks]] are `(jobId, batchId)` —
   * the server does the chunk split, so one Spark partition maps to one
@@ -113,13 +114,6 @@ final class HttpSfTransport(
     val in = resp.body()
     try in.readAllBytes() finally in.close()
   }
-
-  /** The body as text with NUL bytes stripped (`salesforce_bulk.py:495`). */
-  private def bodyText(resp: HttpResponse[InputStream]): String =
-    new String(bodyBytes(resp), UTF_8).replace("\u0000", "")
-
-  private def contentType(resp: HttpResponse[_]): String =
-    resp.headers().firstValue("Content-Type").orElse("").toLowerCase
 
   /** Poll `probe` every `pollIntervalMs` until it yields a value; after
     * `pollTimeoutMs` fail with `what` — the reference's 600 s/10 s wait
@@ -216,27 +210,19 @@ final class HttpSfTransport(
   private def xmlEscape(s: String): String =
     s.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
 
-  private val JobContentTypes = Set("CSV", "JSON", "XML")
-
   /** `create_job_doc` field order: operation, object,
     * [externalIdFieldName], [concurrencyMode], contentType
-    * (`salesforce_bulk.py:252-274`); `contentType` parameterized like
-    * the reference's keyword (CSV default — the format pgsf itself
-    * speaks — with JSON/XML accepted).
+    * (`salesforce_bulk.py:252-274`); the content type is always CSV.
     */
   private def jobDoc(objectName: String, operation: String,
-      externalIdField: Option[String] = None,
-      contentType: String = "CSV"): String = {
-    require(JobContentTypes(contentType),
-      s"unsupported bulk contentType '$contentType' (one of CSV/JSON/XML)")
+      externalIdField: Option[String] = None): String =
     s"""<?xml version="1.0" encoding="UTF-8"?>""" +
       s"""<jobInfo xmlns="$JobNs">""" +
       s"<operation>$operation</operation>" +
       s"<object>${xmlEscape(objectName)}</object>" +
       externalIdField.map(f =>
         s"<externalIdFieldName>${xmlEscape(f)}</externalIdFieldName>").getOrElse("") +
-      s"<contentType>$contentType</contentType></jobInfo>"
-  }
+      "<contentType>CSV</contentType></jobInfo>"
 
   private def stateDoc(state: String): String =
     s"""<?xml version="1.0" encoding="UTF-8"?>""" +
@@ -303,11 +289,12 @@ final class HttpSfTransport(
   /** Bulk scan plan: create a PK-chunked query job, post the SOQL
     * batch, poll the job's batch list until the server's chunk split
     * is done (no batch queued or in progress, `download.py:50-80`),
-    * fail the scan on a failed batch, and return one `(jobId, batchId)`
-    * token per `Completed` batch — the original batch ends
-    * `NotProcessed` under chunking and is excluded (`bulk_states.py`
-    * ERROR_STATES). Empty result = server rejected chunking for this
-    * object (`query_bulk.py:26-36` fallback).
+    * close the job (`download.py:107-114`; a closed job's results stay
+    * readable), fail the scan on a failed batch, and return one
+    * `(jobId, batchId)` token per `Completed` batch — the original
+    * batch ends `NotProcessed` under chunking and is excluded
+    * (`bulk_states.py` ERROR_STATES). Empty result = server rejected
+    * chunking for this object (`query_bulk.py:26-36` fallback).
     */
   override def pkChunks(objectName: String, fields: Seq[String],
       where: Option[String], includeDeleted: Boolean,
@@ -327,8 +314,11 @@ final class HttpSfTransport(
     val job = poll(s"job $jobId still has pending batches") {
       Some(jobInfo(jobId)).filter(BulkManifest.isDone)
     }
-    BulkManifest.failedBatches(job).headOption
-      .foreach(b => throw batchFailed(jobId, b))
+    val failed = BulkManifest.failedBatches(job).headOption.map(batchFailed(jobId, _))
+    // a failing close must not hide the failed batch
+    try closeJob(jobId)
+    catch { case NonFatal(e) if failed.isDefined => failed.get.addSuppressed(e) }
+    failed.foreach(e => throw e)
     BulkManifest.loadableBatches(job).map(b => jobId -> b.id)
   }
 
@@ -485,29 +475,19 @@ final class HttpSfTransport(
 
   // ---- Bulk path: batch download --------------------------------------
 
-  /** One server-side batch → rows: list its result ids, stream each
-    * result body with NUL bytes stripped (`salesforce_bulk.py:440-496`).
-    * The batch is already `Completed`: [[pkChunks]] hands out no other
-    * token. Result bodies are consumed as a STREAM (incremental
-    * NUL-strip → wire decoder over a Reader), never materialized whole:
-    * a result file can approach 1 GB, and one byte[] + String copy of
-    * it would OOM the executor.
-    *
-    * The result-id listing and each result body dispatch on the
-    * RESPONSE Content-Type the way `get_query_batch_result_ids`
-    * (`salesforce_bulk.py:440-459`) does: JSON jobs answer with a JSON
-    * id array and JSON record arrays; CSV jobs with the XML result
-    * list and CSV bodies.
+  /** One server-side batch → rows: list its result ids from the XML
+    * `<result-list>`, stream each CSV result body
+    * (`salesforce_bulk.py:440-496`). The batch is already `Completed`:
+    * [[pkChunks]] hands out no other token. Result bodies are consumed
+    * as a STREAM (incremental NUL-strip → [[CsvWire]] over a Reader),
+    * never materialized whole: a result file can approach 1 GB, and
+    * one byte[] + String copy of it would OOM the executor.
     */
   private def bulkBatchRows(jobId: String, batchId: String): Iterator[Map[String, Any]] = {
     val results = s"/job/$jobId/batch/$batchId/result"
-    val resultIds: Seq[String] = bulkGet(results) { r =>
-      if (contentType(r).contains("json"))
-        mapper.readTree(bodyBytes(r)).elements().asScala.map(_.asText()).toSeq
-      else elements(parseXml(r), "result").map(_.getTextContent)
-    }
+    val resultIds = bulkGet(results)(r => elements(parseXml(r), "result").map(_.getTextContent))
     resultIds.iterator.flatMap { rid =>
-      val (in, ctype) = bulkGet(s"$results/$rid")(r => (r.body(), contentType(r)))
+      val in = bulkGet(s"$results/$rid")(csvBody)
       // the wire decoder closes the stream at EOF, but a partially-
       // consumed iterator (LIMIT pushdown, task abort) is simply
       // abandoned — the PartitionReader's close() cannot reach it.
@@ -516,14 +496,26 @@ final class HttpSfTransport(
       // outside a task — unit specs — the EOF close is the only path).
       Option(org.apache.spark.TaskContext.get()).foreach(
         _.addTaskCompletionListener[Unit](_ => in.close()))
-      if (ctype.contains("json")) JsonWire.parse(mapper, nulStripReader(in))
-      else CsvWire.parse(nulStripReader(in))
+      CsvWire.parse(nulStripReader(in))
     }
   }
 
+  /** A result body that must be CSV, as its open stream. Every job
+    * declares CSV, so a JSON or XML body is a mis-declared response:
+    * it fails the read, naming its type, instead of decoding as rows.
+    */
+  private def csvBody(resp: HttpResponse[InputStream]): InputStream = {
+    val ctype = resp.headers().firstValue("Content-Type").orElse("")
+    if (Seq("json", "xml").exists(ctype.toLowerCase.contains)) {
+      resp.body().close()
+      throw new SfApiError(resp.statusCode(),
+        s"expected a CSV result body, got Content-Type '$ctype'")
+    }
+    resp.body()
+  }
+
   /** Incremental NUL strip (`salesforce_bulk.py:495`) over a streamed
-    * body — the Reader twin of [[bodyText]]; an all-NUL refill loops
-    * instead of returning 0 chars.
+    * body; an all-NUL refill loops instead of returning 0 chars.
     */
   private def nulStripReader(in: InputStream): java.io.Reader =
     new java.io.FilterReader(
@@ -566,10 +558,12 @@ final class HttpSfTransport(
 
   override def createJob(objectName: String, operation: String,
       externalIdField: Option[String] = None,
-      contentType: String = "CSV"): String =
-    childMap(bulkPost("/job",
-      jobDoc(objectName, operation, externalIdField, contentType),
+      contentType: String = "CSV"): String = {
+    require(contentType == "CSV",
+      s"unsupported bulk contentType '$contentType': graft's Bulk V1 jobs are CSV")
+    childMap(bulkPost("/job", jobDoc(objectName, operation, externalIdField),
       "application/xml"))("id")
+  }
 
   override def postBatch(jobId: String, chunkCsv: String): String =
     childMap(bulkPost(s"/job/$jobId/batch", chunkCsv, "text/csv"))("id")
@@ -577,57 +571,20 @@ final class HttpSfTransport(
   override def closeJob(jobId: String): Unit =
     bulkPost(s"/job/$jobId", stateDoc("Closed"), "application/xml")
 
-  /** Per-record upload outcome of GET job/batch/result, dispatched on
-    * the RESPONSE Content-Type exactly like `get_batch_results`
-    * (`salesforce_bulk.py:498-546`): the CSV `"Id","Success",
-    * "Created","Error"` rows, the JSON `[{id, success, created,
-    * errors:[...]}]` array, or the jobNS XML `<result>` elements. The
-    * reference keeps JSON/XML error LISTS; this engine's
-    * [[UploadResult.error]] is a single string, so structured errors
-    * flatten to "statusCode:message" entries joined with "; " (the
-    * job-abort decision downstream only tests emptiness).
+  /** Per-record upload outcome of GET job/batch/result: the CSV
+    * `"Id","Success","Created","Error"` rows of `get_batch_results`
+    * (`salesforce_bulk.py:498-546`), decoded inside the request loop so
+    * a connection dropped mid-body retries.
     */
   override def batchResults(jobId: String, batchId: String): Seq[UploadResult] =
     bulkGet(s"/job/$jobId/batch/$batchId/result") { resp =>
-      val ctype = contentType(resp)
-      if (ctype.contains("json")) {
-        def flag(n: JsonNode): Boolean =
-          if (n.isBoolean) n.booleanValue() else n.asText("").equalsIgnoreCase("true")
-        mapper.readTree(bodyText(resp))
-          .elements().asScala.map { r =>
-            UploadResult(
-              id = r.path("id").asText(""),
-              success = flag(r.path("success")),
-              created = flag(r.path("created")),
-              error = r.path("errors").elements().asScala.map(e =>
-                (e.path("statusCode").asText("") + ":" +
-                  e.path("message").asText("")).stripPrefix(":"))
-                .mkString("; "))
-          }.toSeq
-      } else if (ctype.contains("xml")) {
-        elements(parseXml(resp), "result").map { el =>
-          val m = childMap(el)
-          val errs = el.getElementsByTagNameNS("*", "errors")
-          val error = (0 until errs.getLength).map { i =>
-            val em = childMap(errs.item(i).asInstanceOf[org.w3c.dom.Element])
-            (em.getOrElse("statusCode", "") + ":" + em.getOrElse("message", ""))
-              .stripPrefix(":")
-          }.mkString("; ")
-          UploadResult(
-            id = m.getOrElse("id", ""),
-            success = m.getOrElse("success", "false").equalsIgnoreCase("true"),
-            created = m.getOrElse("created", "false").equalsIgnoreCase("true"),
-            error = error)
-        }
-      } else {
-        CsvWire.parse(bodyText(resp)).map { row =>
-          UploadResult(
-            id = row.getOrElse("Id", "").toString,
-            success = row.getOrElse("Success", "false").toString.equalsIgnoreCase("true"),
-            created = row.getOrElse("Created", "false").toString.equalsIgnoreCase("true"),
-            error = row.getOrElse("Error", "").toString)
-        }.toSeq
-      }
+      CsvWire.parse(nulStripReader(csvBody(resp))).map { row =>
+        UploadResult(
+          id = row.getOrElse("Id", "").toString,
+          success = row.getOrElse("Success", "false").toString.equalsIgnoreCase("true"),
+          created = row.getOrElse("Created", "false").toString.equalsIgnoreCase("true"),
+          error = row.getOrElse("Error", "").toString)
+      }.toSeq
     }
 }
 
@@ -638,12 +595,9 @@ final class HttpSfTransport(
   */
 private[graft] object CsvWire {
 
-  def parse(text: String): Iterator[Map[String, Any]] =
-    parse(new java.io.StringReader(text))
-
-  /** Streaming variant: rows decode as the Reader drains — nothing
-    * requires the whole body in memory (bulk result files can approach
-    * 1 GB). The reader closes at EOF.
+  /** Rows decode as the Reader drains — nothing requires the whole
+    * body in memory (bulk result files can approach 1 GB). The reader
+    * closes at EOF.
     */
   def parse(reader: java.io.Reader): Iterator[Map[String, Any]] = {
     val rows = parseRows(reader)
@@ -651,9 +605,6 @@ private[graft] object CsvWire {
     val header = rows.next()
     rows.map(r => header.zip(r).toMap[String, Any])
   }
-
-  private[graft] def parseRows(text: String): Iterator[Seq[String]] =
-    parseRows(new java.io.StringReader(text))
 
   private[graft] def parseRows(reader: java.io.Reader): Iterator[Seq[String]] =
     new Iterator[Seq[String]] {
@@ -696,14 +647,9 @@ private[graft] object CsvWire {
     }
 }
 
-/** Streaming decoder for bulk JSON result bodies — the JSON twin of
-  * [[CsvWire]]: the body is one top-level array of record objects
-  * (`salesforce_bulk.py:512-517` JSON branch consumes the same shape
-  * via `json.load`); records decode one at a time off the Jackson
-  * parser, so nothing requires the whole body in memory. `attributes`
-  * envelopes are dropped exactly like the REST page decoder; scalars
-  * keep native types (SfRowReader converts against the Spark schema
-  * either way). The parser closes at the end of the array.
+/** The JSON record decoder of REST pages, SOSL hits and per-record
+  * GETs: `attributes` envelopes are dropped; scalars keep native types
+  * (SfRowReader converts against the Spark schema).
   */
 private[graft] object JsonWire {
 
@@ -715,43 +661,9 @@ private[graft] object JsonWire {
     else n.asText()
 
   /** A record object minus its `attributes` envelope, every value
-    * through [[scalar]] — the one decoder for REST pages, SOSL hits,
-    * per-record GETs and Bulk JSON results.
+    * through [[scalar]].
     */
   def record(n: JsonNode): Map[String, Any] =
     n.properties().asScala.filter(_.getKey != "attributes")
       .map(e => e.getKey -> scalar(e.getValue)).toMap
-
-  def parse(mapper: ObjectMapper, reader: java.io.Reader): Iterator[Map[String, Any]] = {
-    import com.fasterxml.jackson.core.JsonToken
-    val p = mapper.getFactory.createParser(reader)
-    val first = p.nextToken()
-    if (first == null) { p.close(); return Iterator.empty }
-    require(first == JsonToken.START_ARRAY,
-      s"bulk JSON result must be a top-level array, got $first")
-    new Iterator[Map[String, Any]] {
-      private var tok = p.nextToken()
-      override def hasNext: Boolean = {
-        val more = tok == JsonToken.START_OBJECT
-        if (!more) {
-          // anything but the array's close is a malformed result —
-          // treating it as end-of-stream would silently truncate the
-          // download (a stray null/scalar mid-array drops every
-          // record after it); fail as loudly as the top-level require
-          if (tok != JsonToken.END_ARRAY)
-            throw new IllegalStateException(
-              s"bulk JSON result: expected a record object or end of " +
-                s"array, got $tok — refusing to truncate the download")
-          if (!p.isClosed) p.close()
-        }
-        more
-      }
-      override def next(): Map[String, Any] = {
-        if (!hasNext) throw new NoSuchElementException
-        val node = p.readValueAsTree[JsonNode]()
-        tok = p.nextToken()
-        record(node)
-      }
-    }
-  }
 }

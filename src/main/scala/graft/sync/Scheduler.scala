@@ -3,22 +3,17 @@ package graft.sync
 import java.sql.Timestamp
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
-/** C5/C7/C8 — the orchestration shell around IncrementalSync
-  * (`sync:13-20`, `abort_refresh.py`, `delete_old_jobs_data.sh`).
+/** C5/C8 — the orchestration shell around IncrementalSync
+  * (`sync:13-20`, `delete_old_jobs_data.sh`); C7's abort is `Cli abort`.
   *
   * Fan-out: the reference spawns one OS process per due table; here
-  * each due table gets its own sync round on a bounded thread pool,
-  * tagged with a Spark job group so a table's round is cancellable
-  * (C7) without touching its siblings. Each worker needs its OWN
-  * JDBC connection (the reference's per-process psycopg2 singleton,
-  * `pg.py:63-75`) — hence the factory.
+  * each due table gets its own sync round on a bounded thread pool.
+  * Each worker needs its OWN JDBC connection (the reference's
+  * per-process psycopg2 singleton, `pg.py:63-75`) — hence the factory.
   */
-final class Scheduler(spark: SparkSession,
-    mkWorker: String => SyncWorker) {
-
-  def jobGroup(table: String): String = s"sync-$table"
+final class Scheduler(mkWorker: String => SyncWorker) {
 
   /** C5 — run every due table's sync round in parallel. Each worker is
     * closed when its table's round ends, so a long-running scheduler
@@ -35,25 +30,12 @@ final class Scheduler(spark: SparkSession,
     val futures = due.map { table =>
       Future {
         val worker = mkWorker(table)
-        try {
-          spark.sparkContext.setJobGroup(jobGroup(table),
-            s"incremental sync of $table", interruptOnCancel = true)
-          try table -> worker.syncer.syncTable(cfgs(table)._1, cfgs(table)._2)
-          finally spark.sparkContext.clearJobGroup()
-        } finally worker.close()
+        try table -> worker.syncer.syncTable(cfgs(table)._1, cfgs(table)._2)
+        finally worker.close()
       }
     }
     try Await.result(Future.sequence(futures), Duration.Inf).toMap
     finally pool.shutdown()
-  }
-
-  /** C7 — abort a running table: cancel its Spark jobs, then mark the
-    * state row 'error' so auto-sync halts until an operator re-registers
-    * (`abort_refresh.py:18-68` semantics).
-    */
-  def abort(table: String, state: SyncStateStore): Unit = {
-    spark.sparkContext.cancelJobGroup(jobGroup(table))
-    state.markError(table)
   }
 }
 

@@ -32,7 +32,9 @@ import graft.cli.Cli
   *    preflighted by the `--max-delta` wire COUNT, merged into the
   *    same Derby table, watermark advanced to the delta's max stamp;
   *  - upload's chunked CSV batch + per-record result parsing from the
-  *    job the same transport registered.
+  *    job the same transport registered;
+  *  - with PK chunking accepted, bulkload and sync read through Bulk
+  *    query jobs and close each one (`download.py:107-114`).
   */
 class CliLifecycleWireSpec extends SparkSpec with BeforeAndAfterAll {
 
@@ -96,6 +98,16 @@ class CliLifecycleWireSpec extends SparkSpec with BeforeAndAfterAll {
   private val auths = TrieMap.empty[String, Int] // every Bearer/session seen
   private val loginCount = new java.util.concurrent.atomic.AtomicInteger
   private val fieldDefCount = new java.util.concurrent.atomic.AtomicInteger
+  /** When set, query jobs are accepted and served as one CSV chunk. */
+  @volatile private var bulkScans = false
+  private val queryJobs = new java.util.concurrent.atomic.AtomicInteger
+  private val scanSoql = TrieMap.empty[String, String]
+  /** "jobId state" of every query-job state POST (a close). */
+  private val jobStates = new java.util.concurrent.ConcurrentLinkedQueue[String]
+  private def closes(jobId: String): Int = {
+    import scala.jdk.CollectionConverters._
+    jobStates.asScala.count(_ == s"$jobId Closed")
+  }
 
   private def respond(ex: HttpExchange, body: String, status: Int = 200,
       contentType: String = "application/json"): Unit = {
@@ -129,6 +141,50 @@ class CliLifecycleWireSpec extends SparkSpec with BeforeAndAfterAll {
       respond(ex, page(v1.take(2), done = false, total = v1.size,
         next = Some("/services/data/v52.0/query/NEXTPAGE")))
     }
+
+  private def csv(fields: Seq[String], recs: Seq[C]): String = {
+    def value(c: C, f: String): Any = f match {
+      case "Id" => c.id
+      case "Name" => c.name
+      case "NumEmployees" => c.n
+      case "IsDeleted" => c.deleted
+      case "SystemModstamp" => c.stamp
+    }
+    (fields +: recs.map(c => fields.map(f => value(c, f))))
+      .map(_.map(v => "\"" + v + "\"").mkString(",") + "\n").mkString
+  }
+
+  /** A PK-chunked query job: its posted SOQL comes back as one
+    * `Completed` chunk with one CSV result.
+    */
+  private def bulkScan(ex: HttpExchange, method: String, parts: List[String],
+      body: () => String): Unit = (method, parts) match {
+    case ("POST", List(jid)) =>
+      val state = "<state>([^<]*)</state>".r.findFirstMatchIn(body()).fold("")(_.group(1))
+      jobStates.add(s"$jid $state")
+      respond(ex, jobXml(jid), contentType = "application/xml")
+    case ("POST", List(jid, "batch")) =>
+      scanSoql.put(jid, body())
+      respond(ex, batchXml("751ORIG", "Queued"), contentType = "application/xml")
+    case ("GET", List(_, "batch")) =>
+      respond(ex,
+        s"""<?xml version="1.0" encoding="UTF-8"?><batchInfoList xmlns="$JobNs">
+           |<batchInfo><id>751ORIG</id><state>NotProcessed</state></batchInfo>
+           |<batchInfo><id>751CHUNK</id><state>Completed</state></batchInfo>
+           |</batchInfoList>""".stripMargin, contentType = "application/xml")
+    case ("GET", List(_, "batch", "751CHUNK", "result")) =>
+      respond(ex,
+        s"""<?xml version="1.0" encoding="UTF-8"?><result-list xmlns="$JobNs">
+           |<result>752R1</result></result-list>""".stripMargin,
+        contentType = "application/xml")
+    case ("GET", List(jid, "batch", "751CHUNK", "result", "752R1")) =>
+      val soql = scanSoql(jid)
+      val fields = soql.stripPrefix("SELECT ").takeWhile(_ != ' ').split(',').toSeq
+      respond(ex, csv(fields, if (soql.contains("SystemModstamp >")) delta else v1),
+        contentType = "text/csv")
+    case other =>
+      respond(ex, s"""{"unexpected":"$other"}""", 404)
+  }
 
   override def beforeAll(): Unit = {
     super.beforeAll()
@@ -171,7 +227,10 @@ class CliLifecycleWireSpec extends SparkSpec with BeforeAndAfterAll {
             if (doc.contains("<operation>query")) {
               seen.put("pkChunkHeader",
                 ex.getRequestHeaders.getFirst("Sforce-Enable-PKChunking"))
-              respond(ex, "Contact is not supported to use PKChunking", 400,
+              if (bulkScans)
+                respond(ex, jobXml(s"750Q${queryJobs.incrementAndGet()}"),
+                  contentType = "application/xml")
+              else respond(ex, "Contact is not supported to use PKChunking", 400,
                 "text/plain")
             } else {
               seen.put("uploadJobDoc", doc)
@@ -192,6 +251,9 @@ class CliLifecycleWireSpec extends SparkSpec with BeforeAndAfterAll {
           case ("GET",
               "/services/async/52.0/job/750WIRE/batch/753WIRE/result") =>
             respond(ex, UploadResultCsv, contentType = "text/csv")
+          case (m, p) if p.startsWith("/services/async/52.0/job/750Q") =>
+            bulkScan(ex, m, p.stripPrefix("/services/async/52.0/job/").split('/').toList,
+              () => body())
           case other =>
             respond(ex, s"""{"unexpected":"$other"}""", 404)
         }
@@ -313,6 +375,41 @@ class CliLifecycleWireSpec extends SparkSpec with BeforeAndAfterAll {
       ss.next()
       assert(ss.getTimestamp(1) == ts("2024-01-06T09:30:00Z"))
     } finally conn.close()
+  }
+
+  test("bulkload and sync each close the Bulk query job they create") {
+    val conn = DriverManager.getConnection(jdbc)
+    try conn.createStatement().execute("""CREATE TABLE "wirebulk" (
+      |"Id" VARCHAR(18) NOT NULL PRIMARY KEY, "Name" VARCHAR(80),
+      |"NumEmployees" INT, "IsDeleted" BOOLEAN, "SystemModstamp" TIMESTAMP
+      |)""".stripMargin)
+    finally conn.close()
+    def run(verb: String, extra: String*): Unit = {
+      val before = queryJobs.get
+      val (code, out) = runCli(Seq(verb, "--config", cfgPath, "--object", "Contact",
+        "--jdbc", jdbc, "--dest", "wirebulk", "--pk", "Id",
+        "--ts-col", "SystemModstamp") ++ extra: _*)
+      assert(code == 0, out.mkString("\n"))
+      val created = (before + 1 to queryJobs.get).map(i => s"750Q$i")
+      assert(created.nonEmpty, s"$verb created no query job")
+      assert(created.forall(closes(_) == 1), s"$verb: $created vs $jobStates")
+    }
+    bulkScans = true
+    try {
+      run("bulkload")
+      run("sync", "--deleted-col", "IsDeleted")
+    } finally bulkScans = false
+    // the closed jobs' results were still read: the same landed table
+    // the REST path builds
+    val check = DriverManager.getConnection(jdbc)
+    try {
+      val rs = check.createStatement().executeQuery(
+        """SELECT "Id", "Name" FROM "wirebulk" ORDER BY "Id"""")
+      val got = Iterator.continually(rs).takeWhile(_.next())
+        .map(r => r.getString(1) -> r.getString(2)).toMap
+      assert(got == Map("003A" -> "alpha-renamed", "003C" -> "gamma",
+        "003D" -> "delta"), got.toString)
+    } finally check.close()
   }
 
   test("upload: CSV chunk through the bulk wire, per-record results") {

@@ -19,9 +19,10 @@ import graft.sources.salesforce.{CsvWire, HttpSfTransport, MockSfTransport, SfAp
   * `salesforce_bulk.py` job XML / batch CSV). Covers: describe-driven
   * schema, REST pagination via nextRecordsUrl, queryAll split,
   * COUNT()-with-WHERE, PK-chunked bulk scan (header, job XML, batch
-  * split, the plan-time batch-list wait and failed-batch refusal,
-  * NUL-stripped quoted CSV), connection-error retry, and the upload
-  * path incl. per-record UploadResult parsing.
+  * split, the plan-time batch-list wait and failed-batch refusal, the
+  * job close, NUL-stripped quoted CSV, the refusal of a non-CSV result
+  * body), connection-error retry, and the upload path incl.
+  * per-record UploadResult parsing.
   */
 class HttpSfTransportSpec extends SparkSpec with BeforeAndAfterAll {
 
@@ -130,6 +131,12 @@ class HttpSfTransportSpec extends SparkSpec with BeforeAndAfterAll {
   private val pendingListPolls = new java.util.concurrent.atomic.AtomicInteger
   /** "METHOD path" of every request, oldest first. */
   private val requests = new java.util.concurrent.ConcurrentLinkedQueue[String]
+  /** "jobId state" of every job state POST (a close), oldest first. */
+  private val jobStates = new java.util.concurrent.ConcurrentLinkedQueue[String]
+  private def closes(jobId: String): Int = {
+    import scala.jdk.CollectionConverters._
+    jobStates.asScala.count(_ == s"$jobId Closed")
+  }
 
   private def respond(ex: HttpExchange, body: String, status: Int = 200,
       contentType: String = "application/json"): Unit = {
@@ -231,12 +238,17 @@ class HttpSfTransportSpec extends SparkSpec with BeforeAndAfterAll {
             else if (body.contains("<object>Broken</object>"))
               respond(ex, jobXml("750FAIL"), contentType = "application/xml")
             else respond(ex, jobXml("750JOB"), contentType = "application/xml")
-          case ("POST", "/services/async/52.0/job/750JOB") =>
-            seen.put("jobStateDoc", readBody(ex))
-            respond(ex, jobXml("750JOB"), contentType = "application/xml")
           case ("POST", "/services/async/52.0/job/750UP") =>
             seen.put("uploadCloseDoc", readBody(ex))
             respond(ex, jobXml("750UP"), contentType = "application/xml")
+          case ("POST", p) if p.matches("/services/async/52\\.0/job/[^/]+") =>
+            val jid = p.split('/').last
+            val state = "<state>([^<]*)</state>".r.findFirstMatchIn(readBody(ex))
+              .fold("")(_.group(1))
+            jobStates.add(s"$jid $state")
+            // the failed-batch job's close fails too: the batch error must win
+            if (jid == "750FAIL") respond(ex, "close refused", 500, "text/plain")
+            else respond(ex, jobXml(jid), contentType = "application/xml")
           // ---- Bulk: batches
           case ("POST", "/services/async/52.0/job/750JOB/batch") =>
             seen.put("batchSoql", readBody(ex))
@@ -283,10 +295,10 @@ class HttpSfTransportSpec extends SparkSpec with BeforeAndAfterAll {
             respond(ex, CsvB, contentType = "text/csv")
           case ("GET", "/services/async/52.0/job/750UP/batch/753B/result") =>
             respond(ex, UploadResultCsv, contentType = "text/csv")
-          // ---- JSON-content-type job fixtures (content-type dispatch)
+          // ---- mis-declared result bodies: JSON or XML where CSV is due
           case ("GET", "/services/async/52.0/job/750JOB/batch/751J/result") =>
-            respond(ex, """["752J1"]""", contentType = "application/json")
-          case ("GET", "/services/async/52.0/job/750JOB/batch/751J/result/752J1") =>
+            respond(ex, ResultListXml, contentType = "application/xml")
+          case ("GET", "/services/async/52.0/job/750JOB/batch/751J/result/752R1") =>
             respond(ex,
               """[{"attributes":{"type":"Contact"},"Id":"005J","Name":"json row","NumEmployees":9},
                 |{"Id":"005K","Name":null,"NumEmployees":null}]""".stripMargin,
@@ -424,6 +436,7 @@ class HttpSfTransportSpec extends SparkSpec with BeforeAndAfterAll {
 
   test("pkChunks creates a PK-chunked job and returns spawned batch tokens") {
     seen.put("rejectChunking", false)
+    jobStates.clear()
     val chunks = transport().pkChunks("Contact", Seq("Id", "Name", "NumEmployees"),
       Some("NumEmployees > 0"), includeDeleted = false, chunkSize = 50000)
     assert(chunks == Seq("750JOB" -> "751A", "750JOB" -> "751B"))
@@ -435,9 +448,12 @@ class HttpSfTransportSpec extends SparkSpec with BeforeAndAfterAll {
       doc.contains("<contentType>CSV</contentType>"))
     assert(seen("batchSoql") ==
       "SELECT Id,Name,NumEmployees FROM Contact WHERE NumEmployees > 0")
+    // the batches have settled: the job is closed, once
+    assert(closes("750JOB") == 1 && jobStates.size == 1, jobStates.toString)
   }
 
   test("pkChunks fails the scan on a Failed batch, naming it and its stateMessage") {
+    jobStates.clear()
     val e = intercept[SfApiError] {
       transport().pkChunks("Broken", Seq("Id"), None, includeDeleted = false,
         chunkSize = 1000)
@@ -445,15 +461,20 @@ class HttpSfTransportSpec extends SparkSpec with BeforeAndAfterAll {
     assert(e.getMessage.contains(
       "batch 751BAD of job 750FAIL failed: InvalidBatch : Failed to process query"),
       e.getMessage)
+    // the job is closed all the same; the failed close rides along
+    assert(closes("750FAIL") == 1, jobStates.toString)
+    assert(e.getSuppressed.exists(_.getMessage.contains("close refused")))
   }
 
   test("the plan polls the batch list while chunks are Queued or InProgress, no job status") {
     pendingListPolls.set(0)
     requests.clear()
+    jobStates.clear()
     val chunks = transport().pkChunks("Pending", Seq("Id"), None,
       includeDeleted = false, chunkSize = 1000)
     assert(chunks == Seq("750WAIT" -> "751W"))
     assert(pendingListPolls.get == 3) // Queued, InProgress, then done
+    assert(closes("750WAIT") == 1 && jobStates.size == 1, jobStates.toString)
     assert(!requests.contains("GET /services/async/52.0/job/750WAIT"),
       requests.toString)
   }
@@ -498,6 +519,7 @@ class HttpSfTransportSpec extends SparkSpec with BeforeAndAfterAll {
       .load()
     assert(df.schema.fieldNames.toSeq == Seq("Id", "Name", "NumEmployees"))
     requests.clear()
+    jobStates.clear()
     val got = df.collect().map(r => r.getString(0)).sorted.toSeq
     assert(got == Seq("003A", "003B", "003C")) // both chunk batches landed
     // the plan read the batch list once; the readers went straight to
@@ -510,6 +532,9 @@ class HttpSfTransportSpec extends SparkSpec with BeforeAndAfterAll {
       r.matches("GET /services/async/52\\.0/job/[^/]+/batch/[^/]+")),
       sent.mkString("\n"))
     assert(df.rdd.getNumPartitions == 2) // one per server-side batch
+    // every query job the read created was closed exactly once
+    val created = requests.asScala.count(_ == "POST /services/async/52.0/job")
+    assert(created >= 1 && closes("750JOB") == created, jobStates.toString)
   }
 
   // ---- resilience -----------------------------------------------------
@@ -631,43 +656,33 @@ class HttpSfTransportSpec extends SparkSpec with BeforeAndAfterAll {
     assert(seen("uploadCloseDoc").toString.contains("<state>Closed</state>"))
   }
 
-  test("JSON job: result-id listing and record bodies decode by response type") {
-    // salesforce_bulk.py:440-459 — a JSON job answers the result-id
-    // listing with a JSON array and each result body with a JSON
-    // record array; the decoder must dispatch on the RESPONSE
-    // Content-Type, keep native scalar types, drop the attributes
-    // envelope, and carry explicit nulls through
-    val rows = transport().query("Contact", Seq("Id", "Name", "NumEmployees"),
-      None, None, includeDeleted = false, Some(("750JOB", "751J"))).toSeq
-    assert(rows.map(_("Id")) == Seq("005J", "005K"))
-    assert(rows.head("NumEmployees") == 9L)
-    assert(!rows.head.contains("attributes"))
-    assert(rows(1)("Name") == null && rows(1)("NumEmployees") == null)
-  }
-
-  test("upload outcomes parse from JSON and XML result bodies") {
-    // salesforce_bulk.py:498-546 — get_batch_results' three branches;
-    // structured error lists flatten to "statusCode:message"
-    val tr = transport()
-    val json = tr.batchResults("750UP", "753J")
-    assert(json == Seq(
-      graft.reverse.UploadResult("003J", true, true, ""),
-      graft.reverse.UploadResult("", false, false,
-        "DUPLICATE_VALUE:dup found")))
-    val xml = tr.batchResults("750UP", "753X")
-    assert(xml == Seq(
-      graft.reverse.UploadResult("003Y", true, false, ""),
-      graft.reverse.UploadResult("", false, false,
-        "INVALID_EMAIL_ADDRESS:bad email")))
-  }
-
-  test("createJob passes the contentType keyword into the job doc") {
-    transport().createJob("Contact", "insert", None, "JSON")
-    assert(seen("jobDoc").toString.contains("<contentType>JSON</contentType>"))
+  test("every Bulk job declares CSV; createJob refuses any other contentType") {
+    seen.put("rejectChunking", false)
+    transport().pkChunks("Contact", Seq("Id"), None, includeDeleted = false,
+      chunkSize = 1000)
+    val query = seen("jobDoc").toString
+    assert(query.contains("<operation>query</operation>") &&
+      query.contains("<contentType>CSV</contentType>"), query)
+    transport().createJob("Contact", "insert")
+    val upload = seen("jobDoc").toString
+    assert(upload.contains("<operation>insert</operation>") &&
+      upload.contains("<contentType>CSV</contentType>"), upload)
     val e = intercept[IllegalArgumentException] {
-      transport().createJob("Contact", "insert", None, "YAML")
+      transport().createJob("Contact", "insert", None, contentType = "JSON")
     }
-    assert(e.getMessage.contains("contentType"))
+    assert(e.getMessage.contains("'JSON'"), e.getMessage)
+  }
+
+  test("a JSON or XML body where CSV is expected fails the read, naming its type") {
+    val query = intercept[SfApiError] {
+      transport().query("Contact", Seq("Id", "Name", "NumEmployees"), None, None,
+        includeDeleted = false, Some("750JOB" -> "751J")).toSeq
+    }
+    assert(query.getMessage.contains("application/json"), query.getMessage)
+    val json = intercept[SfApiError](transport().batchResults("750UP", "753J"))
+    assert(json.getMessage.contains("application/json"), json.getMessage)
+    val xml = intercept[SfApiError](transport().batchResults("750UP", "753X"))
+    assert(xml.getMessage.contains("application/xml"), xml.getMessage)
   }
 
   test("reverse-path job types: upsert/delete/hardDelete job XML") {
@@ -718,20 +733,8 @@ class HttpSfTransportSpec extends SparkSpec with BeforeAndAfterAll {
   // ---- CSV decoder ----------------------------------------------------
 
   test("CsvWire handles quotes, escapes, embedded separators, CRLF") {
-    val rows = CsvWire.parseRows("a,b\r\n\"x,1\",\"he said \"\"hi\"\"\"\r\n,\n").toSeq
+    val rows = CsvWire.parseRows(
+      new java.io.StringReader("a,b\r\n\"x,1\",\"he said \"\"hi\"\"\"\r\n,\n")).toSeq
     assert(rows == Seq(Seq("a", "b"), Seq("x,1", "he said \"hi\""), Seq("", "")))
-  }
-
-  test("JsonWire fails loudly on a malformed mid-array element instead of truncating") {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val it = graft.sources.salesforce.JsonWire.parse(mapper,
-      new java.io.StringReader("""[{"Id":"1"}, null, {"Id":"2"}]"""))
-    assert(it.next() == Map("Id" -> "1"))
-    val ex = intercept[IllegalStateException](it.hasNext)
-    assert(ex.getMessage.contains("refusing to truncate"))
-    // the clean end-of-array path still terminates quietly
-    val ok = graft.sources.salesforce.JsonWire.parse(mapper,
-      new java.io.StringReader("""[{"Id":"3"}]"""))
-    assert(ok.toSeq == Seq(Map("Id" -> "3")))
   }
 }

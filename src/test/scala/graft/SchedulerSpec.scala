@@ -6,7 +6,7 @@ import org.apache.spark.sql.DataFrame
 import graft.sink.DerbyDialect
 import graft.sync._
 
-/** C5 parallel fan-out, C7 abort, C8 staging GC. */
+/** C5 parallel fan-out, C8 staging GC. */
 class SchedulerSpec extends SparkSpec {
   import spark.implicits._
 
@@ -36,7 +36,7 @@ class SchedulerSpec extends SparkSpec {
       Seq((base, base * 1.5, ts("2024-02-01 00:00:00")))
         .toDF("pk", "v", "modstamp")
 
-    val sched = new Scheduler(spark, _ => {
+    val sched = new Scheduler(_ => {
       val c = newConn()
       SyncWorker(new IncrementalSync(c, new DerbyDialect, new SyncStateStore(c)),
         new SyncStateStore(c), c)
@@ -54,18 +54,6 @@ class SchedulerSpec extends SparkSpec {
       assert(row.status == "ready")
       assert(row.syncuntil.contains(ts("2024-02-01 00:00:00")))
     }
-  }
-
-  test("abort cancels the job group and halts auto-sync (C7)") {
-    val c = newConn()
-    val state = new SyncStateStore(c)
-    state.register("tc", ts("2024-01-01 00:00:00"))
-    c.commit()
-    val sched = new Scheduler(spark, _ => null)
-    sched.abort("tc", state)
-    c.commit()
-    assert(state.get("tc").exists(_.status == "error"))
-    assert(!state.tryLock("tc"))
   }
 
   test("staging GC removes only dirs older than retention (C8)") {

@@ -135,8 +135,12 @@ class TypesSpec extends AnyFunSuite {
   }
 
   test("mapping CSV handles embedded quotes and commas") {
-    val cells = Mapping.splitCsvLine("\"a,b\",\"say \"\"hi\"\"\",plain")
-    assert(cells == Seq("a,b", "say \"hi\"", "plain"))
+    val parsed = Mapping.parse(Seq("\"FieldName\",\"Import\",\"Indexed\",\"Note\"",
+      "\"a,b\",\"say \"\"hi\"\"\",plain",
+      "\"Name\",\"1\",\"1\",\"say \"\"hi\"\", twice\""))
+    assert(parsed == Seq(
+      MappingEntry("a,b", importFlag = false, indexed = false, note = ""),
+      MappingEntry("Name", importFlag = true, indexed = true, note = "say \"hi\", twice")))
   }
 
   test("PG merge SQL golden strings (query_poll_table.py:119-152)") {
