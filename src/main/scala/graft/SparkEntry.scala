@@ -715,17 +715,17 @@ object SparkEntry {
     // estimator honesty: signature-agreement Jaccard vs exact shingle
     // Jaccard per LSH pair — may "12/16 agree" stand in for J≈0.75?
     "dedup_minhash_calibration" -> ((s, d) =>
-      DedupOps.minhashCalibrationFrom(t(s, d)("documents"),
+      DedupOps.minhashCalibration(t(s, d)("documents"),
         DedupGraph.minhashPairs(s, d))),
     // pair/cluster/survivor sensitivity at three Jaccard cuts (one
     // LSH+verify pass; per-cut components via the union-find path)
-    "dedup_threshold_sweep" -> ((s, d) => DedupOps.thresholdSweepFrom(
+    "dedup_threshold_sweep" -> ((s, d) => DedupOps.thresholdSweep(
       t(s, d)("documents"), DedupGraph.minhashPairs(s, d))),
     // LSH bucket-occupancy histogram (banding health monitor)
     "dedup_lsh_buckets" -> ((s, d) =>
       DedupOps.lshBucketCensus(t(s, d)("documents"))),
     // which provider feeds the duplicate mass: near-dup rate by source
-    "dedup_rate_by_source" -> ((s, d) => DedupOps.dupRateBySourceFrom(
+    "dedup_rate_by_source" -> ((s, d) => DedupOps.dupRateBySource(
       t(s, d)("documents"), DedupGraph.minhashPairs(s, d))),
     // does dedup skew the length distribution? dup rate by length decile
     "dedup_length_bias" -> ((s, d) => DedupOps.dupRateByLength(
@@ -892,7 +892,7 @@ object SparkEntry {
       DedupOps.minhashSignatures(t(s, d)("documents"), 16)
         .write.mode("overwrite").parquet(idxDir)
       val sigs = s.read.parquet(idxDir)
-      DedupOps.minhashLshIncrementalFromSigs(
+      DedupOps.minhashLshIncremental(
         sigs.filter(col("doc_id") % 10 === 0),
         sigs.filter(col("doc_id") % 10 =!= 0))
     }),
@@ -1063,64 +1063,64 @@ object SparkEntry {
     // real decode → nearest-neighbor thumbnail → pixel digest; the
     // oracle predicts the digest from the staged gradient formula
     "mm_image_resize" -> ((s, d) =>
-      Multimodal.resizeImages(s, media(s, d, Media.Png)).orderBy("doc_id")),
+      Multimodal.resizeImages(media(s, d, Media.Png)).orderBy("doc_id")),
     // lossy-codec path: real baseline-JPEG decode, full-raster
     // tolerance gate against the flat-block gradient + exact dims
     "mm_jpeg_decode" -> ((s, d) =>
-      Multimodal.decodeJpegCheck(s, media(s, d, Media.Jpg)).orderBy("doc_id")),
+      Multimodal.decodeJpegCheck(media(s, d, Media.Jpg)).orderBy("doc_id")),
     // full-raster pixel stats over the real decode — the oracle
     // predicts the exact per-image sum from the gradient formula, so
     // header-only or sampled decoders cannot pass
     "mm_pixel_stats" -> ((s, d) =>
-      Multimodal.pixelStats(s, media(s, d, Media.Png)).orderBy("doc_id")),
+      Multimodal.pixelStats(media(s, d, Media.Png)).orderBy("doc_id")),
     // per-image tonal entropy over the real decode (flat-frame screen)
-    "mm_image_entropy" -> ((s, d) => Multimodal.imageEntropy(s, media(s, d, Media.Png))),
+    "mm_image_entropy" -> ((s, d) => Multimodal.imageEntropy(media(s, d, Media.Png))),
     // letterbox/frame screen: border-ring vs interior brightness over
     // the real decode
     "mm_border_contrast" -> ((s, d) =>
-      Multimodal.borderContrast(s, media(s, d, Media.Png))),
+      Multimodal.borderContrast(media(s, d, Media.Png))),
     // 16-band grayscale tone census over the real PNG decode
     "mm_gray_histogram" -> ((s, d) =>
-      Multimodal.grayHistogram(s, media(s, d, Media.Png))),
+      Multimodal.grayHistogram(media(s, d, Media.Png))),
     // 2×2 tile brightness over the real decode: the letterbox/blank-
     // region localization probe (raster twin of the audio band energy)
     "mm_tile_brightness" -> ((s, d) =>
-      Multimodal.tileBrightness(s, media(s, d, Media.Png))),
+      Multimodal.tileBrightness(media(s, d, Media.Png))),
     // perceptual dHash fingerprints over the real PNG decode
     "mm_dhash" -> ((s, d) =>
-      Multimodal.imageDHash(s, media(s, d, Media.Png)).orderBy("doc_id")),
+      Multimodal.imageDHash(media(s, d, Media.Png)).orderBy("doc_id")),
     // perceptual near-dup image pairs (banded Hamming over dHash)
-    "mm_dhash_neardup" -> ((s, d) => Multimodal.imageNearDup(s, media(s, d, Media.Png))),
+    "mm_dhash_neardup" -> ((s, d) => Multimodal.imageNearDup(media(s, d, Media.Png))),
     // cross-modal join: image near-dup pairs scored by caption
     // agreement (fingerprint equality + distinct-token Jaccard) — the
     // duplicated-image / conflicting-caption labeling census
     "mm_caption_integrity" -> ((s, d) =>
-      Multimodal.captionIntegrity(s, media(s, d, Media.Png), t(s, d)("documents"))),
+      Multimodal.captionIntegrity(media(s, d, Media.Png), t(s, d)("documents"))),
     // perceptual audio fingerprints over the real PCM decode
     "mm_audio_hash" -> ((s, d) =>
-      Multimodal.audioDHash(s, media(s, d, Media.Wav)).orderBy("doc_id")),
+      Multimodal.audioDHash(media(s, d, Media.Wav)).orderBy("doc_id")),
     // RIFF header fields over the real audio decode
     "mm_audio_meta" -> ((s, d) =>
-      Multimodal.decodeAudioMeta(s, media(s, d, Media.Wav)).orderBy("doc_id")),
+      Multimodal.decodeAudioMeta(media(s, d, Media.Wav)).orderBy("doc_id")),
     // full-stream PCM sample stats over the real audio decode
     "mm_audio_stats" -> ((s, d) =>
-      Multimodal.audioStats(s, media(s, d, Media.Wav)).orderBy("doc_id")),
+      Multimodal.audioStats(media(s, d, Media.Wav)).orderBy("doc_id")),
     // quarter-band Σv² energy over the real PCM decode (trim signal)
     "mm_audio_energy" -> ((s, d) =>
-      Multimodal.audioBandEnergy(s, media(s, d, Media.Wav))),
+      Multimodal.audioBandEnergy(media(s, d, Media.Wav))),
     // near-full-scale sample census over the real PCM decode
     "mm_audio_clipping" -> ((s, d) =>
-      Multimodal.audioClipping(s, media(s, d, Media.Wav))),
+      Multimodal.audioClipping(media(s, d, Media.Wav))),
     // integer-exact zero-crossing census over the real PCM decode
-    "mm_audio_zcr" -> ((s, d) => Multimodal.audioZcr(s, media(s, d, Media.Wav))),
+    "mm_audio_zcr" -> ((s, d) => Multimodal.audioZcr(media(s, d, Media.Wav))),
     // NN resample of channel-0 PCM to a fixed 64-point grid + digest
     "mm_audio_resample" -> ((s, d) =>
-      Multimodal.resampleAudio(s, media(s, d, Media.Wav)).orderBy("doc_id")),
+      Multimodal.resampleAudio(media(s, d, Media.Wav)).orderBy("doc_id")),
     // real ISO-BMFF metadata parse over staged MP4 containers
     "mm_video_meta" -> ((s, d) =>
-      Multimodal.decodeVideoMeta(s, media(s, d, Media.Mp4)).orderBy("doc_id")),
+      Multimodal.decodeVideoMeta(media(s, d, Media.Mp4)).orderBy("doc_id")),
     "mm_frame_sample" -> ((s, d) =>
-      Multimodal.frameSample(Multimodal.decodeVideoMeta(s, media(s, d, Media.Mp4)))),
+      Multimodal.frameSample(Multimodal.decodeVideoMeta(media(s, d, Media.Mp4)))),
     // S4+K4+T2: staged CSV round trip in the reference dialect
     "s4_csv_roundtrip" -> ((s, d) => FileOps.csvRoundTrip(s,
       t(s, d)("part"), scratchDir(d, "s4")).orderBy("p_partkey")),
@@ -1372,7 +1372,7 @@ object SparkEntry {
     "w35_late_arrival" -> ((s, d) =>
       Relational.w35LateArrival(t(s, d)("events"))),
     // leading/trailing silence trim census over the real PCM decode
-    "mm_audio_silence" -> ((s, d) => Multimodal.audioSilence(s, media(s, d, Media.Wav))),
+    "mm_audio_silence" -> ((s, d) => Multimodal.audioSilence(media(s, d, Media.Wav))),
     // radius-1/2/3 reachability balls from modulus-sampled seeds
     "graph_bfs_ball" -> ((s, d) =>
       GraphOps.bfsBall(BasketGraph.pairs(s, d))),
@@ -1403,7 +1403,7 @@ object SparkEntry {
       TextOps.templateDetect(t(s, d)("documents"))),
     // x-gradient sharpness census over the real PNG decode
     "mm_gradient_energy" -> ((s, d) =>
-      Multimodal.gradientEnergy(s, media(s, d, Media.Png))),
+      Multimodal.gradientEnergy(media(s, d, Media.Png))),
     // period-7 Goertzel amplitude of demeaned daily revenue
     "a54_spectral_peak" -> ((s, d) =>
       Relational.a54SpectralPeak(t(s, d)("orders"))),
@@ -1938,12 +1938,12 @@ object SparkEntry {
     * audio (not applicable, kept non-null for the unified schema).
     */
   private def mmDecodeMetaQuery(s: SparkSession, d: String): DataFrame = {
-    val images = Multimodal.decodeImageMeta(s, media(s, d, Media.Png))
-    val audio = Multimodal.decodeAudioMeta(s, media(s, d, Media.Wav))
+    val images = Multimodal.decodeImageMeta(media(s, d, Media.Png))
+    val audio = Multimodal.decodeAudioMeta(media(s, d, Media.Wav))
       .select(col("doc_id"), col("pcm_bytes").as("n_bytes"),
         lit("audio").as("media_type"), lit(0).as("width"),
         lit(0).as("height"), col("n_frames").cast("int").as("n_frames"))
-    val video = Multimodal.decodeVideoMeta(s, media(s, d, Media.Mp4))
+    val video = Multimodal.decodeVideoMeta(media(s, d, Media.Mp4))
       .select(col("doc_id"),
         (col("width").cast("long") * col("height") * 3L * col("n_frames"))
           .as("n_bytes"),

@@ -198,10 +198,6 @@ object GraftFunctions {
   def vec_norm(a: Column): Column =
     org.apache.spark.sql.functions.sqrt(vec_dot(a, a))
 
-  /** cosine(a, b) with the canonical dot/(|a|*|b|) shape. */
-  def vec_cosine(a: Column, b: Column): Column =
-    vec_dot(a, b) / (vec_norm(a) * vec_norm(b))
-
   /** numPlanes random-hyperplane sign bits in one codegen'd sweep —
     * the LSH signature kernel (dim inferred from the array).
     */

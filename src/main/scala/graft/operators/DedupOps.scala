@@ -165,14 +165,9 @@ object DedupOps {
     * candidate-scale, so the touched-id frame broadcasts onto the
     * corpus scan; one source-keyed count each side.
     */
-  def dupRateBySource(documents: DataFrame): DataFrame =
-    dupRateBySourceFrom(documents, minhashLsh(documents))
-
-  /** [[dupRateBySource]] over a pre-built verified pair frame. */
-  def dupRateBySourceFrom(documents: DataFrame, verified: DataFrame): DataFrame = {
-    val pairs = verified
-    val touched = pairs.select(col("doc_a").as("doc_id"))
-      .unionByName(pairs.select(col("doc_b").as("doc_id")))
+  def dupRateBySource(documents: DataFrame, verified: DataFrame): DataFrame = {
+    val touched = verified.select(col("doc_a").as("doc_id"))
+      .unionByName(verified.select(col("doc_b").as("doc_id")))
       .distinct()
     val perSource = documents.groupBy("source")
       .agg(count(lit(1)).as("n_docs"))
@@ -206,14 +201,7 @@ object DedupOps {
     * three identical rows. Output is |thresholds| rows at any corpus
     * size.
     */
-  def thresholdSweep(documents: DataFrame,
-      thresholds: Seq[Double] = Seq(0.95, 0.97, 0.985)): DataFrame =
-    thresholdSweepFrom(documents, minhashLsh(documents), thresholds)
-
-  /** [[thresholdSweep]] over a pre-built (possibly shared/cached)
-    * verified pair frame carrying `jaccard`.
-    */
-  def thresholdSweepFrom(documents: DataFrame, verified: DataFrame,
+  def thresholdSweep(documents: DataFrame, verified: DataFrame,
       thresholds: Seq[Double] = Seq(0.95, 0.97, 0.985)): DataFrame = {
     val pairs = verified.select(col("doc_a"), col("doc_b"), col("jaccard"))
     val nDocs = documents.agg(count(lit(1)).as("n_docs"))
@@ -241,22 +229,15 @@ object DedupOps {
     * exact Jaccards cross a round(…,9) decimal barrier before the
     * order-free mean. One pair-keyed join against the signature frame
     * per side — candidate-scale, not corpus-scale.
+    *
+    * `pairsIn` is an ALREADY-BUILT verified pair set, the shared-pair
+    * convention of the other consumers ([[thresholdSweep]],
+    * [[dupRateBySource]]). It must be [[minhashLsh]] output under the
+    * SAME `numHashes` (the signature join below re-derives the per-pair
+    * agreement against exactly that family), which the shared cache
+    * guarantees.
     */
-  def minhashCalibration(documents: DataFrame,
-      numHashes: Int = 16): DataFrame =
-    minhashCalibrationFrom(documents,
-      minhashLsh(documents, numHashes), numHashes)
-
-  /** [[minhashCalibration]] over an ALREADY-BUILT verified pair set —
-    * the shared-pair-graph convention of the other registered
-    * consumers ([[thresholdSweepFrom]], [[dupRateBySourceFrom]]):
-    * the calibration census was the one minhash consumer still
-    * re-running the full LSH+verify pipeline per invocation. `pairs`
-    * must be [[minhashLsh]] output under the SAME `numHashes` (the
-    * signature join below re-derives the per-pair agreement against
-    * exactly that family), which the shared cache guarantees.
-    */
-  def minhashCalibrationFrom(documents: DataFrame, pairsIn: DataFrame,
+  def minhashCalibration(documents: DataFrame, pairsIn: DataFrame,
       numHashes: Int = 16): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     val pairs = pairsIn.select("doc_a", "doc_b", "jaccard")
@@ -290,19 +271,12 @@ object DedupOps {
     * `index`: a [[minhashSignatures]]-shaped frame (doc_id, m0..m{k-1})
     * — typically read back from storage. Returns
     * (new_id, corpus_id, est_jaccard) pairs with est_jaccard ≥ minAgree.
+    * `newSignatures` is the new slice's [[minhashSignatures]] under
+    * the same `numHashes`; both sides may be sliced from ONE signature
+    * pass over a combined corpus, which halves the dominant
+    * tokenize+hash cost vs two independent passes.
     */
-  def minhashLshIncremental(newDocs: DataFrame, index: DataFrame,
-      numHashes: Int = 16, rowsPerBand: Int = 2,
-      minAgree: Double = 0.5): DataFrame =
-    minhashLshIncrementalFromSigs(minhashSignatures(newDocs, numHashes),
-      index, numHashes, rowsPerBand, minAgree)
-
-  /** [[minhashLshIncremental]] when the NEW side's signatures are also
-    * already computed — e.g. both sides sliced from ONE signature pass
-    * over a combined corpus (the verification harness does this; it
-    * halves the dominant tokenize+hash cost vs two independent passes).
-    */
-  def minhashLshIncrementalFromSigs(newSignatures: DataFrame, index: DataFrame,
+  def minhashLshIncremental(newSignatures: DataFrame, index: DataFrame,
       numHashes: Int = 16, rowsPerBand: Int = 2,
       minAgree: Double = 0.5): DataFrame = {
     val numBands = numHashes / rowsPerBand

@@ -7,27 +7,103 @@ import org.apache.spark.sql.types._
 
 /** Multimodal column plumbing: image/audio/video payloads are opaque
   * `binary` columns accompanied by typed metadata. The decode /
-  * feature-extract step is the per-partition escape hatch
-  * (`mapPartitions`) — the ONE place imperative code is warranted,
-  * because codec libraries are record-at-a-time.
+  * feature-extract step is the per-partition escape hatch — the ONE
+  * place imperative code is warranted, because codec libraries are
+  * record-at-a-time.
   *
-  * ALL three modalities decode for REAL from container bytes:
-  * - IMAGE: the JDK ships PNG/JPEG codecs in `javax.imageio`, so
-  *   [[decodeImageMeta]] reads actual pixel dimensions (ingested at
-  *   scale via Spark's `binaryFile` source — one task streams many
-  *   files, no shuffle).
-  * - AUDIO: `javax.sound.sampled` parses WAV/AIFF natively, so
-  *   [[decodeAudioMeta]] reads actual sample rate / channels / frame
-  *   count from the RIFF header.
+  * Every per-document kernel runs through ONE runner, [[perDoc]]: it
+  * selects (doc_id, content), runs the one narrow `mapPartitions` (no
+  * shuffle; at 100 TB the partitions follow the `binaryFile` splits and
+  * each task streams its files through the codec one at a time) and
+  * types the rows. Each modality has one decode step on top of it, and
+  * that step owns the fail-loudly rule, so no kernel can skip it:
+  * - IMAGE: [[perImage]] decodes each payload once with the JDK's
+  *   `javax.imageio` (PNG/JPEG need no external libs) into a [[Gray]]
+  *   view whose `apply(x, y)` is the one pixel rule; an undecodable
+  *   payload fails the task.
+  * - AUDIO: [[perClip]] decodes each WAV once with `javax.sound.sampled`
+  *   ([[pcm16le]]) into interleaved signed 16-bit samples, the one
+  *   sample rule; a non-16-bit-LE or sample-less clip fails the task.
   * - VIDEO: the JDK has no video CODEC, but container METADATA needs
   *   none — [[decodeVideoMeta]] walks the ISO-BMFF (MP4) box tree in
-  *   plain byte arithmetic: `moov/trak/tkhd` for the 16.16-fixed
-  *   width/height, `moov/trak/mdia/mdhd` for timescale/duration, and
-  *   `.../minf/stbl/stts` entry-sum for the frame count. True pixel
-  *   decode would require an external codec and stays out of scope;
-  *   everything header-readable is read for real.
+  *   plain byte arithmetic ([[parseMp4Meta]]): `moov/trak/tkhd` for the
+  *   16.16-fixed width/height, `moov/trak/mdia/mdhd` for
+  *   timescale/duration, and `.../minf/stbl/stts` entry-sum for the
+  *   frame count. True pixel decode would require an external codec and
+  *   stays out of scope; everything header-readable is read for real.
   */
 object Multimodal {
+
+  /** The one per-document runner: `docs`' (doc_id, content) rows
+    * through `kernel` in one narrow mapPartitions, typed by `schema`.
+    */
+  private def perDoc(docs: DataFrame, schema: StructType)(
+      kernel: (Long, Array[Byte]) => Iterator[Row]): DataFrame =
+    docs.select(col("doc_id"), col("content")).mapPartitions { rows =>
+      rows.flatMap(r => kernel(r.getLong(0), r.getAs[Array[Byte]](1)))
+    }(Encoders.row(schema))
+
+  /** A decoded image seen through the one pixel rule: `apply(x, y)` is
+    * the low (blue) byte of pixel (x, y) — the gray value of every
+    * staged render. Pixels are read from the decoded image on demand,
+    * never copied out, so a kernel that samples pays only for its
+    * samples.
+    */
+  private final class Gray(img: java.awt.image.BufferedImage) {
+    val w: Int = img.getWidth
+    val h: Int = img.getHeight
+    def apply(x: Int, y: Int): Int = img.getRGB(x, y) & 0xff
+  }
+
+  /** [[perDoc]] over images: each payload decoded once, an undecodable
+    * one failing loudly.
+    */
+  private def perImage(images: DataFrame, schema: StructType)(
+      kernel: (Long, Gray) => Iterator[Row]): DataFrame =
+    perDoc(images, schema) { (id, bytes) =>
+      javax.imageio.ImageIO.setUseCache(false) // in-memory decode, no tmp spill
+      val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
+      require(img != null, s"undecodable image payload for doc $id")
+      kernel(id, new Gray(img))
+    }
+
+  /** A decoded clip: `s` holds the interleaved signed 16-bit samples
+    * (frame f, channel c at f·channels + c).
+    */
+  private final case class Pcm(s: Array[Int], channels: Int)
+
+  /** Decode a WAV payload to samples, asserting 16-bit little-endian
+    * signed PCM FIRST (the sample rule below would silently produce
+    * wrong values, not an error, on an 8/24-bit, big-endian or float
+    * clip) and at least one complete sample (silently emitting sentinel
+    * stats for an empty stream would let a truncated or header-only
+    * clip pass as "quiet audio").
+    */
+  private def pcm16le(payload: Array[Byte], docId: Long): Pcm = {
+    val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
+      new java.io.ByteArrayInputStream(payload))
+    val fmt = ais.getFormat
+    require(fmt.getEncoding ==
+        javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED &&
+        fmt.getSampleSizeInBits == 16 && !fmt.isBigEndian,
+      s"doc $docId: expected 16-bit LE signed PCM, got $fmt")
+    val data = ais.readAllBytes()
+    ais.close()
+    require(data.length >= 2, s"doc $docId: PCM stream has ${data.length} bytes — " +
+      "no complete PCM frame (truncated or header-only WAV)")
+    val s = new Array[Int](data.length / 2)
+    var j = 0
+    while (j < s.length) {
+      s(j) = (data(2 * j + 1) << 8) | (data(2 * j) & 0xff)
+      j += 1
+    }
+    Pcm(s, fmt.getChannels)
+  }
+
+  /** [[perDoc]] over WAV clips: each payload decoded once by [[pcm16le]]. */
+  private def perClip(audio: DataFrame, schema: StructType)(
+      kernel: (Long, Pcm) => Iterator[Row]): DataFrame =
+    perDoc(audio, schema)((id, bytes) => kernel(id, pcm16le(bytes, id)))
 
   /** Schema of a decoded media record. */
   val mediaMetaSchema: StructType = StructType(Seq(
@@ -39,28 +115,15 @@ object Multimodal {
     StructField("n_frames", IntegerType)))
 
   /** REAL image decode over (doc_id, content) binary rows: actual
-    * width/height read from the container bytes with `javax.imageio`
-    * (PNG/JPEG need no external libs). `n_bytes` reports the DECODED
-    * RGB buffer size (w·h·3) — the decode-verifiable quantity; the
-    * container byte size is compression-dependent and carried by the
-    * `binaryFile` source's `length` column for callers that want it.
-    * Narrow mapPartitions, no shuffle; at 100 TB the partition count
-    * follows the binaryFile splits and each task streams files through
-    * the codec one at a time.
+    * width/height read from the container bytes. `n_bytes` reports the
+    * DECODED RGB buffer size (w·h·3) — the decode-verifiable quantity;
+    * the container byte size is compression-dependent and carried by
+    * the `binaryFile` source's `length` column for callers that want it.
     */
-  def decodeImageMeta(spark: SparkSession, images: DataFrame): DataFrame = {
-    val enc = Encoders.row(mediaMetaSchema)
-    images.select(col("doc_id"), col("content")).mapPartitions { rows =>
-      javax.imageio.ImageIO.setUseCache(false) // in-memory decode, no tmp spill
-      rows.map { r =>
-        val img = javax.imageio.ImageIO.read(
-          new java.io.ByteArrayInputStream(r.getAs[Array[Byte]](1)))
-        require(img != null, s"undecodable image payload for doc ${r.getLong(0)}")
-        Row(r.getLong(0), img.getWidth.toLong * img.getHeight * 3L,
-          "image", img.getWidth, img.getHeight, 1)
-      }
-    }(enc)
-  }
+  def decodeImageMeta(images: DataFrame): DataFrame =
+    perImage(images, mediaMetaSchema) { (id, g) =>
+      Iterator.single(Row(id, g.w.toLong * g.h * 3L, "image", g.w, g.h, 1))
+    }
 
   /** A media modality staged for the decoders: the docs whose UTF-8
     * text length % 3 == `residue` (the modality rule) render as real
@@ -86,9 +149,12 @@ object Multimodal {
       * full-raster decode to the formula.
       */
     case object Jpg extends Media("jpg", 0) {
+      /** Gray of pixel (x, y) in doc `id`'s render. */
+      private[Multimodal] def gray(id: Long, x: Int, y: Int): Int =
+        ((id * 17 + (x / 8) * 31 + (y / 8) * 7) % 256).toInt
+
       private[Multimodal] def render(id: Long, file: java.io.File): Unit =
-        writeGray(file, "jpg", (id % 56 + 8).toInt, (id % 40 + 8).toInt)(
-          (x, y) => ((id * 17 + (x / 8) * 31 + (y / 8) * 7) % 256).toInt)
+        writeGray(file, "jpg", (id % 56 + 8).toInt, (id % 40 + 8).toInt)(gray(id, _, _))
     }
 
     /** 16-bit PCM WAV, rate = 8000 + id%3·4000, channels = id%2+1,
@@ -187,43 +253,30 @@ object Multimodal {
     StructField("checksum", LongType)))
 
   /** REAL thumbnail pipeline over (doc_id, content) binary rows:
-    * `javax.imageio` decode, then a nearest-neighbor resample to a
-    * fixed (outW × outH) target, then a pixel-sum digest of the
-    * thumbnail's low byte. Nearest-neighbor (source pixel
-    * ⌊i·w/outW⌋, ⌊j·h/outH⌋) is chosen over Graphics2D interpolation
-    * deliberately: NN is pure integer arithmetic, so the digest is
-    * engine- and platform-exact and an oracle can predict it —
-    * interpolated filters round differently across JVMs/toolkits.
-    * Narrow mapPartitions over binaryFile splits, no shuffle; the
-    * per-task cost is decode + outW·outH samples per image, the
+    * decode, then a nearest-neighbor resample to a fixed (outW × outH)
+    * target, then a pixel-sum digest of the thumbnail. Nearest-neighbor
+    * (source pixel ⌊i·w/outW⌋, ⌊j·h/outH⌋) is chosen over Graphics2D
+    * interpolation deliberately: NN is pure integer arithmetic, so the
+    * digest is engine- and platform-exact and an oracle can predict it
+    * — interpolated filters round differently across JVMs/toolkits.
+    * The per-task cost is decode + outW·outH samples per image, the
     * batch-inference preprocessing shape at 100 TB.
     */
-  def resizeImages(spark: SparkSession, images: DataFrame,
-      outW: Int = 16, outH: Int = 12): DataFrame = {
-    val enc = Encoders.row(imageResizeSchema)
-    images.select(col("doc_id"), col("content")).mapPartitions { rows =>
-      javax.imageio.ImageIO.setUseCache(false)
-      rows.map { r =>
-        val img = javax.imageio.ImageIO.read(
-          new java.io.ByteArrayInputStream(r.getAs[Array[Byte]](1)))
-        require(img != null, s"undecodable image payload for doc ${r.getLong(0)}")
-        val w = img.getWidth
-        val h = img.getHeight
-        var sum = 0L
-        var j = 0
-        while (j < outH) {
-          val y = j * h / outH
-          var i = 0
-          while (i < outW) {
-            sum += (img.getRGB(i * w / outW, y) & 0xff)
-            i += 1
-          }
-          j += 1
+  def resizeImages(images: DataFrame, outW: Int = 16, outH: Int = 12): DataFrame =
+    perImage(images, imageResizeSchema) { (id, g) =>
+      var sum = 0L
+      var j = 0
+      while (j < outH) {
+        val y = j * g.h / outH
+        var i = 0
+        while (i < outW) {
+          sum += g(i * g.w / outW, y)
+          i += 1
         }
-        Row(r.getLong(0), w, h, outW, outH, sum)
+        j += 1
       }
-    }(enc)
-  }
+      Iterator.single(Row(id, g.w, g.h, outW, outH, sum))
+    }
 
   /** Schema of a JPEG decode-verification record: exact container
     * dims plus a full-raster tolerance gate against the staged
@@ -244,37 +297,22 @@ object Multimodal {
     * quantization error to a few counts, so the gate proves the full
     * raster was actually decoded (garbage, header-only, or sampled
     * decodes blow the bound) while staying implementation-agnostic.
-    * Narrow mapPartitions over binaryFile splits, no shuffle.
     */
-  def decodeJpegCheck(spark: SparkSession, images: DataFrame,
-      tol: Int = 12): DataFrame = {
-    val enc = Encoders.row(jpegCheckSchema)
-    images.select(col("doc_id"), col("content")).mapPartitions { rows =>
-      javax.imageio.ImageIO.setUseCache(false)
-      rows.map { r =>
-        val id = r.getLong(0)
-        val img = javax.imageio.ImageIO.read(
-          new java.io.ByteArrayInputStream(r.getAs[Array[Byte]](1)))
-        require(img != null, s"undecodable jpeg payload for doc $id")
-        val w = img.getWidth
-        val h = img.getHeight
-        var maxDiff = 0
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) {
-            val want = ((id * 17 + (x / 8) * 31 + (y / 8) * 7) % 256).toInt
-            val got = img.getRGB(x, y) & 0xff
-            val d = math.abs(got - want)
-            if (d > maxDiff) maxDiff = d
-            x += 1
-          }
-          y += 1
+  def decodeJpegCheck(images: DataFrame, tol: Int = 12): DataFrame =
+    perImage(images, jpegCheckSchema) { (id, g) =>
+      var maxDiff = 0
+      var y = 0
+      while (y < g.h) {
+        var x = 0
+        while (x < g.w) {
+          val d = math.abs(g(x, y) - Media.Jpg.gray(id, x, y))
+          if (d > maxDiff) maxDiff = d
+          x += 1
         }
-        Row(id, w, h, maxDiff <= tol)
+        y += 1
       }
-    }(enc)
-  }
+      Iterator.single(Row(id, g.w, g.h, maxDiff <= tol))
+    }
 
   /** Schema of a per-image pixel-statistics record (full-resolution
     * channel stats over the REAL decoded raster).
@@ -287,102 +325,52 @@ object Multimodal {
     StructField("px_min", IntegerType),
     StructField("px_max", IntegerType)))
 
-  /** Per-image pixel statistics over the REAL decoded raster —
-    * sum/min/max of the low channel byte across EVERY pixel, the
-    * brightness/degenerate-image screen of a vision-data pipeline
-    * (all-black / all-white / constant images are filtered before
-    * training). Unlike [[decodeImageMeta]] (header-verifiable) and
-    * like [[resizeImages]], this proves the decoder touched the full
-    * raster: the oracle predicts the exact sum from the staged
-    * gradient formula, so a header-only or sampled implementation
-    * cannot pass. Narrow mapPartitions over binaryFile splits, no
-    * shuffle; cost is one w·h sweep per image.
+  /** Per-image 16-band census of the gray byte (band = gray >> 4):
+    * (doc_id, band, n_px), empty bands absent — ≤16 rows per image.
     */
-  /** Corpus-level grayscale tone histogram over the REAL decoded
-    * rasters — 16 bands of the low channel byte, the exposure/contrast
-    * census a vision pipeline runs before normalization decisions
-    * (a spike at band 0/15 means clipped images; a single hot band
-    * means near-constant rasters). Each task folds ALL its images
-    * into ONE fixed 16-cell array before emitting (map-side
-    * pre-aggregation in the decode pass itself — the shuffle carries
-    * ≤16 rows per task no matter how many pixels were read), then a
-    * band-keyed sum combines tasks. Decode failures fail loudly, the
-    * [[pixelStats]] discipline.
-    */
-  def grayHistogram(spark: SparkSession, images: DataFrame): DataFrame = {
-    val enc = Encoders.row(StructType(Seq(
-      StructField("band", IntegerType, nullable = false),
-      StructField("n_px", LongType, nullable = false))))
-    images.select(col("doc_id"), col("content")).mapPartitions { rows =>
-      javax.imageio.ImageIO.setUseCache(false)
+  private def grayBands(images: DataFrame): DataFrame =
+    perImage(images, StructType(Seq(
+        StructField("doc_id", LongType, nullable = false),
+        StructField("band", IntegerType, nullable = false),
+        StructField("n_px", LongType, nullable = false)))) { (id, g) =>
       val acc = new Array[Long](16)
-      rows.foreach { r =>
-        val img = javax.imageio.ImageIO.read(
-          new java.io.ByteArrayInputStream(r.getAs[Array[Byte]](1)))
-        require(img != null, s"undecodable image payload for doc ${r.getLong(0)}")
-        val w = img.getWidth
-        val h = img.getHeight
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) {
-            acc((img.getRGB(x, y) & 0xff) >> 4) += 1L
-            x += 1
-          }
-          y += 1
+      var y = 0
+      while (y < g.h) {
+        var x = 0
+        while (x < g.w) {
+          acc(g(x, y) >> 4) += 1L
+          x += 1
         }
+        y += 1
       }
-      acc.iterator.zipWithIndex.filter(_._1 > 0L)
-        .map { case (n, b) => Row(b, n) }
-    }(enc)
+      (0 until 16).iterator.filter(acc(_) > 0L).map(b => Row(id, b, acc(b)))
+    }
+
+  /** Corpus-level grayscale tone histogram over the REAL decoded
+    * rasters — 16 bands of the gray byte, the exposure/contrast census
+    * a vision pipeline runs before normalization decisions (a spike at
+    * band 0/15 means clipped images; a single hot band means
+    * near-constant rasters): [[grayBands]] summed by band. Spark's
+    * partial aggregation folds each task's per-image bands to ≤16 rows
+    * before the band-keyed shuffle, no matter how many pixels were read.
+    */
+  def grayHistogram(images: DataFrame): DataFrame =
+    grayBands(images)
       .groupBy("band")
       .agg(sum(col("n_px")).as("n_pixels"))
-      .select(col("band"), col("n_pixels"))
       .orderBy("band")
-  }
 
   /** Per-image tonal entropy over the REAL decode — the flat/degenerate
     * frame screen of image curation (a solid or two-tone frame scores
     * near 0 bits; a busy natural raster approaches the 4-bit ceiling of
-    * the 16-band census): Shannon entropy of the [[grayHistogram]]
-    * bands, per image. Decode is the same narrow mapPartitions pass
-    * (≤16 rows out per image); each band's −p·log₂p term crosses a
-    * round(…,12) barrier before the exact-decimal per-image sum (the
-    * TextOps.tokenEntropy discipline), so partial-aggregation order
-    * can never move the hash.
+    * the 16-band census): Shannon entropy of the [[grayBands]] bands,
+    * per image. Each band's −p·log₂p term crosses a round(…,12) barrier
+    * before the exact-decimal per-image sum (the TextOps.tokenEntropy
+    * discipline), so partial-aggregation order can never move the hash.
     */
-  def imageEntropy(spark: SparkSession, images: DataFrame): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
-    val enc = Encoders.row(StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
-      StructField("band", IntegerType, nullable = false),
-      StructField("n_px", LongType, nullable = false))))
-    val perBand = images.select(col("doc_id"), col("content"))
-      .mapPartitions { rows =>
-        javax.imageio.ImageIO.setUseCache(false)
-        rows.flatMap { r =>
-          val id = r.getLong(0)
-          val img = javax.imageio.ImageIO.read(
-            new java.io.ByteArrayInputStream(r.getAs[Array[Byte]](1)))
-          require(img != null, s"undecodable image payload for doc $id")
-          val acc = new Array[Long](16)
-          val w = img.getWidth
-          val h = img.getHeight
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              acc((img.getRGB(x, y) & 0xff) >> 4) += 1L
-              x += 1
-            }
-            y += 1
-          }
-          acc.iterator.zipWithIndex.filter(_._1 > 0L)
-            .map { case (n, b) => Row(id, b, n) }
-        }
-      }(enc)
+  def imageEntropy(images: DataFrame): DataFrame = {
     val tot = Window.partitionBy("doc_id")
-    perBand
+    grayBands(images)
       .withColumn("p", col("n_px").cast("double") /
         sum(col("n_px")).over(tot).cast("double"))
       .withColumn("contrib",
@@ -403,118 +391,92 @@ object Multimodal {
     * degenerating gracefully on 1-pixel-wide rasters (everything lands
     * in the left tiles, which then simply don't exist on either
     * engine). Exact integer sums; the per-tile mean divides behind a
-    * round(…,6) barrier. Narrow mapPartitions, ≤4 rows per image.
+    * round(…,6) barrier. ≤4 rows per image.
     */
-  def tileBrightness(spark: SparkSession, images: DataFrame): DataFrame = {
-    val enc = Encoders.row(StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
-      StructField("tile", IntegerType, nullable = false),
-      StructField("n_px", LongType, nullable = false),
-      StructField("px_sum", LongType, nullable = false))))
-    images.select(col("doc_id"), col("content")).mapPartitions { rows =>
-      javax.imageio.ImageIO.setUseCache(false)
-      rows.flatMap { r =>
-        val img = javax.imageio.ImageIO.read(
-          new java.io.ByteArrayInputStream(r.getAs[Array[Byte]](1)))
-        require(img != null, s"undecodable image payload for doc ${r.getLong(0)}")
-        val w = img.getWidth
-        val h = img.getHeight
-        val n = new Array[Long](4)
-        val s = new Array[Long](4)
-        var y = 0
-        while (y < h) {
-          val ty = y * 2 / h
-          var x = 0
-          while (x < w) {
-            val t = ty * 2 + x * 2 / w
-            n(t) += 1L
-            s(t) += (img.getRGB(x, y) & 0xff).toLong
-            x += 1
-          }
-          y += 1
+  def tileBrightness(images: DataFrame): DataFrame =
+    perImage(images, StructType(Seq(
+        StructField("doc_id", LongType, nullable = false),
+        StructField("tile", IntegerType, nullable = false),
+        StructField("n_px", LongType, nullable = false),
+        StructField("px_sum", LongType, nullable = false)))) { (id, g) =>
+      val n = new Array[Long](4)
+      val s = new Array[Long](4)
+      var y = 0
+      while (y < g.h) {
+        val ty = y * 2 / g.h
+        var x = 0
+        while (x < g.w) {
+          val t = ty * 2 + x * 2 / g.w
+          n(t) += 1L
+          s(t) += g(x, y)
+          x += 1
         }
-        (0 until 4).iterator.filter(n(_) > 0L)
-          .map(t => Row(r.getLong(0), t, n(t), s(t)))
+        y += 1
       }
-    }(enc)
-      .withColumn("mean_px",
+      (0 until 4).iterator.filter(n(_) > 0L).map(t => Row(id, t, n(t), s(t)))
+    }.withColumn("mean_px",
         round(col("px_sum").cast("double") / col("n_px").cast("double"), 6))
       .orderBy("doc_id", "tile")
-  }
 
-  def pixelStats(spark: SparkSession, images: DataFrame): DataFrame = {
-    val enc = Encoders.row(pixelStatsSchema)
-    images.select(col("doc_id"), col("content")).mapPartitions { rows =>
-      javax.imageio.ImageIO.setUseCache(false)
-      rows.map { r =>
-        val img = javax.imageio.ImageIO.read(
-          new java.io.ByteArrayInputStream(r.getAs[Array[Byte]](1)))
-        require(img != null, s"undecodable image payload for doc ${r.getLong(0)}")
-        val w = img.getWidth
-        val h = img.getHeight
-        var sum = 0L
-        var mn = 255
-        var mx = 0
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) {
-            val v = img.getRGB(x, y) & 0xff
-            sum += v
-            if (v < mn) mn = v
-            if (v > mx) mx = v
-            x += 1
-          }
-          y += 1
+  /** Per-image pixel statistics over the REAL decoded raster —
+    * sum/min/max of the gray byte across EVERY pixel, the
+    * brightness/degenerate-image screen of a vision-data pipeline
+    * (all-black / all-white / constant images are filtered before
+    * training). Unlike [[decodeImageMeta]] (header-verifiable) and
+    * like [[resizeImages]], this proves the decoder touched the full
+    * raster: the oracle predicts the exact sum from the staged
+    * gradient formula, so a header-only or sampled implementation
+    * cannot pass. Cost is one w·h sweep per image.
+    */
+  def pixelStats(images: DataFrame): DataFrame =
+    perImage(images, pixelStatsSchema) { (id, g) =>
+      var sum = 0L
+      var mn = 255
+      var mx = 0
+      var y = 0
+      while (y < g.h) {
+        var x = 0
+        while (x < g.w) {
+          val v = g(x, y)
+          sum += v
+          if (v < mn) mn = v
+          if (v > mx) mx = v
+          x += 1
         }
-        Row(r.getLong(0), w, h, sum, mn, mx)
+        y += 1
       }
-    }(enc)
-  }
+      Iterator.single(Row(id, g.w, g.h, sum, mn, mx))
+    }
 
   /** Horizontal gradient energy over the REAL decode — the
     * sharpness/blur QA screen (a Tenengrad-style focus measure,
     * restricted to the x-gradient so it is integer-exact): the sum of
     * |p(x+1,y) − p(x,y)| over every horizontally adjacent pixel pair,
     * plus the mean per pair. Blurry or flat renders score low; the
-    * staged ramp pattern gives a closed-form oracle. Same narrow
-    * decode-pass shape as [[pixelStats]].
+    * staged ramp pattern gives a closed-form oracle.
     */
-  def gradientEnergy(spark: SparkSession, images: DataFrame): DataFrame = {
-    val enc = Encoders.row(StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
-      StructField("width", IntegerType, nullable = false),
-      StructField("height", IntegerType, nullable = false),
-      StructField("n_pairs", LongType, nullable = false),
-      StructField("grad_sum", LongType, nullable = false))))
-    images.select(col("doc_id"), col("content")).mapPartitions { rows =>
-      javax.imageio.ImageIO.setUseCache(false)
-      rows.map { r =>
-        val img = javax.imageio.ImageIO.read(
-          new java.io.ByteArrayInputStream(r.getAs[Array[Byte]](1)))
-        require(img != null, s"undecodable image payload for doc ${r.getLong(0)}")
-        val w = img.getWidth
-        val h = img.getHeight
-        var gs = 0L
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w - 1) {
-            val a = img.getRGB(x, y) & 0xff
-            val b = img.getRGB(x + 1, y) & 0xff
-            gs += math.abs(b - a).toLong
-            x += 1
-          }
-          y += 1
+  def gradientEnergy(images: DataFrame): DataFrame =
+    perImage(images, StructType(Seq(
+        StructField("doc_id", LongType, nullable = false),
+        StructField("width", IntegerType, nullable = false),
+        StructField("height", IntegerType, nullable = false),
+        StructField("n_pairs", LongType, nullable = false),
+        StructField("grad_sum", LongType, nullable = false)))) { (id, g) =>
+      var gs = 0L
+      var y = 0
+      while (y < g.h) {
+        var x = 0
+        while (x < g.w - 1) {
+          gs += math.abs(g(x + 1, y) - g(x, y)).toLong
+          x += 1
         }
-        Row(r.getLong(0), w, h, (w - 1).toLong * h, gs)
+        y += 1
       }
-    }(enc)
-      .withColumn("mean_grad",
+      Iterator.single(Row(id, g.w, g.h, (g.w - 1).toLong * g.h, gs))
+    }.withColumn("mean_grad",
         when(col("n_pairs") > 0L, round(col("grad_sum").cast("double")
           / col("n_pairs").cast("double"), 9)).otherwise(lit(0.0d)))
       .orderBy("doc_id")
-  }
 
   /** Schema of a per-image border/interior brightness record. */
   val borderContrastSchema: StructType = StructType(Seq(
@@ -530,7 +492,7 @@ object Multimodal {
     * letterbox/frame screen of image curation: a padded or framed
     * image shows a border ring whose mean brightness diverges hard
     * from its interior, and those frames poison both perceptual
-    * hashing (the ring dominates the [[dHash]] gradient grid) and
+    * hashing (the ring dominates the [[imageDHash]] gradient grid) and
     * training crops. Border = the 1-px outer ring; images too small
     * to have an interior (w ≤ 2 or h ≤ 2) emit a NULL interior mean
     * and a 0 contrast on both engines. One decode pass per image with
@@ -538,32 +500,23 @@ object Multimodal {
     * round-6 doubles computed from the exact integers, the contrast
     * from the ROUNDED means so all three emitted numbers round-trip.
     */
-  def borderContrast(spark: SparkSession, images: DataFrame): DataFrame = {
-    val enc = Encoders.row(borderContrastSchema)
-    val raw = images.select(col("doc_id"), col("content")).mapPartitions { rows =>
-      javax.imageio.ImageIO.setUseCache(false)
-      rows.map { r =>
-        val img = javax.imageio.ImageIO.read(
-          new java.io.ByteArrayInputStream(r.getAs[Array[Byte]](1)))
-        require(img != null, s"undecodable image payload for doc ${r.getLong(0)}")
-        val w = img.getWidth
-        val h = img.getHeight
-        var bs = 0L; var bn = 0L; var is = 0L; var in = 0L
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) {
-            val v = (img.getRGB(x, y) & 0xff).toLong
-            if (x == 0 || x == w - 1 || y == 0 || y == h - 1) {
-              bs += v; bn += 1L
-            } else { is += v; in += 1L }
-            x += 1
-          }
-          y += 1
+  def borderContrast(images: DataFrame): DataFrame = {
+    val raw = perImage(images, borderContrastSchema) { (id, g) =>
+      var bs = 0L; var bn = 0L; var is = 0L; var in = 0L
+      var y = 0
+      while (y < g.h) {
+        var x = 0
+        while (x < g.w) {
+          val v = g(x, y).toLong
+          if (x == 0 || x == g.w - 1 || y == 0 || y == g.h - 1) {
+            bs += v; bn += 1L
+          } else { is += v; in += 1L }
+          x += 1
         }
-        Row(r.getLong(0), w, h, bs, bn, is, in)
+        y += 1
       }
-    }(enc)
+      Iterator.single(Row(id, g.w, g.h, bs, bn, is, in))
+    }
     val bm = round(col("border_sum").cast("double")
       / col("n_border").cast("double"), 6)
     val im = round(col("interior_sum").cast("double")
@@ -595,36 +548,23 @@ object Multimodal {
     * the oracle engine and reads as a fingerprint. Downstream, 64-bit
     * Hamming banding (the [[DedupOps.simhash]] pigeonhole machinery)
     * turns the hash column into bounded near-dup candidate joins at
-    * corpus scale. Narrow mapPartitions, no shuffle; cost is decode +
-    * 72 samples per image.
+    * corpus scale. Cost is decode + 72 samples per image.
     */
-  def imageDHash(spark: SparkSession, images: DataFrame): DataFrame = {
-    val enc = Encoders.row(imageDHashSchema)
-    images.select(col("doc_id"), col("content")).mapPartitions { rows =>
-      javax.imageio.ImageIO.setUseCache(false)
-      rows.map { r =>
-        val img = javax.imageio.ImageIO.read(
-          new java.io.ByteArrayInputStream(r.getAs[Array[Byte]](1)))
-        require(img != null, s"undecodable image payload for doc ${r.getLong(0)}")
-        val w = img.getWidth
-        val h = img.getHeight
-        var hash = 0L
-        var y = 0
-        while (y < 8) {
-          val sy = y * h / 8
-          var x = 0
-          while (x < 8) {
-            val g1 = img.getRGB(x * w / 9, sy) & 0xff
-            val g2 = img.getRGB((x + 1) * w / 9, sy) & 0xff
-            if (g2 > g1) hash |= 1L << (y * 8 + x)
-            x += 1
-          }
-          y += 1
+  def imageDHash(images: DataFrame): DataFrame =
+    perImage(images, imageDHashSchema) { (id, g) =>
+      var hash = 0L
+      var y = 0
+      while (y < 8) {
+        val sy = y * g.h / 8
+        var x = 0
+        while (x < 8) {
+          if (g((x + 1) * g.w / 9, sy) > g(x * g.w / 9, sy)) hash |= 1L << (y * 8 + x)
+          x += 1
         }
-        Row(r.getLong(0), w, h, f"$hash%016x")
+        y += 1
       }
-    }(enc)
-  }
+      Iterator.single(Row(id, g.w, g.h, f"$hash%016x"))
+    }
 
   /** Perceptual near-duplicate image pairs: [[imageDHash]] fingerprints
     * joined through the generic 4×16-bit banded Hamming machinery
@@ -639,9 +579,8 @@ object Multimodal {
     * the long rebuild (a single 64-bit hex parse would overflow the
     * signed cast).
     */
-  def imageNearDup(spark: SparkSession, images: DataFrame,
-      maxHamming: Int = 3): DataFrame = {
-    val sig = imageDHash(spark, images).select(col("doc_id"),
+  def imageNearDup(images: DataFrame, maxHamming: Int = 3): DataFrame = {
+    val sig = imageDHash(images).select(col("doc_id"),
       shiftleft(conv(substring(col("dhash"), 1, 8), 16, 10).cast("long"), 32)
         .bitwiseOR(conv(substring(col("dhash"), 9, 8), 16, 10).cast("long"))
         .as("h"))
@@ -665,16 +604,15 @@ object Multimodal {
     * broadcasts it), so the corpus-scale caption table never
     * self-joins and token arrays ride only on matched rows. Jaccard
     * is per-row array arithmetic over the engine-shared tokenizer
-    * (`[a-z0-9]+` on lower), two empty captions score 1.0, and the
+    * ([[TextOps.toksCol]]), two empty captions score 1.0, and the
     * ratio rounds to 6 dp on both engines.
     */
-  def captionIntegrity(spark: SparkSession, images: DataFrame,
-      documents: DataFrame, maxHamming: Int = 3): DataFrame = {
-    val pairs = imageNearDup(spark, images, maxHamming)
+  def captionIntegrity(images: DataFrame, documents: DataFrame,
+      maxHamming: Int = 3): DataFrame = {
+    val pairs = imageNearDup(images, maxHamming)
     // tokenize once: the Jaccard token set and the fingerprint read
     // the same staged array
-    val caps = documents.select(col("doc_id"),
-        expr("regexp_extract_all(lower(text), '[a-z0-9]+', 0)").as("__t"))
+    val caps = documents.select(col("doc_id"), TextOps.toksCol.as("__t"))
       .select(col("doc_id"),
         array_distinct(col("__t")).as("toks"),
         md5(array_join(col("__t"), " ")).as("fp"))
@@ -703,147 +641,92 @@ object Multimodal {
     StructField("s_min", IntegerType),
     StructField("s_max", IntegerType)))
 
-  /** Per-clip PCM sample statistics over the REAL decoded audio
-    * stream — sum/min/max of every signed 16-bit little-endian
-    * sample, the loudness/degenerate-clip screen of an audio pipeline
-    * (silence and clipping are both filtered before training). The
-    * audio twin of [[pixelStats]]: the oracle predicts the exact
-    * sample sum from the staged PCM byte formula, so a header-only
-    * decode cannot pass — this proves `javax.sound.sampled` streamed
-    * the actual sample data. Narrow mapPartitions, no shuffle.
-    */
-  /** Decode a WAV payload to raw PCM bytes + channel count, asserting
-    * 16-bit little-endian signed PCM FIRST — the shared fail-loudly
-    * gate of every audio kernel (the `require(img != null)` rule of
-    * the image decoders): each call site assembles samples with
-    * manual little-endian byte math, which would silently produce
-    * wrong values (not an error) on an 8/24-bit, big-endian, or
-    * float clip.
-    */
-  private def pcm16le(payload: Array[Byte], docId: Long): (Array[Byte], Int) = {
-    val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
-      new java.io.ByteArrayInputStream(payload))
-    val fmt = ais.getFormat
-    require(fmt.getEncoding ==
-        javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED &&
-        fmt.getSampleSizeInBits == 16 && !fmt.isBigEndian,
-      s"doc $docId: expected 16-bit LE signed PCM, got $fmt")
-    val data = ais.readAllBytes()
-    ais.close()
-    (data, fmt.getChannels)
-  }
-
   /** Per-clip band energy over the REAL PCM decode — the clip split
     * into `bands` equal sample ranges, each reporting its sample count
     * and Σv² energy: the silence/clipping LOCALIZATION probe
     * ([[audioStats]] sees a whole-clip min/max; this sees "the last
     * quarter is dead air", the trim signal an audio-curation pass
     * acts on). Energy accumulates in exact BIGINTs (|v| ≤ 2¹⁵ →
-    * v²·samples far under 2⁶³), band assignment is positive integer
-    * division (floor = truncate on both engines), and decode failures
-    * fail loudly per the [[pixelStats]] discipline. One narrow decode
-    * pass, ≤`bands` rows out per clip.
+    * v²·samples far under 2⁶³) and band assignment is positive integer
+    * division (floor = truncate on both engines). ≤`bands` rows out
+    * per clip.
     */
-  def audioBandEnergy(spark: SparkSession, audio: DataFrame,
-      bands: Int = 4): DataFrame = {
-    val enc = Encoders.row(StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
-      StructField("band", IntegerType, nullable = false),
-      StructField("n_samples", LongType, nullable = false),
-      StructField("energy", LongType, nullable = false))))
-    audio.select(col("doc_id"), col("content")).mapPartitions { rows =>
-      rows.flatMap { r =>
-        val data = pcm16le(r.getAs[Array[Byte]](1), r.getLong(0))._1
-        require(data.length >= 2,
-          s"doc ${r.getLong(0)}: PCM stream has ${data.length} bytes — " +
-            "no complete 16-bit sample (truncated or header-only WAV)")
-        val ns = data.length / 2
-        val e = new Array[Long](bands)
-        val c = new Array[Long](bands)
-        var j = 0
-        while (j < ns) {
-          val v = (data(2 * j + 1).toInt << 8) | (data(2 * j) & 0xff)
-          val b = j * bands / ns
-          e(b) += v.toLong * v
-          c(b) += 1L
-          j += 1
-        }
-        (0 until bands).iterator.filter(c(_) > 0L)
-          .map(b => Row(r.getLong(0), b, c(b), e(b)))
+  def audioBandEnergy(audio: DataFrame, bands: Int = 4): DataFrame =
+    perClip(audio, StructType(Seq(
+        StructField("doc_id", LongType, nullable = false),
+        StructField("band", IntegerType, nullable = false),
+        StructField("n_samples", LongType, nullable = false),
+        StructField("energy", LongType, nullable = false)))) { (id, p) =>
+      val ns = p.s.length
+      val e = new Array[Long](bands)
+      val c = new Array[Long](bands)
+      var j = 0
+      while (j < ns) {
+        val v = p.s(j)
+        val b = j * bands / ns
+        e(b) += v.toLong * v
+        c(b) += 1L
+        j += 1
       }
-    }(enc).orderBy("doc_id", "band")
-  }
+      (0 until bands).iterator.filter(c(_) > 0L).map(b => Row(id, b, c(b), e(b)))
+    }.orderBy("doc_id", "band")
 
-  def audioStats(spark: SparkSession, audio: DataFrame): DataFrame = {
-    val enc = Encoders.row(audioStatsSchema)
-    audio.select(col("doc_id"), col("content")).mapPartitions { rows =>
-      rows.map { r =>
-        val data = pcm16le(r.getAs[Array[Byte]](1), r.getLong(0))._1
-        // fail loudly on a truncated/header-only clip (the pixelStats
-        // discipline): silently emitting sentinel stats for an empty
-        // PCM stream would let a broken decode pass as "quiet audio"
-        require(data.length >= 2,
-          s"doc ${r.getLong(0)}: PCM stream has ${data.length} bytes — " +
-            "no complete 16-bit sample (truncated or header-only WAV)")
-        var sum = 0L
-        var mn = Int.MaxValue
-        var mx = Int.MinValue
-        var i = 0
-        while (i + 1 < data.length) {
-          val v = ((data(i + 1).toInt << 8) | (data(i) & 0xff))
-          sum += v
-          if (v < mn) mn = v
-          if (v > mx) mx = v
-          i += 2
-        }
-        Row(r.getLong(0), data.length / 2L, sum, mn, mx)
+  /** Per-clip PCM sample statistics over the REAL decoded audio
+    * stream — sum/min/max of every sample, the loudness/degenerate-clip
+    * screen of an audio pipeline (silence and clipping are both
+    * filtered before training). The audio twin of [[pixelStats]]: the
+    * oracle predicts the exact sample sum from the staged PCM byte
+    * formula, so a header-only decode cannot pass — this proves
+    * `javax.sound.sampled` streamed the actual sample data.
+    */
+  def audioStats(audio: DataFrame): DataFrame =
+    perClip(audio, audioStatsSchema) { (id, p) =>
+      var sum = 0L
+      var mn = Int.MaxValue
+      var mx = Int.MinValue
+      var j = 0
+      while (j < p.s.length) {
+        val v = p.s(j)
+        sum += v
+        if (v < mn) mn = v
+        if (v > mx) mx = v
+        j += 1
       }
-    }(enc)
-  }
+      Iterator.single(Row(id, p.s.length.toLong, sum, mn, mx))
+    }
 
   /** Zero-crossing census over the REAL PCM decode — ZCR is the
     * cheapest voiced/unvoiced + noisiness feature an audio-curation
     * pass computes (white noise crosses ~every other sample; a pure
     * low tone barely crosses), and it is integer-exact: the count of
     * adjacent sample pairs whose (v ≥ 0) signs differ, over the same
-    * linear 16-bit sample walk as [[audioStats]], so the DuckDB
-    * oracle predicts it sample-for-sample from the staged PCM
-    * formula. The final rate divides by (n−1) behind a round(…,9)
-    * barrier. Narrow mapPartitions over binary splits, no shuffle,
-    * one row per clip; decode failures fail loudly (the
-    * [[pixelStats]] discipline).
+    * linear sample walk as [[audioStats]], so the DuckDB oracle
+    * predicts it sample-for-sample from the staged PCM formula. The
+    * final rate divides by (n−1) behind a round(…,9) barrier. One row
+    * per clip; a clip needs two samples to have a pair.
     */
-  def audioZcr(spark: SparkSession, audio: DataFrame): DataFrame = {
-    val enc = Encoders.row(StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
-      StructField("n_samples", LongType, nullable = false),
-      StructField("n_cross", LongType, nullable = false))))
-    audio.select(col("doc_id"), col("content")).mapPartitions { rows =>
-      rows.map { r =>
-        val data = pcm16le(r.getAs[Array[Byte]](1), r.getLong(0))._1
-        require(data.length >= 4,
-          s"doc ${r.getLong(0)}: PCM stream has ${data.length} bytes — " +
-            "fewer than two complete 16-bit samples")
-        val ns = data.length / 2
-        var cross = 0L
-        var prevNonNeg = ((data(1).toInt << 8) | (data(0) & 0xff)) >= 0
-        var j = 1
-        while (j < ns) {
-          val nonNeg = ((data(2 * j + 1).toInt << 8) | (data(2 * j) & 0xff)) >= 0
-          if (nonNeg != prevNonNeg) cross += 1L
-          prevNonNeg = nonNeg
-          j += 1
-        }
-        Row(r.getLong(0), ns.toLong, cross)
+  def audioZcr(audio: DataFrame): DataFrame =
+    perClip(audio, StructType(Seq(
+        StructField("doc_id", LongType, nullable = false),
+        StructField("n_samples", LongType, nullable = false),
+        StructField("n_cross", LongType, nullable = false)))) { (id, p) =>
+      val ns = p.s.length
+      require(ns >= 2, s"doc $id: PCM stream has $ns sample(s) — " +
+        "fewer than two complete 16-bit samples")
+      var cross = 0L
+      var j = 1
+      while (j < ns) {
+        if ((p.s(j) >= 0) != (p.s(j - 1) >= 0)) cross += 1L
+        j += 1
       }
-    }(enc)
+      Iterator.single(Row(id, ns.toLong, cross))
+    }
       // the rate divides OUTSIDE the decode kernel, through the same
       // column-level round the oracle uses (JVM-side BigDecimal
       // rounding of a double risks last-bit drift vs engine round)
       .withColumn("zcr", round(col("n_cross").cast("double")
         / (col("n_samples") - 1).cast("double"), 9))
       .orderBy("doc_id")
-  }
 
   /** Clipping census over the real PCM decode — the standard audio-QA
     * gate (a clipped recording saturates the 16-bit range; its
@@ -851,78 +734,56 @@ object Multimodal {
     * normalization can undo it). Counts samples with |v| ≥ `threshold`
     * (near full scale, default 30000 of ±32768) per document —
     * integer-exact, so the oracle predicts every count from the
-    * staged PCM formula. Narrow mapPartitions, one row per clip.
-    *
-    * 2x-audit note (`mm_audio_clipping`, ~0.17 s oracle, ~0.56 s
-    * fresh-artifact): the op really decodes every WAV payload while
-    * the oracle computes the closed-form prediction — the decode pass
-    * plus the binaryFile scan is the entire gap; nothing removable.
+    * staged PCM formula. One row per clip.
     */
-  def audioClipping(spark: SparkSession, audio: DataFrame,
-      threshold: Int = 30000): DataFrame = {
-    val enc = Encoders.row(StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
-      StructField("n_samples", LongType, nullable = false),
-      StructField("n_clipped", LongType, nullable = false))))
-    audio.select(col("doc_id"), col("content")).mapPartitions { rows =>
-      rows.map { r =>
-        val data = pcm16le(r.getAs[Array[Byte]](1), r.getLong(0))._1
-        require(data.length >= 2,
-          s"doc ${r.getLong(0)}: PCM stream has ${data.length} bytes")
-        val ns = data.length / 2
-        var clipped = 0L
-        var j = 0
-        while (j < ns) {
-          val v = (data(2 * j + 1).toInt << 8) | (data(2 * j) & 0xff)
-          if (v >= threshold || v <= -threshold) clipped += 1L
-          j += 1
-        }
-        Row(r.getLong(0), ns.toLong, clipped)
+  def audioClipping(audio: DataFrame, threshold: Int = 30000): DataFrame =
+    perClip(audio, StructType(Seq(
+        StructField("doc_id", LongType, nullable = false),
+        StructField("n_samples", LongType, nullable = false),
+        StructField("n_clipped", LongType, nullable = false)))) { (id, p) =>
+      var clipped = 0L
+      var j = 0
+      while (j < p.s.length) {
+        val v = p.s(j)
+        if (v >= threshold || v <= -threshold) clipped += 1L
+        j += 1
       }
-    }(enc)
-      .withColumn("clip_ratio", round(col("n_clipped").cast("double")
+      Iterator.single(Row(id, p.s.length.toLong, clipped))
+    }.withColumn("clip_ratio", round(col("n_clipped").cast("double")
         / col("n_samples").cast("double"), 9))
       .orderBy("doc_id")
-  }
 
   /** Silence census over the real PCM decode — the trim/VAD
     * preprocessing gate: leading and trailing run lengths of samples
     * under `threshold` absolute amplitude (what a trimmer would cut)
     * plus the total silent-sample count (what a voice-activity
     * screen reads). Integer-exact over the decoded stream, so the
-    * oracle predicts every count from the staged PCM formula; narrow
-    * mapPartitions, one row per clip — the same single decode pass
-    * shape as [[audioZcr]]/[[audioClipping]].
+    * oracle predicts every count from the staged PCM formula; one row
+    * per clip — the same single decode pass shape as
+    * [[audioZcr]]/[[audioClipping]].
     */
-  def audioSilence(spark: SparkSession, audio: DataFrame,
-      threshold: Int = 4096): DataFrame = {
-    val enc = Encoders.row(StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
-      StructField("n_samples", LongType, nullable = false),
-      StructField("lead_silence", LongType, nullable = false),
-      StructField("trail_silence", LongType, nullable = false),
-      StructField("n_silent", LongType, nullable = false))))
-    audio.select(col("doc_id"), col("content")).mapPartitions { rows =>
-      rows.map { r =>
-        val data = pcm16le(r.getAs[Array[Byte]](1), r.getLong(0))._1
-        val ns = data.length / 2
-        var silent = 0L
-        var firstLoud = -1
-        var lastLoud = -1
-        var j = 0
-        while (j < ns) {
-          val v = (data(2 * j + 1).toInt << 8) | (data(2 * j) & 0xff)
-          if (v > -threshold && v < threshold) silent += 1L
-          else { if (firstLoud < 0) firstLoud = j; lastLoud = j }
-          j += 1
-        }
-        val lead = if (firstLoud < 0) ns.toLong else firstLoud.toLong
-        val trail = if (lastLoud < 0) ns.toLong else (ns - 1 - lastLoud).toLong
-        Row(r.getLong(0), ns.toLong, lead, trail, silent)
+  def audioSilence(audio: DataFrame, threshold: Int = 4096): DataFrame =
+    perClip(audio, StructType(Seq(
+        StructField("doc_id", LongType, nullable = false),
+        StructField("n_samples", LongType, nullable = false),
+        StructField("lead_silence", LongType, nullable = false),
+        StructField("trail_silence", LongType, nullable = false),
+        StructField("n_silent", LongType, nullable = false)))) { (id, p) =>
+      val ns = p.s.length
+      var silent = 0L
+      var firstLoud = -1
+      var lastLoud = -1
+      var j = 0
+      while (j < ns) {
+        val v = p.s(j)
+        if (v > -threshold && v < threshold) silent += 1L
+        else { if (firstLoud < 0) firstLoud = j; lastLoud = j }
+        j += 1
       }
-    }(enc)
-      .orderBy("doc_id")
-  }
+      val lead = if (firstLoud < 0) ns.toLong else firstLoud.toLong
+      val trail = if (lastLoud < 0) ns.toLong else (ns - 1 - lastLoud).toLong
+      Iterator.single(Row(id, ns.toLong, lead, trail, silent))
+    }.orderBy("doc_id")
 
   /** Schema of a resampled-audio record: source frame count, target
     * point count, and a digest of the RESAMPLED channel-0 amplitudes
@@ -941,29 +802,20 @@ object Multimodal {
     * into one signed digest. The fixed-length, fixed-rate clip grid is
     * the batch-inference preprocessing shape for audio models; the
     * oracle predicts every sampled amplitude from the staged PCM
-    * formula, so a header-only decode cannot pass. Narrow
-    * mapPartitions over binaryFile splits, no shuffle.
+    * formula, so a header-only decode cannot pass.
     */
-  def resampleAudio(spark: SparkSession, audio: DataFrame,
-      outN: Int = 64): DataFrame = {
-    val enc = Encoders.row(audioResampleSchema)
-    audio.select(col("doc_id"), col("content")).mapPartitions { rows =>
-      rows.map { r =>
-        val (data, channels) = pcm16le(r.getAs[Array[Byte]](1), r.getLong(0))
-        val frameSize = channels * 2 // 16-bit PCM
-        val f = data.length / frameSize
-        require(f > 0, s"doc ${r.getLong(0)}: no complete PCM frame")
-        var sum = 0L
-        var j = 0
-        while (j < outN) {
-          val off = (j * f / outN) * frameSize
-          sum += ((data(off + 1).toInt << 8) | (data(off) & 0xff))
-          j += 1
-        }
-        Row(r.getLong(0), f.toLong, outN, sum)
+  def resampleAudio(audio: DataFrame, outN: Int = 64): DataFrame =
+    perClip(audio, audioResampleSchema) { (id, p) =>
+      val f = p.s.length / p.channels
+      require(f > 0, s"doc $id: no complete PCM frame")
+      var sum = 0L
+      var j = 0
+      while (j < outN) {
+        sum += p.s((j * f / outN) * p.channels)
+        j += 1
       }
-    }(enc)
-  }
+      Iterator.single(Row(id, f.toLong, outN, sum))
+    }
 
   /** Schema of a per-clip audio fingerprint record. */
   val audioDHashSchema: StructType = StructType(Seq(
@@ -980,30 +832,19 @@ object Multimodal {
     * the same 16-hex MSB-first string as the image hash so
     * [[DedupOps.bandedHamming64]] consumes either family unchanged.
     * The oracle predicts every sampled amplitude from the staged PCM
-    * formula, so a header-only decode cannot pass. Narrow
-    * mapPartitions, no shuffle; cost is decode + 65 signed-16-bit
-    * reads per clip.
+    * formula, so a header-only decode cannot pass.
     */
-  def audioDHash(spark: SparkSession, audio: DataFrame): DataFrame = {
-    val enc = Encoders.row(audioDHashSchema)
-    audio.select(col("doc_id"), col("content")).mapPartitions { rows =>
-      rows.map { r =>
-        val data = pcm16le(r.getAs[Array[Byte]](1), r.getLong(0))._1
-        require(data.length >= 2,
-          s"doc ${r.getLong(0)}: PCM stream has ${data.length} bytes — " +
-            "no complete 16-bit sample (truncated or header-only WAV)")
-        val n = data.length / 2
-        def s(j: Int): Int = (data(2 * j + 1).toInt << 8) | (data(2 * j) & 0xff)
-        var hash = 0L
-        var i = 0
-        while (i < 64) {
-          if (s((i + 1) * n / 65) > s(i * n / 65)) hash |= 1L << i
-          i += 1
-        }
-        Row(r.getLong(0), n.toLong, f"$hash%016x")
+  def audioDHash(audio: DataFrame): DataFrame =
+    perClip(audio, audioDHashSchema) { (id, p) =>
+      val n = p.s.length
+      var hash = 0L
+      var i = 0
+      while (i < 64) {
+        if (p.s((i + 1) * n / 65) > p.s(i * n / 65)) hash |= 1L << i
+        i += 1
       }
-    }(enc)
-  }
+      Iterator.single(Row(id, n.toLong, f"$hash%016x"))
+    }
 
   /** Schema of a decoded audio record: header-readable quantities
     * only (`pcm_bytes` = frames · channels · 2 for 16-bit PCM — the
@@ -1020,23 +861,17 @@ object Multimodal {
   /** REAL audio decode over (doc_id, content) binary rows: sample
     * rate, channel count and frame length read from the WAV RIFF
     * header with the JDK's `javax.sound.sampled` (no external libs).
-    * Narrow mapPartitions, no shuffle — same 100 TB posture as
-    * [[decodeImageMeta]].
     */
-  def decodeAudioMeta(spark: SparkSession, audio: DataFrame): DataFrame = {
-    val enc = Encoders.row(audioMetaSchema)
-    audio.select(col("doc_id"), col("content")).mapPartitions { rows =>
-      rows.map { r =>
-        val aff = javax.sound.sampled.AudioSystem.getAudioFileFormat(
-          new java.io.ByteArrayInputStream(r.getAs[Array[Byte]](1)))
-        val fmt = aff.getFormat
-        val frames = aff.getFrameLength.toLong
-        require(frames >= 0, s"headerless audio payload for doc ${r.getLong(0)}")
-        Row(r.getLong(0), fmt.getSampleRate.toInt, fmt.getChannels, frames,
-          frames * fmt.getChannels * 2L)
-      }
-    }(enc)
-  }
+  def decodeAudioMeta(audio: DataFrame): DataFrame =
+    perDoc(audio, audioMetaSchema) { (id, bytes) =>
+      val aff = javax.sound.sampled.AudioSystem.getAudioFileFormat(
+        new java.io.ByteArrayInputStream(bytes))
+      val fmt = aff.getFormat
+      val frames = aff.getFrameLength.toLong
+      require(frames >= 0, s"headerless audio payload for doc $id")
+      Iterator.single(Row(id, fmt.getSampleRate.toInt, fmt.getChannels, frames,
+        frames * fmt.getChannels * 2L))
+    }
 
   /** Schema of a decoded video record: ISO-BMFF header-readable
     * quantities only — tkhd pixel dimensions, stts-summed frame
@@ -1120,18 +955,13 @@ object Multimodal {
   }
 
   /** REAL video container-metadata decode over (doc_id, content)
-    * binary rows via [[parseMp4Meta]]. Narrow mapPartitions, no
-    * shuffle — same 100 TB posture as [[decodeImageMeta]].
+    * binary rows via [[parseMp4Meta]].
     */
-  def decodeVideoMeta(spark: SparkSession, videos: DataFrame): DataFrame = {
-    val enc = Encoders.row(videoMetaSchema)
-    videos.select(col("doc_id"), col("content")).mapPartitions { rows =>
-      rows.map { r =>
-        val (w, h, f, ts, dur) = parseMp4Meta(r.getAs[Array[Byte]](1))
-        Row(r.getLong(0), w, h, f, ts, dur)
-      }
-    }(enc)
-  }
+  def decodeVideoMeta(videos: DataFrame): DataFrame =
+    perDoc(videos, videoMetaSchema) { (id, bytes) =>
+      val (w, h, f, ts, dur) = parseMp4Meta(bytes)
+      Iterator.single(Row(id, w, h, f, ts, dur))
+    }
 
   /** Build one minimal-but-valid ISO-BMFF container for doc `id`:
     * ftyp + moov(mvhd, trak(tkhd, mdia(mdhd, hdlr, minf(vmhd,

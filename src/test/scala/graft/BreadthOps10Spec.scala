@@ -314,7 +314,7 @@ class BreadthOps10Spec extends SparkSpec {
       img.setRGB(x, y, (10 * x) * 0x010101)
     val buf = new java.io.ByteArrayOutputStream()
     javax.imageio.ImageIO.write(img, "png", buf)
-    val out = Multimodal.gradientEnergy(spark,
+    val out = Multimodal.gradientEnergy(
       Seq((5L, buf.toByteArray)).toDF("doc_id", "content"))
       .as[(Long, Int, Int, Long, Long, Double)].collect().toSeq
     assert(out == Seq((5L, 3, 2, 4L, 40L, 10.0)), out)

@@ -135,7 +135,8 @@ class BreadthOps7Spec extends SparkSpec {
       (7L, "totally different content about columnar engines and shuffle plans here now"))
       .map { case (i, t) => (i, t, "en", "s0", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val out = graft.operators.DedupOps.thresholdSweep(docs)
+    val out = graft.operators.DedupOps.thresholdSweep(docs,
+      graft.operators.DedupOps.minhashLsh(docs))
       .as[(Double, Long, Long, Long)].collect().toSeq
     assert(out.map(_._1) == Seq(0.95, 0.97, 0.985))
     out.foreach { case (_, nPairs, nClusters, nSurvivors) =>
@@ -181,7 +182,7 @@ class BreadthOps7Spec extends SparkSpec {
     val solid = png((_, _) => 0x404040)
     val split = png((x, _) => if (x < 4) 0x000000 else 0xffffff)
     val images = Seq((1L, solid), (2L, split)).toDF("doc_id", "content")
-    val out = graft.operators.Multimodal.imageEntropy(spark, images)
+    val out = graft.operators.Multimodal.imageEntropy(images)
       .as[(Long, Long, Double)].collect().toSeq
     assert(out == Seq((1L, 32L, 0.0), (2L, 32L, 1.0)))
   }
@@ -280,7 +281,8 @@ class BreadthOps7Spec extends SparkSpec {
       (4L, "another unrelated document on columnar formats and codecs", "clean"))
       .map { case (i, t, src) => (i, t, "en", src, t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val out = graft.operators.DedupOps.dupRateBySource(docs)
+    val out = graft.operators.DedupOps.dupRateBySource(docs,
+      graft.operators.DedupOps.minhashLsh(docs))
       .as[(String, Long, Long, Double)].collect().toSeq
     assert(out == Seq(("clean", 2L, 0L, 0.0), ("mirror", 2L, 2L, 1.0)))
   }
@@ -301,7 +303,7 @@ class BreadthOps7Spec extends SparkSpec {
     javax.sound.sampled.AudioSystem.write(ais,
       javax.sound.sampled.AudioFileFormat.Type.WAVE, bos)
     val audio = Seq((1L, bos.toByteArray)).toDF("doc_id", "content")
-    val out = graft.operators.Multimodal.audioClipping(spark, audio)
+    val out = graft.operators.Multimodal.audioClipping(audio)
       .as[(Long, Long, Long, Double)].head()
     assert(out == ((1L, 4L, 2L, 0.5)))
   }

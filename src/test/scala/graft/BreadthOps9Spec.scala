@@ -206,7 +206,7 @@ class BreadthOps9Spec extends SparkSpec {
       (1L, png(5, 4, 255, 0)), // 14 ring px at 255, 6 interior at 0
       (2L, png(2, 2, 7, 0)))   // all ring, no interior
       .toDF("doc_id", "content")
-    val out = graft.operators.Multimodal.borderContrast(spark, images)
+    val out = graft.operators.Multimodal.borderContrast(images)
       .as[(Long, Int, Int, Double, Option[Double], Double)].collect().toSeq
     assert(out == Seq(
       (1L, 5, 4, 255.0, Some(0.0), 255.0),

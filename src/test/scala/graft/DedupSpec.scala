@@ -71,7 +71,8 @@ class DedupSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val fresh = Seq((10L, base)).toDF("doc_id", "text")
     val index = DedupOps.minhashSignatures(corpus, 16)
-    val got = DedupOps.minhashLshIncremental(fresh, index)
+    val got = DedupOps.minhashLshIncremental(
+      DedupOps.minhashSignatures(fresh, 16), index)
       .select("new_id", "corpus_id").as[(Long, Long)].collect().toSet
     assert(got == Set((10L, 1L)), s"expected the planted near-dup only, got $got")
   }
@@ -120,7 +121,8 @@ class DedupSpec extends SparkSpec {
       (1L, "the quick brown fox jumps over the lazy dog tonight"),
       (2L, "the quick brown fox jumps over the lazy dog tonight"),
       (3L, "entirely different content about spark engines here")).toDF("doc_id", "text")
-    val got = graft.operators.DedupOps.minhashCalibration(docs)
+    val got = graft.operators.DedupOps.minhashCalibration(docs,
+      graft.operators.DedupOps.minhashLsh(docs, 16))
       .as[(Long, Long, Double)].collect().toSeq
     // the only verified pair is the twin: 16/16 agreement, exact J = 1
     assert(got == Seq((16L, 1L, 1.0)), got)

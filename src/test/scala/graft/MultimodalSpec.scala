@@ -133,7 +133,7 @@ class MultimodalSpec extends SparkSpec {
       .resolve("staged").toString
     // only doc 2 is video-typed (8 % 3 == 2)
     val staged = Multimodal.staged(spark, docs, dir, Media.Mp4)
-    val out = Multimodal.decodeVideoMeta(spark, staged)
+    val out = Multimodal.decodeVideoMeta(staged)
     assert(out.schema == Multimodal.videoMetaSchema)
     // staging rule for id 2: w = 18, h = 18, frames = 3, ts 12800
     assert(out.as[(Long, Int, Int, Int, Int, Long)].collect().toSeq ==
@@ -156,7 +156,7 @@ class MultimodalSpec extends SparkSpec {
     }
     val bin = Seq((10L, png(17, 5)), (11L, png(1, 1)))
       .toDF("doc_id", "content")
-    val out = Multimodal.decodeImageMeta(spark, bin)
+    val out = Multimodal.decodeImageMeta(bin)
       .select("doc_id", "n_bytes", "media_type", "width", "height", "n_frames")
       .as[(Long, Long, String, Int, Int, Int)].collect().sortBy(_._1).toSeq
     assert(out == Seq(
@@ -180,7 +180,7 @@ class MultimodalSpec extends SparkSpec {
     javax.imageio.ImageIO.write(one, "png", bos1)
     val bin = Seq((1L, bos.toByteArray), (2L, bos1.toByteArray))
       .toDF("doc_id", "content")
-    val out = Multimodal.tileBrightness(spark, bin)
+    val out = Multimodal.tileBrightness(bin)
       .as[(Long, Int, Long, Long, Double)].collect().toSeq
     assert(out == Seq(
       (1L, 0, 1L, 10L, 10.0), (1L, 1, 1L, 20L, 20.0),
@@ -216,7 +216,7 @@ class MultimodalSpec extends SparkSpec {
     }
     val bin = Seq((9L, jpegFor(9L)), (42L, jpegFor(42L)), (7L, flatGray(7L)))
       .toDF("doc_id", "content")
-    val out = Multimodal.decodeJpegCheck(spark, bin)
+    val out = Multimodal.decodeJpegCheck(bin)
       .as[(Long, Int, Int, Boolean)].collect().sortBy(_._1).toSeq
     assert(out == Seq(
       (7L, (7 % 56 + 8), (7 % 40 + 8), false), // right dims, wrong pixels
@@ -239,7 +239,7 @@ class MultimodalSpec extends SparkSpec {
     val bin = Seq((7L, bos.toByteArray)).toDF("doc_id", "content")
     val expected = (for (j <- 0 until 12; i <- 0 until 16)
       yield ((i * w / 16) * 40 + (j * h / 12) * 7) % 256).map(_.toLong).sum
-    val out = Multimodal.resizeImages(spark, bin)
+    val out = Multimodal.resizeImages(bin)
       .as[(Long, Int, Int, Int, Int, Long)].collect().toSeq
     assert(out == Seq((7L, 5, 3, 16, 12, expected)))
   }
@@ -258,7 +258,7 @@ class MultimodalSpec extends SparkSpec {
     val bos = new java.io.ByteArrayOutputStream()
     javax.imageio.ImageIO.write(img, "png", bos)
     val bin = Seq((9L, bos.toByteArray)).toDF("doc_id", "content")
-    val out = Multimodal.imageDHash(spark, bin)
+    val out = Multimodal.imageDHash(bin)
       .as[(Long, Int, Int, String)].collect().toSeq
     // row 0 bits 0..7 -> low byte 0xff, printed LAST (MSB-first)
     assert(out == Seq((9L, 18, 8, "00000000000000ff")), out)
@@ -282,7 +282,7 @@ class MultimodalSpec extends SparkSpec {
     javax.sound.sampled.AudioSystem.write(ais,
       javax.sound.sampled.AudioFileFormat.Type.WAVE, bos)
     val bin = Seq((3L, bos.toByteArray)).toDF("doc_id", "content")
-    val out = Multimodal.audioDHash(spark, bin)
+    val out = Multimodal.audioDHash(bin)
       .as[(Long, Long, String)].collect().toSeq
     assert(out == Seq((3L, 65L, "00000000000000ff")), out)
   }
@@ -292,7 +292,7 @@ class MultimodalSpec extends SparkSpec {
       .resolve("staged").toString
     // only doc 0 is image-typed
     val staged = Multimodal.staged(spark, docs, dir, Media.Png)
-    val out = Multimodal.decodeImageMeta(spark, staged)
+    val out = Multimodal.decodeImageMeta(staged)
       .select("doc_id", "width", "height").as[(Long, Int, Int)]
       .collect().toSeq
     // staging rule: w = 0%64+1 = 1, h = 0%48+1 = 1
@@ -307,7 +307,7 @@ class MultimodalSpec extends SparkSpec {
       .resolve("staged").toString
     // only doc 0 is image-typed
     val staged = Multimodal.staged(spark, docs, dir, Media.Jpg)
-    val out = Multimodal.decodeJpegCheck(spark, staged)
+    val out = Multimodal.decodeJpegCheck(staged)
       .as[(Long, Int, Int, Boolean)].collect().toSeq
     // staging rule: w = 0%56+8 = 8, h = 0%40+8 = 8
     assert(out == Seq((0L, 8, 8, true)))
@@ -327,7 +327,7 @@ class MultimodalSpec extends SparkSpec {
     ).toDF("doc_id", "text", "lang", "source", "n_chars")
     val dir = tempDir("graft_capint_spec")
       .resolve("staged").toString
-    val out = Multimodal.captionIntegrity(spark,
+    val out = Multimodal.captionIntegrity(
       Multimodal.staged(spark, cdocs, dir, Media.Png), cdocs)
       .as[(Long, Long, Long, Boolean, Double)].collect().toSeq
     assert(out == Seq(
@@ -341,7 +341,7 @@ class MultimodalSpec extends SparkSpec {
       .resolve("staged").toString
     // only doc 1 is audio-typed (4 % 3 == 1)
     val staged = Multimodal.staged(spark, docs, dir, Media.Wav)
-    val out = Multimodal.decodeAudioMeta(spark, staged)
+    val out = Multimodal.decodeAudioMeta(staged)
     assert(out.schema == Multimodal.audioMetaSchema)
     // staging rule for id 1: rate = 8000 + 1·4000, channels = 1%2+1 = 2,
     // frames = 1%50+10 = 11, pcm = 11·2·2
@@ -367,7 +367,7 @@ class MultimodalSpec extends SparkSpec {
         new java.io.ByteArrayInputStream(pcm), fmt, 8),
       javax.sound.sampled.AudioFileFormat.Type.WAVE, buf)
     val in = Seq((9L, buf.toByteArray)).toDF("doc_id", "content")
-    assert(Multimodal.audioBandEnergy(spark, in)
+    assert(Multimodal.audioBandEnergy(in)
       .as[(Long, Int, Long, Long)].collect().toSeq == Seq(
         (9L, 0, 2L, 5L), (9L, 1, 2L, 25L),
         (9L, 2, 2L, 61L), (9L, 3, 2L, 113L)))
@@ -388,7 +388,7 @@ class MultimodalSpec extends SparkSpec {
         new java.io.ByteArrayInputStream(pcm), fmt, 3),
       javax.sound.sampled.AudioFileFormat.Type.WAVE, buf)
     val in = Seq((3L, buf.toByteArray)).toDF("doc_id", "content")
-    val out = Multimodal.audioStats(spark, in)
+    val out = Multimodal.audioStats(in)
     assert(out.schema == Multimodal.audioStatsSchema)
     assert(out.as[(Long, Long, Long, Int, Int)].collect().toSeq ==
       Seq((3L, 3L, 200L, -200, 300)))
@@ -410,7 +410,7 @@ class MultimodalSpec extends SparkSpec {
         new java.io.ByteArrayInputStream(pcm), fmt, 5),
       javax.sound.sampled.AudioFileFormat.Type.WAVE, buf)
     val in = Seq((7L, buf.toByteArray)).toDF("doc_id", "content")
-    val out = Multimodal.audioZcr(spark, in)
+    val out = Multimodal.audioZcr(in)
       .as[(Long, Long, Long, Double)].collect().toSeq
     assert(out == Seq((7L, 5L, 3L, 0.75)), out)
   }
@@ -431,7 +431,7 @@ class MultimodalSpec extends SparkSpec {
         new java.io.ByteArrayInputStream(pcm), fmt, 7),
       javax.sound.sampled.AudioFileFormat.Type.WAVE, buf)
     val in = Seq((9L, buf.toByteArray)).toDF("doc_id", "content")
-    val out = Multimodal.audioSilence(spark, in)
+    val out = Multimodal.audioSilence(in)
       .as[(Long, Long, Long, Long, Long)].collect().toSeq
     assert(out == Seq((9L, 7L, 2L, 2L, 5L)), out)
 
@@ -447,7 +447,7 @@ class MultimodalSpec extends SparkSpec {
       new javax.sound.sampled.AudioInputStream(
         new java.io.ByteArrayInputStream(qp), fmt, 3),
       javax.sound.sampled.AudioFileFormat.Type.WAVE, qbuf)
-    val qout = Multimodal.audioSilence(spark,
+    val qout = Multimodal.audioSilence(
       Seq((4L, qbuf.toByteArray)).toDF("doc_id", "content"))
       .as[(Long, Long, Long, Long, Long)].collect().toSeq
     assert(qout == Seq((4L, 3L, 3L, 3L, 3L)), qout)
@@ -472,7 +472,7 @@ class MultimodalSpec extends SparkSpec {
         new java.io.ByteArrayInputStream(pcm), fmt, 4),
       javax.sound.sampled.AudioFileFormat.Type.WAVE, buf)
     val in = Seq((5L, buf.toByteArray)).toDF("doc_id", "content")
-    val out = Multimodal.resampleAudio(spark, in, outN = 8)
+    val out = Multimodal.resampleAudio(in, outN = 8)
     assert(out.schema == Multimodal.audioResampleSchema)
     assert(out.as[(Long, Long, Int, Long)].collect().toSeq ==
       Seq((5L, 4L, 8, 200L)))
@@ -487,10 +487,40 @@ class MultimodalSpec extends SparkSpec {
       javax.sound.sampled.AudioFileFormat.Type.WAVE, buf)
     val in = Seq((6L, buf.toByteArray)).toDF("doc_id", "content")
     val ex = intercept[org.apache.spark.SparkException] {
-      Multimodal.resampleAudio(spark, in).collect()
+      Multimodal.resampleAudio(in).collect()
     }
     assert(ex.getMessage.contains("no complete PCM frame")
       || Option(ex.getCause).exists(_.getMessage.contains("no complete PCM frame")))
+  }
+
+  test("audioSilence fails loudly on a header-only WAV") {
+    val fmt = new javax.sound.sampled.AudioFormat(8000f, 16, 1, true, false)
+    val buf = new java.io.ByteArrayOutputStream()
+    javax.sound.sampled.AudioSystem.write(
+      new javax.sound.sampled.AudioInputStream(
+        new java.io.ByteArrayInputStream(Array.empty[Byte]), fmt, 0),
+      javax.sound.sampled.AudioFileFormat.Type.WAVE, buf)
+    val in = Seq((6L, buf.toByteArray)).toDF("doc_id", "content")
+    val ex = intercept[org.apache.spark.SparkException] {
+      Multimodal.audioSilence(in).collect()
+    }
+    assert(ex.getMessage.contains("PCM stream has 0 bytes")
+      || Option(ex.getCause).exists(_.getMessage.contains("PCM stream has 0 bytes")))
+  }
+
+  test("every image kernel fails loudly on an undecodable payload") {
+    val in = Seq((13L, Array.fill[Byte](64)(7))).toDF("doc_id", "content")
+    val want = "undecodable image payload for doc 13"
+    Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)](
+      "decodeImageMeta" -> (Multimodal.decodeImageMeta(_)),
+      "pixelStats" -> (Multimodal.pixelStats(_)),
+      "imageDHash" -> (Multimodal.imageDHash(_)),
+      "decodeJpegCheck" -> (Multimodal.decodeJpegCheck(_))
+    ).foreach { case (name, kernel) =>
+      val ex = intercept[org.apache.spark.SparkException] { kernel(in).collect() }
+      assert(ex.getMessage.contains(want)
+        || Option(ex.getCause).exists(_.getMessage.contains(want)), name)
+    }
   }
 
   test("grayHistogram folds whole rasters into 16 bands, zero bands absent") {
@@ -502,7 +532,7 @@ class MultimodalSpec extends SparkSpec {
     val buf = new java.io.ByteArrayOutputStream()
     javax.imageio.ImageIO.write(img, "png", buf)
     val in = Seq((7L, buf.toByteArray)).toDF("doc_id", "content")
-    assert(Multimodal.grayHistogram(spark, in)
+    assert(Multimodal.grayHistogram(in)
       .as[(Int, Long)].collect().toSeq == Seq((0, 1L), (1, 2L), (2, 1L)))
   }
 
@@ -516,7 +546,7 @@ class MultimodalSpec extends SparkSpec {
     val buf = new java.io.ByteArrayOutputStream()
     javax.imageio.ImageIO.write(img, "png", buf)
     val in = Seq((7L, buf.toByteArray)).toDF("doc_id", "content")
-    val out = Multimodal.pixelStats(spark, in)
+    val out = Multimodal.pixelStats(in)
     assert(out.schema == Multimodal.pixelStatsSchema)
     assert(out.as[(Long, Int, Int, Long, Int, Int)].collect().toSeq ==
       Seq((7L, 2, 2, 100L, 10, 40)))
