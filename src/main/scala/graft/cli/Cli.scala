@@ -223,11 +223,15 @@ object Cli {
       grantTo = opts.get("grant-to")).foreach(out)
   }
 
-  private def readObject(opts: Map[String, String]): DataFrame = {
+  /** The object as a DataFrame; `bulk = false` reads it through REST
+    * pages as one partition, with no Bulk job (see `SalesforceSource`).
+    */
+  private def readObject(opts: Map[String, String], bulk: Boolean = true): DataFrame = {
     var r = spark.read.format("salesforce")
       .option("object", required(opts, "object"))
       .option("transport", required(opts, "transport"))
       .option("includeDeleted", opts.getOrElse("include-deleted", "false"))
+      .option("bulk", bulk)
     opts.get("chunk-size").foreach(n => r = r.option("chunkSize", n))
     var df = r.load()
     opts.get("fields").foreach(f => df = df.select(f.split(",").map(col): _*))
@@ -280,18 +284,22 @@ object Cli {
 
   /** `sync` / `query_poll_table.py`: one incremental round for one
     * table — CAS lock, watermark delta via the connector's pushed F2
-    * filter, staged merge, watermark advance, single commit.
-    * `--max-delta N` adds the bulk-vs-poll preflight (`README.rst:68`):
-    * the delta DataFrame's `count()`, which the connector pushes as
-    * `SELECT COUNT() ... WHERE ts > watermark`, decides whether to stop
-    * and report NeedsFullReload instead of fetching.
+    * filter, staged merge, watermark advance, single commit. The delta
+    * is read as the reference polls it (`query_poll_table.py:78-85`):
+    * REST `queryAll` pages in one partition, no Bulk job, so the dedup
+    * window plans with no Exchange; `bulkload` keeps the PK-chunked
+    * Bulk extract. `--max-delta N` adds the bulk-vs-poll preflight
+    * (`README.rst:68`): the delta DataFrame's `count()`, which the
+    * connector pushes as `SELECT COUNT() ... WHERE ts > watermark`,
+    * decides whether to stop and report NeedsFullReload instead of
+    * fetching.
     */
   private def sync(opts: Map[String, String], out: String => Unit): Unit = {
     val url = required(opts, "jdbc")
     val dest = required(opts, "dest")
     val tsCol = required(opts, "ts-col")
     def delta(wm: Option[Timestamp]): DataFrame = {
-      val df = readObject(opts + ("include-deleted" -> "true"))
+      val df = readObject(opts + ("include-deleted" -> "true"), bulk = false)
       wm.fold(df)(w => df.filter(col(tsCol) > lit(w)))
     }
     val maxDelta = opts.get("max-delta").map(_.toLong)

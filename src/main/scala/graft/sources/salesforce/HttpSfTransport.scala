@@ -7,7 +7,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, ObjectMapper}
 
 import graft.reverse.{BulkUpload, UploadResult}
 
@@ -69,7 +69,10 @@ final class HttpSfTransport(
     maxRetries: Int = 3) extends SfTransport with BulkUpload.UploadTransport {
 
   @transient private lazy val client: HttpClient = HttpClient.newHttpClient()
+  // floats as BigDecimal: a currency(18,2) value has more digits than a
+  // double holds
   @transient private lazy val mapper = new ObjectMapper()
+    .enable(DeserializationFeature.USE_BIG_DECIMAL_FOR_FLOATS)
 
   private def restBase = s"$instanceUrl/services/data/v$apiVersion/"
   private def bulkBase = s"$instanceUrl/services/async/$apiVersion"
@@ -470,7 +473,7 @@ final class HttpSfTransport(
     restGetJson(rangeUrl(objectName, "deleted", start, end))
       .path("deletedRecords").elements().asScala.map { r =>
         r.get("id").asText() ->
-          java.sql.Timestamp.from(java.time.Instant.parse(r.get("deletedDate").asText()))
+          java.sql.Timestamp.from(SfRowReader.instant(r.get("deletedDate").asText()))
       }.toSeq
 
   // ---- Bulk path: batch download --------------------------------------
@@ -648,7 +651,8 @@ private[graft] object CsvWire {
 }
 
 /** The JSON record decoder of REST pages, SOSL hits and per-record
-  * GETs: `attributes` envelopes are dropped; scalars keep native types
+  * GETs: `attributes` envelopes are dropped; scalars keep native types,
+  * integral numbers as `Long` and the rest as exact `BigDecimal`
   * (SfRowReader converts against the Spark schema).
   */
 private[graft] object JsonWire {
@@ -657,7 +661,7 @@ private[graft] object JsonWire {
     if (n == null || n.isNull) null
     else if (n.isBoolean) n.booleanValue()
     else if (n.isIntegralNumber) n.longValue()
-    else if (n.isNumber) n.doubleValue()
+    else if (n.isNumber) n.decimalValue()
     else n.asText()
 
   /** A record object minus its `attributes` envelope, every value

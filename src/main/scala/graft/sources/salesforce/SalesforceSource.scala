@@ -26,14 +26,19 @@ import graft.types.{SfField, SfSchema}
   *   .option("object", "Contact")
   *   .option("transport", "<registered transport name>")
   *   .option("includeDeleted", "true")   // queryAll semantics
+  *   .option("bulk", "false")            // REST pages, one partition
   *   .load()
   * }}}
   *
-  * Scale posture: one `InputPartition` per PK chunk — the direct
-  * analogue of the reference's server-side bulk batches — so a
-  * 1000-executor cluster reads 1000 chunks concurrently; objects that
-  * reject chunking degrade to a single partition, never fail
-  * (`query_bulk.py:26-36`).
+  * Scale posture: with `bulk` (default `true`), one `InputPartition`
+  * per PK chunk — the direct analogue of the reference's server-side
+  * bulk batches — so a 1000-executor cluster reads 1000 chunks
+  * concurrently; objects that reject chunking degrade to a single
+  * partition, never fail (`query_bulk.py:26-36`). `bulk=false` is the
+  * reference's poll read (`query_poll_table.py:78-85`): no Bulk job,
+  * one partition that pages `query/` or `queryAll/` through
+  * `nextRecordsUrl` — for small watermark deltas, where a job's round
+  * trips cost more than the rows.
   */
 class SalesforceSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "salesforce"
@@ -145,6 +150,7 @@ final class SfScanBuilder(fullSchema: StructType, options: CaseInsensitiveString
     options.get("object"),
     options.get("transport"),
     options.getBoolean("includeDeleted", false),
+    options.getBoolean("bulk", true),
     options.getInt("chunkSize", 100000),
     requiredSchema, pushedSoqlWhere, limit, countStar)
 }
@@ -153,7 +159,7 @@ final case class SfInputPartition(pkRange: Option[(String, String)])
   extends InputPartition
 
 final class SfScan(objectName: String, transportName: String,
-    includeDeleted: Boolean, chunkSize: Int, schema: StructType,
+    includeDeleted: Boolean, bulk: Boolean, chunkSize: Int, schema: StructType,
     where: Option[String], limit: Option[Int], countStar: Boolean)
     extends Scan with Batch {
 
@@ -175,13 +181,14 @@ final class SfScan(objectName: String, transportName: String,
   private val fields: Seq[String] =
     if (schema.isEmpty) Seq("Id") else schema.fieldNames.toSeq
 
-  /** S2: one partition per PK chunk; single partition on fallback, or
-    * when a LIMIT is pushed (a global limit cannot be split). Planned
-    * once per scan: Spark asks every physical node built over this scan
-    * (more than one per action), and over HTTP each plan is a Bulk job.
+  /** S2: one partition per PK chunk; a single partition on fallback,
+    * with `bulk=false`, or when a LIMIT is pushed (a global limit cannot
+    * be split) — planned without a transport call. Planned once per
+    * scan: Spark asks every physical node built over this scan (more
+    * than one per action), and over HTTP each plan is a Bulk job.
     */
   private lazy val partitions: Array[InputPartition] =
-    if (countStar || limit.isDefined) Array(SfInputPartition(None))
+    if (countStar || limit.isDefined || !bulk) Array(SfInputPartition(None))
     else {
       val chunks = SfTransports.get(transportName).pkChunks(objectName,
         fields, where, includeDeleted, chunkSize)
@@ -270,8 +277,7 @@ final class SfRowReader(it: Iterator[Map[String, Any]], schema: StructType)
     }
     case TimestampType => v match {
       case ts: java.sql.Timestamp => ts.getTime * 1000L + (ts.getNanos / 1000) % 1000
-      case s: String => // ISO8601 `2019-11-18T15:28:14.000Z` passthrough
-        java.time.Instant.parse(s).toEpochMilli * 1000L
+      case s: String => SfRowReader.instant(s).toEpochMilli * 1000L
     }
     case DateType => v match {
       case d: java.sql.Date => d.toLocalDate.toEpochDay.toInt
@@ -284,4 +290,18 @@ final class SfRowReader(it: Iterator[Map[String, Any]], schema: StructType)
   }
 
   override def close(): Unit = ()
+}
+
+object SfRowReader {
+  /** Salesforce datetimes: REST JSON writes `2019-11-18T15:28:14.000+0000`,
+    * Bulk CSV `2019-11-18T15:28:14.000Z`; `+00:00` parses too. A value
+    * with no offset fails.
+    */
+  private val DateTime = new java.time.format.DateTimeFormatterBuilder()
+    .append(java.time.format.DateTimeFormatter.ISO_LOCAL_DATE_TIME)
+    .appendPattern("[XXX][XX]")
+    .toFormatter(java.util.Locale.ROOT)
+
+  def instant(s: String): java.time.Instant =
+    java.time.Instant.from(DateTime.parse(s.trim))
 }

@@ -16,6 +16,9 @@ import graft.sink.{CopyStager, SqlDialect}
   * and that one read both decides the C2 fast path (its first row) and
   * streams through the driver-held connection into a session-local
   * staging table ([[CopyStager.load]]: COPY or batched INSERTs). The
+  * delta is one partition — `Cli sync` reads it from REST `queryAll`
+  * pages with no Bulk job, and `coalesce(1)` keeps any other source
+  * narrow — so the dedup window plans with no Exchange. The
   * MERGE is one serial transaction on the same connection — merge +
   * watermark + state update are atomic, which is the no-lost-updates
   * invariant (`query_poll_table.py:198`, SURVEY §7.4). A crash between
@@ -75,7 +78,10 @@ final class IncrementalSync(conn: Connection, dialect: SqlDialect,
         conn.commit()
         SyncResult.NeedsFullReload(tooBig.get)
       } else {
-        val delta = MergeOps.dedupLastWins(fetchDelta(watermark), cfg.pk, cfg.tsCol)
+        // one partition, already drained through one connection: the
+        // window's clustering is satisfied without a shuffle
+        val delta = MergeOps.dedupLastWins(fetchDelta(watermark).coalesce(1),
+          cfg.pk, cfg.tsCol)
         val rows = delta.toLocalIterator().asScala
         if (!rows.hasNext) {                     // C2 fast path
           state.touch(cfg.tablename)

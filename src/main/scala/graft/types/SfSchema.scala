@@ -81,6 +81,7 @@ object SfSchema {
     case n: Int => n.toString
     case n: Long => n.toString
     case n: Double => n.toString
+    case n: java.math.BigDecimal => n.toPlainString
     case other => throw new IllegalArgumentException(s"const not renderable: $other")
   }
 

@@ -31,10 +31,14 @@ import graft.cli.Cli
   *  - the sync round's F2 watermark WHERE in T6 UTC-second form,
   *    preflighted by the `--max-delta` wire COUNT, merged into the
   *    same Derby table, watermark advanced to the delta's max stamp;
+  *  - REST pages render datetimes as Salesforce does
+  *    (`2024-01-05T10:00:00.000+0000`), Bulk CSV with `Z`;
   *  - upload's chunked CSV batch + per-record result parsing from the
   *    job the same transport registered;
-  *  - with PK chunking accepted, bulkload and sync read through Bulk
-  *    query jobs and close each one (`download.py:107-114`).
+  *  - with PK chunking accepted, bulkload reads through a Bulk query
+  *    job and closes it (`download.py:107-114`), while a sync round
+  *    reads REST pages and posts no Bulk job
+  *    (`query_poll_table.py:78-85`).
   */
 class CliLifecycleWireSpec extends SparkSpec with BeforeAndAfterAll {
 
@@ -54,10 +58,13 @@ class CliLifecycleWireSpec extends SparkSpec with BeforeAndAfterAll {
     C("003B", "beta", 2, deleted = true, "2024-01-06T09:00:00Z"),
     C("003D", "delta", 4, deleted = false, "2024-01-06T09:30:00Z"))
 
+  // REST JSON writes datetimes with a `+0000` offset, not `Z`
+  private def restStamp(iso: String): String = iso.stripSuffix("Z") + ".000+0000"
+
   private def recJson(c: C): String =
     s"""{"attributes":{"type":"Contact","url":"/sobjects/Contact/${c.id}"},
        |"Id":"${c.id}","Name":"${c.name}","NumEmployees":${c.n},
-       |"IsDeleted":${c.deleted},"SystemModstamp":"${c.stamp}"}""".stripMargin
+       |"IsDeleted":${c.deleted},"SystemModstamp":"${restStamp(c.stamp)}"}""".stripMargin
 
   private val DescribeJson =
     """{"name":"Contact","fields":[
@@ -100,6 +107,8 @@ class CliLifecycleWireSpec extends SparkSpec with BeforeAndAfterAll {
   private val fieldDefCount = new java.util.concurrent.atomic.AtomicInteger
   /** When set, query jobs are accepted and served as one CSV chunk. */
   @volatile private var bulkScans = false
+  /** Every query-job create POST, accepted or rejected. */
+  private val queryJobPosts = new java.util.concurrent.atomic.AtomicInteger
   private val queryJobs = new java.util.concurrent.atomic.AtomicInteger
   private val scanSoql = TrieMap.empty[String, String]
   /** "jobId state" of every query-job state POST (a close). */
@@ -225,6 +234,7 @@ class CliLifecycleWireSpec extends SparkSpec with BeforeAndAfterAll {
           case ("POST", "/services/async/52.0/job") =>
             val doc = body()
             if (doc.contains("<operation>query")) {
+              queryJobPosts.incrementAndGet()
               seen.put("pkChunkHeader",
                 ex.getRequestHeaders.getFirst("Sforce-Enable-PKChunking"))
               if (bulkScans)
@@ -350,6 +360,7 @@ class CliLifecycleWireSpec extends SparkSpec with BeforeAndAfterAll {
   }
 
   test("sync: wire COUNT preflight + T6 watermark WHERE, merged delta") {
+    val posts = queryJobPosts.get
     val (code, out) = runCli("sync", "--config", cfgPath,
       "--object", "Contact", "--jdbc", jdbc, "--dest", "wiredest",
       "--pk", "Id", "--ts-col", "SystemModstamp",
@@ -362,6 +373,7 @@ class CliLifecycleWireSpec extends SparkSpec with BeforeAndAfterAll {
       "SystemModstamp > 2024-01-05T10:00:00Z"), seen("deltaSoql"))
     assert(seen("deltaCountSoql").startsWith("SELECT COUNT() FROM Contact"))
     assert(fieldDefCount.get == 1) // no FieldDefinition query either
+    assert(queryJobPosts.get == posts) // REST pages, not a PK-chunking try
     val conn = DriverManager.getConnection(jdbc)
     try {
       val rs = conn.createStatement().executeQuery(
@@ -377,30 +389,32 @@ class CliLifecycleWireSpec extends SparkSpec with BeforeAndAfterAll {
     } finally conn.close()
   }
 
-  test("bulkload and sync each close the Bulk query job they create") {
+  test("bulkload closes its query job; a sync round posts no Bulk job") {
     val conn = DriverManager.getConnection(jdbc)
     try conn.createStatement().execute("""CREATE TABLE "wirebulk" (
       |"Id" VARCHAR(18) NOT NULL PRIMARY KEY, "Name" VARCHAR(80),
       |"NumEmployees" INT, "IsDeleted" BOOLEAN, "SystemModstamp" TIMESTAMP
       |)""".stripMargin)
     finally conn.close()
-    def run(verb: String, extra: String*): Unit = {
+    /** The query jobs `verb` created. */
+    def run(verb: String, extra: String*): Seq[String] = {
       val before = queryJobs.get
       val (code, out) = runCli(Seq(verb, "--config", cfgPath, "--object", "Contact",
         "--jdbc", jdbc, "--dest", "wirebulk", "--pk", "Id",
         "--ts-col", "SystemModstamp") ++ extra: _*)
       assert(code == 0, out.mkString("\n"))
-      val created = (before + 1 to queryJobs.get).map(i => s"750Q$i")
-      assert(created.nonEmpty, s"$verb created no query job")
-      assert(created.forall(closes(_) == 1), s"$verb: $created vs $jobStates")
+      (before + 1 to queryJobs.get).map(i => s"750Q$i")
     }
     bulkScans = true
     try {
-      run("bulkload")
-      run("sync", "--deleted-col", "IsDeleted")
+      val loaded = run("bulkload")
+      assert(loaded.nonEmpty, "bulkload created no query job")
+      assert(loaded.forall(closes(_) == 1), s"bulkload: $loaded vs $jobStates")
+      val synced = run("sync", "--deleted-col", "IsDeleted")
+      assert(synced.isEmpty, s"sync created query jobs $synced")
     } finally bulkScans = false
-    // the closed jobs' results were still read: the same landed table
-    // the REST path builds
+    // the closed job's results were still read, and the REST delta
+    // merged over them: the same landed table the REST path builds
     val check = DriverManager.getConnection(jdbc)
     try {
       val rs = check.createStatement().executeQuery(

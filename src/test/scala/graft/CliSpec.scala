@@ -141,8 +141,9 @@ class CliSpec extends SparkSpec {
     assert(code == 0, out.mkString("\n"))
     assert(out.exists(_.contains("Merged")), out.mkString("\n"))
     // one read of the delta decides the fast path and stages the rows:
-    // one chunk plan, and no LIMIT-1 probe or empty select list
-    assert(t.pkChunksCalls == 1)
+    // REST pages with no chunk plan, and no LIMIT-1 probe or empty
+    // select list
+    assert(t.pkChunksCalls == 0)
     assert(t.queries.asScala.forall { case (fields, limit) =>
       fields.nonEmpty && limit.isEmpty }, t.queries.asScala.mkString("; "))
     val conn = DriverManager.getConnection(jdbc)

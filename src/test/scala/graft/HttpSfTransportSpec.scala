@@ -21,8 +21,9 @@ import graft.sources.salesforce.{CsvWire, HttpSfTransport, MockSfTransport, SfAp
   * COUNT()-with-WHERE, PK-chunked bulk scan (header, job XML, batch
   * split, the plan-time batch-list wait and failed-batch refusal, the
   * job close, NUL-stripped quoted CSV, the refusal of a non-CSV result
-  * body), connection-error retry, and the upload path incl.
-  * per-record UploadResult parsing.
+  * body), the `bulk=false` REST read (exact currency, `+0000`
+  * datetimes, no Bulk job), connection-error retry, and the upload
+  * path incl. per-record UploadResult parsing.
   */
 class HttpSfTransportSpec extends SparkSpec with BeforeAndAfterAll {
 
@@ -62,6 +63,20 @@ class HttpSfTransportSpec extends SparkSpec with BeforeAndAfterAll {
       |{"attributes":{"type":"FieldDefinition","url":"/x"},
       | "QualifiedApiName":"Ghost__c","IsIndexed":true}
       |]}""".stripMargin
+
+  // a currency(18,2) value with more digits than a double holds, and a
+  // datetime the way REST JSON writes it (`+0000`, not `Z`)
+  private val DealDescribeJson =
+    """{"name":"Deal","fields":[
+      |{"name":"Id","type":"id","length":18,"nillable":false},
+      |{"name":"Amount","type":"currency","precision":18,"scale":2,"nillable":true},
+      |{"name":"SystemModstamp","type":"datetime","nillable":false}
+      |]}""".stripMargin
+  private val DealPage =
+    """{"totalSize":1,"done":true,"records":[
+      |{"attributes":{"type":"Deal","url":"/sobjects/Deal/006A"},
+      | "Id":"006A","Amount":1234567890123456.78,
+      | "SystemModstamp":"2019-11-18T15:28:14.000+0000"}]}""".stripMargin
 
   private def rec(id: String, name: String, n: Long): String =
     s"""{"attributes":{"type":"Contact","url":"/sobjects/Contact/$id"},
@@ -210,6 +225,12 @@ class HttpSfTransportSpec extends SparkSpec with BeforeAndAfterAll {
                 |"latestDateCovered":"2024-02-01T00:00:00.000+0000"}""".stripMargin)
           case ("GET", "/services/data/v52.0/sobjects/Lead/describe") =>
             respond(ex, LeadDescribeJson)
+          case ("GET", "/services/data/v52.0/sobjects/Deal/describe") =>
+            respond(ex, DealDescribeJson)
+          case ("GET", p) if p.startsWith("/services/data/v52.0/query")
+              && q.contains("FROM Deal") =>
+            seen.put("dealSoql", q)
+            respond(ex, DealPage)
           case ("GET", p) if p.startsWith("/services/data/v52.0/query")
               && q.contains("FROM FieldDefinition") =>
             seen.put("fieldDefSoql", q)
@@ -535,6 +556,26 @@ class HttpSfTransportSpec extends SparkSpec with BeforeAndAfterAll {
     // every query job the read created was closed exactly once
     val created = requests.asScala.count(_ == "POST /services/async/52.0/job")
     assert(created >= 1 && closes("750JOB") == created, jobStates.toString)
+  }
+
+  test("bulk=false: one REST partition lands exact currency and +0000 datetimes") {
+    SfTransports.register("http-rest", transport())
+    requests.clear()
+    val df = spark.read.format("salesforce")
+      .option("object", "Deal")
+      .option("transport", "http-rest")
+      .option("bulk", "false")
+      .load()
+    assert(df.schema("Amount").dataType.typeName == "decimal(18,2)")
+    val rows = df.collect()
+    assert(rows.length == 1 && df.rdd.getNumPartitions == 1)
+    assert(rows.head.getDecimal(1) == new java.math.BigDecimal("1234567890123456.78"))
+    assert(rows.head.getTimestamp(2) ==
+      Timestamp.from(java.time.Instant.parse("2019-11-18T15:28:14Z")))
+    assert(seen("dealSoql") == "SELECT Id,Amount,SystemModstamp FROM Deal")
+    import scala.jdk.CollectionConverters._
+    assert(!requests.asScala.exists(_.contains("/services/async/")),
+      requests.asScala.mkString("\n")) // no Bulk job
   }
 
   // ---- resilience -----------------------------------------------------

@@ -1,15 +1,18 @@
 package graft
 
 import java.sql.Timestamp
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.connector.read.InputPartition
 import org.apache.spark.sql.functions._
-import graft.sources.salesforce.{MockSfTransport, SfFieldMeta}
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import graft.sources.salesforce.{MockSfTransport, SfFieldMeta, SfInputPartition, SfTable}
 
 /** DSv2 `salesforce` connector: describe-driven schema, PK-chunk
-  * partition planning with un-chunkable fallback, and the four
-  * pushdowns (columns P1, predicates F1/F2 rendered to SOQL, LIMIT L1,
-  * COUNT A1) asserted both on results and on what actually reached the
-  * (mock) wire.
+  * partition planning with un-chunkable fallback and the `bulk=false`
+  * single REST partition, and the four pushdowns (columns P1,
+  * predicates F1/F2 rendered to SOQL, LIMIT L1, COUNT A1) asserted both
+  * on results and on what actually reached the (mock) wire.
   */
 class SalesforceSourceSpec extends SparkSpec {
   import spark.implicits._
@@ -41,12 +44,14 @@ class SalesforceSourceSpec extends SparkSpec {
     t
   }
 
-  private def read(name: String, includeDeleted: Boolean = false): DataFrame =
+  private def read(name: String, includeDeleted: Boolean = false,
+      bulk: Boolean = true): DataFrame =
     spark.read.format("salesforce")
       .option("object", "Contact")
       .option("transport", name)
       .option("includeDeleted", includeDeleted.toString)
       .option("chunkSize", "25")
+      .option("bulk", bulk)
       .load()
 
   test("schema comes from describe() through the SfSchema type table") {
@@ -124,6 +129,23 @@ class SalesforceSourceSpec extends SparkSpec {
       action(read("t_plan_once"))
       assert(t.pkChunksCalls - before == 1)
     }
+  }
+
+  test("bulk=false plans one partition without a transport call") {
+    val t = freshTransport("t_rest")
+    def plan(bulk: Option[String]): Seq[InputPartition] = {
+      val opts = new CaseInsensitiveStringMap((Map("object" -> "Contact",
+        "transport" -> "t_rest", "chunkSize" -> "25") ++
+        bulk.map("bulk" -> _)).asJava)
+      new SfTable(read("t_rest").schema, opts).newScanBuilder(opts).build()
+        .toBatch.planInputPartitions().toSeq
+    }
+    assert(plan(Some("false")) == Seq(SfInputPartition(None)))
+    assert(t.pkChunksCalls == 0 && t.countCalls == 0 && t.queries.isEmpty)
+    assert(plan(None).size == 4 && t.pkChunksCalls == 1) // the default chunks
+    val df = read("t_rest", includeDeleted = true, bulk = false)
+    assert(df.rdd.getNumPartitions == 1 && df.collect().length == 97)
+    assert(t.pkChunksCalls == 1) // still only the default's plan
   }
 
   test("COUNT(*) is answered without fetching rows (A1)") {

@@ -1,9 +1,18 @@
 package graft
 
 import java.sql.{Connection, DriverManager, Timestamp}
+import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.execution.window.WindowExec
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.graft.ListenerBusShim
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.BeforeAndAfterAll
 import graft.sink.DerbyDialect
+import graft.sources.salesforce.{MockSfTransport, SfFieldMeta}
 import graft.sync.{IncrementalSync, SyncConfig, SyncResult, SyncStateStore}
 
 /** End-to-end CDC loop against embedded Derby (the JDBC database that
@@ -11,7 +20,8 @@ import graft.sync.{IncrementalSync, SyncConfig, SyncResult, SyncStateStore}
   * zero-delta C2, idempotent re-application, watermark-from-landed-data
   * A2, soft-delete propagation J2. PostgreSQL SQL generation is covered
   * separately by golden-string tests in TypesSpec. Row triggers on the
-  * destination count every row the sync writes there.
+  * destination count every row the sync writes there. A REST delta
+  * from the `salesforce` source dedups with no shuffle.
   */
 class SyncSpec extends SparkSpec with BeforeAndAfterAll {
   import spark.implicits._
@@ -201,5 +211,40 @@ class SyncSpec extends SparkSpec with BeforeAndAfterAll {
       (9L, "ghost", 91.0, "2024-01-04 00:00:01", true)))
     assert(r.isInstanceOf[SyncResult.Merged])
     assert(!destRows().exists(_._1 == 9L))
+  }
+
+  test("a REST delta from the salesforce source dedups with no shuffle Exchange") {
+    val metas = Seq(SfFieldMeta("pk", "int", nillable = false),
+      SfFieldMeta("name", "string", length = 80), SfFieldMeta("amount", "double"),
+      SfFieldMeta("modstamp", "datetime"), SfFieldMeta("is_deleted", "boolean"))
+    def rec(pk: Int, name: String, t: String): Map[String, Any] = Map("pk" -> pk,
+      "name" -> name, "amount" -> pk.toDouble, "modstamp" -> ts(t), "is_deleted" -> false)
+    val t = new MockSfTransport(Map("Contact" -> metas), Map("Contact" -> Seq(
+      rec(20, "old", "2024-02-01 00:00:00"), rec(20, "new", "2024-02-02 00:00:00"),
+      rec(21, "x", "2024-02-01 00:00:00"))))
+    MockSfTransport.register("sync-rest", t)
+    val plans = ArrayBuffer.empty[SparkPlan]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.synchronized(plans += qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val r = try {
+      val r = sync.syncTable(cfg, wm => {
+        val df = spark.read.format("salesforce").option("object", "Contact")
+          .option("transport", "sync-rest").option("includeDeleted", "true")
+          .option("bulk", "false").load()
+        wm.fold(df)(w => df.filter($"modstamp" > lit(w)))
+      })
+      ListenerBusShim.waitUntilEmpty(spark)
+      r
+    } finally spark.listenerManager.unregister(listener)
+    assert(r == SyncResult.Merged(2, ts("2024-02-02 00:00:00")))
+    assert(destRows().filter(_._1 >= 20) == Seq((20L, "new", 20.0), (21L, "x", 21.0)))
+    assert(t.pkChunksCalls == 0)
+    val nodes = plans.toSeq.flatMap(p => new AdaptiveSparkPlanHelper {}.collect(p) { case n => n })
+    assert(nodes.exists(_.isInstanceOf[WindowExec]), plans.mkString("\n"))
+    assert(!nodes.exists(_.isInstanceOf[ShuffleExchangeLike]), plans.mkString("\n"))
   }
 }

@@ -109,6 +109,8 @@ class TypesSpec extends AnyFunSuite {
     assert(SfSchema.sqlConst("o'brien") == "'o''brien'")
     assert(SfSchema.sqlConst(false) == "false")
     assert(SfSchema.sqlConst(42) == "42")
+    // a describe JSON float default arrives as an exact BigDecimal
+    assert(SfSchema.sqlConst(new java.math.BigDecimal("1E+2")) == "100")
   }
 
   test("mapping CSV generate/parse round-trip with flags and notes") {
