@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 
 import graft.reverse.{BulkUpload, UploadTransports}
 import graft.sink.{DerbyDialect, PgDialect, SqlDialect}
-import graft.sources.salesforce.{HttpSfTransport, SfLogin, SfTransports}
+import graft.sources.salesforce.{HttpSfTransport, SalesforceSource, SfLogin, SfSoql,
+  SfTransports}
 import graft.sync.{BulkLoad, IncrementalSync, SyncConfig, SyncStateStore}
 import graft.types.{SfField, SfSchema}
 
@@ -223,15 +224,12 @@ object Cli {
       grantTo = opts.get("grant-to")).foreach(out)
   }
 
-  /** The object as a DataFrame; `bulk = false` reads it through REST
-    * pages as one partition, with no Bulk job (see `SalesforceSource`).
-    */
-  private def readObject(opts: Map[String, String], bulk: Boolean = true): DataFrame = {
+  /** The object as a DataFrame through the `salesforce` source. */
+  private def readObject(opts: Map[String, String]): DataFrame = {
     var r = spark.read.format("salesforce")
       .option("object", required(opts, "object"))
       .option("transport", required(opts, "transport"))
       .option("includeDeleted", opts.getOrElse("include-deleted", "false"))
-      .option("bulk", bulk)
     opts.get("chunk-size").foreach(n => r = r.option("chunkSize", n))
     var df = r.load()
     opts.get("fields").foreach(f => df = df.select(f.split(",").map(col): _*))
@@ -283,27 +281,28 @@ object Cli {
   }
 
   /** `sync` / `query_poll_table.py`: one incremental round for one
-    * table — CAS lock, watermark delta via the connector's pushed F2
-    * filter, staged merge, watermark advance, single commit. The delta
-    * is read as the reference polls it (`query_poll_table.py:78-85`):
-    * REST `queryAll` pages in one partition, no Bulk job, so the dedup
-    * window plans with no Exchange; `bulkload` keeps the PK-chunked
-    * Bulk extract. `--max-delta N` adds the bulk-vs-poll preflight
-    * (`README.rst:68`): the delta DataFrame's `count()`, which the
-    * connector pushes as `SELECT COUNT() ... WHERE ts > watermark`,
-    * decides whether to stop and report NeedsFullReload instead of
-    * fetching.
+    * table — CAS lock, watermark delta, staged merge, watermark
+    * advance, single commit. The delta is read as the reference polls it
+    * (`query_poll_table.py:78-85`): on the driver, REST `queryAll` pages
+    * with the T6 `ts > watermark` WHERE, no Bulk job and no Spark query,
+    * so the verb starts no Spark session; `bulkload` keeps the
+    * PK-chunked Bulk extract. `--max-delta N` adds the bulk-vs-poll
+    * preflight (`README.rst:68`): the same WHERE as
+    * `SELECT COUNT() ... WHERE ts > watermark` decides whether to stop
+    * and report NeedsFullReload instead of fetching.
     */
   private def sync(opts: Map[String, String], out: String => Unit): Unit = {
     val url = required(opts, "jdbc")
     val dest = required(opts, "dest")
     val tsCol = required(opts, "ts-col")
-    def delta(wm: Option[Timestamp]): DataFrame = {
-      val df = readObject(opts + ("include-deleted" -> "true"), bulk = false)
-      wm.fold(df)(w => df.filter(col(tsCol) > lit(w)))
-    }
+    val obj = required(opts, "object")
+    val transport = SfTransports.get(required(opts, "transport"))
+    val schema = SalesforceSource.schemaOf(transport, obj)
+    def where(wm: Option[Timestamp]): Option[String] =
+      wm.map(w => s"$tsCol > ${SfSoql.literal(w)}")
     val maxDelta = opts.get("max-delta").map(_.toLong)
-    val countFn = maxDelta.map(_ => (wm: Option[Timestamp]) => delta(wm).count())
+    val countFn = maxDelta.map(_ => (wm: Option[Timestamp]) =>
+      transport.count(obj, where(wm), includeDeleted = true))
     val conn = DriverManager.getConnection(url)
     try {
       conn.setAutoCommit(false)
@@ -311,8 +310,9 @@ object Cli {
       val syncer = new IncrementalSync(conn, dialectFor(url, opts), state)
       val cfg = SyncConfig(dest, required(opts, "pk"), tsCol,
         opts.get("deleted-col"))
-      val result = syncer.syncTable(cfg, delta, countFn,
-        maxDelta.getOrElse(Long.MaxValue))
+      val result = syncer.syncTable(cfg, schema,
+        wm => SalesforceSource.rows(transport, obj, schema, where(wm), includeDeleted = true),
+        countFn, maxDelta.getOrElse(Long.MaxValue))
       out(s"sync $dest: $result")
     } finally conn.close()
   }

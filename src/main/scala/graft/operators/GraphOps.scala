@@ -694,14 +694,6 @@ object GraphOps {
     * Rounds are part of the operator contract (the [[kCore]]/[[
     * labelPropagation]] bounded-round discipline), mirrored exactly by
     * the oracle's unrolled rounds.
-    *
-    * Bench-band note (r12 two-run drift settle, the [[kmvBall]]
-    * pattern): `graph_ktruss`'s r11 full-suite median jumped 4.88 →
-    * 8.27 s with NO change to this operator, with 19.8 s first passes
-    * — the host-steal signature. Two quiet-host r12 reruns measured
-    * medians 4.40 / 5.40 s, back inside the r10 band; the executed
-    * plan is unchanged. Treat suite medians outside ~4.4–5.5 s with
-    * a ≳3× pass spread as host noise, not regression.
     */
   /** persist + eager one-pass materialize — the non-iterative staging
     * discipline (the `d8bd56e` commonNeighbors measurement: an eager
@@ -960,21 +952,6 @@ object GraphOps {
     * Edge list and round states are eagerly materialized (the
     * pageRank ladder): each state feeds the next round's join and
     * union, and the final state feeds the estimator.
-    *
-    * Bench-band note (r11 two-run drift settle; r13 steal lesson):
-    * with NO change to this operator, full-suite `dedup_ball2_kmv`
-    * measured 2.80 s (r9), 3.16 (r10), 3.29 / 3.66 (r11), 2.66
-    * (r12), 3.09 (r13 settle run) — a 2.7–3.7 s band. During an r13
-    * host-steal window it read 5.1–5.5 s across four runs INCLUDING
-    * three isolated fresh-JVM mins, while lighter cache-sharing
-    * neighbors stayed near r12 levels and a 32-way pure-CPU
-    * calibration showed only ~0.72 core efficiency — i.e. sustained
-    * steal can inflate exactly one shuffle-heavy query 2× while
-    * spot checks look "quiet"; only a full-suite rerun in a genuinely
-    * calm window (total back to 202 s vs the inflated 239 s) settled
-    * it back to 3.09. Read this query's drift against the SUITE
-    * total first, never in isolation. The executed plan is unchanged
-    * vs r9 (fixed rounds × one exchange per round).
     */
   def kmvBall(pairs: DataFrame, rounds: Int = 2, k: Int = 8): DataFrame = {
     import graft.functions.GraftFunctions.top_k_agg
@@ -1137,12 +1114,6 @@ object GraphOps {
     * hub-growth probe's degree-cap guarantee carries over unchanged:
     * per-key aggregate state is maxDegree slots, so a corpus-sized
     * hub costs maxDegree inserts, not an array.
-    *
-    * Bench-band note (r12 two-run drift settle): the r11 median
-    * tripled (1.41 → 4.35 s) on unchanged code with a 4.6 s first
-    * pass; two quiet-host r12 reruns measured 1.66 / 1.99 s medians —
-    * r10 levels. Suite band ~1.4–2.0 s; wider readings with spread
-    * passes are host steal.
     */
   private[graft] def commonNeighborsLazy(p: DataFrame, maxDegree: Int,
       minCommon: Int): DataFrame = {
@@ -1245,13 +1216,6 @@ object GraphOps {
     * at any graph size as long as the SEED set is bounded (it is:
     * modulus-sampled; a production run sizes the modulus to its
     * cluster). No per-node state beyond (seed, node) distinct rows.
-    *
-    * Bench-band note (r12 two-run drift settle): the r11 median
-    * doubled (4.22 → 9.62 s) on unchanged code with a 17.5 s first
-    * pass — host steal, not plan drift. Two quiet-host r12 reruns
-    * measured 4.05 / 5.02 s medians, the r10 band. Suite band
-    * ~4.0–5.1 s; the hub probe (1.19×) separately pins that the
-    * shape, not the data, sets the cost.
     */
   def bfsBall(pairs: DataFrame, seedMod: Long = 997L): DataFrame = {
     // No broadcast hint on seeds: the seed set is modulus-sampled off

@@ -6,7 +6,8 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapabil
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, CountStar}
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
 import org.apache.spark.sql.types._
@@ -26,19 +27,18 @@ import graft.types.{SfField, SfSchema}
   *   .option("object", "Contact")
   *   .option("transport", "<registered transport name>")
   *   .option("includeDeleted", "true")   // queryAll semantics
-  *   .option("bulk", "false")            // REST pages, one partition
   *   .load()
   * }}}
   *
-  * Scale posture: with `bulk` (default `true`), one `InputPartition`
-  * per PK chunk — the direct analogue of the reference's server-side
-  * bulk batches — so a 1000-executor cluster reads 1000 chunks
-  * concurrently; objects that reject chunking degrade to a single
-  * partition, never fail (`query_bulk.py:26-36`). `bulk=false` is the
-  * reference's poll read (`query_poll_table.py:78-85`): no Bulk job,
-  * one partition that pages `query/` or `queryAll/` through
-  * `nextRecordsUrl` — for small watermark deltas, where a job's round
-  * trips cost more than the rows.
+  * Scale posture: one `InputPartition` per PK chunk — the direct
+  * analogue of the reference's server-side bulk batches — so a
+  * 1000-executor cluster reads 1000 chunks concurrently; objects that
+  * reject chunking degrade to a single partition, never fail
+  * (`query_bulk.py:26-36`). The reference's poll read
+  * (`query_poll_table.py:78-85`) is not a Spark scan: a small watermark
+  * delta is read on the driver by [[SalesforceSource.rows]], REST
+  * `query/` or `queryAll/` pages through `nextRecordsUrl`, with no Bulk
+  * job and no Spark job.
   */
 class SalesforceSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "salesforce"
@@ -53,18 +53,55 @@ class SalesforceSource extends TableProvider with DataSourceRegister {
   private def transport(options: CaseInsensitiveStringMap): SfTransport =
     SfTransports.get(required(options, "transport"))
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val obj = required(options, "object")
-    // describe alone: the struct flatten keys off compoundFieldName and
-    // the drop rules off calculated, both on describe's own record;
-    // IsIndexed (FieldDefinition) only feeds index DDL, never the schema
-    val metas = transport(options).describe(obj)
-    SfSchema.structType(metas.map(_.toSfField))
-  }
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
+    SalesforceSource.schemaOf(transport(options), required(options, "object"))
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table =
     new SfTable(schema, new CaseInsensitiveStringMap(properties))
+}
+
+/** The driver-side read: the scan's schema and decoder with no Spark
+  * query, for a delta the driver holds anyway (`Cli sync`).
+  */
+object SalesforceSource {
+
+  /** The object's Spark schema from describe alone: the struct flatten
+    * keys off compoundFieldName and the drop rules off calculated, both
+    * on describe's own record; IsIndexed (FieldDefinition) only feeds
+    * index DDL, never the schema.
+    */
+  def schemaOf(transport: SfTransport, objectName: String): StructType =
+    SfSchema.structType(transport.describe(objectName).map(_.toSfField))
+
+  /** Every `schema` column of the records matching `where`, as external
+    * `Row`s: one un-chunked [[SfTransport.query]] (REST pages through
+    * `nextRecordsUrl` over HTTP), decoded by [[SfRowReader]] exactly as a
+    * scan partition is.
+    */
+  def rows(transport: SfTransport, objectName: String, schema: StructType,
+      where: Option[String], includeDeleted: Boolean): Iterator[Row] = {
+    val reader = new SfRowReader(transport.query(objectName, schema.fieldNames.toSeq,
+      where, None, includeDeleted, None), schema)
+    val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+    Iterator.continually(reader).takeWhile(_.next())
+      .map(r => toRow(r.get()).asInstanceOf[Row])
+  }
+}
+
+/** SOQL literal rendering, shared by the scan's pushdown and the sync
+  * watermark predicate so both send the same text.
+  */
+object SfSoql {
+  // T6: ISO8601 UTC second precision (`query_poll_table.py:82`)
+  private val isoUtc = java.time.format.DateTimeFormatter
+    .ofPattern("yyyy-MM-dd'T'HH:mm:ss'Z'").withZone(java.time.ZoneOffset.UTC)
+
+  def literal(v: Any): String = v match {
+    case s: String => "'" + s.replace("'", "\\'") + "'"
+    case ts: java.sql.Timestamp => isoUtc.format(ts.toInstant)
+    case other => other.toString
+  }
 }
 
 final class SfTable(schema: StructType, options: CaseInsensitiveStringMap)
@@ -99,15 +136,7 @@ final class SfScanBuilder(fullSchema: StructType, options: CaseInsensitiveString
     * Spark-side (returned as residuals).
     */
   private def toSoql(f: Filter): Option[String] = {
-    def lit(v: Any): String = v match {
-      case s: String => "'" + s.replace("'", "\\'") + "'"
-      case ts: java.sql.Timestamp =>
-        // T6: ISO8601 UTC second precision (`query_poll_table.py:82`)
-        val fmt = new java.text.SimpleDateFormat("yyyy-MM-dd'T'HH:mm:ss'Z'")
-        fmt.setTimeZone(java.util.TimeZone.getTimeZone("UTC"))
-        fmt.format(ts)
-      case other => other.toString
-    }
+    import SfSoql.{literal => lit}
     f match {
       case sources.EqualTo(a, v) => Some(s"$a = ${lit(v)}")
       case sources.GreaterThan(a, v) => Some(s"$a > ${lit(v)}")
@@ -150,7 +179,6 @@ final class SfScanBuilder(fullSchema: StructType, options: CaseInsensitiveString
     options.get("object"),
     options.get("transport"),
     options.getBoolean("includeDeleted", false),
-    options.getBoolean("bulk", true),
     options.getInt("chunkSize", 100000),
     requiredSchema, pushedSoqlWhere, limit, countStar)
 }
@@ -159,7 +187,7 @@ final case class SfInputPartition(pkRange: Option[(String, String)])
   extends InputPartition
 
 final class SfScan(objectName: String, transportName: String,
-    includeDeleted: Boolean, bulk: Boolean, chunkSize: Int, schema: StructType,
+    includeDeleted: Boolean, chunkSize: Int, schema: StructType,
     where: Option[String], limit: Option[Int], countStar: Boolean)
     extends Scan with Batch {
 
@@ -182,13 +210,13 @@ final class SfScan(objectName: String, transportName: String,
     if (schema.isEmpty) Seq("Id") else schema.fieldNames.toSeq
 
   /** S2: one partition per PK chunk; a single partition on fallback,
-    * with `bulk=false`, or when a LIMIT is pushed (a global limit cannot
-    * be split) — planned without a transport call. Planned once per
+    * or when a LIMIT is pushed (a global limit cannot be split) —
+    * planned without a transport call. Planned once per
     * scan: Spark asks every physical node built over this scan (more
     * than one per action), and over HTTP each plan is a Bulk job.
     */
   private lazy val partitions: Array[InputPartition] =
-    if (countStar || limit.isDefined || !bulk) Array(SfInputPartition(None))
+    if (countStar || limit.isDefined) Array(SfInputPartition(None))
     else {
       val chunks = SfTransports.get(transportName).pkChunks(objectName,
         fields, where, includeDeleted, chunkSize)

@@ -249,7 +249,7 @@ final class MockSfTransport(
 
   /** ISO8601 literal → Instant. The connector formats timestamp
     * literals as the value's true instant in UTC with a 'Z' suffix
-    * (SalesforceSource.toSoql), so `Instant.parse` is exact; a
+    * ([[SfSoql.literal]]), so `Instant.parse` is exact; a
     * zone-less literal falls back to JVM-zone wall clock (matching
     * `Timestamp.valueOf` test fixtures). Both 'T' and space separators
     * are accepted — `Timestamp.toString` renders the latter.

@@ -2,6 +2,7 @@ package graft.sync
 
 import java.sql.{Connection, Timestamp}
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 import org.apache.spark.sql.DataFrame
 import graft.sink.{CopyStager, SqlDialect}
 import graft.sources.salesforce.{BatchInfo, BulkManifest, JobInfo}
@@ -84,12 +85,14 @@ object BulkLoad {
       df: DataFrame): Long =
     CopyStager.load(conn, dialect, dest, df.schema, df.toLocalIterator().asScala)
 
-  /** Commits `body`; any failure rolls the whole transaction back. */
+  /** Commits `body`; any failure rolls the whole transaction back. A
+    * failing rollback rides along suppressed, not in the error's place.
+    */
   private def inTransaction[A](conn: Connection)(body: => A): A =
     try { val a = body; conn.commit(); a }
     catch {
       case e: Throwable =>
-        conn.rollback()
+        try conn.rollback() catch { case NonFatal(r) => e.addSuppressed(r) }
         throw e
     }
 }

@@ -2,9 +2,9 @@ package graft.sync
 
 import java.sql.{Connection, Timestamp}
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{DataFrame, Row}
+import scala.util.control.NonFatal
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.types.StructType
-import graft.operators.MergeOps
 import graft.sink.{CopyStager, SqlDialect}
 
 /** The steady-state CDC transaction (C1, `query_poll_table.py:155-204`;
@@ -12,18 +12,19 @@ import graft.sink.{CopyStager, SqlDialect}
   * dedup (J4) → stage → merge J1 + delete J2 → watermark advance A2 →
   * single commit; exception path resets the lock and re-raises.
   *
-  * Scale split, same as the reference: the deduped delta is read ONCE,
-  * and that one read both decides the C2 fast path (its first row) and
-  * streams through the driver-held connection into a session-local
-  * staging table ([[CopyStager.load]]: COPY or batched INSERTs). The
-  * delta is one partition — `Cli sync` reads it from REST `queryAll`
-  * pages with no Bulk job, and `coalesce(1)` keeps any other source
-  * narrow — so the dedup window plans with no Exchange. The
-  * MERGE is one serial transaction on the same connection — merge +
-  * watermark + state update are atomic, which is the no-lost-updates
-  * invariant (`query_poll_table.py:198`, SURVEY §7.4). A crash between
-  * load and watermark update re-fetches from the old watermark and the
-  * idempotent merge absorbs the overlap.
+  * Scale split, same as the reference: the delta is a driver-held poll,
+  * not a Spark query. `Cli sync` reads it from REST `queryAll` pages
+  * (`SalesforceSource.rows`, no Bulk job, no Spark job); J4 runs while
+  * the rows drain, into a map keyed by pk, and that one read both
+  * decides the C2 fast path (an empty map) and streams through the
+  * driver-held connection into a session-local staging table
+  * ([[CopyStager.load]]: COPY or batched INSERTs). The driver holds the
+  * whole delta, as it would draining one Spark partition; `--max-delta`
+  * bounds it. The MERGE is one serial transaction on the same
+  * connection — merge + watermark + state update are atomic, which is
+  * the no-lost-updates invariant (`query_poll_table.py:198`, SURVEY
+  * §7.4). A crash between load and watermark update re-fetches from the
+  * old watermark and the idempotent merge absorbs the overlap.
   */
 final case class SyncConfig(
     tablename: String,
@@ -47,12 +48,12 @@ object SyncResult {
 
 final class IncrementalSync(conn: Connection, dialect: SqlDialect,
     state: SyncStateStore) {
-  import IncrementalSync.{exec, maxLandedTs}
+  import IncrementalSync.{exec, lastWins, maxLandedTs}
 
   /** One sync round for one table. `fetchDelta(watermark)` returns the
     * strictly-greater-than delta including soft-deleted rows (F2
     * semantics; the caller wires the actual source — connector, file,
-    * or test fixture).
+    * or test fixture) as rows of `schema`.
     *
     * `countDelta` is the optional bulk-vs-poll preflight
     * (`README.rst:68`): a cheap wire-side `SELECT COUNT() ... WHERE
@@ -62,8 +63,8 @@ final class IncrementalSync(conn: Connection, dialect: SqlDialect,
     * takes the bulk path (`BulkLoad.bulkLoad`), which is cheaper than
     * streaming an oversized delta through the poll machinery.
     */
-  def syncTable(cfg: SyncConfig,
-      fetchDelta: Option[Timestamp] => DataFrame,
+  def syncTable(cfg: SyncConfig, schema: StructType,
+      fetchDelta: Option[Timestamp] => Iterator[Row],
       countDelta: Option[Option[Timestamp] => Long] = None,
       maxDeltaRows: Long = Long.MaxValue): SyncResult = {
     // a refused CAS still ran its UPDATE: end that transaction, or the
@@ -78,17 +79,14 @@ final class IncrementalSync(conn: Connection, dialect: SqlDialect,
         conn.commit()
         SyncResult.NeedsFullReload(tooBig.get)
       } else {
-        // one partition, already drained through one connection: the
-        // window's clustering is satisfied without a shuffle
-        val delta = MergeOps.dedupLastWins(fetchDelta(watermark).coalesce(1),
-          cfg.pk, cfg.tsCol)
-        val rows = delta.toLocalIterator().asScala
-        if (!rows.hasNext) {                     // C2 fast path
+        val delta = lastWins(fetchDelta(watermark),
+          schema.fieldIndex(cfg.pk), schema.fieldIndex(cfg.tsCol))
+        if (delta.isEmpty) {                     // C2 fast path
           state.touch(cfg.tablename)
           conn.commit()
           SyncResult.NoChange
         } else {
-          val n = stageAndMerge(cfg, delta.schema, rows)
+          val n = stageAndMerge(cfg, schema, delta.values.iterator.asScala)
           val wm = maxLandedTs(conn, dialect, destName(cfg), cfg.tsCol) // A2
           state.finish(cfg.tablename, wm)
           conn.commit()                          // one txn: merge + state
@@ -97,9 +95,9 @@ final class IncrementalSync(conn: Connection, dialect: SqlDialect,
       }
     } catch {
       case e: Throwable =>
-        conn.rollback()
-        state.markError(cfg.tablename)
-        conn.commit()
+        // a failing cleanup must not hide the round's own error
+        try { conn.rollback(); state.markError(cfg.tablename); conn.commit() }
+        catch { case NonFatal(c) => e.addSuppressed(c) }
         throw e
     }
   }
@@ -133,6 +131,24 @@ final class IncrementalSync(conn: Connection, dialect: SqlDialect,
 }
 
 object IncrementalSync {
+
+  /** J4 on the driver: per pk, the row with the greatest ts, in first-
+    * seen pk order. A non-null ts beats a null one, as in
+    * `MergeOps.dedupLastWins`' `row_number()` over `ts desc` (nulls
+    * last); a tie keeps the first row seen.
+    */
+  private[graft] def lastWins(rows: Iterator[Row], pkIdx: Int,
+      tsIdx: Int): java.util.LinkedHashMap[Any, Row] = {
+    val kept = new java.util.LinkedHashMap[Any, Row]
+    rows.foreach { r =>
+      val prev = kept.get(r.get(pkIdx))
+      if (prev == null || newer(r.get(tsIdx), prev.get(tsIdx))) kept.put(r.get(pkIdx), r)
+    }
+    kept
+  }
+
+  private def newer(ts: Any, than: Any): Boolean =
+    ts != null && (than == null || ts.asInstanceOf[Comparable[Any]].compareTo(than) > 0)
 
   /** Watermark A2: the max CDC timestamp actually landed in `dest`
     * (`synctable.py:45-54`); None when no landed row carries one.

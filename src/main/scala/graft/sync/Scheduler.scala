@@ -3,7 +3,8 @@ package graft.sync
 import java.sql.Timestamp
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.types.StructType
 
 /** C5/C8 — the orchestration shell around IncrementalSync
   * (`sync:13-20`, `delete_old_jobs_data.sh`); C7's abort is `Cli abort`.
@@ -21,7 +22,7 @@ final class Scheduler(mkWorker: String => SyncWorker) {
     * leaking one per due table per round.
     */
   def runDue(now: Timestamp, stateProbe: SyncStateStore,
-      cfgs: Map[String, (SyncConfig, Option[Timestamp] => DataFrame)],
+      cfgs: Map[String, (SyncConfig, StructType, Option[Timestamp] => Iterator[Row])],
       parallelism: Int = 8): Map[String, SyncResult] = {
     val due = stateProbe.dueTables(now).filter(cfgs.contains)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
@@ -29,8 +30,9 @@ final class Scheduler(mkWorker: String => SyncWorker) {
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     val futures = due.map { table =>
       Future {
+        val (cfg, schema, fetchDelta) = cfgs(table)
         val worker = mkWorker(table)
-        try table -> worker.syncer.syncTable(cfgs(table)._1, cfgs(table)._2)
+        try table -> worker.syncer.syncTable(cfg, schema, fetchDelta)
         finally worker.close()
       }
     }

@@ -136,12 +136,22 @@ class BulkLoadSpec extends SparkSpec with BeforeAndAfterAll {
       Seq(BatchInfo("b1", "Completed", 2), BatchInfo("b2", "Completed", 2)),
       numberRecordsProcessed = 4,
       systemModstamp = Some(ts("2024-04-01 00:00:00")))
-    intercept[RuntimeException] {
-      BulkLoad.bulkLoad(job, cfg, conn, dialect, state, {
+    // the rollback runs, then fails: the load's own error still surfaces
+    val rollbackFails = java.lang.reflect.Proxy.newProxyInstance(getClass.getClassLoader,
+      Array(classOf[Connection]), (_, m, args) => {
+        val r = try m.invoke(conn, (if (args == null) Array.empty[AnyRef] else args): _*)
+          catch { case e: java.lang.reflect.InvocationTargetException => throw e.getCause }
+        if (m.getName == "rollback") throw new java.sql.SQLException("rollback failed")
+        r
+      }).asInstanceOf[Connection]
+    val e = intercept[RuntimeException] {
+      BulkLoad.bulkLoad(job, cfg, rollbackFails, dialect, state, {
         case BatchInfo("b1", _, _, _) => batchDf(10L)
         case _ => throw new RuntimeException("simulated download failure")
       })
     }
+    assert(e.getMessage == "simulated download failure")
+    assert(e.getSuppressed.map(_.getMessage).toSeq == Seq("rollback failed"))
     assert(destRows() == before) // truncate + partial load undone
     assert(state.get("k2dest").map(_.syncuntil) == wmBefore) // stamp unchanged
   }

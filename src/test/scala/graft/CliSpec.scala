@@ -4,6 +4,9 @@ import java.sql.{DriverManager, Timestamp}
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.graft.ListenerBusShim
+
 import graft.cli.Cli
 import graft.reverse.{MockUploadTransport, UploadTransports}
 import graft.sources.salesforce.{MockSfTransport, SfFieldMeta}
@@ -135,11 +138,22 @@ class CliSpec extends SparkSpec {
       }
     } :+ row(21, "acct-21", 21, deleted = false, "2024-01-06 09:30:00")
     val t = register("cli-s", v2)
-    val (code, out) = runCli("sync", "--transport", "cli-s",
-      "--object", "Account", "--jdbc", jdbc, "--dest", "clidest",
-      "--pk", "Id", "--ts-col", "SystemModstamp", "--deleted-col", "IsDeleted")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val (code, out) = try {
+      val r = runCli("sync", "--transport", "cli-s",
+        "--object", "Account", "--jdbc", jdbc, "--dest", "clidest",
+        "--pk", "Id", "--ts-col", "SystemModstamp", "--deleted-col", "IsDeleted")
+      ListenerBusShim.waitUntilEmpty(spark)
+      r
+    } finally spark.sparkContext.removeSparkListener(listener)
     assert(code == 0, out.mkString("\n"))
     assert(out.exists(_.contains("Merged")), out.mkString("\n"))
+    // the round is a driver-side poll: no Spark job
+    assert(jobs.get == 0)
     // one read of the delta decides the fast path and stages the rows:
     // REST pages with no chunk plan, and no LIMIT-1 probe or empty
     // select list

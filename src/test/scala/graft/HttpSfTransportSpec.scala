@@ -11,7 +11,8 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.scalatest.BeforeAndAfterAll
 
 import graft.reverse.{BulkUpload, UploadTransports}
-import graft.sources.salesforce.{CsvWire, HttpSfTransport, MockSfTransport, SfApiError, SfFieldMeta, SfTransports}
+import graft.sources.salesforce.{CsvWire, HttpSfTransport, MockSfTransport, SalesforceSource,
+  SfApiError, SfFieldMeta, SfTransports}
 
 /** The real HTTP transport against recorded protocol fixtures served by
   * a local JDK HttpServer — the same request/response shapes the
@@ -21,7 +22,7 @@ import graft.sources.salesforce.{CsvWire, HttpSfTransport, MockSfTransport, SfAp
   * COUNT()-with-WHERE, PK-chunked bulk scan (header, job XML, batch
   * split, the plan-time batch-list wait and failed-batch refusal, the
   * job close, NUL-stripped quoted CSV, the refusal of a non-CSV result
-  * body), the `bulk=false` REST read (exact currency, `+0000`
+  * body), the driver-side REST read (exact currency, `+0000`
   * datetimes, no Bulk job), connection-error retry, and the upload
   * path incl. per-record UploadResult parsing.
   */
@@ -558,17 +559,13 @@ class HttpSfTransportSpec extends SparkSpec with BeforeAndAfterAll {
     assert(created >= 1 && closes("750JOB") == created, jobStates.toString)
   }
 
-  test("bulk=false: one REST partition lands exact currency and +0000 datetimes") {
-    SfTransports.register("http-rest", transport())
+  test("driver-side REST read lands exact currency and +0000 datetimes") {
+    val t = transport()
     requests.clear()
-    val df = spark.read.format("salesforce")
-      .option("object", "Deal")
-      .option("transport", "http-rest")
-      .option("bulk", "false")
-      .load()
-    assert(df.schema("Amount").dataType.typeName == "decimal(18,2)")
-    val rows = df.collect()
-    assert(rows.length == 1 && df.rdd.getNumPartitions == 1)
+    val schema = SalesforceSource.schemaOf(t, "Deal")
+    assert(schema("Amount").dataType.typeName == "decimal(18,2)")
+    val rows = SalesforceSource.rows(t, "Deal", schema, None, includeDeleted = false).toSeq
+    assert(rows.length == 1)
     assert(rows.head.getDecimal(1) == new java.math.BigDecimal("1234567890123456.78"))
     assert(rows.head.getTimestamp(2) ==
       Timestamp.from(java.time.Instant.parse("2019-11-18T15:28:14Z")))

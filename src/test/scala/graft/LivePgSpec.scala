@@ -2,6 +2,8 @@ package graft
 
 import java.sql.{Connection, DriverManager, Timestamp}
 
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.types._
 import graft.sink.{CopyStager, PgDialect}
 import graft.sync.{IncrementalSync, SyncConfig, SyncResult, SyncStateStore}
 
@@ -117,10 +119,12 @@ class LivePgSpec extends SparkSpec {
       val sync = new IncrementalSync(conn, d, state)
       val cfg = SyncConfig("contacts", "pk", "modstamp",
         Some("is_deleted"), schema = Some(Schema))
-      val r = sync.syncTable(cfg, _ => Seq(
-        (1L, "ann", 10.0, ts("2024-01-02 08:00:00"), false),
-        (2L, "bob", 20.0, ts("2024-01-02 09:30:00"), true))
-        .toDF("pk", "name", "amount", "modstamp", "is_deleted"))
+      val schema = StructType(Seq(StructField("pk", LongType, nullable = false),
+        StructField("name", StringType), StructField("amount", DoubleType),
+        StructField("modstamp", TimestampType), StructField("is_deleted", BooleanType)))
+      val r = sync.syncTable(cfg, schema, _ => Iterator(
+        Row(1L, "ann", 10.0, ts("2024-01-02 08:00:00"), false),
+        Row(2L, "bob", 20.0, ts("2024-01-02 09:30:00"), true)))
       assert(r.isInstanceOf[SyncResult.Merged])
       val got = queryPairs(conn, s"""SELECT CAST("pk" AS VARCHAR), "name" FROM $dest ORDER BY "pk"""")
       assert(got == Seq("1" -> "ann")) // bob arrived soft-deleted → J2 removed

@@ -2,13 +2,13 @@ package graft
 
 import java.sql.{Connection, DriverManager, Timestamp}
 import java.nio.file.Files
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.types._
 import graft.sink.DerbyDialect
 import graft.sync._
 
 /** C5 parallel fan-out, C8 staging GC. */
 class SchedulerSpec extends SparkSpec {
-  import spark.implicits._
 
   private def ts(s: String) = Timestamp.valueOf(s)
   private val url = "jdbc:derby:memory:schedspec;create=true"
@@ -32,9 +32,10 @@ class SchedulerSpec extends SparkSpec {
     }
     boot.commit()
 
-    def delta(base: Long): DataFrame =
-      Seq((base, base * 1.5, ts("2024-02-01 00:00:00")))
-        .toDF("pk", "v", "modstamp")
+    val schema = StructType(Seq(StructField("pk", LongType, nullable = false),
+      StructField("v", DoubleType), StructField("modstamp", TimestampType)))
+    def delta(base: Long): Iterator[Row] =
+      Iterator(Row(base, base * 1.5, ts("2024-02-01 00:00:00")))
 
     val sched = new Scheduler(_ => {
       val c = newConn()
@@ -44,8 +45,8 @@ class SchedulerSpec extends SparkSpec {
     val results = sched.runDue(
       new Timestamp(System.currentTimeMillis() + 2 * 60 * 1000), state,
       Map(
-        "ta" -> (SyncConfig("ta", "pk", "modstamp") -> ((_: Option[Timestamp]) => delta(1))),
-        "tb" -> (SyncConfig("tb", "pk", "modstamp") -> ((_: Option[Timestamp]) => delta(2)))))
+        "ta" -> (SyncConfig("ta", "pk", "modstamp"), schema, (_: Option[Timestamp]) => delta(1)),
+        "tb" -> (SyncConfig("tb", "pk", "modstamp"), schema, (_: Option[Timestamp]) => delta(2))))
     assert(results.keySet == Set("ta", "tb"))
     assert(results.values.forall(_.isInstanceOf[SyncResult.Merged]))
     // both tables unlocked and watermarked

@@ -1,18 +1,14 @@
 package graft
 
 import java.sql.{Connection, DriverManager, Timestamp}
-import scala.collection.mutable.ArrayBuffer
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-import org.apache.spark.sql.execution.window.WindowExec
-import org.apache.spark.sql.functions.lit
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.graft.ListenerBusShim
-import org.apache.spark.sql.util.QueryExecutionListener
+import org.apache.spark.sql.types._
 import org.scalatest.BeforeAndAfterAll
 import graft.sink.DerbyDialect
-import graft.sources.salesforce.{MockSfTransport, SfFieldMeta}
+import graft.sources.salesforce.{MockSfTransport, SalesforceSource, SfFieldMeta, SfSoql}
 import graft.sync.{IncrementalSync, SyncConfig, SyncResult, SyncStateStore}
 
 /** End-to-end CDC loop against embedded Derby (the JDBC database that
@@ -21,7 +17,8 @@ import graft.sync.{IncrementalSync, SyncConfig, SyncResult, SyncStateStore}
   * A2, soft-delete propagation J2. PostgreSQL SQL generation is covered
   * separately by golden-string tests in TypesSpec. Row triggers on the
   * destination count every row the sync writes there. A REST delta
-  * from the `salesforce` source dedups with no shuffle.
+  * read on the driver merges last-wins with no Spark job, and a failing
+  * cleanup does not hide the round's own error.
   */
 class SyncSpec extends SparkSpec with BeforeAndAfterAll {
   import spark.implicits._
@@ -66,9 +63,12 @@ class SyncSpec extends SparkSpec with BeforeAndAfterAll {
 
   private val cfg = SyncConfig("contacts", "pk", "modstamp", Some("is_deleted"))
 
-  private def delta(rows: (Long, String, Double, String, Boolean)*): DataFrame =
-    rows.map { case (pk, n, a, t, d) => (pk, n, a, ts(t), d) }
-      .toDF("pk", "name", "amount", "modstamp", "is_deleted")
+  private val schema = StructType(Seq(StructField("pk", LongType, nullable = false),
+    StructField("name", StringType), StructField("amount", DoubleType),
+    StructField("modstamp", TimestampType), StructField("is_deleted", BooleanType)))
+
+  private def delta(rows: (Long, String, Double, String, Boolean)*): Iterator[Row] =
+    rows.iterator.map { case (pk, n, a, t, d) => Row(pk, n, a, ts(t), d) }
 
   private def destRows(): Seq[(Long, String, Double)] = {
     val st = conn.createStatement()
@@ -89,7 +89,7 @@ class SyncSpec extends SparkSpec with BeforeAndAfterAll {
   }
 
   test("initial delta lands, watermark advances to max(landed ts)") {
-    val r = sync.syncTable(cfg, wm => {
+    val r = sync.syncTable(cfg, schema, wm => {
       assert(wm.contains(ts("2024-01-01 00:00:00")))
       delta(
         (1L, "ann", 10.0, "2024-01-02 08:00:00", false),
@@ -102,7 +102,7 @@ class SyncSpec extends SparkSpec with BeforeAndAfterAll {
   }
 
   test("second round: upsert + soft delete in one transaction") {
-    val r = sync.syncTable(cfg, _ => delta(
+    val r = sync.syncTable(cfg, schema, _ => delta(
       (2L, "bob2", 25.0, "2024-01-03 10:00:00", false),
       (1L, "ann", 10.0, "2024-01-03 11:00:00", true),   // delete
       (3L, "cid", 30.0, "2024-01-03 09:00:00", false)))
@@ -113,7 +113,7 @@ class SyncSpec extends SparkSpec with BeforeAndAfterAll {
   test("re-applying an already-landed delta is idempotent") {
     val before = destRows()
     val writes = destWrites()
-    sync.syncTable(cfg, _ => delta(
+    sync.syncTable(cfg, schema, _ => delta(
       (2L, "bob2", 25.0, "2024-01-03 10:00:00", false),
       (3L, "cid", 30.0, "2024-01-03 09:00:00", false)))
     assert(destRows() == before)
@@ -122,7 +122,7 @@ class SyncSpec extends SparkSpec with BeforeAndAfterAll {
   }
 
   test("zero delta takes the fast path: no writes, state touched") {
-    val r = sync.syncTable(cfg, _ => delta().filter($"pk" < 0))
+    val r = sync.syncTable(cfg, schema, _ => delta())
     assert(r == SyncResult.NoChange)
   }
 
@@ -149,7 +149,7 @@ class SyncSpec extends SparkSpec with BeforeAndAfterAll {
     // wire-count says 1M rows pending: poll path must stop BEFORE
     // fetching and hand control to the bulk path (README.rst:68)
     var countedFrom: Option[Timestamp] = None
-    val r = sync.syncTable(cfg,
+    val r = sync.syncTable(cfg, schema,
       _ => fail("preflight must prevent the fetch"),
       countDelta = Some { wm => countedFrom = wm; 1000000L },
       maxDeltaRows = 50000L)
@@ -157,7 +157,7 @@ class SyncSpec extends SparkSpec with BeforeAndAfterAll {
     assert(countedFrom.isDefined) // counted WITH the watermark predicate
     assert(state.get("contacts").exists(_.status == "ready")) // lock released
     // a small delta sails through the same preflight
-    val r2 = sync.syncTable(cfg, _ => delta().filter($"pk" < 0),
+    val r2 = sync.syncTable(cfg, schema, _ => delta(),
       countDelta = Some(_ => 10L), maxDeltaRows = 50000L)
     assert(r2 == SyncResult.NoChange)
   }
@@ -169,7 +169,7 @@ class SyncSpec extends SparkSpec with BeforeAndAfterAll {
     other.setAutoCommit(false)
     try {
       val r = new IncrementalSync(other, dialect, new SyncStateStore(other))
-        .syncTable(cfg, _ => fail("should not fetch"))
+        .syncTable(cfg, schema, _ => fail("should not fetch"))
       assert(r == SyncResult.LockBusy)
       // the refused CAS left no transaction open: a second connection
       // updates the row without waiting, and this one closes cleanly
@@ -182,10 +182,10 @@ class SyncSpec extends SparkSpec with BeforeAndAfterAll {
 
   test("failure marks error state and halts future syncs") {
     intercept[RuntimeException] {
-      sync.syncTable(cfg, _ => throw new RuntimeException("source down"))
+      sync.syncTable(cfg, schema, _ => throw new RuntimeException("source down"))
     }
     assert(state.get("contacts").exists(_.status == "error"))
-    assert(sync.syncTable(cfg, _ => fail("must not run")) == SyncResult.LockBusy)
+    assert(sync.syncTable(cfg, schema, _ => fail("must not run")) == SyncResult.LockBusy)
     state.recoverAll()
     conn.commit()
     // recoverAll only clears stale 'running' locks, not 'error'
@@ -206,14 +206,14 @@ class SyncSpec extends SparkSpec with BeforeAndAfterAll {
   }
 
   test("delta insert-then-delete of a new PK never survives") {
-    val r = sync.syncTable(cfg, _ => delta(
+    val r = sync.syncTable(cfg, schema, _ => delta(
       (9L, "ghost", 90.0, "2024-01-04 00:00:00", false),
       (9L, "ghost", 91.0, "2024-01-04 00:00:01", true)))
     assert(r.isInstanceOf[SyncResult.Merged])
     assert(!destRows().exists(_._1 == 9L))
   }
 
-  test("a REST delta from the salesforce source dedups with no shuffle Exchange") {
+  test("a REST delta read on the driver merges last-wins with no Spark job") {
     val metas = Seq(SfFieldMeta("pk", "int", nillable = false),
       SfFieldMeta("name", "string", length = 80), SfFieldMeta("amount", "double"),
       SfFieldMeta("modstamp", "datetime"), SfFieldMeta("is_deleted", "boolean"))
@@ -221,30 +221,48 @@ class SyncSpec extends SparkSpec with BeforeAndAfterAll {
       "name" -> name, "amount" -> pk.toDouble, "modstamp" -> ts(t), "is_deleted" -> false)
     val t = new MockSfTransport(Map("Contact" -> metas), Map("Contact" -> Seq(
       rec(20, "old", "2024-02-01 00:00:00"), rec(20, "new", "2024-02-02 00:00:00"),
-      rec(21, "x", "2024-02-01 00:00:00"))))
-    MockSfTransport.register("sync-rest", t)
-    val plans = ArrayBuffer.empty[SparkPlan]
-    val listener = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        plans.synchronized(plans += qe.executedPlan)
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      rec(21, "x", "2024-02-01 00:00:00"), rec(22, "landed", "2024-01-01 00:00:00"))))
+    val rest = SalesforceSource.schemaOf(t, "Contact")
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
     }
-    spark.listenerManager.register(listener)
+    spark.sparkContext.addSparkListener(listener)
     val r = try {
-      val r = sync.syncTable(cfg, wm => {
-        val df = spark.read.format("salesforce").option("object", "Contact")
-          .option("transport", "sync-rest").option("includeDeleted", "true")
-          .option("bulk", "false").load()
-        wm.fold(df)(w => df.filter($"modstamp" > lit(w)))
-      })
+      val r = sync.syncTable(cfg, rest, wm => SalesforceSource.rows(t, "Contact", rest,
+        wm.map(w => s"modstamp > ${SfSoql.literal(w)}"), includeDeleted = true))
       ListenerBusShim.waitUntilEmpty(spark)
       r
-    } finally spark.listenerManager.unregister(listener)
+    } finally spark.sparkContext.removeSparkListener(listener)
     assert(r == SyncResult.Merged(2, ts("2024-02-02 00:00:00")))
     assert(destRows().filter(_._1 >= 20) == Seq((20L, "new", 20.0), (21L, "x", 21.0)))
-    assert(t.pkChunksCalls == 0)
-    val nodes = plans.toSeq.flatMap(p => new AdaptiveSparkPlanHelper {}.collect(p) { case n => n })
-    assert(nodes.exists(_.isInstanceOf[WindowExec]), plans.mkString("\n"))
-    assert(!nodes.exists(_.isInstanceOf[ShuffleExchangeLike]), plans.mkString("\n"))
+    // the watermark WHERE reached the wire: the landed row was not fetched
+    assert(t.lastWhere.contains(s"modstamp > ${SfSoql.literal(ts("2024-01-03 10:00:00"))}"),
+      t.lastWhere)
+    assert(t.pkChunksCalls == 0 && jobs.get == 0)
+  }
+
+  test("a failing markError keeps the round's own error, the state error suppressed") {
+    val real = DriverManager.getConnection(url)
+    real.setAutoCommit(false)
+    val broken = java.lang.reflect.Proxy.newProxyInstance(getClass.getClassLoader,
+      Array(classOf[Connection]), (_, m, args) =>
+        if (m.getName == "prepareStatement" && args(0).toString.contains("SET status = ?"))
+          throw new java.sql.SQLException("state store down")
+        else try m.invoke(real, (if (args == null) Array.empty[AnyRef] else args): _*)
+        catch { case e: java.lang.reflect.InvocationTargetException => throw e.getCause }
+    ).asInstanceOf[Connection]
+    try {
+      val st = new SyncStateStore(broken)
+      st.register("contacts_err", ts("2024-01-01 00:00:00"))
+      broken.commit()
+      val e = intercept[RuntimeException] {
+        new IncrementalSync(broken, dialect, st)
+          .syncTable(cfg.copy(tablename = "contacts_err"), schema,
+            _ => throw new RuntimeException("source down"))
+      }
+      assert(e.getMessage == "source down")
+      assert(e.getSuppressed.map(_.getMessage).toSeq == Seq("state store down"))
+    } finally real.close()
   }
 }
