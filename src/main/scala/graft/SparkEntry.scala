@@ -1493,6 +1493,7 @@ object SparkEntry {
     * destination back over JDBC.
     */
   private def k2BulkLoadQuery(s: SparkSession, d: String): DataFrame = {
+    import scala.jdk.CollectionConverters._
     import graft.sources.salesforce.{BatchInfo, BulkManifest, JobInfo}
     val url = "jdbc:derby:memory:graftk2" +
       d.replaceAll("[^a-zA-Z0-9]", "_") + ";create=true"
@@ -1521,10 +1522,8 @@ object SparkEntry {
         systemModstamp = Some(java.sql.Timestamp.valueOf("2024-03-01 09:30:00")))
       graft.sync.BulkLoad.bulkLoad(job,
         graft.sync.SyncConfig("k2part", "p_partkey", "p_partkey"),
-        conn, new graft.sink.DerbyDialect, state, {
-          case b if b.id == "b-odd" => part.filter(col("p_partkey") % 2 === 1)
-          case _ => part.filter(col("p_partkey") % 2 === 0)
-        })
+        conn, new graft.sink.DerbyDialect, state, part.schema, b => part.filter(
+          col("p_partkey") % 2 === (if (b.id == "b-odd") 1 else 0)).toLocalIterator().asScala)
     } finally conn.close()
     s.read.format("jdbc")
       .option("url", url)

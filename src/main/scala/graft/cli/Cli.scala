@@ -1,13 +1,16 @@
 package graft.cli
 
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Path}
 import java.sql.{DriverManager, Timestamp}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.Using
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.reverse.{BulkUpload, UploadTransports}
 import graft.sink.{DerbyDialect, PgDialect, SqlDialect}
-import graft.sources.salesforce.{HttpSfTransport, SalesforceSource, SfLogin, SfSoql,
-  SfTransports}
+import graft.sources.salesforce.{CsvWire, HttpSfTransport, SalesforceSource, SfLogin,
+  SfSoql, SfTransports}
 import graft.sync.{BulkLoad, IncrementalSync, SyncConfig, SyncStateStore}
 import graft.types.{SfField, SfSchema}
 
@@ -23,6 +26,7 @@ import graft.types.{SfField, SfSchema}
   *                         [--count] [--include-deleted]
   * graft.cli.Cli bulkload  --transport t --object Contact --jdbc URL
   *                         --dest tbl --pk Id --ts-col SystemModstamp
+  *                         [--include-deleted]
   * graft.cli.Cli sync      --transport t --object Contact --jdbc URL
   *                         --dest tbl --pk Id --ts-col SystemModstamp
   *                         [--deleted-col IsDeleted]
@@ -36,6 +40,12 @@ import graft.types.{SfField, SfSchema}
   * UploadTransports) — production registers an HttpSfTransport built
   * from connection options; tests register mocks. Output goes to the
   * supplied sink (stdout in `main`), so specs capture it.
+  *
+  * The replication verbs — `bulkload`, `sync`, `upload` — run on the
+  * driver, as the reference's one process on one connection does: their
+  * rows pass between the transport and the one JDBC connection or the
+  * one posting loop, so they plan no Spark query and start no Spark
+  * session. Only `query` and `explain` use [[spark]].
   */
 object Cli {
 
@@ -224,25 +234,19 @@ object Cli {
       grantTo = opts.get("grant-to")).foreach(out)
   }
 
-  /** The object as a DataFrame through the `salesforce` source. */
-  private def readObject(opts: Map[String, String]): DataFrame = {
-    var r = spark.read.format("salesforce")
+  /** `query.py`: SOQL through the `salesforce` source, the one verb that
+    * reads a DataFrame; `--count` mirrors `query_count` (A1 — answered
+    * without fetching rows).
+    */
+  private def query(opts: Map[String, String], out: String => Unit): Unit = {
+    var df = spark.read.format("salesforce")
       .option("object", required(opts, "object"))
       .option("transport", required(opts, "transport"))
-      .option("includeDeleted", opts.getOrElse("include-deleted", "false"))
-    opts.get("chunk-size").foreach(n => r = r.option("chunkSize", n))
-    var df = r.load()
+      .option("includeDeleted", opts.contains("include-deleted"))
+      .load()
     opts.get("fields").foreach(f => df = df.select(f.split(",").map(col): _*))
     opts.get("where").foreach(w => df = df.filter(expr(w)))
     opts.get("limit").foreach(n => df = df.limit(n.toInt))
-    df
-  }
-
-  /** `query.py`: SOQL through the connector; `--count` mirrors
-    * `query_count` (A1 — answered without fetching rows).
-    */
-  private def query(opts: Map[String, String], out: String => Unit): Unit = {
-    val df = readObject(opts)
     if (opts.contains("count")) out(df.count().toString)
     else {
       out(df.columns.mkString(","))
@@ -260,22 +264,27 @@ object Cli {
 
   /** `query_bulk.py` + `download.py` + `csv_to_postgres.py`: full
     * extract → truncate-and-load → C4 bootstrap, as one verb. The
-    * connector does the chunked extract, read once; the load stamps
-    * `__sync` with the max CDC timestamp landed (the landed-data
-    * analogue of the job's systemModstamp, A2 semantics).
+    * extract reads every described column of the whole object, the
+    * source's PK chunks one after another on the driver
+    * ([[SalesforceSource.extract]]), once; the load stamps `__sync` with
+    * the max CDC timestamp landed (the landed-data analogue of the job's
+    * systemModstamp, A2 semantics).
     */
   private def bulkload(opts: Map[String, String], out: String => Unit): Unit = {
     val url = required(opts, "jdbc")
     val dest = required(opts, "dest")
     val cfg = SyncConfig(dest, required(opts, "pk"), required(opts, "ts-col"))
-    val df = readObject(opts)
+    val obj = required(opts, "object")
+    val transport = SfTransports.get(required(opts, "transport"))
+    val schema = SalesforceSource.schemaOf(transport, obj)
     val conn = DriverManager.getConnection(url)
     try {
       conn.setAutoCommit(false)
       val state = new SyncStateStore(conn)
       try state.install()
       catch { case e: java.sql.SQLException if e.getSQLState == "X0Y32" => () }
-      val (n, modstamp) = BulkLoad.refresh(cfg, conn, dialectFor(url, opts), state, df)
+      val (n, modstamp) = BulkLoad.refresh(cfg, conn, dialectFor(url, opts), state, schema,
+        SalesforceSource.extract(transport, obj, schema, opts.contains("include-deleted")))
       out(s"loaded $n rows into $dest; __sync registered at $modstamp")
     } finally conn.close()
   }
@@ -285,7 +294,7 @@ object Cli {
     * advance, single commit. The delta is read as the reference polls it
     * (`query_poll_table.py:78-85`): on the driver, REST `queryAll` pages
     * with the T6 `ts > watermark` WHERE, no Bulk job and no Spark query,
-    * so the verb starts no Spark session; `bulkload` keeps the
+    * so the verb starts no Spark session; `bulkload` reads the
     * PK-chunked Bulk extract. `--max-delta N` adds the bulk-vs-poll
     * preflight (`README.rst:68`): the same WHERE as
     * `SELECT COUNT() ... WHERE ts > watermark` decides whether to stop
@@ -342,18 +351,29 @@ object Cli {
 
   /** `upload_table.py`: CSV file → chunked bulk-update batches with
     * per-record results; failures print like the reference's error
-    * report (`upload_table.py:97-103`).
+    * report (`upload_table.py:97-103`). The file is RFC-4180 CSV with a
+    * header, decoded by [[CsvWire]]: doubled quotes, embedded commas and
+    * newlines keep their values. An empty field, quoted or not, is NULL
+    * and posts as an empty field.
     */
   private def upload(opts: Map[String, String], out: String => Unit): Unit = {
-    val csv = required(opts, "csv")
-    val df = spark.read.option("header", "true").csv(csv)
-    val (jobId, results) = BulkUpload.uploadWithResults(df,
-      required(opts, "object"), required(opts, "transport"),
-      opts.getOrElse("operation", "update"),
-      externalIdField = opts.get("external-id"))
-    val failed = results.filter(!col("success")).collect()
-    out(s"job $jobId: ${results.count()} records, ${failed.length} failed")
-    failed.foreach(r => out(s"FAILED ${r.getAs[String]("id")}: " +
-      r.getAs[String]("error")))
+    val csv = Files.newBufferedReader(Path.of(required(opts, "csv")), UTF_8)
+    val (jobId, batches) = Using.resource(csv) { in =>
+      val records = CsvWire.parseRows(in)
+      val columns = if (records.hasNext) records.next() else Nil
+      val rows = records.zipWithIndex.map { case (r, i) =>
+        require(r.size == columns.size,
+          s"CSV record ${i + 1} has ${r.size} fields, the header ${columns.size}")
+        Row.fromSeq(r.map(v => if (v.isEmpty) null else v))
+      }
+      BulkUpload.uploadWithResults(columns, rows,
+        required(opts, "object"), required(opts, "transport"),
+        opts.getOrElse("operation", "update"),
+        externalIdField = opts.get("external-id"))
+    }
+    val results = batches.flatMap(_._2)
+    val failed = results.filterNot(_.success)
+    out(s"job $jobId: ${results.size} records, ${failed.size} failed")
+    failed.foreach(r => out(s"FAILED ${r.id}: ${r.error}"))
   }
 }

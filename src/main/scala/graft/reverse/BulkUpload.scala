@@ -3,17 +3,15 @@ package graft.reverse
 import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.types._
 
-/** Reverse ETL (K5/T3, `upload_table.py`): DataFrame → canonical CSV →
+/** Reverse ETL (K5/T3, `upload_table.py`): rows → canonical CSV →
   * size/count-bounded chunks → bulk-update batches.
   *
   * The chunker enforces BOTH bounds of the reference (≤10 MB and
   * ≤10 000 records per batch, header repeated per chunk,
-  * `upload_table.py:15-16,43-74`). Posting runs per partition on the
-  * executors — each partition chunks and posts its own rows, which is
-  * the Spark-shaped version of the reference's sequential loop; the
-  * batch wait/retry loop stays per batch.
+  * `upload_table.py:15-16,43-74`). Posting is the reference's one
+  * sequential loop, on the driver: chunk, post, wait, results, and the
+  * job's close at the end.
   */
 object BulkUpload {
 
@@ -21,9 +19,8 @@ object BulkUpload {
   val DefaultMaxRecords: Int = 10000
 
   /** Shared ISO8601/UTC formatter: `DateTimeFormatter` is immutable and
-    * thread-safe, so one instance serves every executor thread (a
-    * per-value `SimpleDateFormat` allocation was the hot-path cost
-    * here).
+    * thread-safe, so one instance serves every call (a per-value
+    * `SimpleDateFormat` allocation was the hot-path cost here).
     */
   private val IsoUtc = java.time.format.DateTimeFormatter
     .ofPattern("yyyy-MM-dd'T'HH:mm:ss'Z'")
@@ -43,8 +40,8 @@ object BulkUpload {
   def encodeRow(row: Row): String =
     (0 until row.length).map(i => encodeValue(row.get(i))).mkString(",")
 
-  def header(schema: StructType): String =
-    schema.fieldNames.map(n => "\"" + n.replace("\"", "\"\"") + "\"").mkString(",")
+  def header(columns: Seq[String]): String =
+    columns.map(n => "\"" + n.replace("\"", "\"\"") + "\"").mkString(",")
 
   /** T3 — greedy chunking under both bounds; header repeated per chunk.
     * A record larger than maxBytes still ships alone (the reference
@@ -52,29 +49,22 @@ object BulkUpload {
     */
   def chunk(header: String, records: Iterator[String],
       maxBytes: Int = DefaultMaxBytes,
-      maxRecords: Int = DefaultMaxRecords): Iterator[String] = new Iterator[String] {
-    private val headerBytes = header.getBytes("UTF-8").length + 1
-    private var pending: Option[String] = None
-
-    override def hasNext: Boolean = pending.isDefined || records.hasNext
-
-    override def next(): String = {
+      maxRecords: Int = DefaultMaxRecords): Iterator[String] = {
+    val recs = records.buffered
+    def size(s: String) = s.getBytes("UTF-8").length + 1
+    Iterator.continually(()).takeWhile(_ => recs.hasNext).map { _ =>
       val sb = new StringBuilder(header).append('\n')
-      var bytes = headerBytes
+      var bytes = size(header)
       var n = 0
       var full = false
-      while (!full && (pending.isDefined || records.hasNext)) {
-        val rec = pending.getOrElse(records.next())
-        pending = None
-        val recBytes = rec.getBytes("UTF-8").length + 1
-        if (n > 0 && (bytes + recBytes > maxBytes || n + 1 > maxRecords)) {
-          pending = Some(rec)
-          full = true
-        } else {
-          sb.append(rec).append('\n')
+      while (!full && recs.hasNext) {
+        val recBytes = size(recs.head)
+        if (n > 0 && bytes + recBytes > maxBytes) full = true
+        else {
+          sb.append(recs.next()).append('\n')
           bytes += recBytes
           n += 1
-          if (n >= maxRecords) full = true
+          full = n >= maxRecords
         }
       }
       sb.result()
@@ -131,106 +121,81 @@ object BulkUpload {
     def closeJob(jobId: String): Unit
   }
 
-  /** K5 — chunk + post every partition's rows as batches of one job,
-    * with per-record results. Job create/close are driver-side; batch
-    * posting is distributed (each task posts its own partition's
-    * chunks). Every batch's `UploadResult` rows land in a driver-held
-    * DataFrame, so failed records are queryable instead of silently
-    * dropped: `upload_table.py:89-103` prints them; a pipeline joins
-    * them back to the source rows for retry/report.
-    *
-    * The upload runs as an ACTION (foreachPartition + collection
-    * accumulator), never as a cached transformation: a lazy/cached
-    * side-effecting Dataset can recompute after `closeJob` (cache
-    * eviction) and post batches to a closed job, and its results are
-    * only as durable as the cache. The accumulator merges from
-    * SUCCESSFUL task attempts only, so the returned results carry no
-    * duplicates; the POSTs themselves are at-least-once under task
-    * retry (a Spark-level retry re-posts the partition's earlier
-    * chunks — the server-side dedup a client cannot provide; the wire
-    * transport fails fast on POST errors rather than auto-retrying,
-    * see HttpSfTransport.send). Result volume is bounded by the upload
-    * itself (one row per uploaded record), the same driver-side scope
-    * as the reference's result loop.
+  /** K5 — chunk + post `rows` (values in `columns` order) as the
+    * batches of one job, with per-record results: the reference's
+    * sequential loop (`upload_table.py:43-103`) on the driver — create
+    * the job; per chunk post it, wait for it and read its results;
+    * close the job. Each chunk is posted once: the wire transport fails
+    * fast on POST errors rather than auto-retrying (see
+    * HttpSfTransport.send). Every batch's `UploadResult` rows come back,
+    * so failed records are reportable instead of silently dropped:
+    * `upload_table.py:89-103` prints them; a pipeline joins them back to
+    * the source rows for retry/report. Result volume is one row per
+    * uploaded record, the same driver-side scope as the reference's
+    * result loop.
+    * @return the job id, and per posted batch in post order its id and
+    *         per-record results
     */
-  def uploadWithResults(df: DataFrame, objectName: String,
-      transportName: String, operation: String = "update",
+  def uploadWithResults(columns: Seq[String], rows: Iterator[Row],
+      objectName: String, transportName: String, operation: String = "update",
       maxBytes: Int = DefaultMaxBytes,
       maxRecords: Int = DefaultMaxRecords,
-      externalIdField: Option[String] = None): (String, DataFrame) = {
+      externalIdField: Option[String] = None): (String, Seq[(String, Seq[UploadResult])]) = {
     validateOperation(operation, externalIdField)
-    val spark = df.sparkSession
-    val transport = UploadTransports.get(transportName)
-    val jobId = transport.createJob(objectName, operation, externalIdField)
-    val hdr = header(df.schema)
-    import spark.implicits._
-    val acc = spark.sparkContext.collectionAccumulator[
-      (String, String, Boolean, Boolean, String)]("upload_results")
-    df.foreachPartition { rows: Iterator[Row] =>
-      val t = UploadTransports.get(transportName)
-      chunk(hdr, rows.map(encodeRow), maxBytes, maxRecords).foreach { c =>
+    val t = UploadTransports.get(transportName)
+    val jobId = t.createJob(objectName, operation, externalIdField)
+    val batches = chunk(header(columns), rows.map(encodeRow), maxBytes, maxRecords)
+      .map { c =>
         val batchId = t.postBatch(jobId, c)
         t.waitBatch(jobId, batchId)
-        t.batchResults(jobId, batchId)
-          .foreach(r => acc.add((batchId, r.id, r.success, r.created, r.error)))
-      }
-    }
-    transport.closeJob(jobId)
-    val results = acc.value.asScala.toSeq
-      .toDF("batch_id", "id", "success", "created", "error")
-    (jobId, results)
+        batchId -> t.batchResults(jobId, batchId)
+      }.toVector
+    t.closeJob(jobId)
+    (jobId, batches)
   }
 
   /** Per-batch upload-result census — the verification readout a
     * reverse-ETL run reports (`upload_table.py:89-103` prints each
     * failed `UploadResult`; a pipeline aggregates them): records,
-    * successes, creates, failures, and the error label per posted
-    * batch, from [[uploadWithResults]]'s result frame.
+    * successes, creates, failures, and the greatest error label per
+    * posted batch, from [[uploadWithResults]] over `df` ordered by
+    * `orderCol`.
     *
-    * Oracle-determinism harness: the source is ordered by `orderCol`
-    * and laid out as ONE partition stream, so chunk boundaries (every
-    * `maxRecords` rows) and the mock transport's per-batch failure
-    * positions are pure row-arithmetic an oracle restates with
-    * `row_number()` — a production upload keeps the parallel
-    * per-partition posting of [[uploadWithResults]] instead (batch composition
-    * is then layout-dependent, which a real server tolerates and an
-    * oracle cannot). The batch ordinal parses off the transport's
-    * `batch-<n>` id scheme ([[MockUploadTransport]]'s counter); a
-    * transport minting opaque ids (the HTTP wire's 15/18-char keys)
-    * FAILS LOUDLY below rather than silently collapsing every batch
-    * into one NULL group — this census is a harness readout, and an
-    * id outside the contract means it was pointed at the wrong
-    * transport. Result volume is bounded by the upload slice.
+    * Oracle-determinism harness: the rows reach the one posting loop in
+    * `orderCol` order, so chunk boundaries (every `maxRecords` rows) and
+    * the mock transport's per-batch failure positions are pure
+    * row-arithmetic an oracle restates with `row_number()`. The batch
+    * ordinal parses off the transport's `batch-<n>` id scheme
+    * ([[MockUploadTransport]]'s counter); a transport minting opaque ids
+    * (the HTTP wire's 15/18-char keys) FAILS LOUDLY rather than
+    * collapsing every batch into one group — this census is a harness
+    * readout, and an id outside the contract means it was pointed at the
+    * wrong transport.
     */
   def uploadResultCensus(df: DataFrame, orderCol: String,
       objectName: String, transportName: String,
       maxRecords: Int): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val ordered = df.repartition(1).sortWithinPartitions(orderCol)
-    val (_, res) = uploadWithResults(ordered, objectName, transportName,
+    val spark = df.sparkSession
+    import spark.implicits._
+    val (_, batches) = uploadWithResults(df.columns.toSeq,
+      df.orderBy(orderCol).toLocalIterator().asScala, objectName, transportName,
       operation = "insert", maxRecords = maxRecords)
-    // the ordinal segment must be exactly 'batch-<n>' — at the id
-    // start or after a '/' (the mock mints 'job-<...>/batch-<n>'), so
-    // 'rebatch-7' cannot parse as 7 — and the guard catches NULL ids
-    // too (when(NULL, ...) would fall through to otherwise — the
-    // silent collapse this guard exists to stop)
-    val ord = regexp_extract(col("batch_id"), "(^|/)batch-(\\d+)$", 2)
-    res
-      .select(when(ord.isNull || ord === "",
-          raise_error(concat(lit("uploadResultCensus: batch_id '"),
-            coalesce(col("batch_id"), lit("NULL")),
-            lit("' does not match the 'batch-<n>' id scheme this " +
-              "census requires"))))
-        .otherwise(ord.cast("int")).as("batch_ord"),
-        col("success"), col("created"), col("error"))
-      .groupBy("batch_ord")
-      .agg(count(lit(1)).as("n_records"),
-        sum(when(col("success"), 1L).otherwise(0L)).as("n_success"),
-        sum(when(col("created"), 1L).otherwise(0L)).as("n_created"),
-        sum(when(!col("success"), 1L).otherwise(0L)).as("n_failed"),
-        max(col("error")).as("err"))
-      .orderBy("batch_ord")
+    batches.map { case (batchId, rs) =>
+      (batchOrdinal(batchId), rs.size.toLong, rs.count(_.success).toLong,
+        rs.count(_.created).toLong, rs.count(!_.success).toLong,
+        rs.map(_.error).filter(_ != null).maxOption.orNull)
+    }.sortBy(_._1)
+      .toDF("batch_ord", "n_records", "n_success", "n_created", "n_failed", "err")
   }
+
+  // exactly 'batch-<n>', at the id start or after a '/' (the mock mints
+  // 'job-<...>/batch-<n>'), so 'rebatch-7' cannot parse as 7
+  private val BatchOrdinal = "(?:.*/)?batch-(\\d+)".r
+
+  private def batchOrdinal(batchId: String): Int = Option(batchId).collect {
+    case BatchOrdinal(n) => n.toInt
+  }.getOrElse(throw new IllegalArgumentException(s"uploadResultCensus: batch_id " +
+    s"'$batchId' does not match the 'batch-<n>' id scheme this census requires"))
 }
 
 /** Per-record upload outcome (`salesforce_bulk.py:29` namedtuple). */
@@ -285,9 +250,11 @@ final class MockUploadTransport(failEvery: Int = 0)
   override def waitBatch(jobId: String, batchId: String): Unit = ()
   override def batchResults(jobId: String, batchId: String): Seq[UploadResult] = {
     // one result row per posted record, in order (`salesforce_bulk.py:
-    // 524-533` CSV rows); ids are synthetic like a real insert's
+    // 524-533` CSV rows); ids are synthetic like a real insert's. Records,
+    // not lines: a quoted field may hold a newline
     val csv = batches.getOrElse(batchId, "")
-    val n = csv.linesIterator.size - 1 // minus header
+    val n = graft.sources.salesforce.CsvWire.parseRows(
+      new java.io.StringReader(csv)).size - 1 // minus header
     (0 until math.max(n, 0)).map { i =>
       val fail = failEvery > 0 && (i + 1) % failEvery == 0
       UploadResult(s"$batchId-rec-$i", success = !fail, created = !fail,

@@ -69,7 +69,7 @@ object CopyStager {
     * whole delta never materializes as one string.
     */
   def csvReader(schema: StructType, rows: Iterator[Row]): java.io.Reader = new java.io.Reader {
-    private var buf: String = BulkUpload.header(schema) + "\n"
+    private var buf: String = BulkUpload.header(schema.fieldNames.toSeq) + "\n"
     private var pos = 0
     override def read(cbuf: Array[Char], off: Int, len: Int): Int = {
       while (pos >= buf.length) {

@@ -496,7 +496,8 @@ final class HttpSfTransport(
       // abandoned — the PartitionReader's close() cannot reach it.
       // Register the close with the task, so the socket is released
       // when the task ends however it ends (close() is idempotent;
-      // outside a task — unit specs — the EOF close is the only path).
+      // outside a task — the driver-side extract, unit specs — the EOF
+      // close is the only path).
       Option(org.apache.spark.TaskContext.get()).foreach(
         _.addTaskCompletionListener[Unit](_ => in.close()))
       CsvWire.parse(nulStripReader(in))
@@ -591,10 +592,11 @@ final class HttpSfTransport(
     }
 }
 
-/** Minimal RFC-4180 CSV decoder for bulk result bodies: quoted fields,
-  * doubled-quote escapes, embedded commas/newlines. Header row names
-  * the fields; every value is a String (typed decode happens in
-  * SfRowReader against the Spark schema).
+/** graft's one RFC-4180 CSV decoder: quoted fields, doubled-quote
+  * escapes, embedded commas/newlines. It decodes bulk result bodies,
+  * `Cli upload`'s input file and mapping files. Header row names the
+  * fields; every value is a String (typed decode happens in SfRowReader
+  * against the Spark schema). An empty field reads as "", quoted or not.
   */
 private[graft] object CsvWire {
 

@@ -34,11 +34,12 @@ import graft.types.{SfField, SfSchema}
   * analogue of the reference's server-side bulk batches — so a
   * 1000-executor cluster reads 1000 chunks concurrently; objects that
   * reject chunking degrade to a single partition, never fail
-  * (`query_bulk.py:26-36`). The reference's poll read
-  * (`query_poll_table.py:78-85`) is not a Spark scan: a small watermark
-  * delta is read on the driver by [[SalesforceSource.rows]], REST
-  * `query/` or `queryAll/` pages through `nextRecordsUrl`, with no Bulk
-  * job and no Spark job.
+  * (`query_bulk.py:26-36`). Replication reads are not Spark scans: they
+  * end in the one driver JDBC connection either way, so the CLI reads
+  * on the driver through [[SalesforceSource]]'s object — the poll delta
+  * (`query_poll_table.py:78-85`) as REST `query/` or `queryAll/` pages,
+  * the full extract (`query_bulk.py`) chunk after chunk, both with no
+  * Spark job.
   */
 class SalesforceSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "salesforce"
@@ -61,10 +62,13 @@ class SalesforceSource extends TableProvider with DataSourceRegister {
     new SfTable(schema, new CaseInsensitiveStringMap(properties))
 }
 
-/** The driver-side read: the scan's schema and decoder with no Spark
-  * query, for a delta the driver holds anyway (`Cli sync`).
+/** The driver-side read: the scan's schema, chunk plan and decoder with
+  * no Spark query, for rows the driver holds anyway (`Cli sync` and
+  * `Cli bulkload`).
   */
 object SalesforceSource {
+
+  val DefaultChunkSize = 100000
 
   /** The object's Spark schema from describe alone: the struct flatten
     * keys off compoundFieldName and the drop rules off calculated, both
@@ -75,17 +79,38 @@ object SalesforceSource {
     SfSchema.structType(transport.describe(objectName).map(_.toSfField))
 
   /** Every `schema` column of the records matching `where`, as external
-    * `Row`s: one un-chunked [[SfTransport.query]] (REST pages through
-    * `nextRecordsUrl` over HTTP), decoded by [[SfRowReader]] exactly as a
-    * scan partition is.
+    * `Row`s: one [[SfTransport.query]] — by default un-chunked (REST
+    * pages through `nextRecordsUrl` over HTTP), else the `pkRange`
+    * chunk — decoded by [[SfRowReader]] exactly as a scan partition is.
     */
   def rows(transport: SfTransport, objectName: String, schema: StructType,
-      where: Option[String], includeDeleted: Boolean): Iterator[Row] = {
+      where: Option[String], includeDeleted: Boolean,
+      pkRange: Option[(String, String)] = None): Iterator[Row] = {
     val reader = new SfRowReader(transport.query(objectName, schema.fieldNames.toSeq,
-      where, None, includeDeleted, None), schema)
+      where, None, includeDeleted, pkRange), schema)
     val toRow = CatalystTypeConverters.createToScalaConverter(schema)
     Iterator.continually(reader).takeWhile(_.next())
       .map(r => toRow(r.get()).asInstanceOf[Row])
+  }
+
+  /** The full PK-chunked extract of every `schema` column (`query_bulk.py`
+    * + `download.py`): the chunks [[chunkRanges]] plans, read one after
+    * another on the driver.
+    */
+  def extract(transport: SfTransport, objectName: String, schema: StructType,
+      includeDeleted: Boolean): Iterator[Row] =
+    chunkRanges(transport, objectName, schema.fieldNames.toSeq, None, includeDeleted,
+      DefaultChunkSize).iterator.flatMap(rows(transport, objectName, schema, None,
+        includeDeleted, _))
+
+  /** S2: the [[SfTransport.pkChunks]] tokens, or one un-chunked read
+    * (None) when the object rejects chunking.
+    */
+  def chunkRanges(transport: SfTransport, objectName: String, fields: Seq[String],
+      where: Option[String], includeDeleted: Boolean,
+      chunkSize: Int): Seq[Option[(String, String)]] = {
+    val chunks = transport.pkChunks(objectName, fields, where, includeDeleted, chunkSize)
+    if (chunks.isEmpty) Seq(None) else chunks.map(Some(_))
   }
 }
 
@@ -179,7 +204,7 @@ final class SfScanBuilder(fullSchema: StructType, options: CaseInsensitiveString
     options.get("object"),
     options.get("transport"),
     options.getBoolean("includeDeleted", false),
-    options.getInt("chunkSize", 100000),
+    options.getInt("chunkSize", SalesforceSource.DefaultChunkSize),
     requiredSchema, pushedSoqlWhere, limit, countStar)
 }
 
@@ -217,12 +242,8 @@ final class SfScan(objectName: String, transportName: String,
     */
   private lazy val partitions: Array[InputPartition] =
     if (countStar || limit.isDefined) Array(SfInputPartition(None))
-    else {
-      val chunks = SfTransports.get(transportName).pkChunks(objectName,
-        fields, where, includeDeleted, chunkSize)
-      if (chunks.isEmpty) Array(SfInputPartition(None))
-      else chunks.map(c => SfInputPartition(Some(c))).toArray
-    }
+    else SalesforceSource.chunkRanges(SfTransports.get(transportName), objectName,
+      fields, where, includeDeleted, chunkSize).map(SfInputPartition).toArray
 
   override def planInputPartitions(): Array[InputPartition] = partitions
 

@@ -1,9 +1,9 @@
 package graft.sync
 
 import java.sql.{Connection, Timestamp}
-import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.types.StructType
 import graft.sink.{CopyStager, SqlDialect}
 import graft.sources.salesforce.{BatchInfo, BulkManifest, JobInfo}
 
@@ -26,41 +26,35 @@ import graft.sources.salesforce.{BatchInfo, BulkManifest, JobInfo}
   * A crash anywhere rolls the whole transaction back: the destination
   * keeps its previous contents and `__sync` its previous watermark.
   *
-  * [[refresh]] is the same load for a plain source DataFrame (the CLI's
+  * [[refresh]] is the same load for one row stream (the CLI's
   * `bulkload`): one read, the watermark from the landed data (A2).
   *
-  * Scale split: each source is read once and streams through the
-  * driver connection ([[CopyStager.load]]: COPY or batched INSERTs) —
-  * faithful to the reference's COPY-through-client design and bounded
-  * by the extract size.
+  * Scale split: each source is a driver-side row iterator, read once,
+  * streaming through the driver connection ([[CopyStager.load]]: COPY
+  * or batched INSERTs) — the reference's COPY-through-client design,
+  * bounded by the extract size, with no Spark job in between.
   */
 object BulkLoad {
   import IncrementalSync.{exec, maxLandedTs}
 
-  /** @param batchData resolves one Completed batch to its rows (the
-    *                   connector partition, a staged CSV, or a fixture)
+  /** @param batchData resolves one Completed batch to its rows of
+    *                   `schema` (a chunk read, a staged CSV, or a fixture)
     * @return rows loaded
     */
   def bulkLoad(job: JobInfo, cfg: SyncConfig, conn: Connection,
-      dialect: SqlDialect, state: SyncStateStore,
-      batchData: BatchInfo => DataFrame): Long = {
+      dialect: SqlDialect, state: SyncStateStore, schema: StructType,
+      batchData: BatchInfo => Iterator[Row]): Long = {
     val failed = BulkManifest.failedBatches(job)
     require(failed.isEmpty,
       s"bulk job ${job.id} has failed batches: ${failed.map(_.id).mkString(", ")}")
     BulkManifest.requireNonEmpty(job)
     val modstamp = job.systemModstamp.getOrElse(throw new IllegalArgumentException(
       s"bulk job ${job.id} carries no systemModstamp — cannot register sync state"))
-    val dest = dialect.qualified(cfg.schema, cfg.tablename)
-    inTransaction(conn) {
-      exec(conn, dialect.truncateSql(dest))
-      val total = BulkManifest.loadableBatches(job)
-        .map(b => load(conn, dialect, dest, batchData(b))).sum
-      state.register(cfg.tablename, modstamp)
-      total // truncate + load + C4 registration: atomic
-    }
+    truncateAndLoad(cfg, conn, dialect, state, schema,
+      BulkManifest.loadableBatches(job).iterator.flatMap(batchData))(_ => Some(modstamp))._1
   }
 
-  /** Truncate-and-load of `source`, read once, registering `__sync` at
+  /** Truncate-and-load of `rows`, read once, registering `__sync` at
     * the max CDC timestamp landed (A2 — the landed-data analogue of the
     * job's systemModstamp). An empty source is refused after the load,
     * inside the transaction: the rollback keeps the destination and
@@ -68,22 +62,27 @@ object BulkLoad {
     * @return rows loaded and the registered watermark
     */
   def refresh(cfg: SyncConfig, conn: Connection, dialect: SqlDialect,
-      state: SyncStateStore, source: DataFrame): (Long, Timestamp) = {
+      state: SyncStateStore, schema: StructType,
+      rows: Iterator[Row]): (Long, Timestamp) =
+    truncateAndLoad(cfg, conn, dialect, state, schema, rows)(
+      maxLandedTs(conn, dialect, _, cfg.tsCol))
+
+  /** Truncate, load, and C4 registration at `watermark(dest)`, as one
+    * transaction; no watermark means nothing landed.
+    */
+  private def truncateAndLoad(cfg: SyncConfig, conn: Connection, dialect: SqlDialect,
+      state: SyncStateStore, schema: StructType, rows: Iterator[Row])(
+      watermark: String => Option[Timestamp]): (Long, Timestamp) = {
     val dest = dialect.qualified(cfg.schema, cfg.tablename)
     inTransaction(conn) {
       exec(conn, dialect.truncateSql(dest))
-      val n = load(conn, dialect, dest, source)
-      val wm = maxLandedTs(conn, dialect, dest, cfg.tsCol).getOrElse(throw
-        new IllegalArgumentException(
-          s"source is empty — refusing truncate-and-load of ${cfg.tablename}"))
+      val n = CopyStager.load(conn, dialect, dest, schema, rows)
+      val wm = watermark(dest).getOrElse(throw new IllegalArgumentException(
+        s"source is empty — refusing truncate-and-load of ${cfg.tablename}"))
       state.register(cfg.tablename, wm)
       (n, wm)
     }
   }
-
-  private def load(conn: Connection, dialect: SqlDialect, dest: String,
-      df: DataFrame): Long =
-    CopyStager.load(conn, dialect, dest, df.schema, df.toLocalIterator().asScala)
 
   /** Commits `body`; any failure rolls the whole transaction back. A
     * failing rollback rides along suppressed, not in the error's place.

@@ -1,7 +1,10 @@
 package graft
 
 import java.sql.{Connection, DriverManager, Timestamp}
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.types._
 import org.scalatest.BeforeAndAfterAll
+import org.scalatest.funsuite.AnyFunSuite
 import graft.sink.DerbyDialect
 import graft.sources.salesforce.{BatchInfo, JobInfo}
 import graft.sync.{BulkLoad, SyncConfig, SyncStateStore}
@@ -11,8 +14,7 @@ import graft.sync.{BulkLoad, SyncConfig, SyncStateStore}
   * guards, destination truncation, `__sync` registration with the job's
   * systemModstamp, and all-or-nothing rollback.
   */
-class BulkLoadSpec extends SparkSpec with BeforeAndAfterAll {
-  import spark.implicits._
+class BulkLoadSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var conn: Connection = _
   private var state: SyncStateStore = _
@@ -40,8 +42,11 @@ class BulkLoadSpec extends SparkSpec with BeforeAndAfterAll {
     super.afterAll()
   }
 
-  private def batchDf(ids: Long*) =
-    ids.map(i => (i, s"rec-$i")).toDF("pk", "name")
+  private val schema = new StructType().add("pk", LongType, nullable = false)
+    .add("name", StringType)
+
+  private def batchRows(ids: Long*): Iterator[Row] =
+    ids.iterator.map(i => Row(i, s"rec-$i"))
 
   private def destRows(): Seq[(Long, String)] = {
     val st = conn.createStatement()
@@ -60,9 +65,9 @@ class BulkLoadSpec extends SparkSpec with BeforeAndAfterAll {
         BatchInfo("b1", "Completed", 2),
         BatchInfo("b2", "Completed", 1)),
       numberRecordsProcessed = 3, systemModstamp = Some(Modstamp))
-    val n = BulkLoad.bulkLoad(job, cfg, conn, dialect, state, {
-      case BatchInfo("b1", _, _, _) => batchDf(1L, 2L)
-      case BatchInfo("b2", _, _, _) => batchDf(3L)
+    val n = BulkLoad.bulkLoad(job, cfg, conn, dialect, state, schema, {
+      case BatchInfo("b1", _, _, _) => batchRows(1L, 2L)
+      case BatchInfo("b2", _, _, _) => batchRows(3L)
       case b => fail(s"batch ${b.id} (${b.state}) must not be fetched")
     })
     assert(n == 3)
@@ -77,7 +82,7 @@ class BulkLoadSpec extends SparkSpec with BeforeAndAfterAll {
       numberRecordsProcessed = 0, systemModstamp = Some(Modstamp))
     val before = destRows()
     intercept[IllegalArgumentException] {
-      BulkLoad.bulkLoad(empty, cfg, conn, dialect, state,
+      BulkLoad.bulkLoad(empty, cfg, conn, dialect, state, schema,
         _ => fail("must not fetch"))
     }
     assert(destRows() == before)
@@ -89,7 +94,7 @@ class BulkLoadSpec extends SparkSpec with BeforeAndAfterAll {
       numberRecordsProcessed = 5, systemModstamp = Some(Modstamp))
     val before = destRows()
     intercept[IllegalArgumentException] {
-      BulkLoad.bulkLoad(bad, cfg, conn, dialect, state, _ => fail("must not fetch"))
+      BulkLoad.bulkLoad(bad, cfg, conn, dialect, state, schema, _ => fail("must not fetch"))
     }
     assert(destRows() == before)
   }
@@ -118,12 +123,12 @@ class BulkLoadSpec extends SparkSpec with BeforeAndAfterAll {
     val st = conn.createStatement()
     st.execute("""CREATE TABLE "k2fn" ("pk" BIGINT, "name" VARCHAR(80), "amount" DOUBLE)""")
     st.close()
-    val df = Seq((1L, Option("a"), Option(2.5)), (2L, None: Option[String], None: Option[Double]))
-      .toDF("pk", "name", "amount")
+    val fnSchema = schema.add("amount", DoubleType)
+    val rows = Seq(Row(1L, "a", 2.5), Row(2L, null, null))
     val job = JobInfo("750N", Seq(BatchInfo("b1", "Completed", 2)),
       numberRecordsProcessed = 2, systemModstamp = Some(Modstamp))
     val n = BulkLoad.bulkLoad(job, SyncConfig("k2fn", "pk", "modstamp"),
-      conn, recording, state, _ => df)
+      conn, recording, state, fnSchema, _ => rows.iterator)
     assert(n == 2)
     // nullable string 'name' must NOT be force-nulled; nullable double must
     assert(recorded == Some((Seq("pk", "name", "amount"), Seq("amount"))))
@@ -145,8 +150,8 @@ class BulkLoadSpec extends SparkSpec with BeforeAndAfterAll {
         r
       }).asInstanceOf[Connection]
     val e = intercept[RuntimeException] {
-      BulkLoad.bulkLoad(job, cfg, rollbackFails, dialect, state, {
-        case BatchInfo("b1", _, _, _) => batchDf(10L)
+      BulkLoad.bulkLoad(job, cfg, rollbackFails, dialect, state, schema, {
+        case BatchInfo("b1", _, _, _) => batchRows(10L)
         case _ => throw new RuntimeException("simulated download failure")
       })
     }

@@ -46,6 +46,26 @@ class CliSpec extends SparkSpec {
     (code, lines.toSeq)
   }
 
+  /** `body`'s result and the Spark jobs started while it ran, read
+    * after the listener bus drains.
+    */
+  private def sparkJobs[A](body: => A): (A, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try { val r = body; ListenerBusShim.waitUntilEmpty(spark); (r, jobs.get) }
+    finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  private def writeCsv(text: String): java.io.File = {
+    val csv = java.io.File.createTempFile("cliupload", ".csv")
+    csv.deleteOnExit()
+    java.nio.file.Files.writeString(csv.toPath, text)
+    csv
+  }
+
   private val jdbc = "jdbc:derby:memory:clispec;create=true"
 
   override def beforeAll(): Unit = {
@@ -93,11 +113,12 @@ class CliSpec extends SparkSpec {
 
   test("bulkload truncate-loads the object into Derby and registers __sync") {
     val t = register("cli-b", v1)
-    val (code, out) = runCli("bulkload", "--transport", "cli-b",
+    val ((code, out), jobs) = sparkJobs(runCli("bulkload", "--transport", "cli-b",
       "--object", "Account", "--jdbc", jdbc, "--dest", "clidest",
-      "--pk", "Id", "--ts-col", "SystemModstamp")
+      "--pk", "Id", "--ts-col", "SystemModstamp"))
     assert(code == 0, out.mkString("\n"))
     assert(out.exists(_.startsWith("loaded 20 rows")))
+    assert(jobs == 0) // the extract is read on the driver
     // one read of the source: one chunk plan, no COUNT() round trips
     assert(t.pkChunksCalls == 1 && t.countCalls == 0)
     val conn = DriverManager.getConnection(jdbc)
@@ -138,22 +159,13 @@ class CliSpec extends SparkSpec {
       }
     } :+ row(21, "acct-21", 21, deleted = false, "2024-01-06 09:30:00")
     val t = register("cli-s", v2)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val (code, out) = try {
-      val r = runCli("sync", "--transport", "cli-s",
-        "--object", "Account", "--jdbc", jdbc, "--dest", "clidest",
-        "--pk", "Id", "--ts-col", "SystemModstamp", "--deleted-col", "IsDeleted")
-      ListenerBusShim.waitUntilEmpty(spark)
-      r
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val ((code, out), jobs) = sparkJobs(runCli("sync", "--transport", "cli-s",
+      "--object", "Account", "--jdbc", jdbc, "--dest", "clidest",
+      "--pk", "Id", "--ts-col", "SystemModstamp", "--deleted-col", "IsDeleted"))
     assert(code == 0, out.mkString("\n"))
     assert(out.exists(_.contains("Merged")), out.mkString("\n"))
     // the round is a driver-side poll: no Spark job
-    assert(jobs.get == 0)
+    assert(jobs == 0)
     // one read of the delta decides the fast path and stages the rows:
     // REST pages with no chunk plan, and no LIMIT-1 probe or empty
     // select list
@@ -176,15 +188,41 @@ class CliSpec extends SparkSpec {
 
   test("upload reports per-record failures from the batch results") {
     UploadTransports.register("cli-u", new MockUploadTransport(failEvery = 3))
-    val csv = java.io.File.createTempFile("cliupload", ".csv")
-    csv.deleteOnExit()
-    val w = new java.io.PrintWriter(csv)
-    w.println("Id,Name"); (1 to 5).foreach(i => w.println(s"00$i,n$i")); w.close()
-    val (code, out) = runCli("upload", "--transport", "cli-u",
-      "--object", "Account", "--csv", csv.getPath)
+    val csv = writeCsv("Id,Name\n" + (1 to 5).map(i => s"00$i,n$i\n").mkString)
+    val ((code, out), jobs) = sparkJobs(runCli("upload", "--transport", "cli-u",
+      "--object", "Account", "--csv", csv.getPath))
     assert(code == 0, out.mkString("\n"))
+    assert(jobs == 0) // one posting loop on the driver
     assert(out.head.matches("job .*: 5 records, 1 failed"), out.mkString("\n"))
     assert(out.exists(_.startsWith("FAILED")))
+  }
+
+  test("upload posts each RFC-4180 record whole; both empty forms post as NULL") {
+    val t = new MockUploadTransport
+    UploadTransports.register("cli-rfc", t)
+    // a doubled quote, an embedded comma, an embedded newline (CRLF
+    // records), and an empty field both unquoted and quoted
+    val csv = writeCsv("Id,Name,Note\r\n" +
+      "001,\"say \"\"hi\"\"\",\"a,b\"\r\n" +
+      "002,\"two\nline\",\r\n" +
+      "003,\"\",plain\r\n")
+    val (code, out) = runCli("upload", "--transport", "cli-rfc",
+      "--object", "Account", "--csv", csv.getPath)
+    assert(code == 0, out.mkString("\n"))
+    assert(out == Seq(s"job ${t.closedJobs.head}: 3 records, 0 failed"), out.mkString("\n"))
+    assert(t.batches.values.toSeq == Seq(
+      "\"Id\",\"Name\",\"Note\"\n" +
+        "\"001\",\"say \"\"hi\"\"\",\"a,b\"\n" +
+        "\"002\",\"two\nline\",\n" +
+        "\"003\",,\"plain\"\n"), t.batches.values.mkString("\n----\n"))
+  }
+
+  test("upload refuses a CSV record wider or narrower than its header") {
+    UploadTransports.register("cli-ragged", new MockUploadTransport)
+    val (code, out) = runCli("upload", "--transport", "cli-ragged",
+      "--object", "Account", "--csv", writeCsv("Id,Name\n001,a\n002\n").getPath)
+    assert(code == 2 && out == Seq(
+      "error: requirement failed: CSV record 2 has 1 fields, the header 2"), out.mkString("\n"))
   }
 
   test("search verb: SOSL hits across objects, --term quick wrapping") {

@@ -8,6 +8,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import scala.collection.concurrent.TrieMap
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import org.apache.spark.sql.Row
 import org.scalatest.BeforeAndAfterAll
 
 import graft.reverse.{BulkUpload, UploadTransports}
@@ -744,28 +745,26 @@ class HttpSfTransportSpec extends SparkSpec with BeforeAndAfterAll {
   }
 
   test("uploadWithResults speaks upsert end-to-end; per-record results flow") {
-    import spark.implicits._
     uploadBatchPolls.set(0)
     UploadTransports.register("http-upsert", transport())
-    val df = Seq(("e1", "a"), ("e2", "b")).toDF("Ext_Id__c", "Name").coalesce(1)
-    val (jobId, results) = BulkUpload.uploadWithResults(df, "Contact",
+    val (jobId, batches) = BulkUpload.uploadWithResults(Seq("Ext_Id__c", "Name"),
+      Iterator(Row("e1", "a"), Row("e2", "b")), "Contact",
       "http-upsert", operation = "upsert", externalIdField = Some("Ext_Id__c"))
     assert(jobId == "750UP")
     assert(seen("jobDoc").toString
       .contains("<externalIdFieldName>Ext_Id__c</externalIdFieldName>"))
-    assert(results.count() == 2)
+    assert(batches.flatMap(_._2).size == 2)
   }
 
-  test("uploadWithResults surfaces failed records as a queryable DataFrame") {
-    import spark.implicits._
+  test("uploadWithResults surfaces failed records in its per-batch results") {
     UploadTransports.register("http-upload", transport())
-    val df = Seq(("1", "a"), ("2", "b")).toDF("Id", "Name").coalesce(1)
-    val (jobId, results) = BulkUpload.uploadWithResults(df, "Contact",
-      "http-upload", operation = "insert")
+    val (jobId, batches) = BulkUpload.uploadWithResults(Seq("Id", "Name"),
+      Iterator(Row("1", "a"), Row("2", "b")), "Contact", "http-upload",
+      operation = "insert")
     assert(jobId == "750UP")
-    val failed = results.filter(!$"success").collect()
-    assert(failed.length == 1 &&
-      failed(0).getAs[String]("error").startsWith("REQUIRED_FIELD_MISSING"))
+    assert(batches.map(_._1) == Seq("753B"))
+    val failed = batches.flatMap(_._2).filterNot(_.success)
+    assert(failed.size == 1 && failed.head.error.startsWith("REQUIRED_FIELD_MISSING"))
   }
 
   // ---- CSV decoder ----------------------------------------------------

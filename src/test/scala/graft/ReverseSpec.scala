@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.{Gen, Prop, Test => SCTest}
+import org.apache.spark.sql.Row
 import graft.reverse.{BulkUpload, MockUploadTransport}
 
 /** Chunker invariants (property-based, SURVEY.md §5 #2) and the
@@ -45,46 +46,39 @@ class ReverseSpec extends AnyFunSuite {
 class ReverseUploadSpec extends SparkSpec {
   import spark.implicits._
 
-  test("upload chunks every partition and closes the job (K5)") {
+  test("upload posts the ordered row stream as record-bounded batches and closes the job (K5)") {
     val t = new MockUploadTransport
     MockUploadTransport.register("up1", t)
-    val df = (1 to 250).map(i => (s"003$i", s"name-$i", i % 2 == 0))
-      .toDF("Id", "Name", "Active").repartition(3)
-    val (jobId, _) = BulkUpload.uploadWithResults(df, "Contact", "up1", maxRecords = 40)
-    assert(t.closedJobs.contains(jobId))
-    val chunks = t.batches.values.toList
-    // 250 rows over 3 partitions, <=40 records per chunk -> >= 7 chunks
-    assert(chunks.size >= 7)
-    val allRows = chunks.flatMap(_.linesIterator.drop(1)).sorted
-    assert(allRows.size == 250)
-    // bool encoding t/f present
-    assert(allRows.head.endsWith(",t") || allRows.head.endsWith(",f"))
-    // every chunk within the record bound (+header)
-    assert(chunks.forall(_.linesIterator.size <= 41))
+    val rows = (1 to 250).map(i => Row(s"003$i", s"name-$i", i % 2 == 0))
+    val (jobId, batches) = BulkUpload.uploadWithResults(Seq("Id", "Name", "Active"),
+      rows.iterator, "Contact", "up1", maxRecords = 40)
+    assert(t.closedJobs == List(jobId))
+    // one stream, <=40 records per chunk -> exactly 7 batches, in row order
+    val chunks = batches.map { case (id, _) => t.batches(id) }
+    assert(chunks.map(_.linesIterator.size - 1) == Seq(40, 40, 40, 40, 40, 40, 10))
+    assert(chunks.forall(_.startsWith("\"Id\",\"Name\",\"Active\"\n")))
+    assert(chunks.flatMap(_.linesIterator.drop(1)) == rows.map(BulkUpload.encodeRow))
+    assert(chunks.head.linesIterator.drop(1).next() == "\"0031\",\"name-1\",f")
+    assert(batches.map(_._2.size) == Seq(40, 40, 40, 40, 40, 40, 10))
   }
 
   test("operation validation: upsert needs the external id, others reject it") {
     val t = new MockUploadTransport
     MockUploadTransport.register("up2", t)
-    val df = Seq(("e1", "a")).toDF("Ext_Id__c", "Name")
+    def upload(operation: String, ext: Option[String] = None,
+        columns: Seq[String] = Seq("Ext_Id__c", "Name")) =
+      BulkUpload.uploadWithResults(columns,
+        Iterator(Row.fromSeq(Seq("e1", "a").take(columns.size))), "Contact", "up2",
+        operation = operation, externalIdField = ext)
     // upsert without an external-id field is the reference client's
     // error (create_upsert_job requires external_id_name)
-    intercept[IllegalArgumentException] {
-      BulkUpload.uploadWithResults(df, "Contact", "up2", operation = "upsert")
-    }
-    intercept[IllegalArgumentException] {
-      BulkUpload.uploadWithResults(df, "Contact", "up2", operation = "update",
-        externalIdField = Some("Ext_Id__c"))
-    }
-    intercept[IllegalArgumentException] {
-      BulkUpload.uploadWithResults(df, "Contact", "up2", operation = "merge")
-    }
+    intercept[IllegalArgumentException](upload("upsert"))
+    intercept[IllegalArgumentException](upload("update", Some("Ext_Id__c")))
+    intercept[IllegalArgumentException](upload("merge"))
     // the happy paths thread the field (or its absence) to the job doc
-    val (job, _) = BulkUpload.uploadWithResults(df, "Contact", "up2", operation = "upsert",
-      externalIdField = Some("Ext_Id__c"))
+    val (job, _) = upload("upsert", Some("Ext_Id__c"))
     assert(job.contains("-upsert-") && t.lastExternalIdField == Some("Ext_Id__c"))
-    val (del, _) = BulkUpload.uploadWithResults(df.select("Ext_Id__c"), "Contact", "up2",
-      operation = "delete")
+    val (del, _) = upload("delete", columns = Seq("Ext_Id__c"))
     assert(del.contains("-delete-") && t.lastExternalIdField.isEmpty)
   }
   test("uploadResultCensus: per-batch failure census matches hand-computed chunks") {
@@ -93,7 +87,7 @@ class ReverseUploadSpec extends SparkSpec {
     // 103 ordered rows, 40 per batch -> batches of 40/40/23; every 7th
     // position in each batch fails -> 5/5/3 failures
     val df = (1 to 103).map(i => (i.toLong, s"name-$i")).toDF("Id", "Name")
-      .repartition(4) // census re-lays-out to one ordered stream itself
+      .repartition(4) // the census orders the rows into one stream itself
     val out = BulkUpload.uploadResultCensus(df, "Id", "Contact", "up3",
       maxRecords = 40)
       .as[(Int, Long, Long, Long, Long, String)].collect().toSeq
