@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.apache.spark.sql.Row
+import scala.jdk.CollectionConverters._
 import graft.reverse.{BulkUpload, MockUploadTransport}
 
 /** Chunker invariants (property-based, SURVEY.md §5 #2) and the
@@ -45,6 +46,26 @@ class ReverseSpec extends AnyFunSuite {
 /** Spark-side end-to-end upload (separate suite: needs the session). */
 class ReverseUploadSpec extends SparkSpec {
   import spark.implicits._
+
+  test("upload chunks every partition and closes the job (K5)") {
+    val t = new MockUploadTransport
+    MockUploadTransport.register("up0", t)
+    val df = (1 to 250).map(i => (s"003$i", s"name-$i", i % 2 == 0))
+      .toDF("Id", "Name", "Active").repartition(3)
+    // the driver drains every partition into the one posting loop
+    val (jobId, _) = BulkUpload.uploadWithResults(df.columns.toSeq,
+      df.toLocalIterator().asScala, "Contact", "up0", maxRecords = 40)
+    assert(t.closedJobs == List(jobId))
+    val chunks = t.batches.values.toList
+    // 250 rows over 3 partitions, <=40 records per chunk -> >= 7 chunks
+    assert(chunks.size >= 7)
+    val allRows = chunks.flatMap(_.linesIterator.drop(1)).sorted
+    assert(allRows == df.collect().toSeq.map(BulkUpload.encodeRow).sorted)
+    // bool encoding t/f present
+    assert(allRows.head.endsWith(",t") || allRows.head.endsWith(",f"))
+    // every chunk within the record bound (+header)
+    assert(chunks.forall(_.linesIterator.size <= 41))
+  }
 
   test("upload posts the ordered row stream as record-bounded batches and closes the job (K5)") {
     val t = new MockUploadTransport
