@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
 
 import graft.reverse.{BulkUpload, UploadTransports}
 import graft.sink.{DerbyDialect, PgDialect, SqlDialect}
-import graft.sources.salesforce.{CsvWire, HttpSfTransport, SalesforceSource, SfLogin,
-  SfSoql, SfTransports}
+import graft.sources.salesforce.{CsvWire, HttpSfTransport, ReadScope, SalesforceSource,
+  SfLogin, SfSoql, SfTransports}
 import graft.sync.{BulkLoad, IncrementalSync, SyncConfig, SyncStateStore}
 import graft.types.{SfField, SfSchema}
 
@@ -283,8 +283,9 @@ object Cli {
       val state = new SyncStateStore(conn)
       try state.install()
       catch { case e: java.sql.SQLException if e.getSQLState == "X0Y32" => () }
-      val (n, modstamp) = BulkLoad.refresh(cfg, conn, dialectFor(url, opts), state, schema,
-        SalesforceSource.extract(transport, obj, schema, opts.contains("include-deleted")))
+      // a failed load closes the chunk result stream it was reading
+      val (n, modstamp) = ReadScope(BulkLoad.refresh(cfg, conn, dialectFor(url, opts), state,
+        schema, SalesforceSource.extract(transport, obj, schema, opts.contains("include-deleted"))))
       out(s"loaded $n rows into $dest; __sync registered at $modstamp")
     } finally conn.close()
   }
@@ -354,19 +355,23 @@ object Cli {
     * report (`upload_table.py:97-103`). The file is RFC-4180 CSV with a
     * header, decoded by [[CsvWire]]: doubled quotes, embedded commas and
     * newlines keep their values. An empty field, quoted or not, is NULL
-    * and posts as an empty field.
+    * and posts as an empty field. The file is read twice, streaming: a
+    * first pass refuses a record wider or narrower than the header
+    * before the job opens, so a refused file posts nothing.
     */
   private def upload(opts: Map[String, String], out: String => Unit): Unit = {
-    val csv = Files.newBufferedReader(Path.of(required(opts, "csv")), UTF_8)
-    val (jobId, batches) = Using.resource(csv) { in =>
-      val records = CsvWire.parseRows(in)
-      val columns = if (records.hasNext) records.next() else Nil
-      val rows = records.zipWithIndex.map { case (r, i) =>
-        require(r.size == columns.size,
-          s"CSV record ${i + 1} has ${r.size} fields, the header ${columns.size}")
-        Row.fromSeq(r.map(v => if (v.isEmpty) null else v))
-      }
-      BulkUpload.uploadWithResults(columns, rows,
+    val path = Path.of(required(opts, "csv"))
+    def records[A](f: Iterator[Seq[String]] => A): A =
+      Using.resource(Files.newBufferedReader(path, UTF_8))(in => f(CsvWire.parseRows(in)))
+    val columns = records { rs =>
+      val header = if (rs.hasNext) rs.next() else Nil
+      rs.zipWithIndex.foreach { case (r, i) => require(r.size == header.size,
+        s"CSV record ${i + 1} has ${r.size} fields, the header ${header.size}") }
+      header
+    }
+    val (jobId, batches) = records { rs =>
+      BulkUpload.uploadWithResults(columns,
+        rs.drop(1).map(r => Row.fromSeq(r.map(v => if (v.isEmpty) null else v))),
         required(opts, "object"), required(opts, "transport"),
         opts.getOrElse("operation", "update"),
         externalIdField = opts.get("external-id"))

@@ -2,6 +2,7 @@ package graft.reverse
 
 import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 import org.apache.spark.sql.{DataFrame, Row}
 
 /** Reverse ETL (K5/T3, `upload_table.py`): rows → canonical CSV →
@@ -9,9 +10,9 @@ import org.apache.spark.sql.{DataFrame, Row}
   *
   * The chunker enforces BOTH bounds of the reference (≤10 MB and
   * ≤10 000 records per batch, header repeated per chunk,
-  * `upload_table.py:15-16,43-74`). Posting is the reference's one
-  * sequential loop, on the driver: chunk, post, wait, results, and the
-  * job's close at the end.
+  * `upload_table.py:15-16,43-74`). Posting is one loop on the driver:
+  * chunk and post every batch, then wait for and read each, then close
+  * the job.
   */
 object BulkUpload {
 
@@ -49,22 +50,29 @@ object BulkUpload {
     */
   def chunk(header: String, records: Iterator[String],
       maxBytes: Int = DefaultMaxBytes,
-      maxRecords: Int = DefaultMaxRecords): Iterator[String] = {
-    val recs = records.buffered
-    def size(s: String) = s.getBytes("UTF-8").length + 1
-    Iterator.continually(()).takeWhile(_ => recs.hasNext).map { _ =>
+      maxRecords: Int = DefaultMaxRecords): Iterator[String] = new Iterator[String] {
+    private val headerBytes = header.getBytes("UTF-8").length + 1
+    private var pending: Option[String] = None
+
+    override def hasNext: Boolean = pending.isDefined || records.hasNext
+
+    override def next(): String = {
       val sb = new StringBuilder(header).append('\n')
-      var bytes = size(header)
+      var bytes = headerBytes
       var n = 0
       var full = false
-      while (!full && recs.hasNext) {
-        val recBytes = size(recs.head)
-        if (n > 0 && bytes + recBytes > maxBytes) full = true
-        else {
-          sb.append(recs.next()).append('\n')
+      while (!full && (pending.isDefined || records.hasNext)) {
+        val rec = pending.getOrElse(records.next())
+        pending = None
+        val recBytes = rec.getBytes("UTF-8").length + 1
+        if (n > 0 && (bytes + recBytes > maxBytes || n + 1 > maxRecords)) {
+          pending = Some(rec)
+          full = true
+        } else {
+          sb.append(rec).append('\n')
           bytes += recBytes
           n += 1
-          full = n >= maxRecords
+          if (n >= maxRecords) full = true
         }
       }
       sb.result()
@@ -122,10 +130,13 @@ object BulkUpload {
   }
 
   /** K5 — chunk + post `rows` (values in `columns` order) as the
-    * batches of one job, with per-record results: the reference's
-    * sequential loop (`upload_table.py:43-103`) on the driver — create
-    * the job; per chunk post it, wait for it and read its results;
-    * close the job. Each chunk is posted once: the wire transport fails
+    * batches of one job, with per-record results, in one driver loop
+    * (`upload_table.py:43-103`): create the job; post every chunk;
+    * then wait for each batch and read its results; close the job,
+    * also when a step fails. Every batch is posted before any is waited
+    * on, because the server works through a job's queued batches in
+    * parallel: one wait covers them all instead of one poll interval
+    * per batch. Each chunk is posted once: the wire transport fails
     * fast on POST errors rather than auto-retrying (see
     * HttpSfTransport.send). Every batch's `UploadResult` rows come back,
     * so failed records are reportable instead of silently dropped:
@@ -144,12 +155,16 @@ object BulkUpload {
     validateOperation(operation, externalIdField)
     val t = UploadTransports.get(transportName)
     val jobId = t.createJob(objectName, operation, externalIdField)
-    val batches = chunk(header(columns), rows.map(encodeRow), maxBytes, maxRecords)
-      .map { c =>
-        val batchId = t.postBatch(jobId, c)
-        t.waitBatch(jobId, batchId)
-        batchId -> t.batchResults(jobId, batchId)
-      }.toVector
+    val batches = try {
+      val posted = chunk(header(columns), rows.map(encodeRow), maxBytes, maxRecords)
+        .map(t.postBatch(jobId, _)).toVector
+      posted.map { id => t.waitBatch(jobId, id); id -> t.batchResults(jobId, id) }
+    } catch {
+      case e: Throwable =>
+        // a failing close must not hide the upload's own error
+        try t.closeJob(jobId) catch { case NonFatal(c) => e.addSuppressed(c) }
+        throw e
+    }
     t.closeJob(jobId)
     (jobId, batches)
   }
@@ -232,6 +247,7 @@ final class MockUploadTransport(failEvery: Int = 0)
   private val jobCounter = new java.util.concurrent.atomic.AtomicInteger
   private val batchCounter = new java.util.concurrent.atomic.AtomicInteger
   val batches = TrieMap.empty[String, String]   // batchId -> chunk csv
+  @volatile var createdJobs: List[String] = Nil
   @volatile var closedJobs: List[String] = Nil
 
   @volatile var lastExternalIdField: Option[String] = None
@@ -240,7 +256,9 @@ final class MockUploadTransport(failEvery: Int = 0)
       externalIdField: Option[String] = None,
       contentType: String = "CSV"): String = {
     lastExternalIdField = externalIdField
-    s"job-$objectName-$operation-${jobCounter.incrementAndGet()}"
+    val id = s"job-$objectName-$operation-${jobCounter.incrementAndGet()}"
+    createdJobs ::= id
+    id
   }
   override def postBatch(jobId: String, chunkCsv: String): String = {
     val id = s"$jobId/batch-${batchCounter.incrementAndGet()}"

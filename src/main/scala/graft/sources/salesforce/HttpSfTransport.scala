@@ -492,14 +492,10 @@ final class HttpSfTransport(
     resultIds.iterator.flatMap { rid =>
       val in = bulkGet(s"$results/$rid")(csvBody)
       // the wire decoder closes the stream at EOF, but a partially-
-      // consumed iterator (LIMIT pushdown, task abort) is simply
-      // abandoned — the PartitionReader's close() cannot reach it.
-      // Register the close with the task, so the socket is released
-      // when the task ends however it ends (close() is idempotent;
-      // outside a task — the driver-side extract, unit specs — the EOF
-      // close is the only path).
-      Option(org.apache.spark.TaskContext.get()).foreach(
-        _.addTaskCompletionListener[Unit](_ => in.close()))
+      // consumed iterator (LIMIT pushdown, task abort, a failed load)
+      // is simply abandoned — the PartitionReader's close() cannot
+      // reach it. Close it when the read ends however it ends
+      ReadScope.closeAtEnd(in)
       CsvWire.parse(nulStripReader(in))
     }
   }
@@ -590,6 +586,31 @@ final class HttpSfTransport(
           error = row.getOrElse("Error", "").toString)
       }.toSeq
     }
+}
+
+/** Closes the result streams a read opens when the read ends, however
+  * it ends. Under Spark the read is a task, and its streams close with
+  * it; on the driver the read is the body of [[apply]] (`Cli bulkload`
+  * wraps its extract and load in one). Outside both — unit specs — the
+  * EOF close is the only path. `close()` is idempotent.
+  */
+private[graft] object ReadScope {
+  private val open = new ThreadLocal[List[java.io.Closeable]]
+
+  def apply[A](body: => A): A = {
+    val outer = open.get
+    open.set(Nil)
+    try body
+    finally {
+      open.get.foreach(c => scala.util.Try(c.close()))
+      open.set(outer)
+    }
+  }
+
+  def closeAtEnd(c: java.io.Closeable): Unit = Option(org.apache.spark.TaskContext.get()) match {
+    case Some(task) => task.addTaskCompletionListener[Unit](_ => c.close())
+    case None => Option(open.get).foreach(l => open.set(c :: l))
+  }
 }
 
 /** graft's one RFC-4180 CSV decoder: quoted fields, doubled-quote

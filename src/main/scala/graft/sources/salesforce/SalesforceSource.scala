@@ -94,24 +94,20 @@ object SalesforceSource {
   }
 
   /** The full PK-chunked extract of every `schema` column (`query_bulk.py`
-    * + `download.py`): the chunks [[chunkRanges]] plans, read one after
-    * another on the driver.
+    * + `download.py`): the [[chunkRanges]] of the object's PK chunks,
+    * read one after another on the driver.
     */
   def extract(transport: SfTransport, objectName: String, schema: StructType,
       includeDeleted: Boolean): Iterator[Row] =
-    chunkRanges(transport, objectName, schema.fieldNames.toSeq, None, includeDeleted,
-      DefaultChunkSize).iterator.flatMap(rows(transport, objectName, schema, None,
-        includeDeleted, _))
+    chunkRanges(transport.pkChunks(objectName, schema.fieldNames.toSeq, None,
+      includeDeleted, DefaultChunkSize)).iterator
+      .flatMap(rows(transport, objectName, schema, None, includeDeleted, _))
 
   /** S2: the [[SfTransport.pkChunks]] tokens, or one un-chunked read
     * (None) when the object rejects chunking.
     */
-  def chunkRanges(transport: SfTransport, objectName: String, fields: Seq[String],
-      where: Option[String], includeDeleted: Boolean,
-      chunkSize: Int): Seq[Option[(String, String)]] = {
-    val chunks = transport.pkChunks(objectName, fields, where, includeDeleted, chunkSize)
+  def chunkRanges(chunks: Seq[(String, String)]): Seq[Option[(String, String)]] =
     if (chunks.isEmpty) Seq(None) else chunks.map(Some(_))
-  }
 }
 
 /** SOQL literal rendering, shared by the scan's pushdown and the sync
@@ -242,8 +238,9 @@ final class SfScan(objectName: String, transportName: String,
     */
   private lazy val partitions: Array[InputPartition] =
     if (countStar || limit.isDefined) Array(SfInputPartition(None))
-    else SalesforceSource.chunkRanges(SfTransports.get(transportName), objectName,
-      fields, where, includeDeleted, chunkSize).map(SfInputPartition).toArray
+    else SalesforceSource.chunkRanges(SfTransports.get(transportName)
+      .pkChunks(objectName, fields, where, includeDeleted, chunkSize))
+      .map(SfInputPartition).toArray
 
   override def planInputPartitions(): Array[InputPartition] = partitions
 

@@ -4,9 +4,6 @@ import java.sql.{DriverManager, Timestamp}
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.graft.ListenerBusShim
-
 import graft.cli.Cli
 import graft.reverse.{MockUploadTransport, UploadTransports}
 import graft.sources.salesforce.{MockSfTransport, SfFieldMeta}
@@ -44,19 +41,6 @@ class CliSpec extends SparkSpec {
     val lines = ArrayBuffer.empty[String]
     val code = Cli.run(args, lines += _)
     (code, lines.toSeq)
-  }
-
-  /** `body`'s result and the Spark jobs started while it ran, read
-    * after the listener bus drains.
-    */
-  private def sparkJobs[A](body: => A): (A, Int) = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try { val r = body; ListenerBusShim.waitUntilEmpty(spark); (r, jobs.get) }
-    finally spark.sparkContext.removeSparkListener(listener)
   }
 
   private def writeCsv(text: String): java.io.File = {
@@ -218,11 +202,14 @@ class CliSpec extends SparkSpec {
   }
 
   test("upload refuses a CSV record wider or narrower than its header") {
-    UploadTransports.register("cli-ragged", new MockUploadTransport)
+    val t = new MockUploadTransport
+    UploadTransports.register("cli-ragged", t)
     val (code, out) = runCli("upload", "--transport", "cli-ragged",
       "--object", "Account", "--csv", writeCsv("Id,Name\n001,a\n002\n").getPath)
     assert(code == 2 && out == Seq(
       "error: requirement failed: CSV record 2 has 1 fields, the header 2"), out.mkString("\n"))
+    // the file is checked before the job opens: no job, no batch
+    assert(t.createdJobs.isEmpty && t.batches.isEmpty)
   }
 
   test("search verb: SOSL hits across objects, --term quick wrapping") {

@@ -12,8 +12,8 @@ import org.apache.spark.sql.Row
 import org.scalatest.BeforeAndAfterAll
 
 import graft.reverse.{BulkUpload, UploadTransports}
-import graft.sources.salesforce.{CsvWire, HttpSfTransport, MockSfTransport, SalesforceSource,
-  SfApiError, SfFieldMeta, SfTransports}
+import graft.sources.salesforce.{CsvWire, HttpSfTransport, MockSfTransport, ReadScope,
+  SalesforceSource, SfApiError, SfFieldMeta, SfTransports}
 
 /** The real HTTP transport against recorded protocol fixtures served by
   * a local JDK HttpServer — the same request/response shapes the
@@ -146,6 +146,7 @@ class HttpSfTransportSpec extends SparkSpec with BeforeAndAfterAll {
   val seen = TrieMap.empty[String, Any] // request capture for assertions
   private val uploadBatchPolls = new java.util.concurrent.atomic.AtomicInteger
   private val pendingListPolls = new java.util.concurrent.atomic.AtomicInteger
+  private val bigBodyClosed = new java.util.concurrent.CountDownLatch(1)
   /** "METHOD path" of every request, oldest first. */
   private val requests = new java.util.concurrent.ConcurrentLinkedQueue[String]
   /** "jobId state" of every job state POST (a close), oldest first. */
@@ -312,6 +313,16 @@ class HttpSfTransportSpec extends SparkSpec with BeforeAndAfterAll {
             respond(ex, ResultListXml, contentType = "application/xml")
           case ("GET", "/services/async/52.0/job/750JOB/batch/751B/result") =>
             respond(ex, ResultListXml, contentType = "application/xml")
+          case ("GET", "/services/async/52.0/job/750JOB/batch/751BIG/result") =>
+            respond(ex, ResultListXml, contentType = "application/xml")
+          case ("GET", "/services/async/52.0/job/750JOB/batch/751BIG/result/752R1") =>
+            // an endless body: a write fails once the client closes the stream
+            ex.getResponseHeaders.set("Content-Type", "text/csv")
+            ex.sendResponseHeaders(200, 0)
+            val os = ex.getResponseBody
+            val rows = ("\"003X\",\"row\",\"1\"\n" * 1000).getBytes(UTF_8)
+            try { os.write("Id,Name,NumEmployees\n".getBytes(UTF_8)); while (true) os.write(rows) }
+            catch { case _: java.io.IOException => bigBodyClosed.countDown() }
           case ("GET", "/services/async/52.0/job/750JOB/batch/751A/result/752R1") =>
             respond(ex, CsvA, contentType = "text/csv")
           case ("GET", "/services/async/52.0/job/750JOB/batch/751B/result/752R1") =>
@@ -511,6 +522,19 @@ class HttpSfTransportSpec extends SparkSpec with BeforeAndAfterAll {
     val rowsB = transport().query("Contact", Nil, None, None,
       includeDeleted = false, Some("750JOB" -> "751B")).toSeq
     assert(rowsB.head("Name") == "nul stripped") // NUL gone at the wire
+  }
+
+  test("a driver-side read that fails mid-chunk closes the chunk's result stream") {
+    // a load that fails after the first row of a chunk, inside a ReadScope
+    val e = intercept[IllegalStateException](ReadScope {
+      val rows = transport().query("Contact", Seq("Id", "Name", "NumEmployees"),
+        None, None, includeDeleted = false, Some("750JOB" -> "751BIG"))
+      assert(rows.next()("Id") == "003X")
+      throw new IllegalStateException("load failed")
+    })
+    assert(e.getMessage == "load failed")
+    // the scope closed the open body: the server's next write fails
+    assert(bigBodyClosed.await(10, java.util.concurrent.TimeUnit.SECONDS))
   }
 
   test("an empty Bulk CSV field lands as NULL for text and numbers alike") {

@@ -49,38 +49,32 @@ class ReverseUploadSpec extends SparkSpec {
 
   test("upload chunks every partition and closes the job (K5)") {
     val t = new MockUploadTransport
-    MockUploadTransport.register("up0", t)
-    val df = (1 to 250).map(i => (s"003$i", s"name-$i", i % 2 == 0))
-      .toDF("Id", "Name", "Active").repartition(3)
-    // the driver drains every partition into the one posting loop
-    val (jobId, _) = BulkUpload.uploadWithResults(df.columns.toSeq,
-      df.toLocalIterator().asScala, "Contact", "up0", maxRecords = 40)
-    assert(t.closedJobs == List(jobId))
-    val chunks = t.batches.values.toList
-    // 250 rows over 3 partitions, <=40 records per chunk -> >= 7 chunks
-    assert(chunks.size >= 7)
-    val allRows = chunks.flatMap(_.linesIterator.drop(1)).sorted
-    assert(allRows == df.collect().toSeq.map(BulkUpload.encodeRow).sorted)
-    // bool encoding t/f present
-    assert(allRows.head.endsWith(",t") || allRows.head.endsWith(",f"))
-    // every chunk within the record bound (+header)
-    assert(chunks.forall(_.linesIterator.size <= 41))
-  }
-
-  test("upload posts the ordered row stream as record-bounded batches and closes the job (K5)") {
-    val t = new MockUploadTransport
     MockUploadTransport.register("up1", t)
-    val rows = (1 to 250).map(i => Row(s"003$i", s"name-$i", i % 2 == 0))
-    val (jobId, batches) = BulkUpload.uploadWithResults(Seq("Id", "Name", "Active"),
-      rows.iterator, "Contact", "up1", maxRecords = 40)
-    assert(t.closedJobs == List(jobId))
-    // one stream, <=40 records per chunk -> exactly 7 batches, in row order
+    // three partitions in row order; the driver drains them into one
+    // ordered stream, so <=40 records per chunk -> exactly 7 batches
+    val rows = (1 to 250).map(i => (s"003$i", s"name-$i", i % 2 == 0))
+    val df = spark.sparkContext.parallelize(rows, 3).toDF("Id", "Name", "Active")
+    val (jobId, batches) = BulkUpload.uploadWithResults(df.columns.toSeq,
+      df.toLocalIterator().asScala, "Contact", "up1", maxRecords = 40)
+    assert(t.createdJobs == List(jobId) && t.closedJobs == List(jobId))
     val chunks = batches.map { case (id, _) => t.batches(id) }
     assert(chunks.map(_.linesIterator.size - 1) == Seq(40, 40, 40, 40, 40, 40, 10))
-    assert(chunks.forall(_.startsWith("\"Id\",\"Name\",\"Active\"\n")))
-    assert(chunks.flatMap(_.linesIterator.drop(1)) == rows.map(BulkUpload.encodeRow))
-    assert(chunks.head.linesIterator.drop(1).next() == "\"0031\",\"name-1\",f")
     assert(batches.map(_._2.size) == Seq(40, 40, 40, 40, 40, 40, 10))
+    assert(chunks.forall(_.startsWith("\"Id\",\"Name\",\"Active\"\n")))
+    // every row, in row order, booleans as t/f
+    assert(chunks.flatMap(_.linesIterator.drop(1)) == rows.map(r => BulkUpload.encodeRow(Row.fromTuple(r))))
+    assert(chunks.head.linesIterator.drop(1).next() == "\"0031\",\"name-1\",f")
+  }
+
+  test("a row stream that fails mid-upload still closes the job") {
+    val t = new MockUploadTransport
+    MockUploadTransport.register("upfail", t)
+    val rows = Iterator.tabulate(50)(i => Row(s"003$i")) ++
+      Iterator.continually[Row](throw new IllegalStateException("source failed"))
+    val e = intercept[IllegalStateException](BulkUpload.uploadWithResults(Seq("Id"), rows,
+      "Contact", "upfail", maxRecords = 40))
+    assert(e.getMessage == "source failed")
+    assert(t.batches.size == 1 && t.closedJobs == t.createdJobs && t.closedJobs.size == 1)
   }
 
   test("operation validation: upsert needs the external id, others reject it") {

@@ -2,7 +2,9 @@ package graft
 
 import java.nio.file.{Files, Path}
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.ListenerBusShim
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -32,6 +34,19 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     val prev = System.getProperty("java.io.tmpdir")
     System.setProperty("java.io.tmpdir", dir.toString)
     try body finally System.setProperty("java.io.tmpdir", prev)
+  }
+
+  /** `body`'s result and the Spark jobs started while it ran, read
+    * after the listener bus drains.
+    */
+  def sparkJobs[A](body: => A): (A, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try { val r = body; ListenerBusShim.waitUntilEmpty(spark); (r, jobs.get) }
+    finally spark.sparkContext.removeSparkListener(listener)
   }
 
   override def afterAll(): Unit =

@@ -1,10 +1,7 @@
 package graft
 
 import java.sql.{Connection, DriverManager, Timestamp}
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.graft.ListenerBusShim
 import org.apache.spark.sql.types._
 import org.scalatest.BeforeAndAfterAll
 import graft.sink.DerbyDialect
@@ -223,23 +220,14 @@ class SyncSpec extends SparkSpec with BeforeAndAfterAll {
       rec(20, "old", "2024-02-01 00:00:00"), rec(20, "new", "2024-02-02 00:00:00"),
       rec(21, "x", "2024-02-01 00:00:00"), rec(22, "landed", "2024-01-01 00:00:00"))))
     val rest = SalesforceSource.schemaOf(t, "Contact")
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val r = try {
-      val r = sync.syncTable(cfg, rest, wm => SalesforceSource.rows(t, "Contact", rest,
-        wm.map(w => s"modstamp > ${SfSoql.literal(w)}"), includeDeleted = true))
-      ListenerBusShim.waitUntilEmpty(spark)
-      r
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (r, jobs) = sparkJobs(sync.syncTable(cfg, rest, wm => SalesforceSource.rows(t,
+      "Contact", rest, wm.map(w => s"modstamp > ${SfSoql.literal(w)}"), includeDeleted = true)))
     assert(r == SyncResult.Merged(2, ts("2024-02-02 00:00:00")))
     assert(destRows().filter(_._1 >= 20) == Seq((20L, "new", 20.0), (21L, "x", 21.0)))
     // the watermark WHERE reached the wire: the landed row was not fetched
     assert(t.lastWhere.contains(s"modstamp > ${SfSoql.literal(ts("2024-01-03 10:00:00"))}"),
       t.lastWhere)
-    assert(t.pkChunksCalls == 0 && jobs.get == 0)
+    assert(t.pkChunksCalls == 0 && jobs == 0)
   }
 
   test("a failing markError keeps the round's own error, the state error suppressed") {
