@@ -105,20 +105,9 @@ object SparkEntry {
           materialized(items.select(col("ord")).distinct()
             .agg(count(lit(1)).as("n_orders"))))
       }
-    // the adjSlices degree probe is a full pair-scan aggregate; memoize
-    // it per cache generation so registered consumers (ktruss) don't
-    // re-run it per invocation. Spec-visible run counter.
-    private val probe = new GenMemo[Int]("lineitem.parquet", _ => ())
-    private[graft] val probeRuns = new java.util.concurrent.atomic.AtomicInteger(0)
-    def adjSlices(s: SparkSession, d: String): Int =
-      probe(s, d) {
-        probeRuns.incrementAndGet()
-        operators.GraphOps.adjSlicesFor(pairs(s, d))
-      }
     private[graft] def reset(): Unit = {
       graph.clear()
       stats.clear()
-      probe.clear()
     }
   }
 
@@ -828,8 +817,7 @@ object SparkEntry {
     // k >= 4 truss is empty by construction; k = 12 on the basket
     // graph peels 115k edges to a ~2.5k dense co-purchase core)
     "graph_ktruss" -> ((s, d) =>
-      GraphOps.kTruss(BasketGraph.pairs(s, d), k = 12,
-          adjSlices = BasketGraph.adjSlices(s, d))
+      GraphOps.kTruss(BasketGraph.pairs(s, d), k = 12)
         .withColumnRenamed("doc_a", "part_a")
         .withColumnRenamed("doc_b", "part_b")),
     // which communities bridge into which: edge counts per label pair
@@ -856,8 +844,7 @@ object SparkEntry {
     // and distinct, so the lazy wedge pipeline runs straight off the
     // persisted cache — no re-distinct, no second persist, no eager
     // checkpoint round trip. The hub guard here is the degree-64
-    // center cap inside the wedge expansion (array-free), not
-    // adjSlices (which guards adjacency-ARRAY builds).
+    // center cap inside the wedge expansion (array-free).
     "graph_link_predict" -> ((s, d) =>
       GraphOps.commonNeighborsLazy(
           BasketGraph.pairs(s, d)
@@ -1147,14 +1134,12 @@ object SparkEntry {
     // restart, so the census is run-deterministic), failing every 7th
     // record per batch; the per-batch success/created/failure census
     // is row-arithmetic the oracle restates from the same slice
-    "k5_upload_results" -> ((s, d) => {
-      graft.reverse.MockUploadTransport.register("k5_census",
-        new graft.reverse.MockUploadTransport(failEvery = 7))
+    "k5_upload_results" -> ((s, d) =>
       graft.reverse.BulkUpload.uploadResultCensus(
         t(s, d)("customer").select(col("c_custkey"), col("c_name"))
           .filter(col("c_custkey") % 3 === 0),
-        "c_custkey", "Customer", "k5_census", maxRecords = 50)
-    }),
+        "c_custkey", "Customer", new graft.reverse.MockUploadTransport(failEvery = 7),
+        maxRecords = 50)),
     // fixed-size set-sketch state: streaming KMV distinct (complete
     // mode, no watermark needed — the sketch never grows)
     "stream_kmv" -> ((s, d) => streamKmvQuery(s, d)),
@@ -1487,14 +1472,18 @@ object SparkEntry {
   )
 
   /** K2 end-to-end: two Completed batches (odd/even split of `part`)
-    * plus a NotProcessed chunking artifact loaded by BulkLoad.bulkLoad
-    * into embedded Derby (truncate + F4 filter + C4 `__sync`
-    * registration in one transaction), verified by reading the
-    * destination back over JDBC.
+    * plus a NotProcessed chunking artifact, filtered by
+    * `BulkManifest.loadableBatches` (F4) and streamed into
+    * `BulkLoad.refresh` over embedded Derby (truncate + load + C4
+    * `__sync` registration at the landed modstamp, in one transaction),
+    * verified by reading the destination's `part` columns back over
+    * JDBC.
     */
   private def k2BulkLoadQuery(s: SparkSession, d: String): DataFrame = {
     import scala.jdk.CollectionConverters._
-    import graft.sources.salesforce.{BatchInfo, BulkManifest, JobInfo}
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.TimestampType
+    import graft.sources.salesforce.{BatchInfo, BulkManifest}
     val url = "jdbc:derby:memory:graftk2" +
       d.replaceAll("[^a-zA-Z0-9]", "_") + ";create=true"
     val part = t(s, d)("part").select("p_partkey", "p_name", "p_retailprice")
@@ -1507,28 +1496,30 @@ object SparkEntry {
         try st.execute("""DROP TABLE "k2part"""")
         catch { case e: java.sql.SQLException if e.getSQLState == "42Y55" => () }
         st.execute("""CREATE TABLE "k2part" (
-          |"p_partkey" BIGINT, "p_name" VARCHAR(128), "p_retailprice" DOUBLE
+          |"p_partkey" BIGINT, "p_name" VARCHAR(128), "p_retailprice" DOUBLE,
+          |"modstamp" TIMESTAMP
           |)""".stripMargin)
       } finally st.close()
       val state = new graft.sync.SyncStateStore(conn)
-      try state.install()
-      catch { case e: java.sql.SQLException if e.getSQLState == "X0Y32" => () }
-      val job = JobInfo("750K2",
-        batches = Seq(
-          BatchInfo("b-orig", BulkManifest.NotProcessed),
-          BatchInfo("b-odd", BulkManifest.Completed),
-          BatchInfo("b-even", BulkManifest.Completed)),
-        numberRecordsProcessed = part.count(),
-        systemModstamp = Some(java.sql.Timestamp.valueOf("2024-03-01 09:30:00")))
-      graft.sync.BulkLoad.bulkLoad(job,
-        graft.sync.SyncConfig("k2part", "p_partkey", "p_partkey"),
-        conn, new graft.sink.DerbyDialect, state, part.schema, b => part.filter(
-          col("p_partkey") % 2 === (if (b.id == "b-odd") 1 else 0)).toLocalIterator().asScala)
+      state.install()
+      val modstamp = java.sql.Timestamp.valueOf("2024-03-01 09:30:00")
+      val batches = BulkManifest.loadableBatches(Seq(
+        BatchInfo("b-orig", BulkManifest.NotProcessed),
+        BatchInfo("b-odd", BulkManifest.Completed),
+        BatchInfo("b-even", BulkManifest.Completed)))
+      graft.sync.BulkLoad.refresh(
+        graft.sync.SyncConfig("k2part", "p_partkey", "modstamp"),
+        conn, new graft.sink.DerbyDialect, state,
+        part.schema.add("modstamp", TimestampType),
+        batches.iterator.flatMap(b => part.filter(
+            col("p_partkey") % 2 === (if (b.id == "b-odd") 1 else 0))
+          .toLocalIterator().asScala.map(r => Row.fromSeq(r.toSeq :+ modstamp))))
     } finally conn.close()
     s.read.format("jdbc")
       .option("url", url)
       .option("dbtable", "\"k2part\"")
       .load()
+      .select("p_partkey", "p_name", "p_retailprice")
       .orderBy("p_partkey")
   }
 

@@ -281,8 +281,7 @@ object Cli {
     try {
       conn.setAutoCommit(false)
       val state = new SyncStateStore(conn)
-      try state.install()
-      catch { case e: java.sql.SQLException if e.getSQLState == "X0Y32" => () }
+      state.install()
       // a failed load closes the chunk result stream it was reading
       val (n, modstamp) = ReadScope(BulkLoad.refresh(cfg, conn, dialectFor(url, opts), state,
         schema, SalesforceSource.extract(transport, obj, schema, opts.contains("include-deleted"))))
@@ -361,6 +360,7 @@ object Cli {
     */
   private def upload(opts: Map[String, String], out: String => Unit): Unit = {
     val path = Path.of(required(opts, "csv"))
+    val transport = UploadTransports.get(required(opts, "transport"))
     def records[A](f: Iterator[Seq[String]] => A): A =
       Using.resource(Files.newBufferedReader(path, UTF_8))(in => f(CsvWire.parseRows(in)))
     val columns = records { rs =>
@@ -372,8 +372,7 @@ object Cli {
     val (jobId, batches) = records { rs =>
       BulkUpload.uploadWithResults(columns,
         rs.drop(1).map(r => Row.fromSeq(r.map(v => if (v.isEmpty) null else v))),
-        required(opts, "object"), required(opts, "transport"),
-        opts.getOrElse("operation", "update"),
+        required(opts, "object"), transport, opts.getOrElse("operation", "update"),
         externalIdField = opts.get("external-id"))
     }
     val results = batches.flatMap(_._2)

@@ -1062,8 +1062,7 @@ object DedupOps {
     *
     * Skew posture: a boilerplate shingle shared by millions of docs
     * must NOT accumulate per-group state proportional to its owners
-    * (the hot-vertex failure mode the graph core guards with
-    * adjSlices) — so there is no collect_list anywhere, and no join
+    * — so there is no collect_list anywhere, and no join
     * back onto the shingle stream either: because each doc's shingles
     * are DISTINCT, n_novel(doc) is just the number of rows in the
     * min-owner-per-shingle table whose owner is the doc. The plan is

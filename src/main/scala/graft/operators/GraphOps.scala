@@ -334,8 +334,7 @@ object GraphOps {
     * intersected linearly, not fanned out quadratically.
     */
   def triangleCount(edges: DataFrame,
-      aCol: String = "doc_a", bCol: String = "doc_b",
-      adjSlices: Int = 1): DataFrame = {
+      aCol: String = "doc_a", bCol: String = "doc_b"): DataFrame = {
     // eager materialization: the edge list feeds the adjacency build
     // AND the per-edge probe, and the caller's `edges` is typically an
     // LSH/SimHash band join — without this each consumer re-derives
@@ -343,58 +342,29 @@ object GraphOps {
     // cliqueDensity checkpoints upstream and calls edgeTriangles
     // directly, so this copy happens exactly once per raw entry.
     val e = stagePersist(edges.select(col(aCol).as(aCol), col(bCol).as(bCol)))
-    edgeTriangles(e, aCol, bCol, adjSlices)
+    edgeTriangles(e, aCol, bCol)
       .agg(coalesce(sum(col("tri")), lit(0L))
         .cast("bigint").as("n_triangles"))
   }
 
-  /** Per-edge closed-triangle contributions (a, b, tri) — possibly
-    * MULTIPLE rows per edge when `adjSlices > 1`; both consumers sum,
-    * so the contract is additive. Shared edge-iterator core of
-    * [[triangleCount]] and [[cliqueDensity]].
+  /** Per-edge closed-triangle counts (a, b, tri). Shared
+    * edge-iterator core of [[triangleCount]], [[clusteringCoefficient]]
+    * and [[cliqueDensity]].
     * INNER join on the b endpoint: an edge whose head has no
     * out-neighbors closes nothing, so dropping it leaves every sum
     * unchanged — and sidesteps size(null), whose value flips between
     * null and -1 with spark.sql.ansi.enabled.
-    *
-    * `adjSlices` is the HOT-VERTEX (adjacency-skew) guard: with one
-    * array per vertex, a hub linked to everything (a quote page, a
-    * boilerplate template) concentrates its whole neighbor set in ONE
-    * aggregation-buffer row and re-intersects that giant array on
-    * every incident edge inside one task. Slicing partitions every
-    * adjacency list by neighbor residue (`nbr mod s`), and since the
-    * SAME partitioning applies to both endpoints,
-    * |adj(x) ∩ adj(y)| = Σ_i |adj_i(x) ∩ adj_i(y)| — exact, while the
-    * largest array (and the largest single intersection) shrinks to
-    * ~maxDegree/s and a hub's work spreads over s independent rows
-    * across the cluster. Cost: edges replicate once per co-populated
-    * slice, so keep s = 1 until degrees demand otherwise (the
-    * near-dup graphs the oracles measure are degree-bounded by
-    * construction; a 100 TB corpus with template hubs is not).
     */
   private def edgeTriangles(edges: DataFrame,
-      aCol: String, bCol: String, adjSlices: Int = 1): DataFrame = {
-    require(adjSlices >= 1, s"adjSlices must be >= 1, got $adjSlices")
+      aCol: String, bCol: String): DataFrame = {
     val e = edges.select(col(aCol).as("a"), col(bCol).as("b"))
-    if (adjSlices == 1) {
-      val adj = e.groupBy(col("a").as("v"))
-        .agg(sort_array(collect_set(col("b"))).as("nbrs"))
-      e.join(adj.as("na"), col("a") === col("na.v"))
-        .join(adj.as("nb"), col("b") === col("nb.v"))
-        .select(col("a"), col("b"),
-          graft.functions.GraftFunctions.sorted_intersect_count(
-            col("na.nbrs"), col("nb.nbrs")).cast("long").as("tri"))
-    } else {
-      val adj = e.groupBy(col("a").as("v"),
-          pmod(col("b"), lit(adjSlices)).as("sl"))
-        .agg(sort_array(collect_set(col("b"))).as("nbrs"))
-      e.join(adj.as("na"), col("a") === col("na.v"))
-        .join(adj.as("nb"),
-          col("b") === col("nb.v") && col("na.sl") === col("nb.sl"))
-        .select(col("a"), col("b"),
-          graft.functions.GraftFunctions.sorted_intersect_count(
-            col("na.nbrs"), col("nb.nbrs")).cast("long").as("tri"))
-    }
+    val adj = e.groupBy(col("a").as("v"))
+      .agg(sort_array(collect_set(col("b"))).as("nbrs"))
+    e.join(adj.as("na"), col("a") === col("na.v"))
+      .join(adj.as("nb"), col("b") === col("nb.v"))
+      .select(col("a"), col("b"),
+        graft.functions.GraftFunctions.sorted_intersect_count(
+          col("na.nbrs"), col("nb.nbrs")).cast("long").as("tri"))
   }
 
   /** Per-cluster dedup quality report: for every connected component of
@@ -428,9 +398,9 @@ object GraphOps {
     * integer division — no float sum). Zero-wedge graphs pin gcc to
     * 0.0 on both engines.
     */
-  def clusteringCoefficient(pairs: DataFrame, adjSlices: Int = 1): DataFrame = {
+  def clusteringCoefficient(pairs: DataFrame): DataFrame = {
     val e = stagePersist(pairs.select(col("doc_a"), col("doc_b")))
-    val tri = edgeTriangles(e, "doc_a", "doc_b", adjSlices)
+    val tri = edgeTriangles(e, "doc_a", "doc_b")
       .agg(coalesce(sum(col("tri")), lit(0L)).cast("bigint").as("n_triangles"))
     val wedges = e.select(col("doc_a").as("v"))
       .unionByName(e.select(col("doc_b").as("v")))
@@ -445,9 +415,8 @@ object GraphOps {
   }
 
   /** Degree histogram of the near-dup graph — (degree, vertex count),
-    * the census behind every skew decision in this file: a heavy tail
-    * here is the empirical trigger for [[edgeTriangles]]'s
-    * `adjSlices` guard and the salted joins. Two keyed integer
+    * the census behind the skew decisions in this file (the salted
+    * joins, [[commonNeighbors]]' wedge-center cap). Two keyed integer
     * aggregates (vertex → degree, degree → count); no per-vertex
     * state beyond a counter, so a boilerplate hub costs one row, not
     * one giant array.
@@ -459,7 +428,7 @@ object GraphOps {
       .groupBy("degree").agg(count(lit(1)).as("n_vertices"))
       .orderBy("degree")
 
-  def cliqueDensity(pairs: DataFrame, adjSlices: Int = 1): DataFrame = {
+  def cliqueDensity(pairs: DataFrame): DataFrame = {
     // one eager materialization of the pair list (it feeds the
     // closure, the pair tally, and both triangle joins); checkpoint
     // rather than persist so downstream planning stays AQE-managed —
@@ -474,7 +443,7 @@ object GraphOps {
     val pairCounts = p.select(col("doc_a").as("a"))
       .join(byA, "a")
       .groupBy("component").agg(count(lit(1)).cast("long").as("n_pairs"))
-    val triCounts = edgeTriangles(p, "doc_a", "doc_b", adjSlices)
+    val triCounts = edgeTriangles(p, "doc_a", "doc_b")
       .join(byA, "a")
       .groupBy("component").agg(sum(col("tri")).cast("long").as("n_triangles"))
     nodes.join(pairCounts, Seq("component"))
@@ -680,21 +649,6 @@ object GraphOps {
     labels.select(col("u").as("doc_id"), col("label")).orderBy("doc_id")
   }
 
-  /** Bounded k-truss peel: edges supported by fewer than k−2 triangles
-    * drop, for `rounds` rounds — the edge-grained community core
-    * ([[kCore]] keeps a vertex with enough WEAK neighbors; a truss
-    * keeps an edge only if its endpoints share actual witnesses, so
-    * chained borderline matches peel even when degrees look healthy).
-    * Support is computed per round from sorted adjacency arrays via
-    * codegen'd sorted-merge intersect — never a wedge row ([[triangleCount]]
-    * core) — with the same `adjSlices` hot-vertex guard: sliced
-    * adjacency intersects per slice and SUMS, so a pathological hub
-    * never builds one giant array. Each round is one vertex-keyed
-    * aggregate + two edge-keyed joins, lineage truncated per round.
-    * Rounds are part of the operator contract (the [[kCore]]/[[
-    * labelPropagation]] bounded-round discipline), mirrored exactly by
-    * the oracle's unrolled rounds.
-    */
   /** persist + eager one-pass materialize — the non-iterative staging
     * discipline (the `d8bd56e` commonNeighbors measurement: an eager
     * `localCheckpoint` on a non-iterative frame costs ~40% of operator
@@ -711,36 +665,13 @@ object GraphOps {
     out
   }
 
-  /** Degree-probe ladder for the `adjSlices` hot-vertex guard — the
-    * LSH plane-ladder discipline applied to adjacency arrays: ONE
-    * cheap degree aggregate over the (distinct, ordered) pair list
-    * picks the slice count so no vertex's per-slice neighbor array
-    * exceeds ~`sliceCap` entries. On the tested corpora max degree
-    * sits far under the cap (probe returns 1 — plan unchanged), but a
-    * hub whose basket degree grows with corpus size now engages
-    * slicing automatically instead of building one giant array.
-    * Results-invariant: slicing only reshapes the plan (per-slice
-    * intersect counts SUM to the unsliced count), so no oracle mirror
-    * is needed — unlike the LSH plane ladder, which changes candidate
-    * sets and must be mirrored.
-    */
-  def adjSlicesFor(pairs: DataFrame, sliceCap: Int = 4096): Int = {
-    val Array(a, b) = pairs.columns.take(2)
-    val sym = pairs.select(col(a).cast("long").as("u"))
-      .union(pairs.select(col(b).cast("long").as("u")))
-    val r = sym.groupBy("u").agg(count(lit(1)).as("d"))
-      .agg(max(col("d"))).head()
-    val maxDeg = if (r.isNullAt(0)) 0L else r.getLong(0)
-    math.max(1, math.ceil(maxDeg.toDouble / sliceCap).toInt)
-  }
-
-  /** `adjBroadcastEdges` gates a BROADCAST of the per-round adjacency
+  /** `AdjBroadcastEdges` gates a BROADCAST of the per-round adjacency
     * table — the [[connectedComponents]] size-gate discipline applied
     * to the support join: without it the plan shuffles every surviving
     * edge TWICE carrying full neighbor arrays (measured 259 MB shuffled
     * + a 274 MB round checkpoint for the sf0.1 basket graph whose edge
     * list is 4.5 MB), while the adjacency table itself totals only
-    * 2·|E| longs. At or under the gate (default 2²² edges ≈ 64 MB of
+    * 2·|E| longs. At or under the gate (2²² edges ≈ 64 MB of
     * array payload — mid-range for a broadcast relation, far under the
     * 8 GB hard cap, and strictly cheaper than shuffling the same
     * arrays |E|/|V| times over) both support joins become
@@ -749,10 +680,23 @@ object GraphOps {
     * shuffle plan. The round's edge count is a cached-scan count (e is
     * always checkpointed), and results are identical on both paths.
     */
-  def kTruss(pairs: DataFrame, k: Int = 4, rounds: Int = 3,
-      adjSlices: Int = 1, adjBroadcastEdges: Long = 1L << 22): DataFrame = {
-    require(k >= 3 && rounds >= 1 && adjSlices >= 1,
-      s"need k>=3, rounds>=1, adjSlices>=1; got $k, $rounds, $adjSlices")
+  private val AdjBroadcastEdges = 1L << 22
+
+  /** Bounded k-truss peel: edges supported by fewer than k−2 triangles
+    * drop, for `rounds` rounds — the edge-grained community core
+    * ([[kCore]] keeps a vertex with enough WEAK neighbors; a truss
+    * keeps an edge only if its endpoints share actual witnesses, so
+    * chained borderline matches peel even when degrees look healthy).
+    * Support is computed per round from sorted adjacency arrays via
+    * codegen'd sorted-merge intersect — never a wedge row
+    * ([[triangleCount]] core). Each round is one vertex-keyed
+    * aggregate + two edge-keyed joins, lineage truncated per round.
+    * Rounds are part of the operator contract (the [[kCore]]/[[
+    * labelPropagation]] bounded-round discipline), mirrored exactly by
+    * the oracle's unrolled rounds.
+    */
+  def kTruss(pairs: DataFrame, k: Int = 4, rounds: Int = 3): DataFrame = {
+    require(k >= 3 && rounds >= 1, s"need k>=3, rounds>=1; got $k, $rounds")
     val Array(a, b) = pairs.columns.take(2)
     // hash-spread over the full task width before the checkpoint: the
     // support join is CPU-bound (one sorted-array merge per edge), and
@@ -770,33 +714,16 @@ object GraphOps {
       .localCheckpoint(true)
     for (_ <- 1 to rounds) {
       val m = e.count()
-      def gate(adj: DataFrame): DataFrame =
-        if (m <= adjBroadcastEdges) broadcast(adj) else adj
       val sym = e.select(col("x").as("u"), col("y").as("v"))
         .union(e.select(col("y").as("u"), col("x").as("v")))
-      val supported =
-        if (adjSlices == 1) {
-          val adj = gate(sym.groupBy(col("u").as("vtx"))
-            .agg(sort_array(collect_set(col("v"))).as("nbrs")))
-          e.join(adj.as("na"), col("x") === col("na.vtx"))
-            .join(adj.as("nb"), col("y") === col("nb.vtx"))
-            .select(col("x"), col("y"),
-              graft.functions.GraftFunctions.sorted_intersect_count(
-                col("na.nbrs"), col("nb.nbrs")).cast("long").as("supp"))
-        } else {
-          val adj = gate(sym.groupBy(col("u").as("vtx"),
-              pmod(col("v"), lit(adjSlices)).as("sl"))
-            .agg(sort_array(collect_set(col("v"))).as("nbrs")))
-          // an edge with no common slice has support 0 and k >= 3
-          // filters it anyway, so the inner slice join is exact
-          e.join(adj.as("na"), col("x") === col("na.vtx"))
-            .join(adj.as("nb"),
-              col("y") === col("nb.vtx") && col("na.sl") === col("nb.sl"))
-            .groupBy(col("x"), col("y"))
-            .agg(sum(graft.functions.GraftFunctions.sorted_intersect_count(
-                col("na.nbrs"), col("nb.nbrs")))
-              .cast("long").as("supp"))
-        }
+      val nbrs = sym.groupBy(col("u").as("vtx"))
+        .agg(sort_array(collect_set(col("v"))).as("nbrs"))
+      val adj = if (m <= AdjBroadcastEdges) broadcast(nbrs) else nbrs
+      val supported = e.join(adj.as("na"), col("x") === col("na.vtx"))
+        .join(adj.as("nb"), col("y") === col("nb.vtx"))
+        .select(col("x"), col("y"),
+          graft.functions.GraftFunctions.sorted_intersect_count(
+            col("na.nbrs"), col("nb.nbrs")).cast("long").as("supp"))
       e = supported.filter(col("supp") >= k - 2).select("x", "y")
         .localCheckpoint(true)
     }
@@ -1073,8 +1000,7 @@ object GraphOps {
     * a hub shared by everything is no evidence of similarity (the
     * integer-exact analogue of Adamic–Adar's 1/log d down-weighting),
     * and the cap is what bounds the wedge expansion — an uncapped
-    * degree-d hub mints d²/2 candidate pairs, the exact blowup the
-    * triangle core guards with adjSlices. Identical cap on the oracle
+    * degree-d hub mints d²/2 candidate pairs. Identical cap on the oracle
     * side, so the semantics (not just the plan) are shared. Plan: one
     * degree aggregate, one center-filtered self-join keyed on the
     * wedge center, one pair-keyed count, one anti-join against the

@@ -19,22 +19,17 @@ object BulkUpload {
   val DefaultMaxBytes: Int = 10 * 1024 * 1024
   val DefaultMaxRecords: Int = 10000
 
-  /** Shared ISO8601/UTC formatter: `DateTimeFormatter` is immutable and
-    * thread-safe, so one instance serves every call (a per-value
-    * `SimpleDateFormat` allocation was the hot-path cost here).
-    */
-  private val IsoUtc = java.time.format.DateTimeFormatter
-    .ofPattern("yyyy-MM-dd'T'HH:mm:ss'Z'")
-    .withZone(java.time.ZoneOffset.UTC)
-
   /** T1 — pgsf CSV value encoding: quote-doubling, booleans t/f, NULL
     * as empty, NUL bytes stripped (`query_poll_table.py:21-50`).
+    * Datetimes pass through whole: ISO8601 UTC with their fractional
+    * seconds, so COPY lands the same value the INSERT path binds.
     */
   def encodeValue(v: Any): String = v match {
     case null => ""
     case b: Boolean => if (b) "t" else "f"
     case s: String => "\"" + s.replace("\u0000", "").replace("\"", "\"\"") + "\""
-    case ts: java.sql.Timestamp => IsoUtc.format(ts.toInstant)
+    case ts: java.sql.Timestamp =>
+      java.time.format.DateTimeFormatter.ISO_INSTANT.format(ts.toInstant)
     case other => other.toString
   }
 
@@ -148,12 +143,11 @@ object BulkUpload {
     *         per-record results
     */
   def uploadWithResults(columns: Seq[String], rows: Iterator[Row],
-      objectName: String, transportName: String, operation: String = "update",
+      objectName: String, t: UploadTransport, operation: String = "update",
       maxBytes: Int = DefaultMaxBytes,
       maxRecords: Int = DefaultMaxRecords,
       externalIdField: Option[String] = None): (String, Seq[(String, Seq[UploadResult])]) = {
     validateOperation(operation, externalIdField)
-    val t = UploadTransports.get(transportName)
     val jobId = t.createJob(objectName, operation, externalIdField)
     val batches = try {
       val posted = chunk(header(columns), rows.map(encodeRow), maxBytes, maxRecords)
@@ -188,12 +182,12 @@ object BulkUpload {
     * wrong transport.
     */
   def uploadResultCensus(df: DataFrame, orderCol: String,
-      objectName: String, transportName: String,
+      objectName: String, t: UploadTransport,
       maxRecords: Int): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     val (_, batches) = uploadWithResults(df.columns.toSeq,
-      df.orderBy(orderCol).toLocalIterator().asScala, objectName, transportName,
+      df.orderBy(orderCol).toLocalIterator().asScala, objectName, t,
       operation = "insert", maxRecords = maxRecords)
     batches.map { case (batchId, rs) =>
       (batchOrdinal(batchId), rs.size.toLong, rs.count(_.success).toLong,
@@ -229,18 +223,9 @@ object UploadTransports {
       s"no upload transport registered under '$name'"))
 }
 
-/** In-memory upload transport double (same registry scope rationale as
-  * MockSfTransport).
-  */
-object MockUploadTransport {
-  def register(name: String, t: MockUploadTransport): Unit =
-    UploadTransports.register(name, t)
-  def get(name: String): MockUploadTransport =
-    UploadTransports.get(name).asInstanceOf[MockUploadTransport]
-}
-
-/** @param failEvery every n-th record reports success=false (exercises
-  *                   the per-record error path without a server)
+/** In-memory upload transport double.
+  * @param failEvery every n-th record reports success=false (exercises
+  *                  the per-record error path without a server)
   */
 final class MockUploadTransport(failEvery: Int = 0)
     extends BulkUpload.UploadTransport {

@@ -314,29 +314,25 @@ final class HttpSfTransport(
     val soql = s"SELECT ${fields.mkString(",")} FROM $objectName" +
       where.map(w => s" WHERE $w").getOrElse("")
     bulkPost(s"/job/$jobId/batch", soql, "text/csv")
-    val job = poll(s"job $jobId still has pending batches") {
-      Some(jobInfo(jobId)).filter(BulkManifest.isDone)
+    val batches = poll(s"job $jobId still has pending batches") {
+      Some(jobBatches(jobId)).filter(BulkManifest.isDone)
     }
-    val failed = BulkManifest.failedBatches(job).headOption.map(batchFailed(jobId, _))
+    val failed = BulkManifest.failedBatches(batches).headOption.map(batchFailed(jobId, _))
     // a failing close must not hide the failed batch
     try closeJob(jobId)
     catch { case NonFatal(e) if failed.isDefined => failed.get.addSuppressed(e) }
     failed.foreach(e => throw e)
-    BulkManifest.loadableBatches(job).map(b => jobId -> b.id)
+    BulkManifest.loadableBatches(batches).map(b => jobId -> b.id)
   }
 
   private def batchInfo(el: org.w3c.dom.Element): BatchInfo = {
     val m = childMap(el)
-    BatchInfo(m("id"), m.getOrElse("state", ""),
-      m.get("numberRecordsProcessed").fold(0L)(_.toLong), m.get("stateMessage"))
+    BatchInfo(m("id"), m.getOrElse("state", ""), m.get("stateMessage"))
   }
 
-  /** The job as its batch list reports it (`GET job/{id}/batch`). */
-  private def jobInfo(jobId: String): JobInfo = {
-    val batches =
-      elements(bulkGet(s"/job/$jobId/batch")(parseXml), "batchInfo").map(batchInfo)
-    JobInfo(jobId, batches, batches.map(_.numberRecordsProcessed).sum, None)
-  }
+  /** The job's batch list (`GET job/{id}/batch`). */
+  private def jobBatches(jobId: String): Seq[BatchInfo] =
+    elements(bulkGet(s"/job/$jobId/batch")(parseXml), "batchInfo").map(batchInfo)
 
   private def batchFailed(jobId: String, b: BatchInfo): SfApiError =
     new SfApiError(400, s"batch ${b.id} of job $jobId failed: " +

@@ -60,7 +60,7 @@ final class IncrementalSync(conn: Connection, dialect: SqlDialect,
     * ts > watermark` (A1 over F2's predicate). When it reports more
     * than `maxDeltaRows`, the round stops BEFORE fetching anything and
     * returns [[SyncResult.NeedsFullReload]] — the orchestrator then
-    * takes the bulk path (`BulkLoad.bulkLoad`), which is cheaper than
+    * takes the bulk path (`BulkLoad.refresh`), which is cheaper than
     * streaming an oversized delta through the poll machinery.
     */
   def syncTable(cfg: SyncConfig, schema: StructType,

@@ -23,8 +23,11 @@ final class SyncStateStore(conn: Connection, table: String = "__sync") {
   // rejects a leading underscore unquoted; PG merely folds case)
   private val qt = "\"" + table + "\""
 
-  /** DDL bootstrap (portable subset of `install.sql:4-16`). */
-  def install(): Unit = {
+  /** DDL bootstrap (portable subset of `install.sql:4-16`); a no-op
+    * when the connection's schema already holds the table, so every
+    * `bulkload` can call it.
+    */
+  def install(): Unit = if (!installed) {
     val stmt = conn.createStatement()
     try stmt.execute(
       s"""CREATE TABLE $qt (
@@ -37,8 +40,19 @@ final class SyncStateStore(conn: Connection, table: String = "__sync") {
     finally stmt.close()
   }
 
-  /** C4 — bootstrap registration after a full load: watermark = the
-    * extract job's server timestamp, status ready (`synctable.py:83-106`).
+  // metadata names are LIKE patterns ('_' matches any character), so
+  // each returned row is compared exactly
+  private def installed: Boolean = {
+    val schema = conn.getSchema
+    val rs = conn.getMetaData.getTables(null, schema, table, Array("TABLE"))
+    try Iterator.continually(rs.next()).takeWhile(identity).exists(_ =>
+      rs.getString("TABLE_SCHEM") == schema && rs.getString("TABLE_NAME") == table)
+    finally rs.close()
+  }
+
+  /** C4 — bootstrap registration after a full load: watermark =
+    * `syncUntil` (a bulkload passes the max modstamp it landed, A2),
+    * status ready (`synctable.py:83-106`).
     */
   def register(tablename: String, syncUntil: Timestamp,
       refreshMinutes: Int = 10): Unit = {

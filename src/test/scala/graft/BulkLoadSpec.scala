@@ -6,13 +6,14 @@ import org.apache.spark.sql.types._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sink.DerbyDialect
-import graft.sources.salesforce.{BatchInfo, JobInfo}
+import graft.sources.salesforce.{BatchInfo, BulkManifest}
 import graft.sync.{BulkLoad, SyncConfig, SyncStateStore}
 
 /** Assembled K2 truncate-and-load + C4 bootstrap against embedded
-  * Derby: Completed-only batch filter, empty-job and failed-batch
-  * guards, destination truncation, `__sync` registration with the job's
-  * systemModstamp, and all-or-nothing rollback.
+  * Derby: destination truncation, `__sync` registration at the max
+  * modstamp landed, and all-or-nothing rollback. The row stream is
+  * what `bulkload` feeds [[BulkLoad.refresh]]: only `Completed`
+  * batches (F4), read once.
   */
 class BulkLoadSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -29,8 +30,9 @@ class BulkLoadSpec extends AnyFunSuite with BeforeAndAfterAll {
     conn = DriverManager.getConnection("jdbc:derby:memory:bulkloadspec;create=true")
     conn.setAutoCommit(false)
     val st = conn.createStatement()
-    st.execute("""CREATE TABLE "k2dest" ("pk" BIGINT, "name" VARCHAR(80))""")
-    st.execute("""INSERT INTO "k2dest" VALUES (999, 'stale-row')""")
+    st.execute("""CREATE TABLE "k2dest" ("pk" BIGINT, "name" VARCHAR(80),
+      "modstamp" TIMESTAMP)""")
+    st.execute("""INSERT INTO "k2dest" VALUES (999, 'stale-row', NULL)""")
     st.close()
     state = new SyncStateStore(conn)
     state.install()
@@ -43,10 +45,10 @@ class BulkLoadSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   private val schema = new StructType().add("pk", LongType, nullable = false)
-    .add("name", StringType)
+    .add("name", StringType).add("modstamp", TimestampType, nullable = false)
 
-  private def batchRows(ids: Long*): Iterator[Row] =
-    ids.iterator.map(i => Row(i, s"rec-$i"))
+  private def batchRows(stamp: Timestamp, ids: Long*): Iterator[Row] =
+    ids.iterator.map(i => Row(i, s"rec-$i", stamp))
 
   private def destRows(): Seq[(Long, String)] = {
     val st = conn.createStatement()
@@ -59,44 +61,21 @@ class BulkLoadSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("loads Completed batches only, truncates, and registers __sync") {
-    val job = JobInfo("750K2",
-      batches = Seq(
-        BatchInfo("b-orig", "NotProcessed"),
-        BatchInfo("b1", "Completed", 2),
-        BatchInfo("b2", "Completed", 1)),
-      numberRecordsProcessed = 3, systemModstamp = Some(Modstamp))
-    val n = BulkLoad.bulkLoad(job, cfg, conn, dialect, state, schema, {
-      case BatchInfo("b1", _, _, _) => batchRows(1L, 2L)
-      case BatchInfo("b2", _, _, _) => batchRows(3L)
-      case b => fail(s"batch ${b.id} (${b.state}) must not be fetched")
-    })
+    val batches = Seq(
+      BatchInfo("b-orig", "NotProcessed"),
+      BatchInfo("b1", "Completed"),
+      BatchInfo("b2", "Completed"))
+    val (n, _) = BulkLoad.refresh(cfg, conn, dialect, state, schema,
+      BulkManifest.loadableBatches(batches).iterator.flatMap {
+        case BatchInfo("b1", _, _) => batchRows(ts("2024-03-01 09:00:00"), 1L, 2L)
+        case BatchInfo("b2", _, _) => batchRows(Modstamp, 3L)
+        case b => fail(s"batch ${b.id} (${b.state}) must not be fetched")
+      })
     assert(n == 3)
     assert(destRows() == Seq((1L, "rec-1"), (2L, "rec-2"), (3L, "rec-3")))
     val row = state.get("k2dest").get
-    assert(row.syncuntil.contains(Modstamp)) // the job's stamp, not now()
+    assert(row.syncuntil.contains(Modstamp)) // the max landed stamp, not now()
     assert(row.status == "ready")
-  }
-
-  test("empty job is refused before touching the destination") {
-    val empty = JobInfo("750E", Seq(BatchInfo("b", "Completed", 0)),
-      numberRecordsProcessed = 0, systemModstamp = Some(Modstamp))
-    val before = destRows()
-    intercept[IllegalArgumentException] {
-      BulkLoad.bulkLoad(empty, cfg, conn, dialect, state, schema,
-        _ => fail("must not fetch"))
-    }
-    assert(destRows() == before)
-  }
-
-  test("a Failed batch aborts the whole load") {
-    val bad = JobInfo("750F",
-      Seq(BatchInfo("b1", "Completed", 5), BatchInfo("b2", "Failed")),
-      numberRecordsProcessed = 5, systemModstamp = Some(Modstamp))
-    val before = destRows()
-    intercept[IllegalArgumentException] {
-      BulkLoad.bulkLoad(bad, cfg, conn, dialect, state, schema, _ => fail("must not fetch"))
-    }
-    assert(destRows() == before)
   }
 
   test("COPY FORCE_NULL covers only non-string nullable columns") {
@@ -121,26 +100,23 @@ class BulkLoadSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
     }
     val st = conn.createStatement()
-    st.execute("""CREATE TABLE "k2fn" ("pk" BIGINT, "name" VARCHAR(80), "amount" DOUBLE)""")
+    st.execute("""CREATE TABLE "k2fn" ("pk" BIGINT, "name" VARCHAR(80), "amount" DOUBLE,
+      "modstamp" TIMESTAMP)""")
     st.close()
-    val fnSchema = schema.add("amount", DoubleType)
-    val rows = Seq(Row(1L, "a", 2.5), Row(2L, null, null))
-    val job = JobInfo("750N", Seq(BatchInfo("b1", "Completed", 2)),
-      numberRecordsProcessed = 2, systemModstamp = Some(Modstamp))
-    val n = BulkLoad.bulkLoad(job, SyncConfig("k2fn", "pk", "modstamp"),
-      conn, recording, state, fnSchema, _ => rows.iterator)
+    val fnSchema = new StructType().add("pk", LongType, nullable = false)
+      .add("name", StringType).add("amount", DoubleType)
+      .add("modstamp", TimestampType, nullable = false)
+    val rows = Seq(Row(1L, "a", 2.5, Modstamp), Row(2L, null, null, Modstamp))
+    val (n, _) = BulkLoad.refresh(SyncConfig("k2fn", "pk", "modstamp"),
+      conn, recording, state, fnSchema, rows.iterator)
     assert(n == 2)
     // nullable string 'name' must NOT be force-nulled; nullable double must
-    assert(recorded == Some((Seq("pk", "name", "amount"), Seq("amount"))))
+    assert(recorded == Some((Seq("pk", "name", "amount", "modstamp"), Seq("amount"))))
   }
 
   test("mid-load failure rolls back truncate, load, and registration") {
     val before = destRows()
     val wmBefore = state.get("k2dest").map(_.syncuntil)
-    val job = JobInfo("750R",
-      Seq(BatchInfo("b1", "Completed", 2), BatchInfo("b2", "Completed", 2)),
-      numberRecordsProcessed = 4,
-      systemModstamp = Some(ts("2024-04-01 00:00:00")))
     // the rollback runs, then fails: the load's own error still surfaces
     val rollbackFails = java.lang.reflect.Proxy.newProxyInstance(getClass.getClassLoader,
       Array(classOf[Connection]), (_, m, args) => {
@@ -150,10 +126,9 @@ class BulkLoadSpec extends AnyFunSuite with BeforeAndAfterAll {
         r
       }).asInstanceOf[Connection]
     val e = intercept[RuntimeException] {
-      BulkLoad.bulkLoad(job, cfg, rollbackFails, dialect, state, schema, {
-        case BatchInfo("b1", _, _, _) => batchRows(10L)
-        case _ => throw new RuntimeException("simulated download failure")
-      })
+      BulkLoad.refresh(cfg, rollbackFails, dialect, state, schema,
+        batchRows(ts("2024-04-01 00:00:00"), 10L) ++
+          Iterator.continually[Row](throw new RuntimeException("simulated download failure")))
     }
     assert(e.getMessage == "simulated download failure")
     assert(e.getSuppressed.map(_.getMessage).toSeq == Seq("rollback failed"))

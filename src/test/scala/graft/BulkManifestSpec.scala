@@ -1,37 +1,26 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.sources.salesforce.{BatchInfo, BulkManifest, JobInfo}
+import graft.sources.salesforce.{BatchInfo, BulkManifest}
 
-/** F4 batch-state filtering + job lifecycle guards. */
+/** F4 batch-state filtering + job completion. */
 class BulkManifestSpec extends AnyFunSuite {
   import BulkManifest._
 
-  private val job = JobInfo("750x0",
-    Seq(
-      BatchInfo("b1", Completed, 100),
-      BatchInfo("b2", NotProcessed),     // PK-chunking artifact
-      BatchInfo("b3", Completed, 50),
-      BatchInfo("b4", Failed)),
-    numberRecordsProcessed = 150, systemModstamp = None)
+  private val batches = Seq(
+    BatchInfo("b1", Completed),
+    BatchInfo("b2", NotProcessed),     // PK-chunking artifact
+    BatchInfo("b3", Completed),
+    BatchInfo("b4", Failed))
 
   test("only Completed batches load; NotProcessed is skipped (F4)") {
-    assert(loadableBatches(job).map(_.id) == Seq("b1", "b3"))
-    assert(skippedBatches(job).map(_.id) == Seq("b2"))
-    assert(failedBatches(job).map(_.id) == Seq("b4"))
+    assert(loadableBatches(batches).map(_.id) == Seq("b1", "b3"))
+    assert(failedBatches(batches).map(_.id) == Seq("b4"))
   }
 
   test("job not done while any batch queued or in progress") {
-    assert(isDone(job))
-    val pending = job.copy(batches = job.batches :+ BatchInfo("b5", InProgress))
-    assert(!isDone(pending))
-    assert(!isDone(job.copy(batches = Seq(BatchInfo("b6", Queued)))))
-  }
-
-  test("empty job refuses truncate-and-load") {
-    assert(requireNonEmpty(job) eq job)
-    intercept[IllegalArgumentException] {
-      requireNonEmpty(job.copy(numberRecordsProcessed = 0))
-    }
+    assert(isDone(batches))
+    assert(!isDone(batches :+ BatchInfo("b5", InProgress)))
+    assert(!isDone(Seq(BatchInfo("b6", Queued))))
   }
 }

@@ -176,13 +176,11 @@ class EmptyInputSpec extends SparkSpec {
   }
 
   test("uploadResultCensus over an empty frame posts nothing and is empty") {
-    graft.reverse.MockUploadTransport.register("empty_census",
-      new graft.reverse.MockUploadTransport(failEvery = 7))
+    val t = new graft.reverse.MockUploadTransport(failEvery = 7)
     val e = Seq.empty[(Long, String)].toDF("Id", "Name")
     val out = graft.reverse.BulkUpload.uploadResultCensus(
-      e, "Id", "Contact", "empty_census", maxRecords = 50)
+      e, "Id", "Contact", t, maxRecords = 50)
     assert(out.isEmpty)
-    assert(graft.reverse.MockUploadTransport.get("empty_census")
-      .batches.isEmpty)
+    assert(t.batches.isEmpty)
   }
 }

@@ -211,7 +211,7 @@ class GraphOpsSpec extends SparkSpec {
     assert(out == Seq(2L, 10L, 50L), s"got $out")
   }
 
-  test("sliced adjacency (hot-vertex guard) is exact on a planted hub graph") {
+  test("triangle core is exact on a planted hub graph") {
     import spark.implicits._
     val G = graft.operators.GraphOps
     // hub 0 linked to every vertex 1..200 (degree-200 star), plus a
@@ -223,17 +223,11 @@ class GraphOpsSpec extends SparkSpec {
     val k4 = for (i <- 1000L to 1003L; j <- (i + 1) to 1003L) yield (i, j)
     val edges = (star ++ rungs ++ k4).toDF("doc_a", "doc_b")
     val expected = 100L + 4L
-    // unsliced baseline, then several slice widths — all must agree
-    // (slicing partitions each adjacency list by neighbor residue, and
-    // the same partitioning on both endpoints keeps the sum exact)
     assert(G.triangleCount(edges).as[Long].head() == expected)
-    for (s <- Seq(2, 8, 64))
-      assert(G.triangleCount(edges, adjSlices = s).as[Long].head() == expected,
-        s"slices=$s drifted")
-    // cliqueDensity through the sliced core: identical per-component rows
-    val base = G.cliqueDensity(edges).collect().map(_.toSeq).toSeq
-    val sliced = G.cliqueDensity(edges, adjSlices = 8).collect().map(_.toSeq).toSeq
-    assert(base == sliced, s"sliced clique report drifted:\n$base\nvs\n$sliced")
+    // per component: the hub star (201 docs, 300 pairs, 100 triangles)
+    // and the K4 block (4 docs, 6 pairs, 4 triangles)
+    val rows = G.cliqueDensity(edges).collect().map(_.toSeq).toSeq
+    assert(rows == Seq(Seq(0L, 201L, 300L, 100L), Seq(1000L, 4L, 6L, 4L)), rows)
   }
 
   test("kCore: triangle survives the 2-core peel, pendant tail cascades off") {
@@ -410,10 +404,6 @@ class GraphOpsSpec extends SparkSpec {
     val k3 = GraphOps.kTruss(pairs, k = 3)
       .as[(Long, Long)].collect().toSeq
     assert(k3 == (clique ++ Seq((10L, 11L), (10L, 12L), (11L, 12L))).sorted, k3)
-    // the sliced-adjacency hot-vertex guard is result-identical
-    val sliced = GraphOps.kTruss(pairs, k = 4, adjSlices = 3)
-      .as[(Long, Long)].collect().toSeq
-    assert(sliced == k4, sliced)
   }
 
   test("communityEdges: intra cells on the diagonal, one bridge cell") {

@@ -11,7 +11,7 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.Row
 import org.scalatest.BeforeAndAfterAll
 
-import graft.reverse.{BulkUpload, UploadTransports}
+import graft.reverse.BulkUpload
 import graft.sources.salesforce.{CsvWire, HttpSfTransport, MockSfTransport, ReadScope,
   SalesforceSource, SfApiError, SfFieldMeta, SfTransports}
 
@@ -770,10 +770,9 @@ class HttpSfTransportSpec extends SparkSpec with BeforeAndAfterAll {
 
   test("uploadWithResults speaks upsert end-to-end; per-record results flow") {
     uploadBatchPolls.set(0)
-    UploadTransports.register("http-upsert", transport())
     val (jobId, batches) = BulkUpload.uploadWithResults(Seq("Ext_Id__c", "Name"),
       Iterator(Row("e1", "a"), Row("e2", "b")), "Contact",
-      "http-upsert", operation = "upsert", externalIdField = Some("Ext_Id__c"))
+      transport(), operation = "upsert", externalIdField = Some("Ext_Id__c"))
     assert(jobId == "750UP")
     assert(seen("jobDoc").toString
       .contains("<externalIdFieldName>Ext_Id__c</externalIdFieldName>"))
@@ -781,9 +780,8 @@ class HttpSfTransportSpec extends SparkSpec with BeforeAndAfterAll {
   }
 
   test("uploadWithResults surfaces failed records in its per-batch results") {
-    UploadTransports.register("http-upload", transport())
     val (jobId, batches) = BulkUpload.uploadWithResults(Seq("Id", "Name"),
-      Iterator(Row("1", "a"), Row("2", "b")), "Contact", "http-upload",
+      Iterator(Row("1", "a"), Row("2", "b")), "Contact", transport(),
       operation = "insert")
     assert(jobId == "750UP")
     assert(batches.map(_._1) == Seq("753B"))

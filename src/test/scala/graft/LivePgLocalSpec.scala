@@ -4,7 +4,9 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import scala.sys.process._
 
-import graft.sink.PgDialect
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.types.{StringType, StructType, TimestampType}
+import graft.sink.{CopyStager, PgDialect}
 import graft.types.{SfField, SfSchema}
 
 /** LIVE PostgreSQL validation through `psql` — self-provisioning.
@@ -168,6 +170,33 @@ class LivePgLocalSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(c == 0, out)
     assert(psql("""SELECT count(*) FROM contacts WHERE "Name" IS NULL""") == "2")
     assert(psql("""SELECT count(*) FROM contacts WHERE "Amount" IS NULL""") == "1")
+  }
+
+  test("COPY lands a datetime's milliseconds; a newer image in the same second applies") {
+    live()
+    psql("""CREATE TABLE msdest ("Id" TEXT PRIMARY KEY, "Name" TEXT,
+      "SystemModstamp" TIMESTAMP)""")
+    psql("""CREATE TABLE msstage (LIKE msdest)""")
+    val schema = new StructType().add("Id", StringType).add("Name", StringType)
+      .add("SystemModstamp", TimestampType)
+    val cols = schema.fieldNames.toSeq
+    // the engine's COPY payload, fed over stdin as CopyManager would
+    def copy(table: String, row: Row): Unit = {
+      val csv = s"$dir/$table.csv"
+      scala.util.Using.resources(CopyStager.csvReader(schema, Iterator(row)),
+        java.nio.file.Files.newBufferedWriter(java.nio.file.Paths.get(csv)))(_.transferTo(_))
+      val (c, out) = sh(s"psql -h $dir -p $port -d graft -v ON_ERROR_STOP=1 " +
+        s"-c ${shellQuote(d.copyInSql(table, cols, Seq("SystemModstamp")).get)} < $csv")
+      assert(c == 0, out)
+    }
+    def at(iso: String) = java.sql.Timestamp.from(java.time.Instant.parse(iso))
+    copy("msdest", Row("1", "landed", at("2024-03-01T09:30:00.123Z")))
+    assert(psql("""SELECT "SystemModstamp" FROM msdest""") == "2024-03-01 09:30:00.123")
+    // an update later in the same second must pass the ts guard
+    copy("msstage", Row("1", "updated", at("2024-03-01T09:30:00.456Z")))
+    psql(d.upsertSql("msdest", "msstage", cols, "Id", "SystemModstamp", None))
+    assert(psql("""SELECT "Name" || '@' || "SystemModstamp" FROM msdest""")
+      == "updated@2024-03-01 09:30:00.456")
   }
 
   test("TEMPORARY staging, TRUNCATE and MAX(ts) goldens execute") {

@@ -116,6 +116,9 @@ class LivePgSpec extends SparkSpec {
       state.install()
       state.register("contacts", ts("2024-01-01 00:00:00"))
       conn.commit()
+      state.install() // a second bulkload installs again: a no-op
+      assert(state.get("contacts").flatMap(_.syncuntil)
+        .contains(ts("2024-01-01 00:00:00")))
       val sync = new IncrementalSync(conn, d, state)
       val cfg = SyncConfig("contacts", "pk", "modstamp",
         Some("is_deleted"), schema = Some(Schema))

@@ -49,13 +49,12 @@ class ReverseUploadSpec extends SparkSpec {
 
   test("upload chunks every partition and closes the job (K5)") {
     val t = new MockUploadTransport
-    MockUploadTransport.register("up1", t)
     // three partitions in row order; the driver drains them into one
     // ordered stream, so <=40 records per chunk -> exactly 7 batches
     val rows = (1 to 250).map(i => (s"003$i", s"name-$i", i % 2 == 0))
     val df = spark.sparkContext.parallelize(rows, 3).toDF("Id", "Name", "Active")
     val (jobId, batches) = BulkUpload.uploadWithResults(df.columns.toSeq,
-      df.toLocalIterator().asScala, "Contact", "up1", maxRecords = 40)
+      df.toLocalIterator().asScala, "Contact", t, maxRecords = 40)
     assert(t.createdJobs == List(jobId) && t.closedJobs == List(jobId))
     val chunks = batches.map { case (id, _) => t.batches(id) }
     assert(chunks.map(_.linesIterator.size - 1) == Seq(40, 40, 40, 40, 40, 40, 10))
@@ -68,22 +67,20 @@ class ReverseUploadSpec extends SparkSpec {
 
   test("a row stream that fails mid-upload still closes the job") {
     val t = new MockUploadTransport
-    MockUploadTransport.register("upfail", t)
     val rows = Iterator.tabulate(50)(i => Row(s"003$i")) ++
       Iterator.continually[Row](throw new IllegalStateException("source failed"))
     val e = intercept[IllegalStateException](BulkUpload.uploadWithResults(Seq("Id"), rows,
-      "Contact", "upfail", maxRecords = 40))
+      "Contact", t, maxRecords = 40))
     assert(e.getMessage == "source failed")
     assert(t.batches.size == 1 && t.closedJobs == t.createdJobs && t.closedJobs.size == 1)
   }
 
   test("operation validation: upsert needs the external id, others reject it") {
     val t = new MockUploadTransport
-    MockUploadTransport.register("up2", t)
     def upload(operation: String, ext: Option[String] = None,
         columns: Seq[String] = Seq("Ext_Id__c", "Name")) =
       BulkUpload.uploadWithResults(columns,
-        Iterator(Row.fromSeq(Seq("e1", "a").take(columns.size))), "Contact", "up2",
+        Iterator(Row.fromSeq(Seq("e1", "a").take(columns.size))), "Contact", t,
         operation = operation, externalIdField = ext)
     // upsert without an external-id field is the reference client's
     // error (create_upsert_job requires external_id_name)
@@ -98,12 +95,11 @@ class ReverseUploadSpec extends SparkSpec {
   }
   test("uploadResultCensus: per-batch failure census matches hand-computed chunks") {
     val t = new MockUploadTransport(failEvery = 7)
-    MockUploadTransport.register("up3", t)
     // 103 ordered rows, 40 per batch -> batches of 40/40/23; every 7th
     // position in each batch fails -> 5/5/3 failures
     val df = (1 to 103).map(i => (i.toLong, s"name-$i")).toDF("Id", "Name")
       .repartition(4) // the census orders the rows into one stream itself
-    val out = BulkUpload.uploadResultCensus(df, "Id", "Contact", "up3",
+    val out = BulkUpload.uploadResultCensus(df, "Id", "Contact", t,
       maxRecords = 40)
       .as[(Int, Long, Long, Long, Long, String)].collect().toSeq
     assert(out == Seq(

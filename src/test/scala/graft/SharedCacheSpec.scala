@@ -3,24 +3,10 @@ package graft
 import org.apache.spark.sql.functions._
 
 /** Lifecycle contracts of the shared per-(session, dir, generation)
-  * materializations: probe memoization, stale-generation keying, and
-  * explicit checkpoint-block release.
+  * materializations: the memoized basket profile and explicit
+  * checkpoint-block release.
   */
 class SharedCacheSpec extends SparkSpec {
-
-  test("BasketGraph.adjSlices memoizes the degree probe per generation") {
-    SparkEntry.resetSharedCaches()
-    val before = SparkEntry.BasketGraph.probeRuns.get()
-    val s1 = SparkEntry.BasketGraph.adjSlices(spark, sf0001)
-    val s2 = SparkEntry.BasketGraph.adjSlices(spark, sf0001)
-    assert(s1 == s2)
-    assert(SparkEntry.BasketGraph.probeRuns.get() == before + 1,
-      "the full pair-scan degree aggregate must run once, not per consumer")
-    SparkEntry.resetSharedCaches()
-    SparkEntry.BasketGraph.adjSlices(spark, sf0001)
-    assert(SparkEntry.BasketGraph.probeRuns.get() == before + 2,
-      "reset() must drop the memo so a cold probe re-measures")
-  }
 
   test("j11ScoreRules over the shared basket profile matches the from-items build") {
     SparkEntry.resetSharedCaches()

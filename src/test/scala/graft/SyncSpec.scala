@@ -202,6 +202,24 @@ class SyncSpec extends SparkSpec with BeforeAndAfterAll {
     assert(!due.contains("t_fresh"))
   }
 
+  test("install is a no-op once __sync exists: the registered row survives") {
+    // every bulkload installs; a second one must not refuse to run
+    val c = DriverManager.getConnection("jdbc:derby:memory:installspec;create=true")
+    try {
+      c.setAutoCommit(false)
+      val s = new SyncStateStore(c)
+      s.install()
+      s.register("reinstalled", ts("2024-02-01 00:00:00"))
+      c.commit()
+      s.install()
+      s.install()
+      c.commit()
+      val row = s.get("reinstalled").get
+      assert(row.syncuntil.contains(ts("2024-02-01 00:00:00")))
+      assert(row.status == "ready")
+    } finally { c.rollback(); c.close() }
+  }
+
   test("delta insert-then-delete of a new PK never survives") {
     val r = sync.syncTable(cfg, schema, _ => delta(
       (9L, "ghost", 90.0, "2024-01-04 00:00:00", false),
